@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.{GraphModel, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** §2.9 graph traversal operators expressed as Catalyst joins.
   *
@@ -1153,9 +1155,7 @@ object GraphOps {
           "dst")
         .filter(col("ls") === col("ld"))
         .select(col("src").as("a_id"), col("dst").as("b_id"))
-      minLabelComponents(lab.select(col("id")), within,
-          small = GraphModel.dedupVertCountCached(spark, dir)
-            <= SmallGraphVerts)
+      minLabelComponents(lab.select(col("id")), within)
         .localCheckpoint(true)
     })
   }
@@ -1238,11 +1238,17 @@ object GraphOps {
     out
   }
 
-  /** Vertex-count bound under which the community-sized side frames
-    * (d_c, accepted-move maps, merge maps — all ≤ the community count ≤
-    * the vertex count) are explicitly broadcast. localCheckpoint hides
-    * size stats from AQE, so the gate is one deg.count() per call —
-    * above it (billion-vertex cluster scale) every such join falls
+  /** Row bound under which a graph frame is small enough for the
+    * driver. Two uses, both measured, never assumed:
+    *  - the connectivity kernels ([[minLabelComponentsChk]],
+    *    [[msfOn]]) collect at most this many pair/edge rows, then
+    *    vertex rows, and under it solve the whole problem on the
+    *    driver in one union-find pass instead of a keyed loop;
+    *  - vertex-sized side frames (labels, d_c, accepted-move maps,
+    *    merge maps — all ≤ the vertex count) are explicitly broadcast
+    *    into the keyed loops. localCheckpoint hides size stats from
+    *    AQE, so those callers count the vertices.
+    * Above it (billion-vertex cluster scale) every such join falls
     * back to a keyed shuffle rather than risk the driver. */
   private[ops] val SmallGraphVerts = 2000000L
 
@@ -3027,25 +3033,6 @@ object GraphOps {
       .orderBy(col("walk_id"))
   }
 
-  /** Connected components by iterative min-label propagation WITH
-    * pointer jumping, over an undirected pair list, run UNTIL STABLE.
-    * Shared by the text and embedding dedup pipelines
-    * (cluster-then-elect-canonical). Each round takes the min of
-    * (a) the current label, (b) the neighbors' labels (one hop through
-    * the pair list), and (c) the label OF the current label (pointer
-    * jumping — labels are vertex ids, so the label table indexes
-    * itself). Hop alone needs diameter rounds; the jump halves the
-    * remaining pointer depth each round, so convergence is
-    * O(log diameter) and the 50-round cap covers diameters beyond 2^50
-    * — effectively a pure safety net, never a truncation (the pre-jump
-    * version capped at 50 HOPS, where a >50-diameter near-dup chain
-    * would have returned partially-propagated clusters and diverged
-    * from the oracle's exact transitive closure). Monotone
-    * (labels only decrease, bounded by the component min) and
-    * deterministic. Per-round eager localCheckpoint truncates the
-    * otherwise exponentially-nested join lineage.
-    * Input: `verts(id)`, `pairs(a_id, b_id)`; output: `(id, cluster)`
-    * with cluster = component-min id. */
   /** Rebuild an (already materialized, eagerly checkpointed) frame
     * from its RDD, discarding the logical plan AND its estimated
     * statistics. `localCheckpoint` truncates *lineage* but preserves
@@ -3066,12 +3053,12 @@ object GraphOps {
     * consumer's projection) evaluated as the rows stream into the
     * cache. Replaces the per-round checkpoint + `filter(...).isEmpty`
     * pair every iterative loop paid (2 driver jobs → 1; at ~40 ms
-    * scheduler latency per local job this is the dominant cost of the
-    * small-graph loops — Borůvka/SCC ran 240-260 jobs on <6 task-s).
-    * Task retries/speculation can only OVER-count, and callers compare
-    * the count to zero, so convergence is declared only when no row
-    * satisfied `cond` — an overcount costs one extra (value-identical)
-    * round, never a wrong result. */
+    * scheduler latency per local job, the job count is what a loop
+    * over small frames costs). Task retries/speculation can only
+    * OVER-count, and callers compare the count to zero, so
+    * convergence is declared only when no row satisfied `cond` — an
+    * overcount costs one extra (value-identical) round, never a wrong
+    * result. */
   private[ops] def chkCounting(df: DataFrame,
       cond: org.apache.spark.sql.Column): (DataFrame, Long) = {
     // the returned frame is WIDENED by the __n side-effect column; a
@@ -3087,32 +3074,163 @@ object GraphOps {
     (chk, acc.value)
   }
 
-  /** One-shot entry: the returned labels view pins one checkpointed
-    * block set for the session (callers that consume it once and stop
-    * are fine). Iterative callers — [[msfOn]], [[sccLifted]] — use
-    * [[minLabelComponentsChk]] and release the handle as soon as their
-    * next eager checkpoint has absorbed the labels, so a long-lived
-    * session doesn't park one block set per loop round. */
-  def minLabelComponents(verts: DataFrame, pairs: DataFrame,
-      small: Boolean = false): DataFrame =
-    minLabelComponentsChk(verts, pairs, small)._1
+  /** Drop the blocks of an eager localCheckpoint that nothing reads
+    * again. `Dataset.unpersist` only uncaches `cache()`/`persist()`
+    * plans: on a checkpointed frame it is a no-op, and the blocks stay
+    * in the block manager until the frame is garbage-collected. */
+  private def releaseChk(chk: DataFrame): Unit =
+    chk.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => chk.unpersist(false)
+    }
 
-  /** As [[minLabelComponents]], but also returns the final
-    * localCheckpoint handle that owns the labels' cached blocks —
-    * `_2.unpersist(false)` once `_1` has been materialized into a
-    * downstream checkpoint.
+  /** Rows of `df` if it has at most [[SmallGraphVerts]] of them, else
+    * None: the measured size gate of the graph kernels. A bounded
+    * collect, so the driver never holds more than the gate's rows
+    * before a kernel falls back to its keyed loop. */
+  private def collectSmall(df: DataFrame): Option[Array[Row]] = {
+    val rows = df.limit((SmallGraphVerts + 1).toInt).collect()
+    if (rows.length <= SmallGraphVerts) Some(rows) else None
+  }
+
+  /** Union-find over dense indices whose root is always the LEAST
+    * index of its set. With ids indexed in ascending order (see
+    * [[sortedDistinct]]) the root is the component-min id, the label
+    * both connectivity kernels carry. Path halving, no ranks. */
+  private final class MinUnionFind(n: Int) {
+    private val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x))
+        x = parent(x)
+      }
+      x
+    }
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+  }
+
+  /** Ascending distinct ids: index i stands for `ids(i)`, so index
+    * order is id order and `binarySearch` is the id → index map. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var n = 0
+    for (x <- s) if (n == 0 || s(n - 1) != x) { s(n) = x; n += 1 }
+    java.util.Arrays.copyOf(s, n)
+  }
+
+  /** The driver solves read BIGINT columns (every graph id and weight
+    * here); frames of other types take the keyed loops. */
+  private def allLong(df: DataFrame): Boolean =
+    df.schema.forall(_.dataType == LongType)
+
+  /** A driver-computed result as an RDD-backed frame (the
+    * [[dropStats]] shape): the rows ship with the tasks that scan
+    * them, not inside every consuming plan as a LocalRelation would.
+    * One partition per 100k rows, up to the default parallelism, so a
+    * small result is one task and a large one a few MB per task. */
+  private def rowsFrame(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame = {
+    val sc = spark.sparkContext
+    val slices = math.min(sc.defaultParallelism, 1 + rows.length / 100000)
+    spark.createDataFrame(sc.parallelize(rows, slices), schema)
+  }
+
+  /** One-shot entry: under the gate the labels are a driver-built
+    * frame with no cached blocks; above it the returned labels view
+    * pins one checkpointed block set for the session (callers that
+    * consume it once and stop are fine). Iterative callers —
+    * [[msfOn]], [[sccLifted]] — use [[minLabelComponentsChk]] and
+    * release the handle as soon as their next eager checkpoint has
+    * absorbed the labels, so a long-lived session doesn't park one
+    * block set per loop round. */
+  def minLabelComponents(verts: DataFrame, pairs: DataFrame): DataFrame =
+    minLabelComponentsChk(verts, pairs)._1
+
+  /** Connected components by minimum label over an undirected pair
+    * list. Input: `verts(id)`, `pairs(a_id, b_id)`; output: one
+    * `(id, cluster)` row per `verts` row, cluster = the least id of
+    * its component. A pair connects two vertices only when both ends
+    * are in `verts`; null ids keep a null cluster and null pair ends
+    * connect nothing. Also returns the handle that owns the labels'
+    * cached blocks — `_2.unpersist(false)` once `_1` has been
+    * materialized into a downstream checkpoint.
     *
-    * `small` (r15): when the caller KNOWS the vertex set is bounded
-    * (the [[SmallGraphVerts]] gate — measured, never assumed), the
-    * label frame rides explicit broadcasts into the neighbor and
-    * pointer-jump joins. The win is not the join strategy (AQE
-    * converts those at runtime anyway) but the JOB TRAIN: a static
-    * broadcast plans no shuffle query stage at all, so each of the
-    * loop's ~2·rounds actions stops paying 3-4 AQE stage round-trips
-    * — the tax that made the Borůvka/SCC keys 300+-job walls of
-    * scheduler latency on single-digit task-seconds. */
-  def minLabelComponentsChk(verts: DataFrame,
-      pairs: DataFrame, small: Boolean = false)
+    * Measured size gate ([[SmallGraphVerts]], bounded collects, pairs
+    * first, then vertices): when both fit and the ids are BIGINT, the
+    * pairs are union-found on the driver in one pass
+    * ([[minLabelComponentsLocal]]) — one job per collected frame
+    * instead of the keyed loop's 3-4 per round. Otherwise
+    * [[minLabelComponentsKeyed]] runs, with static broadcasts when
+    * the vertex rows fit the gate. */
+  def minLabelComponentsChk(verts: DataFrame, pairs: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val v = verts.select(col("id"))
+    val p = pairs.select(col("a_id"), col("b_id"))
+    val pairRows = if (allLong(v) && allLong(p)) collectSmall(p) else None
+    val vertRows = collectSmall(v)
+    (pairRows, vertRows) match {
+      case (Some(pr), Some(vr)) =>
+        val labels = minLabelComponentsLocal(verts, vr, pr)
+        (labels, labels)
+      case _ =>
+        minLabelComponentsKeyed(verts, pairs, small = vertRows.isDefined)
+    }
+  }
+
+  /** The driver solve of [[minLabelComponentsChk]] over already
+    * collected `verts.id` rows and `(a_id, b_id)` pair rows (BIGINT
+    * ids): one union-find pass, each component rooted at its least id.
+    * Duplicate vertex rows each get their own output row. */
+  private[graft] def minLabelComponentsLocal(verts: DataFrame,
+      vertRows: Array[Row], pairRows: Array[Row]): DataFrame = {
+    val schema = verts.select(col("id"), col("id").as("cluster")).schema
+    val ids = sortedDistinct(
+      vertRows.filterNot(_.isNullAt(0)).map(_.getLong(0)))
+    def ix(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) -1
+      else java.util.Arrays.binarySearch(ids, r.getLong(i))
+    val uf = new MinUnionFind(ids.length)
+    pairRows.foreach { r =>
+      val a = ix(r, 0)
+      val b = ix(r, 1)
+      if (a >= 0 && b >= 0) uf.union(a, b)
+    }
+    val out = vertRows.toSeq.map { r =>
+      if (r.isNullAt(0)) Row(null, null)
+      else Row(r.getLong(0), ids(uf.find(ix(r, 0))))
+    }
+    rowsFrame(verts.sparkSession, out, schema)
+  }
+
+  /** The keyed loop behind [[minLabelComponentsChk]]: iterative
+    * min-label propagation WITH pointer jumping, run UNTIL STABLE.
+    * Each round takes the min of (a) the current label, (b) the
+    * neighbors' labels (one hop through the pair list), and (c) the
+    * label OF the current label (pointer jumping — labels are vertex
+    * ids, so the label table indexes itself). Hop alone needs diameter
+    * rounds; the jump at least halves the remaining pointer depth each
+    * round, so convergence is O(log diameter) and the 50-round cap is
+    * a safety net: a loop that reaches it throws rather than return
+    * unconverged labels. Monotone (labels only decrease, bounded by
+    * the component min) and deterministic. Per-round eager
+    * localCheckpoint truncates the otherwise exponentially-nested join
+    * lineage. The vertex rows must be distinct: the jump join fans a
+    * duplicated id out once per copy.
+    *
+    * `small` (the measured [[SmallGraphVerts]] gate on the vertex
+    * rows): the label frame rides explicit broadcasts into the
+    * neighbor and pointer-jump joins. The win is not the join
+    * strategy (AQE converts those at runtime anyway) but the job
+    * train: a static broadcast plans no shuffle query stage, so each
+    * of the loop's actions stops paying 3-4 AQE stage round-trips. */
+  private[graft] def minLabelComponentsKeyed(verts: DataFrame,
+      pairs: DataFrame, small: Boolean, maxRounds: Int = 50)
       : (DataFrame, DataFrame) = {
     def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
     val und = pairs.select(col("a_id"), col("b_id"))
@@ -3142,9 +3260,9 @@ object GraphOps {
     // rounds ago, so the jump must read the full current label table —
     // it is V-sized and cheap where the hop is E-sized.
     var changed = labels
-    var converged = false
+    var nChanged = -1L // not yet counted
     var round = 0
-    while (!converged && round < 50) {
+    while (nChanged != 0 && round < maxRounds) {
       round += 1
       val prop = undM
         .join(g(changed.select(col("id").as("b_id"),
@@ -3163,8 +3281,7 @@ object GraphOps {
       // joins read L², L³ and L⁴ of the stale round-start label table
       // instead of one L² — pointer depth shrinks 4× per round, so
       // chain-shaped components converge in ~log₄ rounds. Each round
-      // costs 3-4 jobs of driver/AQE latency on near-empty frames
-      // (scc 212 / msf 226 jobs at <6 task-s in the r15 probe), so
+      // costs 3-4 jobs of driver/AQE latency on near-empty frames, so
       // cutting the round count cuts the job train outright. The jump
       // sides are canonically IDENTICAL broadcast subtrees (the same
       // projection of the same frame), so ReuseExchange builds ONE
@@ -3198,13 +3315,13 @@ object GraphOps {
             col("j3") === col("jid4"), "left")
           .select(col("id"), col("cluster"), col("min_nb"),
             coalesce(col("jump4"), col("j3")).as("jlast"))
-      val (nextChk, nChanged) = chkCounting(jumped
+      val (nextChk, n) = chkCounting(jumped
         .select(col("id"), col("cluster").as("prev"),
           least(col("cluster"),
             least(coalesce(col("min_nb"), col("cluster")),
               col("jlast"))).as("cluster")),
         col("cluster") =!= col("prev"))
-      converged = nChanged == 0
+      nChanged = n
       // nextChk is materialized (eager checkpoint) and the convergence
       // check above is done with it, so the predecessor's blocks can be
       // released now — without this every invocation permanently parked
@@ -3219,6 +3336,11 @@ object GraphOps {
         .select(col("id"), col("cluster"))
     }
     undM.unpersist(false)
+    if (nChanged > 0) {
+      chk.unpersist(false)
+      throw new IllegalStateException(s"min-label components did not " +
+        s"converge in $round rounds: $nChanged labels still changing")
+    }
     (labels, chk)
   }
 
@@ -3708,15 +3830,10 @@ object GraphOps {
       val att = withBrand.join(hub, Seq("p_brand"))
         .filter(col("hub") =!= col("p"))
         .select(col("hub").as("src"), col("p").as("dst"))
-      // contract: weak components of the cycle frame are SCCs already.
-      // Broadcast gate: partsIn ⊆ the part table, so the (metadata-
-      // cheap) part row count is a sound measured bound for the
-      // SmallGraphVerts test — same job-train rationale as msfOn
-      val smallScc = t.part.count() <= SmallGraphVerts
+      // contract: weak components of the cycle frame are SCCs already
       val (comp, compChk) = minLabelComponentsChk(
         partsIn.select(col("p").as("id")),
-        cyc.select(col("src").as("a_id"), col("dst").as("b_id")),
-        small = smallScc)
+        cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
       // attachments between supernodes; within-supernode ones vanish
       val ce = att
         .join(comp.select(col("id").as("src"), col("cluster").as("csrc")),
@@ -3840,8 +3957,9 @@ object GraphOps {
     * single frontier); Borůvka's per-component local minima need no
     * coordination, which is what survives 1000 executors. Component
     * contraction runs on the CONTRACTED pair graph (picked component
-    * pairs, ≤ #components rows) via [[minLabelComponents]], never on
-    * the full edge frame. State: one (id, comp) long pair per vertex;
+    * pairs, ≤ #components rows), never on the full edge frame; under
+    * the [[SmallGraphVerts]] gate all rounds run on the driver (see
+    * [[msfOn]]). State: one (id, comp) long pair per vertex;
     * the weighted frame stays partitioned on its join key across
     * rounds. Output: the forest edge list (u, v, w_cents). */
   def graphMsfBoruvka(spark: SparkSession, dir: String): DataFrame = {
@@ -3857,9 +3975,94 @@ object GraphOps {
 
   /** The Borůvka loop itself, separate for spec use on hand graphs.
     * Input: weighted undirected edges as canonical `(u, v, w)` rows
-    * (u < v, one row per physical edge). */
+    * (u < v, one row per physical edge); at most `rounds` Borůvka
+    * rounds. Output: the (partial, if the budget truncates) forest
+    * `(u, v, w_cents)` ordered by (u, v).
+    *
+    * The input is checkpointed once, then measured with a bounded
+    * collect ([[SmallGraphVerts]] edge rows): under the gate, with
+    * non-null BIGINT columns, the SAME rounds run on the driver over
+    * primitive arrays ([[msfLocal]]) — the whole forest costs the
+    * checkpoint and the collect instead of the keyed loop's jobs per
+    * round. Above it [[msfKeyed]] runs, with static broadcasts when
+    * the vertex set fits the gate. */
   def msfOn(ewIn: DataFrame, rounds: Int): DataFrame = {
     val ew = ewIn.localCheckpoint(true)
+    val e = ew.select(col("u"), col("v"), col("w"))
+    val rows = if (allLong(e)) collectSmall(e) else None
+    rows.filterNot(_.exists(_.anyNull)) match {
+      case Some(r) =>
+        val out = msfLocal(ew, r, rounds)
+        releaseChk(ew)
+        out
+      case None =>
+        val small = collectSmall(e.select(col("u").as("id"))
+          .unionByName(e.select(col("v").as("id"))).distinct()).isDefined
+        msfKeyed(ew, rounds, small)
+    }
+  }
+
+  /** The driver solve of [[msfOn]] over collected `(u, v, w)` rows
+    * (BIGINT, non-null): the keyed loop's rounds over primitive
+    * arrays and a union-find. Per round every component picks its
+    * minimum incident cross edge under the same total order
+    * (w, least end, greatest end), all picks are unioned at once, and
+    * the picked edges join the forest — synchronous Borůvka, not
+    * Kruskal, so a budget-truncated run returns the same partial
+    * forest as [[msfKeyed]] and the oracle. */
+  private[graft] def msfLocal(ew: DataFrame, rows: Array[Row],
+      rounds: Int): DataFrame = {
+    val schema = ew.select(least(col("u"), col("v")).as("u"),
+      greatest(col("u"), col("v")).as("v"), col("w").as("w_cents")).schema
+    val ids =
+      sortedDistinct(rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+    def ix(r: Row, i: Int): Int =
+      java.util.Arrays.binarySearch(ids, r.getLong(i))
+    // canonical ends as indices — index order is id order, so the
+    // order key compares indices where the keyed loop compares ids
+    val lo = rows.map(r => math.min(ix(r, 0), ix(r, 1)))
+    val hi = rows.map(r => math.max(ix(r, 0), ix(r, 1)))
+    val w = rows.map(_.getLong(2))
+    def before(a: Int, b: Int): Boolean =
+      w(a) < w(b) || w(a) == w(b) &&
+        (lo(a) < lo(b) || lo(a) == lo(b) && hi(a) < hi(b))
+    val uf = new MinUnionFind(ids.length)
+    val comp = new Array[Int](ids.length)
+    val best = new Array[Int](ids.length)
+    val chosen = new Array[Boolean](rows.length)
+    var round = 0
+    var done = false
+    while (round < rounds && !done) {
+      round += 1
+      for (i <- ids.indices) { comp(i) = uf.find(i); best(i) = -1 }
+      for (e <- rows.indices) {
+        val ca = comp(lo(e))
+        val cb = comp(hi(e))
+        if (ca != cb) {
+          if (best(ca) < 0 || before(e, best(ca))) best(ca) = e
+          if (best(cb) < 0 || before(e, best(cb))) best(cb) = e
+        }
+      }
+      val picks = best.filter(_ >= 0)
+      done = picks.isEmpty
+      picks.foreach { e => chosen(e) = true; uf.union(lo(e), hi(e)) }
+    }
+    val forest = rows.indices.filter(chosen)
+      .map(e => (ids(lo(e)), ids(hi(e)), w(e))).distinct.sorted
+      .map { case (u, v, c) => Row(u, v, c) }
+    rowsFrame(ew.sparkSession, forest, schema)
+  }
+
+  /** The keyed Borůvka loop behind [[msfOn]] over the checkpointed
+    * edge frame `ew` (released on return). Each round is one join of
+    * the edge frame against the label table + one keyed min, and the
+    * contraction runs [[minLabelComponentsKeyed]] on the picked
+    * component pairs. `small` (the measured [[SmallGraphVerts]] gate
+    * on the vertex set): the per-round label joins and the
+    * contraction ride static broadcasts — no shuffle query stage, no
+    * AQE round-trip; above it every join is a keyed shuffle. */
+  private[graft] def msfKeyed(ew: DataFrame, rounds: Int,
+      small: Boolean): DataFrame = {
     val und = ew.select(col("u").as("a"), col("v").as("b"), col("w"))
       .unionByName(
         ew.select(col("v").as("a"), col("u").as("b"), col("w")))
@@ -3868,13 +4071,6 @@ object GraphOps {
       .unionByName(ew.select(col("v").as("id"))).distinct()
       .select(col("id"), col("id").as("comp"))
       .localCheckpoint(true)
-    // measured broadcast gate (one count over the already-cached
-    // frame): under it the per-round label joins and the contraction
-    // CC ride static broadcasts — no shuffle query stage, no AQE
-    // round-trip — which is where this key's 300+-job scheduler-
-    // latency wall came from; above it (billion-vertex forests)
-    // every join falls back to the keyed shuffle
-    val small = labels.count() <= SmallGraphVerts
     def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
     // chosen-edge frames accumulate here and union+distinct ONCE at
     // the end — the forest is never read inside the loop, so
@@ -3915,7 +4111,7 @@ object GraphOps {
         val cpairs = pick.select(
           least(col("ca"), col("cb")).as("a_id"),
           greatest(col("ca"), col("cb")).as("b_id")).distinct()
-        val (cc, ccChk) = minLabelComponentsChk(cverts, cpairs, small)
+        val (cc, ccChk) = minLabelComponentsKeyed(cverts, cpairs, small)
         val nextLabels = labels
           .join(g(cc.select(col("id").as("comp"),
             col("cluster").as("newc"))), "comp")

@@ -451,23 +451,14 @@ object Streaming {
           val contraction = if (mergePairs.isEmpty) None else {
             val lv = mergePairs.select(col("a_id").as("id"))
               .unionByName(mergePairs.select(col("b_id").as("id")))
-              .distinct().localCheckpoint(true)
-            // measured broadcast gate (r15): the merge-pair label graph
-            // is batch-bounded; one count over the just-checkpointed
-            // frame lets the contraction loop plan static broadcasts
-            // instead of per-round AQE shuffle stages. r16 (advice #2):
-            // take the Chk variant so the label checkpoint handle — and
-            // the lv seed — can be RELEASED per micro-batch; the
-            // previous shape leaked one block set per merge-bearing
-            // batch in a loop built for long-running feeds.
-            val (lbls, chk) = graft.ops.GraphOps.minLabelComponentsChk(
-              lv, mergePairs,
-              small = lv.count() <= graft.ops.GraphOps.SmallGraphVerts)
-            Some((lbls, chk, lv))
+              .distinct()
+            // the Chk variant, so the label handle is unpersisted per
+            // micro-batch in a loop built for long-running feeds
+            Some(graft.ops.GraphOps.minLabelComponentsChk(lv, mergePairs))
           }
           val next = contraction match {
             case None => all
-            case Some((c, _, _)) =>
+            case Some((c, _)) =>
               all.join(c.select(col("cluster"), col("id").as("lbl")),
                   Seq("lbl"), "left")
                 .select(col("id"),
@@ -476,9 +467,7 @@ object Streaming {
           val out = next.localCheckpoint(true)
           out.write.mode("overwrite").parquet(labelsPath)
           out.unpersist(false)
-          contraction.foreach { case (_, chk, lv) =>
-            chk.unpersist(false); lv.unpersist(false)
-          }
+          contraction.foreach { case (_, chk) => chk.unpersist(false) }
           mergePairs.unpersist(false)
           e.unpersist(false)
           (): Unit

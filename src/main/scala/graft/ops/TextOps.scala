@@ -395,9 +395,10 @@ object TextOps {
     * pair graph) and elect the min doc_id as each cluster's canonical
     * representative — the doc a training-data pipeline KEEPS.
     *
-    * Components via [[GraphOps.minLabelComponents]] (iterative
-    * DataFrame min-label propagation, run until stable — any component
-    * diameter, matching the oracle's exact transitive closure). */
+    * Components via [[GraphOps.minLabelComponents]] (exact at any
+    * component diameter — a driver union-find under its size gate,
+    * min-label propagation run until stable above it — matching the
+    * oracle's exact transitive closure). */
   def dedupClusterCanonical(spark: SparkSession, dir: String): DataFrame =
     clusterLabelsCached(spark, dir)
       .select(col("id").as("doc_id"), col("cluster"),
@@ -419,13 +420,7 @@ object TextOps {
         .select(col("a_id"), col("b_id"))
       val verts = Tables(spark, dir).documents
         .select(col("doc_id").as("id"))
-      // measured broadcast gate (r15): the label loop's per-round
-      // joins ride static broadcasts under the same vertex bound as
-      // the graph family — one cheap count against the doc id column,
-      // and each of the ~2·rounds actions stops paying AQE shuffle-
-      // stage round-trips (the Borůvka/SCC job-train lesson)
-      val (labels, chk) = GraphOps.minLabelComponentsChk(verts, pairs,
-        small = verts.count() <= GraphOps.SmallGraphVerts)
+      val (labels, chk) = GraphOps.minLabelComponentsChk(verts, pairs)
       val out = labels.localCheckpoint(true)
       chk.unpersist(false)
       out

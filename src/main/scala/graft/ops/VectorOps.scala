@@ -849,13 +849,7 @@ object VectorOps {
     val pairs = pairSimLshOn(emb)
       .filter(col("cos_sim") >= EmbedDedupThreshold)
       .select(col("a_id"), col("b_id"))
-    // measured broadcast gate (r15): same job-train diet as the text
-    // dedup clustering — the vector id set is one cheap count, and
-    // under the bound every label round plans static broadcasts
-    // instead of AQE shuffle stages
-    val verts = emb.select(col("vec_id").as("id"))
-    GraphOps.minLabelComponents(verts, pairs,
-        small = verts.count() <= GraphOps.SmallGraphVerts)
+    GraphOps.minLabelComponents(emb.select(col("vec_id").as("id")), pairs)
       .select(col("id").as("vec_id"), col("cluster"),
         (col("id") === col("cluster")).as("is_canonical"))
       .orderBy(col("vec_id"))

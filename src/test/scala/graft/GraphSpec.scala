@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{GraphOps, GraphXAlgos}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Invariant tests for the oracle=no GraphX analytics (SURVEY.md §5.2)
@@ -1292,12 +1294,19 @@ class GraphSpec extends SparkSpec {
     val pairs = (path ++ extra).toDF("a_id", "b_id")
     val verts = ((1L to 59L).map(identity) ++
       Seq(40L, 60L, 100L, 101L, 200L, 201L)).distinct.toDF("id")
-    for (small <- Seq(false, true)) {
-      val got = GraphOps.minLabelComponents(verts, pairs, small)
+    // both keyed variants (the broadcast one with pointer quadrupling)
+    // and the gated entry, which solves this graph on the driver
+    val paths = Seq(
+      "keyed" -> GraphOps.minLabelComponentsKeyed(verts, pairs, false)._1,
+      "keyed broadcast" ->
+        GraphOps.minLabelComponentsKeyed(verts, pairs, true)._1,
+      "gated" -> GraphOps.minLabelComponents(verts, pairs))
+    for ((path, labels) <- paths) {
+      val got = labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // brute force: everything on the path + the 100/101 attachment
       // is one component labeled 1; 200–201 is its own component
-      (1L to 60L).foreach(i => assert(got(i) == 1L, s"v$i small=$small"))
+      (1L to 60L).foreach(i => assert(got(i) == 1L, s"v$i $path"))
       assert(got(100L) == 1L && got(101L) == 1L)
       assert(got(200L) == 200L && got(201L) == 200L)
     }
@@ -1327,6 +1336,65 @@ class GraphSpec extends SparkSpec {
       .select(col("cluster")).distinct().count()
     assert(fRows.length == verts.length - comp,
       s"${fRows.length} edges vs ${verts.length} verts, $comp comps")
+  }
+
+  /** Jobs run inside `f` (counted by job group, the listener bus
+    * drained before the count is read), and the RDDs `f` left cached
+    * after its own unpersist calls. */
+  private def jobsAndLeaks(tag: String)(f: => Unit): (Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == tag))
+          jobs.incrementAndGet()
+    }
+    val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    sc.addSparkListener(listener)
+    sc.setJobGroup(tag, tag)
+    try f
+    finally {
+      sc.clearJobGroup()
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val left = sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id))
+    (jobs.get, left.map(i => s"${i.id} ${i.name} at ${i.callSite}").toSeq)
+  }
+
+  test("connectivity kernels: small graphs solve on the driver within " +
+      "a job budget and leave no cached blocks") {
+    import spark.implicits._
+    val pairs = (1L to 59L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val verts = (1L to 60L).toDF("id")
+    val (ccJobs, ccLeft) = jobsAndLeaks("budget-cc") {
+      val (labels, chk) = GraphOps.minLabelComponentsChk(verts, pairs)
+      assert(labels.collect().forall(_.getLong(1) == 1L))
+      chk.unpersist(false)
+    }
+    assert(ccJobs <= 4, s"minLabelComponents ran $ccJobs jobs")
+    assert(ccLeft.isEmpty, s"minLabelComponents left RDDs $ccLeft cached")
+    // the corpus forest, whole: checkpoint, collect, consumer
+    val (msfJobs, msfLeft) = jobsAndLeaks("budget-msf") {
+      val forest = GraphOps.graphMsfBoruvka(spark, sfDir)
+      assert(forest.collect().nonEmpty)
+      forest.unpersist(false)
+    }
+    assert(msfJobs <= 12, s"msfOn ran $msfJobs jobs")
+    assert(msfLeft.isEmpty, s"msfOn left RDDs $msfLeft cached")
+  }
+
+  test("min-label components: a keyed loop that hits its round cap " +
+      "throws instead of returning unconverged labels") {
+    import spark.implicits._
+    val pairs = (1L to 19L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val verts = (1L to 20L).toDF("id")
+    val e = intercept[IllegalStateException](
+      GraphOps.minLabelComponentsKeyed(verts, pairs, small = false,
+        maxRounds = 1))
+    assert(e.getMessage.contains("1 rounds"), e.getMessage)
+    assert(e.getMessage.contains("labels still changing"), e.getMessage)
   }
 
   test("condensation: no 2-cycles (DAG necessary condition), every " +

@@ -203,4 +203,102 @@ class PropertySpec extends SparkSpec {
       assert(q2 >= q1, s"trial $trial: merge phase dropped Q $q1 -> $q2")
     }
   }
+
+  // ---- connectivity kernels: driver solve vs the keyed loops ----
+
+  /** Ids 0..29, about one in thirteen null: a vertex list of at most 25
+    * draws leaves pair ends outside it and repeats some ids. */
+  private val ccIdGen: Gen[Option[Long]] = Gen.frequency(
+    12 -> Gen.choose(0L, 29L).map(Option(_)), 1 -> Gen.const(None))
+
+  private val ccGraphGen
+      : Gen[(List[Option[Long]], List[(Option[Long], Option[Long])])] =
+    for {
+      nv <- Gen.choose(1, 25)
+      verts <- Gen.listOfN(nv, ccIdGen)
+      np <- Gen.choose(0, 30)
+      pairs <- Gen.listOfN(np, Gen.frequency(
+        6 -> Gen.zip(ccIdGen, ccIdGen),
+        1 -> ccIdGen.map(a => (a, a))))
+      again <- Gen.someOf(pairs)
+    } yield (verts, pairs ++ again)
+
+  test("min-label components: the driver solve matches both keyed " +
+      "loops on generated graphs (self-loops, duplicate pairs, pair " +
+      "ends outside verts, duplicate and null vertex rows)") {
+    val sess = spark
+    import sess.implicits._
+    import graft.ops.GraphOps
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val graphs = samples(ccGraphGen, 8)
+    assert(graphs.size >= 6)
+    graphs.foreach { case (vs, ps) =>
+      val verts = vs.toDF("id")
+      val pairs = ps.toDF("a_id", "b_id")
+      val local = GraphOps.minLabelComponentsLocal(verts,
+          verts.collect(), pairs.collect())
+        .collect().map(r => (opt(r, 0), opt(r, 1))).toSeq.sorted
+      val gated = GraphOps.minLabelComponents(verts, pairs)
+        .collect().map(r => (opt(r, 0), opt(r, 1))).toSeq.sorted
+      assert(gated == local)
+      // the keyed loop fans a duplicated vertex row out through its
+      // jump join, so it gets the distinct rows; the driver solve must
+      // give each input row (duplicates included) its id's keyed label
+      for (small <- Seq(false, true)) {
+        val (lab, chk) = GraphOps.minLabelComponentsKeyed(
+          verts.distinct(), pairs, small)
+        val keyed = lab.collect().map(r => (opt(r, 0), opt(r, 1)))
+        chk.unpersist(false)
+        assert(keyed.length == vs.distinct.length)
+        val byId = keyed.toMap
+        assert(local == vs.map(v => (v, byId(v))).sorted,
+          s"small=$small verts=$vs pairs=$ps")
+      }
+    }
+  }
+
+  /** Canonical edges (u < v) over ids 0..19 with weights 1..4, so
+    * equal-weight ties are common, plus parallel copies of some edges:
+    * exact duplicates and reweighted ones. */
+  private val msfGraphGen: Gen[List[(Long, Long, Long)]] = {
+    val edge = for {
+      a <- Gen.choose(0L, 19L)
+      b <- Gen.choose(0L, 19L).suchThat(_ != a)
+      w <- Gen.choose(1L, 4L)
+    } yield (math.min(a, b), math.max(a, b), w)
+    for {
+      m <- Gen.choose(1, 30)
+      es <- Gen.listOfN(m, edge)
+      dup <- Gen.someOf(es)
+      rew <- Gen.someOf(es)
+      w <- Gen.choose(1L, 4L)
+    } yield es ++ dup ++ rew.map { case (u, v, _) => (u, v, w) }
+  }
+
+  test("boruvka msf: the driver solve matches both keyed loops on " +
+      "generated graphs (ties, parallel edges) at 1, 2 and 14 rounds") {
+    val sess = spark
+    import sess.implicits._
+    import graft.ops.GraphOps
+    def edges(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq
+    val graphs = samples(msfGraphGen, 4)
+    assert(graphs.size >= 3)
+    graphs.foreach { es =>
+      val ew = es.toDF("u", "v", "w")
+      for (rounds <- Seq(1, 2, 14)) {
+        val local = edges(GraphOps.msfLocal(ew, ew.collect(), rounds))
+        assert(edges(GraphOps.msfOn(ew, rounds)) == local)
+        for (small <- Seq(false, true)) {
+          val keyed = GraphOps.msfKeyed(ew.localCheckpoint(true), rounds,
+            small)
+          assert(edges(keyed) == local,
+            s"rounds=$rounds small=$small edges=$es")
+          keyed.unpersist(false)
+        }
+      }
+    }
+  }
 }
