@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** §2.9 graph traversal operators expressed as Catalyst joins.
   *
@@ -3220,8 +3220,10 @@ object GraphOps {
     * unconverged labels. Monotone (labels only decrease, bounded by
     * the component min) and deterministic. Per-round eager
     * localCheckpoint truncates the otherwise exponentially-nested join
-    * lineage. The vertex rows must be distinct: the jump join fans a
-    * duplicated id out once per copy.
+    * lineage. The loop labels the distinct non-null ids (the jump
+    * join would fan a duplicated id out once per copy) and the labels
+    * join back to `verts`: one output row per `verts` row, a null id
+    * with a null cluster.
     *
     * `small` (the measured [[SmallGraphVerts]] gate on the vertex
     * rows): the label frame rides explicit broadcasts into the
@@ -3244,7 +3246,8 @@ object GraphOps {
     // chk = the eagerly checkpointed frame (owns the cached blocks,
     // the handle unpersist needs); labels = its stats-rebased view
     // (see dropStats) that the next round builds on
-    var chk = verts.select(col("id"), col("id").as("cluster"))
+    var chk = verts.select(col("id")).filter(col("id").isNotNull)
+      .distinct().select(col("id"), col("id").as("cluster"))
       .localCheckpoint()
     var labels = dropStats(chk)
     // r15 FRONTIER DELTA (guide §2.3 — shuffle/aggregate fewer rows):
@@ -3341,7 +3344,7 @@ object GraphOps {
       throw new IllegalStateException(s"min-label components did not " +
         s"converge in $round rounds: $nChanged labels still changing")
     }
-    (labels, chk)
+    (verts.select(col("id")).join(g(labels), Seq("id"), "left"), chk)
   }
 
   /** Batch graph mutation: merge an edge delta into an edge table,
@@ -3669,8 +3672,12 @@ object GraphOps {
     * closure) independently of corpus size; raise it as SF grows. */
   val SccOrderMod = 97
 
-  /** Doubling rounds for bounded reachability: 5 rounds = 32-hop
-    * horizon, covering every cycle chain in the capped subgraph. */
+  /** Horizon of the bounded SCC labels, as a power of two: two
+    * vertices share an SCC label when each reaches the other within
+    * 2^5 = 32 hops of the contracted graph, which covers every cycle
+    * chain in the capped subgraph. The keyed closure runs this many
+    * doubling rounds; the driver solve caps its searches at the same
+    * hop count (see [[sccLabelsOn]]). */
   val SccDoubleRounds = 5
 
   /** STRONGLY connected components over a derived DIRECTED graph where
@@ -3683,20 +3690,21 @@ object GraphOps {
     * Algorithm: CONTRACT-THEN-CLOSE. Every cycle edge lies on a
     * directed cycle, so each weak component of the cycle frame is
     * strongly connected (weakly-connected union of directed cycles ⇒
-    * strong) — [[minLabelComponents]] contracts them to supernodes in
-    * O(log d) pointer-jumping rounds with one long of state per
-    * vertex. Only the one-way attachment edges survive contraction
-    * (cycle edges become self-loops), so the bounded-horizon doubling
-    * closure + mutual-pair join of [[sccLabelsOn]] runs on the TINY
-    * contracted graph (supernodes × cross-component attachments), not
-    * the raw one — the closure's Σ|SCC|² quadratic surface collapses
-    * to the supernode count. Lifting back is one join; scc_id = min
-    * member part id. A naive closure over the raw frame measured 109 s
-    * at sf0.01 (143k-pair closure from a 493-vertex graph); this shape
-    * is bounded by the contracted size at every SF. Output:
-    * non-singleton components by size. Fully integer/deterministic →
-    * DuckDB-oracled with recursive-CTE contraction + the identical
-    * doubling unrolled. */
+    * strong) — [[minLabelComponentsChk]] contracts them to
+    * supernodes. Only the one-way attachment edges survive
+    * contraction (cycle edges become self-loops), so the
+    * bounded-horizon labels of [[sccLabelsOn]] are computed on the
+    * TINY contracted graph (supernodes × cross-component
+    * attachments), not the raw one — the keyed closure's Σ|SCC|²
+    * quadratic surface collapses to the supernode count. Lifting back
+    * is one join; scc_id = min member part id. Both the contraction
+    * and the closure measure their input and, under the
+    * [[SmallGraphVerts]] gate, solve on the driver; above it they run
+    * their keyed loops (pointer-jumping min labels, doubling closure
+    * with per-round checkpoints). The shared work lives in
+    * [[sccLifted]]. Output: non-singleton components by size. Fully
+    * integer/deterministic → DuckDB-oracled with recursive-CTE
+    * contraction + the identical doubling unrolled. */
   def graphScc(spark: SparkSession, dir: String): DataFrame = {
     val (lifted, _) = sccLifted(spark, dir)
     lifted.groupBy(col("sl"))
@@ -3792,7 +3800,7 @@ object GraphOps {
         col("l").cast("int").as("layer"))
       .orderBy(col("scc_id"))
       .localCheckpoint(true)
-    (retired ++ Seq(nodes, dadj, lay)).foreach(_.unpersist(false))
+    (retired ++ Seq(nodes, dadj, lay)).foreach(releaseChk)
     out
   }
 
@@ -3800,70 +3808,268 @@ object GraphOps {
     (SparkSession, String), (DataFrame, DataFrame)]()
 
   /** Shared SCC pipeline: basket cycles + brand-hub attachments,
-    * cycle-frame contraction, doubling closure, labels lifted back.
+    * cycle-frame contraction, bounded closure, labels lifted back.
     * Returns (`(id, sl)` per-part scc label frame, the directed
-    * `(src, dst)` edge frame cyc ∪ att) — memoized + persisted per
-    * (session, dir) so the census and the condensation pay for ONE
+    * `(src, dst)` edge frame cyc ∪ att) — memoized per (session, dir)
+    * so the census and the condensation pay for ONE
     * contraction+closure, the same sharing discipline as
-    * [[GraphModel.edgesCached]]. */
+    * [[GraphModel.edgesCached]].
+    *
+    * The two edge frames are computed once each, and every later step
+    * reads them, never the lineitem window or the part join again.
+    * Measured size gate ([[SmallGraphVerts]], one bounded collect per
+    * frame): rows that fit come to the driver and go back as
+    * [[rowsFrame]]s; when both fit as non-null BIGINT, the
+    * contraction, the closure and the lift run on the driver
+    * ([[sccLiftLocal]]) and the memo costs the two collects. Otherwise
+    * the frames are checkpointed and the contraction
+    * ([[minLabelComponentsChk]]) and the closure ([[sccLabelsOn]])
+    * run as plans, each behind its own gate. */
   private def sccLifted(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = sccLiftCache.synchronized {
     sccLiftCache.getOrElseUpdate((spark, dir), {
       val t = Tables(spark, dir)
+      def pinned(df: DataFrame): (DataFrame, Option[Array[Row]]) =
+        collectSmall(df) match {
+          case Some(rows) => (rowsFrame(spark, rows.toSeq, df.schema),
+            Some(rows).filter(_ => allLong(df)))
+          case None => (df.localCheckpoint(), None)
+        }
       val b = t.lineitem.filter(col("l_orderkey") % SccOrderMod === 0)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
       val wo = Window.partitionBy(col("o")).orderBy(col("p"))
-      val cyc = b
+      val (cyc, cycRows) = pinned(b
         .select(col("o"), col("p"), lead(col("p"), 1).over(wo).as("np"),
           min(col("p")).over(Window.partitionBy(col("o"))).as("fp"))
         .select(col("p").as("src"),
           coalesce(col("np"), col("fp")).as("dst"))
         .filter(col("src") =!= col("dst"))
-        .distinct()
+        .distinct())
       val partsIn = cyc.select(col("src").as("p"))
         .unionByName(cyc.select(col("dst").as("p"))).distinct()
       val withBrand = partsIn.join(
         t.part.select(col("p_partkey").as("p"), col("p_brand")), Seq("p"))
       val hub = withBrand.groupBy(col("p_brand"))
         .agg(min(col("p")).as("hub"))
-      val att = withBrand.join(hub, Seq("p_brand"))
+      val (att, attRows) = pinned(withBrand.join(hub, Seq("p_brand"))
         .filter(col("hub") =!= col("p"))
-        .select(col("hub").as("src"), col("p").as("dst"))
-      // contract: weak components of the cycle frame are SCCs already
-      val (comp, compChk) = minLabelComponentsChk(
-        partsIn.select(col("p").as("id")),
-        cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
-      // attachments between supernodes; within-supernode ones vanish
-      val ce = att
-        .join(comp.select(col("id").as("src"), col("cluster").as("csrc")),
-          Seq("src"))
-        .join(comp.select(col("id").as("dst"), col("cluster").as("cdst")),
-          Seq("dst"))
-        .filter(col("csrc") =!= col("cdst"))
-        .select(col("csrc").as("src"), col("cdst").as("dst"))
-        .distinct()
-      // doubling closure over the contracted graph only
-      val superLab = sccLabelsOn(ce, SccDoubleRounds)
-      val lifted = comp
-        .join(superLab.select(col("u").as("cluster"), col("scc_id")),
-          Seq("cluster"), "left")
-        .select(col("id"),
-          coalesce(col("scc_id"), col("cluster")).as("sl"))
-        .localCheckpoint(true)
-      val edges = cyc.unionByName(att).localCheckpoint(true)
-      // lifted and edges are both eager — the contraction labels'
-      // block set is no longer referenced
-      compChk.unpersist(false)
-      (lifted, edges)
+        .select(col("hub").as("src"), col("p").as("dst")))
+      val local = for {
+        c <- cycRows
+        a <- attRows
+        if !(c ++ a).exists(_.anyNull)
+      } yield sccLiftLocal(spark, c, a)
+      val lifted = local.getOrElse {
+        // contract: weak components of the cycle frame are SCCs already
+        val (comp, compChk) = minLabelComponentsChk(
+          partsIn.select(col("p").as("id")),
+          cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
+        // attachments between supernodes; within-supernode ones vanish
+        val ce = att
+          .join(comp.select(col("id").as("src"),
+            col("cluster").as("csrc")), Seq("src"))
+          .join(comp.select(col("id").as("dst"),
+            col("cluster").as("cdst")), Seq("dst"))
+          .filter(col("csrc") =!= col("cdst"))
+          .select(col("csrc").as("src"), col("cdst").as("dst"))
+          .distinct()
+        // bounded closure over the contracted graph only
+        val superLab = sccLabelsOn(ce, SccDoubleRounds)
+        val out = comp
+          .join(superLab.select(col("u").as("cluster"), col("scc_id")),
+            Seq("cluster"), "left")
+          .select(col("id"),
+            coalesce(col("scc_id"), col("cluster")).as("sl"))
+          .localCheckpoint(true)
+        // out is eager and superLab no longer reads the labels
+        releaseChk(compChk)
+        out
+      }
+      (lifted, cyc.unionByName(att))
     })
   }
 
+  /** The driver path of [[sccLifted]] over the collected cycle and
+    * attachment rows (BIGINT, non-null): the same contraction (cycle
+    * edges union-found, each part labeled by its component's least
+    * id), the attachments between distinct supernodes, their
+    * [[SccDoubleRounds]] bounded labels ([[boundedSccLabels]]) and the
+    * lift back to one `(id, sl)` row per part. */
+  private def sccLiftLocal(spark: SparkSession, cycRows: Array[Row],
+      attRows: Array[Row]): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("sl", LongType)))
+    val ids = sortedDistinct(
+      cycRows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+    def ix(r: Row, i: Int): Int =
+      java.util.Arrays.binarySearch(ids, r.getLong(i))
+    val uf = new MinUnionFind(ids.length)
+    cycRows.foreach(r => uf.union(ix(r, 0), ix(r, 1)))
+    val ce = attRows.map(r => (ix(r, 0), ix(r, 1)))
+      .collect { case (a, b) if a >= 0 && b >= 0 =>
+        (uf.find(a), uf.find(b)) }
+      .filter { case (a, b) => a != b }.distinct
+    val label = boundedSccLabels(ids.length, ce.map(_._1), ce.map(_._2),
+      SccDoubleRounds)
+    rowsFrame(spark,
+      ids.indices.map(i => Row(ids(i), ids(label(uf.find(i))))), schema)
+  }
+
   /** The SCC core on an arbitrary (src, dst) edge frame: bounded-
-    * horizon closure by doubling, mutual-pair join, min-partner label.
-    * Returns (u, scc_id) for every vertex. Exposed for the registered
-    * census above and for hand-graph invariant tests. */
+    * horizon strongly connected labels. `scc_id(u)` is the least of
+    * `u` and every `v` with `u → v` and `v → u` each reachable within
+    * `2^rounds` hops. Returns (u, scc_id) for every vertex that ends
+    * an edge. Exposed for the registered census above and for
+    * hand-graph invariant tests.
+    *
+    * Measured size gate ([[SmallGraphVerts]] edge rows, one bounded
+    * collect): when the edges fit and are non-null BIGINT, the labels
+    * are solved on the driver ([[sccLabelsLocal]]) — the collect is
+    * the only job. Otherwise the doubling closure
+    * ([[sccLabelsKeyed]]) runs. */
   def sccLabelsOn(edges: DataFrame, rounds: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    val rows = if (allLong(e)) collectSmall(e) else None
+    rows.filterNot(_.exists(_.anyNull)) match {
+      case Some(r) => sccLabelsLocal(edges.sparkSession, r, rounds)
+      case None => sccLabelsKeyed(edges, rounds)
+    }
+  }
+
+  /** The driver solve of [[sccLabelsOn]] over collected `(src, dst)`
+    * rows (BIGINT, non-null), equal to [[sccLabelsKeyed]]'s labels:
+    * [[boundedSccLabels]] over the dense ids. */
+  private[graft] def sccLabelsLocal(spark: SparkSession,
+      rows: Array[Row], rounds: Int): DataFrame = {
+    val schema = StructType(Seq(StructField("u", LongType),
+      StructField("scc_id", LongType)))
+    val ids =
+      sortedDistinct(rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
+    def ix(r: Row, i: Int): Int =
+      java.util.Arrays.binarySearch(ids, r.getLong(i))
+    val label = boundedSccLabels(ids.length, rows.map(ix(_, 0)),
+      rows.map(ix(_, 1)), rounds)
+    rowsFrame(spark, ids.indices.map(i => Row(ids(i), ids(label(i)))),
+      schema)
+  }
+
+  /** Bounded-horizon SCC labels over indices 0..n−1 and the edges
+    * `src(e) → dst(e)`: each index's label is the least index that it
+    * reaches, and that reaches it, within `2^rounds` hops (itself if
+    * none is less). A shortest path between two members of one SCC
+    * stays inside it (every vertex on it reaches both ends), so within
+    * an SCC of s members every member reaches every other in at most
+    * s − 1 hops. Tarjan finds the SCCs; one of at most `2^rounds + 1`
+    * members is labeled by its least member outright, a larger one by
+    * a forward and a backward breadth-first search per member, capped
+    * at `2^rounds` hops and kept inside the SCC. */
+  private def boundedSccLabels(n: Int, src: Array[Int], dst: Array[Int],
+      rounds: Int): Array[Int] = {
+    val fwd = adjacency(n, src, dst)
+    val bwd = adjacency(n, dst, src)
+    val comp = tarjanScc(fwd)
+    val horizon = 1L << (rounds max 0 min 62)
+    val label = new Array[Int](n)
+    // members ascend, so the head of a member list is its least index
+    (0 until n).groupBy(comp(_)).values.foreach { ms =>
+      if (ms.length - 1 <= horizon) ms.foreach(label(_) = ms.head)
+      else {
+        def inside(w: Int): Boolean = comp(w) == comp(ms.head)
+        ms.foreach { u =>
+          label(u) = (hopsWithin(fwd, u, horizon, inside) &
+            hopsWithin(bwd, u, horizon, inside)).head
+        }
+      }
+    }
+    label
+  }
+
+  /** Adjacency lists over indices 0..n−1 of the `from(e) → to(e)`
+    * edges. */
+  private def adjacency(n: Int, from: Array[Int],
+      to: Array[Int]): Array[Array[Int]] = {
+    val deg = new Array[Int](n)
+    from.foreach(i => deg(i) += 1)
+    val adj = Array.tabulate(n)(i => new Array[Int](deg(i)))
+    java.util.Arrays.fill(deg, 0)
+    for (e <- from.indices) {
+      adj(from(e))(deg(from(e))) = to(e)
+      deg(from(e)) += 1
+    }
+    adj
+  }
+
+  /** Strongly connected components by Tarjan's algorithm, with an
+    * explicit call stack so a long path cannot overflow the thread's:
+    * the component number of every index. */
+  private def tarjanScc(adj: Array[Array[Int]]): Array[Int] = {
+    val n = adj.length
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val comp = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    val call = new Array[Int](n)
+    val next = new Array[Int](n) // next edge of each vertex to visit
+    var sp = 0
+    var counter = 0
+    var nComp = 0
+    def open(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+    }
+    for (root <- 0 until n if index(root) < 0) {
+      open(root)
+      call(0) = root
+      var cp = 1
+      while (cp > 0) {
+        val v = call(cp - 1)
+        if (next(v) < adj(v).length) {
+          val w = adj(v)(next(v))
+          next(v) += 1
+          if (index(w) < 0) { open(w); call(cp) = w; cp += 1 }
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          cp -= 1
+          if (cp > 0) {
+            val p = call(cp - 1)
+            low(p) = math.min(low(p), low(v))
+          }
+          if (low(v) == index(v)) {
+            var w = -1
+            while (w != v) {
+              sp -= 1; w = stack(sp); onStack(w) = false; comp(w) = nComp
+            }
+            nComp += 1
+          }
+        }
+      }
+    }
+    comp
+  }
+
+  /** `u` and the indices reachable from it along `adj` in at most
+    * `horizon` hops through `inside` vertices only. */
+  private def hopsWithin(adj: Array[Array[Int]], u: Int, horizon: Long,
+      inside: Int => Boolean): scala.collection.mutable.BitSet = {
+    val seen = scala.collection.mutable.BitSet(u)
+    var frontier = Array(u)
+    var hops = 0L
+    while (frontier.nonEmpty && hops < horizon) {
+      hops += 1
+      frontier =
+        frontier.flatMap(adj(_)).filter(w => inside(w) && seen.add(w))
+    }
+    seen
+  }
+
+  /** The keyed path of [[sccLabelsOn]]: bounded-horizon closure by
+    * doubling, mutual-pair join, min-partner label. After `rounds`
+    * rounds the closure holds every pair joined by a path of 1 to
+    * `2^rounds` edges. */
+  private[graft] def sccLabelsKeyed(edges: DataFrame,
+      rounds: Int): DataFrame = {
     // eager localCheckpoint per round, NOT lazy persist: the doubling
     // plan references the previous round 2× (and the mutual join 2×
     // more), so without lineage truncation the logical plan — and
@@ -3894,8 +4100,7 @@ object GraphOps {
       .unionByName(verts.select(col("p").as("u"), col("p").as("v")))
       .groupBy(col("u")).agg(min(col("v")).as("scc_id"))
       .localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    rChk.unpersist(false)
+    (retired :+ rChk).foreach(releaseChk)
     out
   }
 

@@ -1,8 +1,7 @@
 package graft
 
 import graft.ops.{GraphOps, GraphXAlgos}
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Invariant tests for the oracle=no GraphX analytics (SURVEY.md §5.2)
@@ -1233,11 +1232,41 @@ class GraphSpec extends SparkSpec {
     // one-way attachment 9→1 (9 reaches the SCC, never returns)
     val e = Seq((1L,2L),(2L,3L),(3L,1L),(3L,4L),(4L,5L),(5L,3L),(9L,1L))
       .toDF("src", "dst")
-    val lab = GraphOps.sccLabelsOn(e, 4).collect()
-      .map(r => r.getAs[Long]("u") -> r.getAs[Long]("scc_id")).toMap
-    assert(Seq(1L,2L,3L,4L,5L).map(lab).distinct.size == 1)
-    assert(lab(1L) == 1L)
-    assert(lab(9L) == 9L)
+    // the gated entry solves this graph on the driver, within the
+    // job budget and caching nothing; the keyed doubling closure must
+    // agree
+    var gated = Array.empty[org.apache.spark.sql.Row]
+    val (sccJobs, sccLeft) = jobsAndLeaks("budget-scc") {
+      gated = GraphOps.sccLabelsOn(e, 4).collect()
+    }
+    assert(sccJobs <= 2, s"sccLabelsOn ran $sccJobs jobs")
+    assert(sccLeft.isEmpty, s"sccLabelsOn left RDDs $sccLeft cached")
+    for ((path, rows) <- Seq("gated" -> gated,
+        "keyed" -> GraphOps.sccLabelsKeyed(e, 4).collect())) {
+      val lab = rows
+        .map(r => r.getAs[Long]("u") -> r.getAs[Long]("scc_id")).toMap
+      assert(lab.keySet == Set(1L, 2L, 3L, 4L, 5L, 9L), path)
+      assert(Seq(1L,2L,3L,4L,5L).map(lab).distinct.size == 1, path)
+      assert(lab(1L) == 1L, path)
+      assert(lab(9L) == 9L, path)
+    }
+  }
+
+  test("condensation layers release every checkpoint but their " +
+      "output's") {
+    // the shared SCC memo is built outside the measured call
+    GraphOps.graphScc(spark, sfDir).collect()
+    var outRdd = -1
+    val (_, layLeft) = jobsAndLeaks("leaks-layers") {
+      val out = GraphOps.graphCondensationLayers(spark, sfDir)
+      outRdd = out.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.id
+        case p => fail(s"layers output is not a checkpoint: $p")
+      }
+      assert(out.collect().nonEmpty)
+    }
+    assert(layLeft.forall(_.id == outRdd),
+      s"graphCondensationLayers left RDDs $layLeft cached")
   }
 
   test("scc census: every sampled basket's parts land in ONE scc, " +
@@ -1336,31 +1365,6 @@ class GraphSpec extends SparkSpec {
       .select(col("cluster")).distinct().count()
     assert(fRows.length == verts.length - comp,
       s"${fRows.length} edges vs ${verts.length} verts, $comp comps")
-  }
-
-  /** Jobs run inside `f` (counted by job group, the listener bus
-    * drained before the count is read), and the RDDs `f` left cached
-    * after its own unpersist calls. */
-  private def jobsAndLeaks(tag: String)(f: => Unit): (Int, Seq[String]) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == tag))
-          jobs.incrementAndGet()
-    }
-    val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
-    sc.addSparkListener(listener)
-    sc.setJobGroup(tag, tag)
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    val left = sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id))
-    (jobs.get, left.map(i => s"${i.id} ${i.name} at ${i.callSite}").toSeq)
   }
 
   test("connectivity kernels: small graphs solve on the driver within " +

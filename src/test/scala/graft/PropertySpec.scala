@@ -242,18 +242,60 @@ class PropertySpec extends SparkSpec {
       val gated = GraphOps.minLabelComponents(verts, pairs)
         .collect().map(r => (opt(r, 0), opt(r, 1))).toSeq.sorted
       assert(gated == local)
-      // the keyed loop fans a duplicated vertex row out through its
-      // jump join, so it gets the distinct rows; the driver solve must
-      // give each input row (duplicates included) its id's keyed label
+      // both keyed loops get the duplicate and null vertex rows too,
+      // and give each its own output row
       for (small <- Seq(false, true)) {
         val (lab, chk) = GraphOps.minLabelComponentsKeyed(
-          verts.distinct(), pairs, small)
+          verts, pairs, small)
         val keyed = lab.collect().map(r => (opt(r, 0), opt(r, 1)))
+          .toSeq.sorted
         chk.unpersist(false)
-        assert(keyed.length == vs.distinct.length)
-        val byId = keyed.toMap
-        assert(local == vs.map(v => (v, byId(v))).sorted,
-          s"small=$small verts=$vs pairs=$ps")
+        assert(keyed == local, s"small=$small verts=$vs pairs=$ps")
+      }
+    }
+  }
+
+  // ---- bounded SCC labels: driver solve vs the doubling closure ----
+
+  /** Digraphs over ids 0..19: one directed cycle of 2 to 14 vertices
+    * (longer than the 2^rounds-hop horizon at rounds 1 to 3), random
+    * extra edges and self-loops, repeats of some edges, a source that
+    * only sends (100) and a sink that only receives (101). */
+  private val sccGraphGen: Gen[List[(Long, Long)]] = {
+    val id = Gen.choose(0L, 19L)
+    for {
+      len <- Gen.choose(2, 14)
+      ring <- Gen.pick(len, 0L to 19L)
+      m <- Gen.choose(0, 12)
+      extra <- Gen.listOfN(m, Gen.frequency(
+        5 -> Gen.zip(id, id), 1 -> id.map(a => (a, a))))
+      into <- id
+      from <- id
+      cycle = ring.toList.zip(ring.tail.toList :+ ring.head)
+      es = cycle ++ extra ++ List((100L, into), (from, 101L))
+      again <- Gen.someOf(es)
+    } yield es ++ again
+  }
+
+  test("scc labels: the driver solve matches the doubling closure on " +
+      "generated digraphs (cycles past the horizon, self-loops, " +
+      "repeated edges, send-only and receive-only vertices) at 1 to 3 " +
+      "rounds") {
+    val sess = spark
+    import sess.implicits._
+    import graft.ops.GraphOps
+    def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val graphs = samples(sccGraphGen, 6)
+    assert(graphs.size >= 4)
+    graphs.foreach { es =>
+      val e = es.toDF("src", "dst")
+      for (rounds <- 1 to 3) {
+        val local = labels(GraphOps.sccLabelsLocal(spark, e.collect(),
+          rounds))
+        assert(labels(GraphOps.sccLabelsOn(e, rounds)) == local)
+        assert(labels(GraphOps.sccLabelsKeyed(e, rounds)) == local,
+          s"rounds=$rounds edges=$es")
       }
     }
   }
