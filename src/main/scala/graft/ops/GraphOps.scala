@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{GraphModel, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -262,15 +263,9 @@ object GraphOps {
     * 100 TB the verts/msgs join keys on the same `id` partitioning
     * every iteration, so with the edge table bucketed by src only the
     * per-iteration message shuffle moves data. */
-  /** Build-and-persist (id, od) for an edge frame — the fallback when
-    * no shared [[GraphModel.dedupVertsCached]] frame is supplied. Same
-    * definition by construction ([[GraphModel.vertsWithOutDegree]]). */
-  private def buildVertsOd(e: DataFrame): DataFrame =
-    GraphModel.vertsWithOutDegree(e).persist()
-
   def pagerankExactOn(edges: DataFrame, iters: Int,
       sharedVerts: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = {
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
     // contract: `edges` holds DEDUPLICATED (src, dst) pairs — the
     // registered callers pass GraphModel.dedupEdgesCached, so repeating
     // the distinct here would re-shuffle the edge table per call; they
@@ -286,13 +281,14 @@ object GraphOps {
     // join less per iteration. od = 0 marks sink vertices (no outgoing
     // edges; their rank is damped away, matching the oracle CTE).
     val e = edges.select(col("src"), col("dst"))
-    val verts = sharedVerts.getOrElse(buildVertsOd(e))
+    // without the shared frame, the same definition by construction
+    val verts = sharedVerts.getOrElse(
+      rs.persist(GraphModel.vertsWithOutDegree(e)))
     // the r13 exchange diet: with `small` (the SmallGraphVerts gate,
     // vertex-count frames fit a broadcast), the contrib and msgs
     // frames broadcast into their joins — per iteration the ONLY
     // exchange left is the message agg; at scale the gate flips back
     // to keyed joins against the src-partitioned edge cache
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
     var rank = verts.select(col("id"), col("od"), lit(1000000L).as("r"))
     // r16: LAZY per-iteration checkpoint on the V-sized rank state.
     // Un-checkpointed, the whole run is ONE query over 2·iters nested
@@ -305,29 +301,22 @@ object GraphOps {
     // materializes inside the next iteration's own job, so the round
     // count of driver jobs is unchanged (the r15 session's EAGER
     // variant added a blocking job per iteration and measured no win).
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     for (i <- 1 to iters) {
       val contrib = rank.filter(col("od") > 0)
         .select(col("id").as("src"), expr("r div od").as("c"))
-      val msgs = e.join(g(contrib), "src")
+      val msgs = e.join(rs.g(contrib), "src")
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      rank = verts.join(g(msgs), verts("id") === msgs("dst"), "left")
+      rank = verts.join(rs.g(msgs), verts("id") === msgs("dst"), "left")
         .select(col("id"), col("od"),
           (lit(150000L) + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
-      if (i < iters) {
-        rank = rank.localCheckpoint(false)
-        retired += rank
-      }
+      if (i < iters) rank = rs.chk(rank, eager = false)
     }
     // eager localCheckpoint: materializes the (small) final rank state
     // so the helper frames can be released — and truncates the
-    // remaining lineage, the same discipline the dedup-cluster loop
-    // uses. One bigint per vertex; at 100 TB this is the per-iteration
-    // state you would checkpoint to the cluster store instead.
-    val out = rank.select(col("id"), col("r")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    if (sharedVerts.isEmpty) verts.unpersist(false): Unit
-    out
+    // remaining lineage. One bigint per vertex; at 100 TB this is the
+    // per-iteration state you would checkpoint to the cluster store
+    // instead.
+    rank.select(col("id"), col("r")).localCheckpoint(true)
   }
 
   /** Registered surface: 5 exact iterations on the deduplicated derived
@@ -337,8 +326,7 @@ object GraphOps {
   def pagerankExact(spark: SparkSession, dir: String): DataFrame =
     pagerankExactOn(GraphModel.dedupEdgesCached(spark, dir), 5,
         Some(GraphModel.dedupVertsCached(spark, dir)),
-        small = GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts)
+        small = smallGraph(spark, dir))
       .select(col("id"), col("r").as("rank_micro"))
       .orderBy(col("rank_micro").desc, col("id"))
       .limit(50)
@@ -354,42 +342,33 @@ object GraphOps {
     * via the same unrolled CTE shape. */
   def pagerankPersonalizedOn(edges: DataFrame, sources: DataFrame,
       iters: Int, sharedVerts: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = {
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
     val e = edges.select(col("src"), col("dst"))
-    val baseVerts = sharedVerts.getOrElse(buildVertsOd(e))
+    val baseVerts = sharedVerts.getOrElse(
+      rs.persist(GraphModel.vertsWithOutDegree(e)))
     // the teleport flag is per-query (it depends on `sources`), so the
     // tp-joined frame persists per call even when the (id, od) skeleton
     // is the shared cache
-    val verts = baseVerts
+    val verts = rs.persist(baseVerts
       .join(sources.select(col("sid")).distinct(),
         col("id") === col("sid"), "left")
       .select(col("id"), col("od"),
         when(col("sid").isNotNull, lit(150000L)).otherwise(lit(0L))
-          .as("tp"))
-      .persist()
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
+          .as("tp")))
     var rank = verts.select(col("id"), col("od"), col("tp"),
       when(col("tp") > 0, lit(1000000L)).otherwise(lit(0L)).as("r"))
     // lazy per-iteration checkpoint — see pagerankExactOn (r16)
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     for (i <- 1 to iters) {
       val contrib = rank.filter(col("od") > 0 && col("r") > 0)
         .select(col("id").as("src"), expr("r div od").as("c"))
-      val msgs = e.join(g(contrib), "src")
+      val msgs = e.join(rs.g(contrib), "src")
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      rank = verts.join(g(msgs), verts("id") === msgs("dst"), "left")
+      rank = verts.join(rs.g(msgs), verts("id") === msgs("dst"), "left")
         .select(col("id"), col("od"), col("tp"),
           (col("tp") + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
-      if (i < iters) {
-        rank = rank.localCheckpoint(false)
-        retired += rank
-      }
+      if (i < iters) rank = rs.chk(rank, eager = false)
     }
-    val out = rank.select(col("id"), col("r")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    verts.unpersist(false)
-    if (sharedVerts.isEmpty) baseVerts.unpersist(false): Unit
-    out
+    rank.select(col("id"), col("r")).localCheckpoint(true)
   }
 
   /** Registered surface: personalized PageRank from the BUILDING-market
@@ -402,8 +381,7 @@ object GraphOps {
     pagerankPersonalizedOn(
       GraphModel.dedupEdgesCached(spark, dir), sources, 5,
       Some(GraphModel.dedupVertsCached(spark, dir)),
-      small = GraphModel.dedupVertCountCached(spark, dir)
-        <= SmallGraphVerts)
+      small = smallGraph(spark, dir))
       .select(col("id"), col("r").as("rank_micro"))
       .orderBy(col("rank_micro").desc, col("id"))
       .limit(50)
@@ -424,40 +402,30 @@ object GraphOps {
     * iterated join probes — bucketing at 100 TB. Overflow bound:
     * r ≤ V·10^6 and w ≤ max multiplicity (single digits here), so
     * r·w stays orders of magnitude under 2^63 even at 1000×. */
-  def pagerankWeightedExactOn(edgesMulti: DataFrame,
-      iters: Int, small: Boolean = false): DataFrame = {
-    val we = edgesMulti.groupBy(col("src"), col("dst"))
+  def pagerankWeightedExactOn(edgesMulti: DataFrame, iters: Int,
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
+    val we = rs.persist(edgesMulti.groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("w"))
-      .repartition(col("src")).persist()
+      .repartition(col("src")))
     val wout = we.groupBy(col("src")).agg(sum(col("w")).as("wt"))
-    val verts = we.select(col("src").as("id"))
+    val verts = rs.persist(we.select(col("src").as("id"))
       .unionByName(we.select(col("dst").as("id"))).distinct()
       .join(wout, col("id") === col("src"), "left")
-      .select(col("id"), coalesce(col("wt"), lit(0L)).as("wt"))
-      .persist()
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
+      .select(col("id"), coalesce(col("wt"), lit(0L)).as("wt")))
     var rank = verts.select(col("id"), col("wt"),
       lit(1000000L).as("r"))
     // lazy per-iteration checkpoint — see pagerankExactOn (r16)
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     for (i <- 1 to iters) {
       val contrib = rank.filter(col("wt") > 0)
         .select(col("id").as("src"), col("r"), col("wt"))
-      val msgs = we.join(g(contrib), "src")
+      val msgs = we.join(rs.g(contrib), "src")
         .groupBy(col("dst")).agg(sum(expr("(r * w) div wt")).as("s"))
-      rank = verts.join(g(msgs), verts("id") === msgs("dst"), "left")
+      rank = verts.join(rs.g(msgs), verts("id") === msgs("dst"), "left")
         .select(col("id"), col("wt"),
           (lit(150000L) + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
-      if (i < iters) {
-        rank = rank.localCheckpoint(false)
-        retired += rank
-      }
+      if (i < iters) rank = rs.chk(rank, eager = false)
     }
-    val out = rank.select(col("id"), col("r")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    we.unpersist(false)
-    verts.unpersist(false)
-    out
+    rank.select(col("id"), col("r")).localCheckpoint(true)
   }
 
   /** Registered surface: 5 exact weighted iterations on the raw
@@ -466,8 +434,7 @@ object GraphOps {
   def pagerankWeightedExact(spark: SparkSession,
       dir: String): DataFrame =
     pagerankWeightedExactOn(GraphModel.edgesCached(spark, dir), 5,
-      small = GraphModel.dedupVertCountCached(spark, dir)
-        <= SmallGraphVerts)
+      small = smallGraph(spark, dir))
       .select(col("id"), col("r").as("rank_micro"))
       .orderBy(col("rank_micro").desc, col("id"))
       .limit(50)
@@ -486,43 +453,34 @@ object GraphOps {
     * `assignToCentroids` uses). Label state is one long per vertex. */
   def lpaExactOn(edges: DataFrame, iters: Int,
       sharedVerts: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = {
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
     // same deduplicated-input contract as [[pagerankExactOn]]; the
     // shared (id, od) skeleton serves here as the vertex set (od unused)
     val ded = edges.select(col("src"), col("dst"))
-    val und = ded
+    val und = rs.persist(ded
       .unionByName(ded.select(col("dst").as("src"), col("src").as("dst")))
       .toDF("v", "n")
       // pre-partitioned on the per-round join key (see
       // GraphModel.dedupEdgesCached): each LPA round joins und on `n`,
       // so the persisted partitioning replaces one exchange per round
-      .repartition(col("n")).persist()
+      .repartition(col("n")))
     val verts = sharedVerts.map(_.select(col("id"))).getOrElse(
-      ded.select(col("src").as("id"))
-        .unionByName(ded.select(col("dst").as("id"))).distinct().persist())
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
+      rs.persist(ded.select(col("src").as("id"))
+        .unionByName(ded.select(col("dst").as("id"))).distinct()))
     var lab = verts.select(col("id"), col("id").as("label"))
     // lazy per-iteration checkpoint — see pagerankExactOn (r16)
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     for (i <- 1 to iters) {
-      val pick = und.join(g(lab), und("n") === lab("id"))
+      val pick = und.join(rs.g(lab), und("n") === lab("id"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("v"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("v"), (-col("m.nl")).as("newlab"))
-      lab = verts.join(g(pick), verts("id") === pick("v"), "left")
+      lab = verts.join(rs.g(pick), verts("id") === pick("v"), "left")
         .select(verts("id"),
           coalesce(col("newlab"), verts("id")).as("label"))
-      if (i < iters) {
-        lab = lab.localCheckpoint(false)
-        retired += lab
-      }
+      if (i < iters) lab = rs.chk(lab, eager = false)
     }
-    val out = lab.localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    und.unpersist(false)
-    if (sharedVerts.isEmpty) verts.unpersist(false): Unit
-    out
+    lab.localCheckpoint(true)
   }
 
   /** Registered surface: 3 exact LPA rounds on the derived edge graph;
@@ -540,8 +498,7 @@ object GraphOps {
     lpaLabelsCache.getOrElseUpdate((spark, dir),
       lpaExactOn(GraphModel.dedupEdgesCached(spark, dir), 3,
         Some(GraphModel.dedupVertsCached(spark, dir)),
-        small = GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts))
+        small = smallGraph(spark, dir)))
   }
 
   def lpaExact(spark: SparkSession, dir: String): DataFrame =
@@ -857,7 +814,7 @@ object GraphOps {
       deg: DataFrame): DataFrame = {
     val (out, hs) = communityMergeChk(ded, lab, deg)
     val res = out.localCheckpoint(true)
-    hs.foreach(_.unpersist(false))
+    hs.foreach(releaseChk)
     res
   }
 
@@ -976,10 +933,9 @@ object GraphOps {
     val deg = undDegreesOf(ded).localCheckpoint(true)
     val mrow = ded.agg(count(lit(1)).cast(dec).as("m"))
       .localCheckpoint(true)
-    val out = louvainLabelsOn(ded, lab0, rounds, deg, mrow,
+    try louvainLabelsOn(ded, lab0, rounds, deg, mrow,
       deg.count() <= SmallGraphVerts)
-    deg.unpersist(false); mrow.unpersist(false)
-    out
+    finally Seq(deg, mrow).foreach(releaseChk)
   }
 
   /** [[louvainLabels]] with the degree / edge-count frames supplied by
@@ -1016,15 +972,13 @@ object GraphOps {
     * [[graphLouvainWeighted]] gets the r11 contraction for free. */
   private def louvainContractedOn(wded: DataFrame, lab0: DataFrame,
       rounds: Int, deg: DataFrame, mrow: DataFrame,
-      small: Boolean): DataFrame = {
+      small: Boolean): DataFrame = roundScope(small) { rs =>
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // community-sized output but an O(V) join to compute — checkpoint,
     // or the un-checkpointed scored frame below replays it ~4× a round
-    val dc0 = deg.join(lab0, "id")
-      .groupBy(col("label")).agg(sum(col("d")).cast(dec).as("dcv"))
-      .localCheckpoint(true)
-    var dc: DataFrame = dc0
-    val pairs0 = wded
+    var dc = rs.chk(deg.join(lab0, "id")
+      .groupBy(col("label")).agg(sum(col("d")).cast(dec).as("dcv")))
+    var pairs = rs.chk(wded
       .join(lab0.select(col("id").as("src"), col("label").as("sl")),
         "src")
       .join(lab0.select(col("id").as("dst"), col("label").as("dl")),
@@ -1032,11 +986,9 @@ object GraphOps {
       .filter(col("sl") =!= col("dl"))
       .select(least(col("sl"), col("dl")).as("la"),
         greatest(col("sl"), col("dl")).as("lb"), col("w"))
-      .groupBy(col("la"), col("lb")).agg(sum(col("w")).as("e_ab"))
-      .localCheckpoint(true)
-    var pairs = pairs0
-    val mergesAll = scala.collection.mutable.Buffer.empty[DataFrame]
-    val lazyChks = scala.collection.mutable.Buffer.empty[DataFrame]
+      .groupBy(col("la"), col("lb")).agg(sum(col("w")).as("e_ab")))
+    // the accepted-merge map of every round that merged, in order
+    var maps = Vector.empty[DataFrame]
     var r = 1
     var dry = false
     while (r <= rounds && !dry) {
@@ -1046,14 +998,15 @@ object GraphOps {
       // summary unchanged, so every later round re-derives the same
       // empty decision — skip the remaining rounds' job trains (r12;
       // output-identical by induction). r15: the row count rides the
-      // checkpoint job itself (chkCounting) instead of a second probe
-      val (merges, nMerges) = chkCounting(decf.filter(col("accepted"))
+      // checkpoint job itself (RoundScope.counting) instead of a second
+      // probe
+      val (merges, nMerges) = rs.counting(decf.filter(col("accepted"))
         .select(col("label"),
           least(col("label"), col("partner")).as("newlab")),
         lit(true))
-      if (nMerges == 0) { dry = true; merges.unpersist(false) }
+      if (nMerges == 0) { dry = true; rs.release(merges) }
       else {
-        mergesAll += merges
+        maps :+= merges
         if (r < rounds) {
           // contract the summary — community-sized joins and re-aggs
           // only, over the materialized round-1 summary. The remapped
@@ -1061,17 +1014,14 @@ object GraphOps {
           // next round's scorer + its own remap / the two dc sides), so
           // materialize-on-first-use halves the chain replays without
           // the blocking job an eager checkpoint would cost.
-          def mAs(k: String): DataFrame = {
-            val f = merges.select(col("label").as(k),
-              col("newlab").as("n" + k))
-            if (small) broadcast(f) else f
-          }
-          dc = dc.join(mAs("label"), Seq("label"), "left")
+          def mAs(k: String): DataFrame = rs.g(merges
+            .select(col("label").as(k), col("newlab").as("n" + k)))
+          dc = rs.chk(dc.join(mAs("label"), Seq("label"), "left")
             .select(coalesce(col("nlabel"), col("label")).as("label"),
               col("dcv"))
-            .groupBy(col("label")).agg(sum(col("dcv")).cast(dec).as("dcv"))
-            .localCheckpoint(false)
-          pairs = pairs
+            .groupBy(col("label")).agg(sum(col("dcv")).cast(dec).as("dcv")),
+            eager = false)
+          pairs = rs.chk(pairs
             .join(mAs("la"), Seq("la"), "left")
             .join(mAs("lb"), Seq("lb"), "left")
             .select(coalesce(col("nla"), col("la")).as("xa"),
@@ -1079,27 +1029,19 @@ object GraphOps {
             .filter(col("xa") =!= col("xb")) // merged pairs went internal
             .select(least(col("xa"), col("xb")).as("la"),
               greatest(col("xa"), col("xb")).as("lb"), col("e_ab"))
-            .groupBy(col("la"), col("lb")).agg(sum(col("e_ab")).as("e_ab"))
-            .localCheckpoint(false)
-          lazyChks += dc; lazyChks += pairs
+            .groupBy(col("la"), col("lb")).agg(sum(col("e_ab")).as("e_ab")),
+            eager = false)
         }
       }
       r += 1
     }
     // the single O(V) pass: chain the round maps over the seed labeling
     var lab = lab0
-    for (m <- mergesAll) {
-      val f = if (small) broadcast(m) else m
-      lab = lab.join(f, Seq("label"), "left")
+    for (m <- maps)
+      lab = lab.join(rs.g(m), Seq("label"), "left")
         .select(col("id"),
           coalesce(col("newlab"), col("label")).as("label"))
-    }
-    val out = lab.localCheckpoint(true)
-    mergesAll.foreach(_.unpersist(false))
-    lazyChks.foreach(_.unpersist(false))
-    pairs0.unpersist(false)
-    dc0.unpersist(false)
-    out
+    lab.localCheckpoint(true)
   }
 
   /** Registered surface: final community sizes after
@@ -1191,7 +1133,7 @@ object GraphOps {
       .orderBy(col("label")).localCheckpoint(true)
     // labs is the O(V) checkpoint louvainContractedOn returns — release
     // it once the size census is materialized, like graphLouvainWeighted
-    labs.unpersist(false)
+    releaseChk(labs)
     out
   }
 
@@ -1232,10 +1174,9 @@ object GraphOps {
       .localCheckpoint(true)
     val und = ded.select(col("src").as("v"), col("dst").as("n"))
       .unionByName(ded.select(col("dst").as("v"), col("src").as("n")))
-    val out = louvainMoveLabelsOn(und, lab0, rounds, deg, mrow,
+    try louvainMoveLabelsOn(und, lab0, rounds, deg, mrow,
       deg.count() <= SmallGraphVerts)
-    deg.unpersist(false); mrow.unpersist(false)
-    out
+    finally Seq(deg, mrow).foreach(releaseChk)
   }
 
   /** Row bound under which a graph frame is small enough for the
@@ -1259,10 +1200,9 @@ object GraphOps {
     * join reads the big side exchange-free. */
   private def louvainMoveLabelsOn(und: DataFrame, lab0: DataFrame,
       rounds: Int, deg: DataFrame, mrow: DataFrame,
-      small: Boolean): DataFrame = {
+      small: Boolean): DataFrame = roundScope(small) { rs =>
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     var lab = lab0
-    var owned: Option[DataFrame] = None
     for (_ <- 1 to rounds) {
       // Catalyst does not deduplicate common subplans, and this round
       // reads nk twice (candidate frame + d_c below) and best three
@@ -1280,11 +1220,10 @@ object GraphOps {
       // tried in r11 and REVERTED: the full-outer merge forces a
       // sort-merge pass over the whole nk frame, measured ~2× slower
       // than this rebuild at sf0.1 despite touching less data.)
-      val nk = und
+      val nk = rs.chk(und
         .join(lab.select(col("id").as("n"), col("label").as("nl")), "n")
         .repartition(col("v"))
-        .groupBy(col("v"), col("nl")).agg(count(lit(1)).as("k"))
-        .localCheckpoint(true)
+        .groupBy(col("v"), col("nl")).agg(count(lit(1)).as("k")))
       // d_c = Σ_{i∈c} d_i = Σ_v k(v,c) exactly (both sides count the
       // edge-ends incident to c), so the community degree frame falls
       // out of the already-materialized nk — no second pass over the
@@ -1296,11 +1235,9 @@ object GraphOps {
       // full shuffles of the fat candidate frame for these joins).
       val dc0 = nk.groupBy(col("nl"))
         .agg(sum(col("k")).cast(dec).as("dcv"))
-      val dc = if (small) dc0 else dc0.localCheckpoint(true)
-      def dcAs(key: String, v: String): DataFrame = {
-        val f = dc.select(col("nl").as(key), col("dcv").as(v))
-        if (small) broadcast(f) else f
-      }
+      val dc = if (small) dc0 else rs.chk(dc0)
+      def dcAs(key: String, v: String): DataFrame =
+        rs.g(dc.select(col("nl").as(key), col("dcv").as(v)))
       // attach (a, d_i, k_own) to every candidate row: join nk to the
       // vertex frames on id, then read k_own back with a same-key
       // window — co-partitioned after the join, so no extra shuffle
@@ -1328,13 +1265,12 @@ object GraphOps {
       // winner per vertex by (delta DESC, b ASC), positive only:
       // (delta, b) is unique per vertex, so the combinable max(struct)
       // agg picks the window's rank-1 row without a sort
-      val best = cand.groupBy(col("id"))
+      val best = rs.chk(cand.groupBy(col("id"))
         .agg(max(struct(col("delta_micro"), (-col("b")).as("nb"),
           col("a"))).as("m"))
         .select(col("id"), col("m.a").as("a"), (-col("m.nb")).as("b"),
           col("m.delta_micro").as("delta_micro"))
-        .filter(col("delta_micro") > 0L)
-        .localCheckpoint(true)
+        .filter(col("delta_micro") > 0L))
       val ex = best.select(col("a").as("c"), col("id"), col("delta_micro"))
         .unionByName(best.select(col("b").as("c"), col("id"),
           col("delta_micro")))
@@ -1349,28 +1285,22 @@ object GraphOps {
         .agg(max(struct(col("delta_micro"), (-col("id")).as("ni")))
           .as("m"))
         .select(col("c"), (-col("m.ni")).as("wid"))
-      def winAs(k: String, v: String): DataFrame = {
-        val f = win.select(col("c").as(k), col("wid").as(v))
-        if (small) broadcast(f) else f
-      }
-      val acc0 = best
+      def winAs(k: String, v: String): DataFrame =
+        rs.g(win.select(col("c").as(k), col("wid").as(v)))
+      val acc = best
         .join(winAs("a", "wa"), "a").filter(col("id") === col("wa"))
         .join(winAs("b", "wb"), "b").filter(col("id") === col("wb"))
         .select(col("id"), col("b"))
       // accepted moves ≤ half the community count (winning pairs are
       // disjoint), so the vertex gate also covers broadcasting them
-      val acc = if (small) broadcast(acc0) else acc0
-      val next = lab.join(acc, Seq("id"), "left")
-        .select(col("id"), coalesce(col("b"), col("label")).as("label"))
-        .localCheckpoint(true)
-      if (!small) dc.unpersist(false)
-      nk.unpersist(false)
-      best.unpersist(false)
-      owned.foreach(_.unpersist(false))
-      owned = Some(next)
+      val next = rs.chk(lab.join(rs.g(acc), Seq("id"), "left")
+        .select(col("id"), coalesce(col("b"), col("label")).as("label")))
+      rs.release(nk, best)
+      if (!small) rs.release(dc)
+      if (!(lab eq lab0)) rs.release(lab)
       lab = next
     }
-    lab
+    rs.keep(lab)
   }
 
   /** Registered surface: TWO-PHASE LOUVAIN — [[LouvainMoveRounds]]
@@ -1398,9 +1328,9 @@ object GraphOps {
       .groupBy(col("label")).agg(count(lit(1)).as("size"))
       .orderBy(col("label")).localCheckpoint(true)
     // labs is the O(V) checkpoint louvainContractedOn returns — release
-    // it once the size census is materialized, like graphLouvainWeighted
-    labs.unpersist(false)
-    moved.unpersist(false) // ours, absorbed by the merge checkpoints
+    // it once the size census is materialized, like graphLouvainWeighted;
+    // moved is absorbed by the merge checkpoints
+    Seq(labs, moved).foreach(releaseChk)
     out
   }
 
@@ -1450,8 +1380,7 @@ object GraphOps {
         col("n_comms_louvain"), col("pairs_both_together"),
         expr(FloorDivMicro).as("rand_micro"))
       .localCheckpoint(true)
-    ct.unpersist(false)
-    lou.unpersist(false)
+    releaseChk(ct) // lpa and lou are session memos: left alone
     out
   }
 
@@ -1542,13 +1471,11 @@ object GraphOps {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val mrow = wded.agg(sum(col("w")).cast(dec).as("m"))
     val labs = louvainContractedOn(wded, lpaLabelsCached(spark, dir),
-      LouvainRounds, wdeg, mrow,
-      GraphModel.dedupVertCountCached(spark, dir) <= SmallGraphVerts)
+      LouvainRounds, wdeg, mrow, smallGraph(spark, dir))
     val out = labs
       .groupBy(col("label")).agg(count(lit(1)).as("size"))
       .orderBy(col("label")).localCheckpoint(true)
-    labs.unpersist(false)
-    wded.unpersist(false)
+    Seq(labs, wded).foreach(releaseChk)
     out
   }
 
@@ -1691,7 +1618,7 @@ object GraphOps {
   def hitsExactOn(edges: DataFrame, iters: Int,
       sharedVerts: Option[DataFrame] = None,
       edgesByDst: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = {
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
     // the unnormalized-sum trick is only overflow-safe while
     // (max-indeg × max-outdeg)^iters < 2^63; 2 rounds hold that bound
     // at 1000× this corpus, more would need the normalization back —
@@ -1706,47 +1633,40 @@ object GraphOps {
     val eByDst = edgesByDst
       .map(_.select(col("src"), col("dst"))).getOrElse(e)
     val verts = sharedVerts.map(_.select(col("id"))).getOrElse(
-      e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct().persist())
+      rs.persist(e.select(col("src").as("id"))
+        .unionByName(e.select(col("dst").as("id"))).distinct()))
     // r13 exchange diet (the katz shape): state frames stay SPARSE
     // through the rounds (a zero auth/hub contributes nothing to any
     // sum — dropping the row is value-identical) and ride gated
     // broadcasts into the edge joins; auth₁ is just the in-degree (no
     // join — hub₀ ≡ 1). The full-vertex zero rows are restored ONCE at
     // the end by two broadcast left joins.
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
     // lazy per-step checkpoints — see pagerankExactOn (r16): each
     // auth/hub step reads a flat materialized state instead of the
     // one-deeper nested broadcast subtree
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
-    def chk(f: DataFrame): DataFrame = {
-      val c = f.localCheckpoint(false); retired += c; c
-    }
+    def chk(f: DataFrame): DataFrame = rs.chk(f, eager = false)
     var auth = chk(e.groupBy(col("dst")).agg(count(lit(1)).as("a"))
       .select(col("dst").as("id"), col("a")))
     var hub = chk(eByDst
-      .join(g(auth.select(col("id").as("dst"), col("a"))), "dst")
+      .join(rs.g(auth.select(col("id").as("dst"), col("a"))), "dst")
       .groupBy(col("src")).agg(sum(col("a")).as("h"))
       .select(col("src").as("id"), col("h")))
     for (_ <- 2 to iters) {
-      auth = chk(e.join(g(hub.select(col("id").as("src"), col("h"))),
+      auth = chk(e.join(rs.g(hub.select(col("id").as("src"), col("h"))),
           "src")
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
         .select(col("dst").as("id"), col("a")))
       hub = chk(eByDst
-        .join(g(auth.select(col("id").as("dst"), col("a"))), "dst")
+        .join(rs.g(auth.select(col("id").as("dst"), col("a"))), "dst")
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
         .select(col("src").as("id"), col("h")))
     }
-    val out = verts
-      .join(g(auth), Seq("id"), "left")
-      .join(g(hub), Seq("id"), "left")
+    verts
+      .join(rs.g(auth), Seq("id"), "left")
+      .join(rs.g(hub), Seq("id"), "left")
       .select(col("id"), coalesce(col("a"), lit(0L)).as("a"),
         coalesce(col("h"), lit(0L)).as("h"))
       .localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    if (sharedVerts.isEmpty) verts.unpersist(false): Unit
-    out
   }
 
   /** Registered surface: 2 exact HITS rounds on the deduplicated
@@ -1756,8 +1676,7 @@ object GraphOps {
     hitsExactOn(GraphModel.dedupEdgesCached(spark, dir), 2,
         Some(GraphModel.dedupVertsCached(spark, dir)),
         Some(GraphModel.dedupEdgesByDstCached(spark, dir)),
-        small = GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts)
+        small = smallGraph(spark, dir))
       .select(col("id"), col("a").as("auth"), col("h").as("hub"))
       .orderBy(col("auth").desc, col("id"))
       .limit(50)
@@ -1795,11 +1714,10 @@ object GraphOps {
     val e = GraphModel.dedupEdgesCached(spark, dir)
       .select(col("src"), col("dst"))
     val (_, nVerts) = undDegCached(spark, dir)
-    def g(f: DataFrame): DataFrame =
-      if (nVerts <= SmallGraphVerts) broadcast(f) else f
+    val g = gate(nVerts <= SmallGraphVerts) _
     // lazy per-round checkpoint on the sparse path-count state — see
-    // pagerankExactOn (r16); the handles stay cached for the session
-    // of this query only (the final TakeOrdered reads t2/t3 again)
+    // pagerankExactOn (r16). The result is a lazy plan over them, so
+    // they stay: releasing them first would cost a materializing job.
     var p = e.groupBy(col("dst")).agg(count(lit(1)).as("p"))
       .select(col("dst").as("id"), col("p")).localCheckpoint(false)
     var terms = Vector(
@@ -1857,13 +1775,10 @@ object GraphOps {
     * (both directions present) — separated so specs can drive a
     * hand-built graph through the identical plan. */
   def eigenvectorOn(und: DataFrame, rounds: Int,
-      small: Boolean = false): DataFrame = {
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    var v = und.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(1000000L).cast(dec).as("v"))
-      .localCheckpoint(true)
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
+    var v = rs.chk(und.select(col("src").as("id")).distinct()
+      .select(col("id"), lit(1000000L).cast(dec).as("v")))
     for (_ <- 1 to rounds) {
       // r16: the per-round score frame u is read TWICE (the 1-row max
       // broadcast and the rescale) — un-checkpointed, each round ran
@@ -1872,28 +1787,21 @@ object GraphOps {
       // cache (the eager per-round checkpoint on the rescaled frame,
       // which paid a blocking job per round, is gone — the cached u
       // already truncates the lineage).
-      val u = und
-        .join(g(v.select(col("id").as("src"), col("v"))), "src")
+      val u = rs.chk(und
+        .join(rs.g(v.select(col("id").as("src"), col("v"))), "src")
         .groupBy(col("dst")).agg(sum(col("v")).as("s"))
-        .select(col("dst").as("id"), col("s"))
-        .localCheckpoint(false)
-      val next = u
+        .select(col("dst").as("id"), col("s")), eager = false)
+      v = u
         .crossJoin(broadcast(u.agg(max(col("s")).as("m"))))
         .select(col("id"),
           expr("(CAST(1000000 AS DECIMAL(38,0)) * s) div m")
             .cast(dec).as("v"))
-      retired += v
-      retired += u
-      v = next
     }
-    val out = v.select(col("id"),
+    v.select(col("id"),
         col("v").cast("bigint").as("eig_micro"))
       .orderBy(col("eig_micro").desc, col("id"))
       .limit(50)
       .localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    v.unpersist(false)
-    out
   }
 
   /** Shortest-path COUNTING (the sigma values of Brandes'
@@ -1913,9 +1821,7 @@ object GraphOps {
     // broadcast gate — the cached edge table is scanned, never
     // reshuffled, per hop (the bfsReachable discipline)
     val und = GraphModel.undEdgesCached(spark, dir)
-    def g(f: DataFrame): DataFrame =
-      if (GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts) broadcast(f) else f
+    val g = gate(smallGraph(spark, dir)) _
     val source = GraphModel.CustomerOff + 1L
     var layer = spark.range(1)
       .select(lit(source).as("id"), lit(1L).as("paths"))
@@ -1943,39 +1849,33 @@ object GraphOps {
     * k-landmark sweep costs the SAME number of jobs/stages as one
     * (the standard multi-source BFS batching; per-row state grows by
     * one lm long, shuffles stay keyed on the edge endpoint). Layers
-    * are persisted: each is touched again by the next forward hop,
-    * the visited anti-join, and two backward joins. */
+    * are persisted in the caller's scope `rs`: each is touched again
+    * by the next forward hop, the visited anti-join, and two backward
+    * joins. */
   private def bfsSigmaLayersMulti(und: DataFrame, sources: Seq[Long],
-      depth: Int, small: Boolean = false): Vector[DataFrame] = {
+      depth: Int, rs: RoundScope): Vector[DataFrame] = {
     val spark = und.sparkSession
     import spark.implicits._
     // r13 exchange diet: the frontier (≤ lm·V rows, vertex-bounded)
     // and the visited set ride gated broadcasts into the edge join /
     // anti-join, so the src-partitioned und cache never re-shuffles
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    var layer = sources.toDF("lm")
-      .select(col("lm"), col("lm").as("id"), lit(1L).as("paths"))
-      .persist()
+    var layer = rs.persist(sources.toDF("lm")
+      .select(col("lm"), col("lm").as("id"), lit(1L).as("paths")))
     var seen = layer.select(col("lm"), col("id"))
     var out = Vector(layer)
     for (_ <- 1 to depth) {
-      val next = und
-        .join(g(layer.select(col("lm"), col("id").as("src"),
+      val next = rs.persist(und
+        .join(rs.g(layer.select(col("lm"), col("id").as("src"),
           col("paths"))), "src")
         .groupBy(col("lm"), col("dst")).agg(sum(col("paths")).as("paths"))
         .select(col("lm"), col("dst").as("id"), col("paths"))
-        .join(g(seen), Seq("lm", "id"), "left_anti")
-        .persist()
+        .join(rs.g(seen), Seq("lm", "id"), "left_anti"))
       seen = seen.unionByName(next.select(col("lm"), col("id")))
       out = out :+ next
       layer = next
     }
     out
   }
-
-  private def bfsSigmaLayers(und: DataFrame, source: Long,
-      depth: Int): Vector[DataFrame] =
-    bfsSigmaLayersMulti(und, Seq(source), depth)
 
   /** Per-landmark Brandes dependency accumulation in EXACT integer
     * micro-units: delta(v) = Σ over BFS-DAG successors w (dist(w) =
@@ -2000,9 +1900,8 @@ object GraphOps {
     * count independent of landmark count. Returns (lm, id, d). */
   def betweennessMulti(und: DataFrame, sources: Seq[Long],
       depth: Int, undByDst: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = {
-    val layers = bfsSigmaLayersMulti(und, sources, depth, small)
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
+    val layers = bfsSigmaLayersMulti(und, sources, depth, rs)
     // r15 (the edgeBetweennessBuild restructure): materialize the
     // BFS-DAG edge set ONCE — (v at layer k) → (w at k+1) with both
     // endpoints' path counts — instead of re-joining the full edge
@@ -2013,23 +1912,22 @@ object GraphOps {
     val lvl = (0 to depth).map(k => layers(k)
         .select(col("lm"), col("id"), lit(k).as("l"), col("paths")))
       .reduce(_ unionByName _)
-    val dag = und.as("e")
-      .join(g(lvl.select(col("lm"), col("id").as("src"),
+    val dag = rs.chk(und.as("e")
+      .join(rs.g(lvl.select(col("lm"), col("id").as("src"),
         col("l").as("lv"), col("paths").as("sv"))), Seq("src"))
-      .join(g(lvl.select(col("lm").as("lm2"), col("id").as("w0"),
+      .join(rs.g(lvl.select(col("lm").as("lm2"), col("id").as("w0"),
         col("l").as("lw"), col("paths").as("sw"))),
         col("lm") === col("lm2") && col("e.dst") === col("w0"))
       .filter(col("lw") === col("lv") + 1)
       .select(col("lm"), col("src").as("v"), col("w0").as("w"),
-        col("lv"), col("sv"), col("sw"))
-      .localCheckpoint(true)
+        col("lv"), col("sv"), col("sw")))
     val _ = undByDst // see scaladoc note above
     var delta = layers(depth).select(col("lm"), col("id"),
       lit(0L).as("d"))
     var acc = delta
     for (k <- (depth - 1) to 1 by -1) {
       val dsum = dag.filter(col("lv") === k)
-        .join(g(delta.select(col("lm"), col("id").as("w"),
+        .join(rs.g(delta.select(col("lm"), col("id").as("w"),
           col("d").as("dw"))), Seq("lm", "w"))
         .groupBy(col("lm"), col("v"))
         .agg(sum(expr("(sv * (1000000 + dw)) div sw")).as("ds"))
@@ -2041,10 +1939,7 @@ object GraphOps {
       delta = dk
       acc = acc.unionByName(dk)
     }
-    val out = acc.localCheckpoint(true)
-    dag.unpersist(false)
-    layers.foreach(_.unpersist(false))
-    out
+    acc.localCheckpoint(true)
   }
 
   /** Landmark sources for [[graphBetweenness]]: one customer-side and
@@ -2141,14 +2036,10 @@ object GraphOps {
   }
 
   private def brandesSweepBuild(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = roundScope(smallGraph(spark, dir)) { rs =>
     val und = GraphModel.undEdgesCached(spark, dir)
     val depth = 3
-    val small = GraphModel.dedupVertCountCached(spark, dir) <=
-      SmallGraphVerts
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    val layers = bfsSigmaLayersMulti(und, BetweennessLandmarks, depth,
-      small)
+    val layers = bfsSigmaLayersMulti(und, BetweennessLandmarks, depth, rs)
     // r15: materialize the BFS-DAG edge set ONCE — (v at layer k) →
     // (w at layer k+1) with both endpoints' path counts attached — via
     // two gated-broadcast joins of the cached edge table against the
@@ -2161,30 +2052,26 @@ object GraphOps {
     val lvl = (0 to depth).map(k => layers(k)
         .select(col("lm"), col("id"), lit(k).as("l"), col("paths")))
       .reduce(_ unionByName _)
-    val dag = und.as("e")
-      .join(g(lvl.select(col("lm"), col("id").as("src"),
+    val dag = rs.chk(und.as("e")
+      .join(rs.g(lvl.select(col("lm"), col("id").as("src"),
         col("l").as("lv"), col("paths").as("sv"))), Seq("src"))
-      .join(g(lvl.select(col("lm").as("lm2"), col("id").as("w0"),
+      .join(rs.g(lvl.select(col("lm").as("lm2"), col("id").as("w0"),
         col("l").as("lw"), col("paths").as("sw"))),
         col("lm") === col("lm2") && col("e.dst") === col("w0"))
       .filter(col("lw") === col("lv") + 1)
       .select(col("lm"), col("src").as("v"), col("w0").as("w"),
-        col("lv"), col("sv"), col("sw"))
-      .localCheckpoint(true)
+        col("lv"), col("sv"), col("sw")))
     var delta = layers(depth).select(col("lm"), col("id"),
       lit(0L).as("d"))
     var eAcc: Option[DataFrame] = None
-    val eks = scala.collection.mutable.Buffer.empty[DataFrame]
     for (k <- (depth - 1) to 0 by -1) {
       // checkpointed: read by the edge accumulator AND the next
       // round's delta derivation
-      val ek = dag.filter(col("lv") === k)
-        .join(g(delta.select(col("lm"), col("id").as("w"),
+      val ek = rs.chk(dag.filter(col("lv") === k)
+        .join(rs.g(delta.select(col("lm"), col("id").as("w"),
           col("d").as("dw"))), Seq("lm", "w"))
         .select(col("lm"), col("v"), col("w"), col("lv"),
-          expr("(sv * (1000000 + dw)) div sw").as("term"))
-        .localCheckpoint(true)
-      eks += ek
+          expr("(sv * (1000000 + dw)) div sw").as("term")))
       eAcc = Some(eAcc.map(_.unionByName(ek)).getOrElse(ek))
       if (k >= 1) {
         val dsum = ek.groupBy(col("lm"), col("v"))
@@ -2196,12 +2083,7 @@ object GraphOps {
             coalesce(col("ds"), lit(0L)).as("d"))
       }
     }
-    val lvlChk = lvl.localCheckpoint(true)
-    val ekAll = eAcc.get.localCheckpoint(true)
-    eks.foreach(_.unpersist(false))
-    dag.unpersist(false)
-    layers.foreach(_.unpersist(false))
-    (lvlChk, ekAll)
+    (lvl.localCheckpoint(true), eAcc.get.localCheckpoint(true))
   }
 
   /** GIRVAN–NEWMAN CUT — one round of the algorithm edge betweenness
@@ -2232,8 +2114,7 @@ object GraphOps {
     // the dense draw, warmed on its own chain) just to read one
     // component's size; the sweep visits only the seed component and
     // the full-graph labeling cache is gone entirely.
-    val small = GraphModel.dedupVertCountCached(spark, dir) <=
-      SmallGraphVerts
+    val small = smallGraph(spark, dir)
     val seedVerts = seedComponentCached(spark, dir)
     val sizeBefore = seedVerts.agg(count(lit(1)).as("size_before"))
       .localCheckpoint(true)
@@ -2253,8 +2134,7 @@ object GraphOps {
     val sizeAfter = reachedAfter.agg(count(lit(1)).as("size_after"))
       .localCheckpoint(true)
     // seedVerts is the session cache — leave its blocks alone
-    reachedAfter.unpersist(false)
-    keptUnd.unpersist(false)
+    Seq(reachedAfter, keptUnd).foreach(releaseChk)
     sizeBefore
       .crossJoin(sizeAfter)
       .crossJoin(broadcast(cut.agg(count(lit(1)).as("n_cut_edges"))))
@@ -2277,8 +2157,7 @@ object GraphOps {
     seedCompCache.getOrElseUpdate((spark, dir),
       bfsReachable(spark, GraphModel.undEdgesCached(spark, dir),
         GraphModel.RegionOff,
-        GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts))
+        smallGraph(spark, dir)))
   }
 
   /** BFS reachable set from `src` over an undirected `(src, dst)`
@@ -2287,39 +2166,28 @@ object GraphOps {
     * `small` (the measured [[SmallGraphVerts]] gate) the frontier and
     * visited frames — both vertex-bounded — ride static broadcasts,
     * so the cached edge frame is never reshuffled per hop. Returns
-    * the eagerly-checkpointed visited set (`id`); caller unpersists. */
+    * the eagerly-checkpointed visited set (`id`); the caller releases
+    * it ([[releaseChk]]). */
   private def bfsReachable(spark: SparkSession, und: DataFrame,
-      src: Long, small: Boolean): DataFrame = {
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    var frontier = spark.range(1)
-      .select(lit(src).as("id"))
-      .localCheckpoint(true)
+      src: Long, small: Boolean): DataFrame = roundScope(small) { rs =>
+    var frontier = rs.chk(spark.range(1).select(lit(src).as("id")))
     var reached = frontier
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     var done = false
     while (!done) {
-      // frontier count rides the checkpoint job (chkCounting) — the
-      // per-hop isEmpty probe job is gone
-      val (next, nNext) = chkCounting(und
-        .join(g(frontier.withColumnRenamed("id", "src")), Seq("src"))
+      // frontier count rides the checkpoint job (RoundScope.counting)
+      // — the per-hop isEmpty probe job is gone
+      val (next, nNext) = rs.counting(und
+        .join(rs.g(frontier.withColumnRenamed("id", "src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
-        .join(g(reached), Seq("id"), "left_anti"),
+        .join(rs.g(reached), Seq("id"), "left_anti"),
         lit(true))
-      if (nNext == 0) {
-        next.unpersist(false)
-        done = true
-      } else {
-        retired += reached
-        retired += frontier
-        reached = reached.unionByName(next.select(col("id")))
-          .localCheckpoint(true)
-        frontier = next.select(col("id"))
-        retired += next
+      done = nNext == 0
+      if (!done) {
+        reached = rs.chk(reached.unionByName(next))
+        frontier = next
       }
     }
-    retired.foreach(_.unpersist(false))
-    if (!(frontier eq reached)) frontier.unpersist(false)
-    reached
+    rs.keep(reached)
   }
 
   /** MULTI-LANDMARK weighted distances — the batched multi-source frame
@@ -2342,42 +2210,33 @@ object GraphOps {
     * as the single-source sibling); the backward DAG here is ≤ 3 deep,
     * so bounded rounds reach the true fixpoint with one spare round. */
   def shortestPathsWeightedMultiOn(wed: DataFrame, landmarks: Seq[Long],
-      rounds: Int, small: Boolean = false): DataFrame = {
+      rounds: Int, small: Boolean = false): DataFrame =
+    roundScope(small) { rs =>
     val spark = wed.sparkSession
     import spark.implicits._
     // r13 exchange diet: the frontier and old-distance frames
     // (≤ lm·V rows) ride gated broadcasts so the weighted edge view
     // never re-shuffles per round
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    var dist = landmarks.toDF("lm")
-      .select(col("lm"), col("lm").as("id"), lit(0L).as("d"))
-      .persist()
+    var dist = rs.persist(landmarks.toDF("lm")
+      .select(col("lm"), col("lm").as("id"), lit(0L).as("d")))
     var frontier = dist
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     for (_ <- 1 to rounds) {
       val cand = wed
-        .join(g(frontier.select(col("lm"), col("id").as("dst"),
+        .join(rs.g(frontier.select(col("lm"), col("id").as("dst"),
           col("d").as("df"))), "dst")
         .groupBy(col("lm"), col("src"))
         .agg(min(col("df") + col("len")).as("dc"))
         .select(col("lm"), col("src").as("id"), col("dc"))
-      val improved = cand
-        .join(g(dist.select(col("lm"), col("id"), col("d").as("dOld"))),
+      val improved = rs.persist(cand
+        .join(rs.g(dist.select(col("lm"), col("id"), col("d").as("dOld"))),
           Seq("lm", "id"), "left")
         .filter(col("dOld").isNull || col("dc") < col("dOld"))
-        .select(col("lm"), col("id"), col("dc").as("d"))
-        .persist()
-      val merged = dist.unionByName(improved)
-        .groupBy(col("lm"), col("id")).agg(min(col("d")).as("d"))
-        .persist()
-      retired += dist; retired += improved
-      dist = merged
+        .select(col("lm"), col("id"), col("dc").as("d")))
+      dist = rs.persist(dist.unionByName(improved)
+        .groupBy(col("lm"), col("id")).agg(min(col("d")).as("d")))
       frontier = improved
     }
-    val out = dist.orderBy(col("lm"), col("id")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    dist.unpersist(false)
-    out
+    dist.orderBy(col("lm"), col("id")).localCheckpoint(true)
   }
 
   /** The multiplicity-weighted edge view shared by the weighted
@@ -2414,8 +2273,7 @@ object GraphOps {
     spwMultiCache.getOrElseUpdate((spark, dir),
       shortestPathsWeightedMultiOn(wedOf(spark, dir),
         WeightedLandmarks, 4,
-        small = GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts))
+        small = smallGraph(spark, dir)))
   }
 
   /** Registered surface: micro-unit weighted distances from all five
@@ -2479,7 +2337,7 @@ object GraphOps {
     * landmarks excluded. */
   def betweennessWeightedMulti(wed: DataFrame, landmarks: Seq[Long],
       rounds: Int, sharedDist: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = {
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
     val spark = wed.sparkSession
     import spark.implicits._
     // r16 exchange diet (guide §2.4/§3.1, the r13 pattern): every
@@ -2490,28 +2348,24 @@ object GraphOps {
     // previous shape paid a keyed exchange of the E·lm dag per round:
     // 11 E-row Exchanges → 0, and each round stops paying 2-3 AQE
     // shuffle-stage round-trips).
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     // the forward min-plus sweep is shared with the distance surface
     // when the caller holds the session cache; otherwise build and own
     val dist = sharedDist.getOrElse(
       shortestPathsWeightedMultiOn(wed, landmarks, rounds))
-    val dag = wed
-      .join(g(dist.select(col("lm"), col("id").as("dst"),
+    val dag = rs.chk(wed
+      .join(rs.g(dist.select(col("lm"), col("id").as("dst"),
         col("d").as("dd"))), "dst")
-      .join(g(dist.select(col("lm"), col("id").as("src"),
+      .join(rs.g(dist.select(col("lm"), col("id").as("src"),
         col("d").as("ds"))), Seq("lm", "src"))
       .filter(col("ds") === col("dd") + col("len"))
-      .select(col("lm"), col("src"), col("dst"))
-      .localCheckpoint(true)
-    if (sharedDist.isEmpty) dist.unpersist(false): Unit
+      .select(col("lm"), col("src"), col("dst")))
+    if (sharedDist.isEmpty) releaseChk(dist)
     // max-edge-depth layers (max-plus analogue of the min-plus rounds)
-    var lvl = landmarks.toDF("lm")
-      .select(col("lm"), col("lm").as("id"), lit(0).as("l"))
-      .localCheckpoint(true)
+    var lvl = rs.chk(landmarks.toDF("lm")
+      .select(col("lm"), col("lm").as("id"), lit(0).as("l")))
     for (_ <- 1 to rounds) {
       val cand = dag
-        .join(g(lvl.select(col("lm"), col("id").as("dst"), col("l"))),
+        .join(rs.g(lvl.select(col("lm"), col("id").as("dst"), col("l"))),
           Seq("lm", "dst"))
         .groupBy(col("lm"), col("src"))
         .agg((max(col("l")) + 1).as("l"))
@@ -2523,60 +2377,50 @@ object GraphOps {
       // layer-materialization cost the r13 exchange diet measured as
       // this family's real bottleneck drops from 3 job chains × rounds
       // to the final checkpoint's single cascade
-      val merged = lvl.unionByName(cand)
-        .groupBy(col("lm"), col("id")).agg(max(col("l")).as("l"))
-        .localCheckpoint(false)
-      retired += lvl
-      lvl = merged
+      lvl = rs.chk(lvl.unionByName(cand)
+        .groupBy(col("lm"), col("id")).agg(max(col("l")).as("l")),
+        eager = false)
     }
     // sigma by increasing layer: all DAG successors sit in smaller
     // layers, so the accumulated frame is always final when probed
-    var sig = landmarks.toDF("lm")
-      .select(col("lm"), col("lm").as("id"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
+    var sig = rs.chk(landmarks.toDF("lm")
+      .select(col("lm"), col("lm").as("id"), lit(1L).as("sigma")))
     for (k <- 1 to rounds) {
       val sk = dag
-        .join(g(sig.select(col("lm"), col("id").as("dst"),
+        .join(rs.g(sig.select(col("lm"), col("id").as("dst"),
           col("sigma"))), Seq("lm", "dst"))
-        .join(g(lvl.filter(col("l") === k)
+        .join(rs.g(lvl.filter(col("l") === k)
           .select(col("lm"), col("id").as("src"))), Seq("lm", "src"))
         .groupBy(col("lm"), col("src"))
         .agg(sum(col("sigma")).as("sigma"))
         .select(col("lm"), col("src").as("id"), col("sigma"))
-      val merged = sig.unionByName(sk).localCheckpoint(false)
-      retired += sig
-      sig = merged
+      sig = rs.chk(sig.unionByName(sk), eager = false)
     }
     // dependency by decreasing layer: every DAG predecessor is
     // strictly deeper, hence already in the accumulated delta frame
-    var delta = lvl.filter(col("l") === rounds)
-      .select(col("lm"), col("id"), lit(0L).as("delta"))
-      .localCheckpoint(true)
+    var delta = rs.chk(lvl.filter(col("l") === rounds)
+      .select(col("lm"), col("id"), lit(0L).as("delta")))
     for (k <- (rounds - 1) to 1 by -1) {
       val contrib = dag
-        .join(g(delta.select(col("lm"), col("id").as("src"),
+        .join(rs.g(delta.select(col("lm"), col("id").as("src"),
           col("delta").as("dw"))), Seq("lm", "src"))
-        .join(g(sig.select(col("lm"), col("id").as("src"),
+        .join(rs.g(sig.select(col("lm"), col("id").as("src"),
           col("sigma").as("sw"))), Seq("lm", "src"))
-        .join(g(sig.select(col("lm"), col("id").as("dst"),
+        .join(rs.g(sig.select(col("lm"), col("id").as("dst"),
           col("sigma").as("sv"))), Seq("lm", "dst"))
         .groupBy(col("lm"), col("dst"))
         .agg(sum(expr("(sv * (1000000 + dw)) div sw")).as("c"))
         .select(col("lm"), col("dst").as("id"), col("c"))
       val dk = lvl.filter(col("l") === k).select(col("lm"), col("id"))
-        .join(g(contrib), Seq("lm", "id"), "left")
+        .join(rs.g(contrib), Seq("lm", "id"), "left")
         .select(col("lm"), col("id"),
           coalesce(col("c"), lit(0L)).as("delta"))
-      val merged = delta.unionByName(dk).localCheckpoint(false)
-      retired += delta
-      delta = merged
+      delta = rs.chk(delta.unionByName(dk), eager = false)
     }
-    val out = delta
-      .join(g(lvl.filter(col("l") >= 1).select(col("lm"), col("id"))),
+    delta
+      .join(rs.g(lvl.filter(col("l") >= 1).select(col("lm"), col("id"))),
         Seq("lm", "id"))
       .localCheckpoint(true)
-    (retired ++ Seq(dag, lvl, sig, delta)).foreach(_.unpersist(false))
-    out
   }
 
   /** Registered surface: weighted landmark betweenness from the five
@@ -2587,14 +2431,13 @@ object GraphOps {
       dir: String): DataFrame = {
     val per = betweennessWeightedMulti(wedOf(spark, dir),
       WeightedLandmarks, 4, Some(spwMultiCached(spark, dir)),
-      small = GraphModel.dedupVertCountCached(spark, dir)
-        <= SmallGraphVerts)
+      small = smallGraph(spark, dir))
     val out = per
       .groupBy(col("id")).agg(sum(col("delta")).as("bcw_micro"))
       .orderBy(col("bcw_micro").desc, col("id"))
       .limit(50)
       .localCheckpoint(true)
-    per.unpersist(false)
+    releaseChk(per)
     out
   }
 
@@ -2631,9 +2474,9 @@ object GraphOps {
       .limit(50)
       .localCheckpoint(true)
     // out is materialized (eager checkpoint): release the batched
-    // intermediate — same block-manager discipline as the dedup loop
-    // (the sweep layers themselves are session-lifetime cached)
-    per.unpersist(false)
+    // intermediate (the sweep layers themselves are session-lifetime
+    // cached)
+    releaseChk(per)
     out
   }
 
@@ -2648,10 +2491,10 @@ object GraphOps {
   private def closenessSweepCached(spark: SparkSession,
       dir: String): Vector[DataFrame] = closenessSweepCache.synchronized {
     closenessSweepCache.getOrElseUpdate((spark, dir),
-      bfsSigmaLayersMulti(GraphModel.undEdgesCached(spark, dir),
-        ClosenessLandmarks, 3,
-        small = GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts))
+      roundScope(smallGraph(spark, dir)) { rs =>
+        bfsSigmaLayersMulti(GraphModel.undEdgesCached(spark, dir),
+          ClosenessLandmarks, 3, rs).map(rs.keep)
+      })
   }
 
   /** Characteristic path length estimate — mean BFS distance from
@@ -2739,29 +2582,29 @@ object GraphOps {
 
   /** The peel loop itself, over a SYMMETRIC (src, dst) pair frame —
     * separate so the census can be unit-tested on hand graphs. */
-  def kcoreOn(und: DataFrame, K: Int, Rounds: Int): DataFrame = {
+  def kcoreOn(und: DataFrame, K: Int, Rounds: Int): DataFrame =
+    roundScope(small = false) { rs =>
     val spark = und.sparkSession
     var cur = und
     // the symmetric union puts every vertex on the src side, so the
     // degree frame's key set IS the remaining vertex set
-    var verts = und.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)
+    var verts = rs.chk(und.select(col("src").as("id")).distinct())
     var nVerts = verts.count()
-    var ckpts = Vector(verts)
     var stats = Vector.empty[DataFrame]
     var r = 1
     var dry = false
     while (r <= Rounds && !dry) {
       val deg = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      // the REMOVAL count rides vd's checkpoint job (chkCounting);
-      // keep is a lazy filter view over the cached vd blocks — the
-      // separate keep checkpoint + count() pair (2 jobs/round) is gone.
-      // r16 (advice #1): count removals, not keeps — chkCounting's
-      // accumulator can only OVER-count under task retries, so
-      // nRemoved == 0 is exact (a retried cond-false row adds nothing)
+      // the REMOVAL count rides vd's checkpoint job
+      // (RoundScope.counting); keep is a lazy filter view over the
+      // cached vd blocks — the separate keep checkpoint + count() pair
+      // (2 jobs/round) is gone. r16 (advice #1): count removals, not
+      // keeps — the counting accumulator can only OVER-count under
+      // task retries, so nRemoved == 0 is exact (a retried cond-false
+      // row adds nothing)
       // where the old `nKeep == nVerts` test could declare a FALSE
       // fixpoint from an inflated keep count and skip real removals.
-      val (vd, nRemoved) = chkCounting(verts
+      val (vd, nRemoved) = rs.counting(verts
         .join(deg, verts("id") === deg("src"), "left")
         .select(col("id"), coalesce(col("d"), lit(0L)).as("d")),
         col("d") < K)
@@ -2771,7 +2614,6 @@ object GraphOps {
         .select(lit(r).as("round"), col("n_removed"),
           col("n_remaining"))
       val keep = vd.filter(col("d") >= K).select(col("id"))
-      ckpts = ckpts :+ vd
       // a dry round proves the fixpoint (the louvain device): no
       // removal leaves the edge set — hence every later round's census
       // — identical by determinism, so the remaining rows are
@@ -2782,16 +2624,14 @@ object GraphOps {
       // vd (all rows survive on a dry round) — one extra cheap job on
       // the dry round only, never from the overcountable accumulator.
       dry = nRemoved == 0
-      if (!dry) {
-        cur = cur
+      if (!dry)
+        cur = rs.chk(cur
           .join(keep.select(col("id").as("sk")),
             col("src") === col("sk"))
           .join(keep.select(col("id").as("dk")),
             col("dst") === col("dk"))
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-        ckpts = ckpts :+ cur
-      } else nVerts = vd.count()
+          .select(col("src"), col("dst")))
+      else nVerts = vd.count()
       verts = keep
       r += 1
     }
@@ -2799,12 +2639,9 @@ object GraphOps {
       stats = stats :+ spark.range(1)
         .select(lit(rr).as("round"), lit(0L).as("n_removed"),
           lit(nVerts).as("n_remaining"))
-    val out = stats.reduce(_ unionByName _)
+    stats.reduce(_ unionByName _)
       .orderBy(col("round"))
       .localCheckpoint(true)
-    // out is materialized: release every per-round checkpoint
-    ckpts.foreach(_.unpersist(false))
-    out
   }
 
   /** Rounds for the coreness h-index iteration. The iteration is
@@ -2832,8 +2669,7 @@ object GraphOps {
     * order-independent), hence DuckDB-replayable by unrolling. */
   def graphCoreness(spark: SparkSession, dir: String): DataFrame =
     corenessOn(GraphModel.undEdgesCached(spark, dir), CorenessRounds,
-      small = GraphModel.dedupVertCountCached(spark, dir)
-        <= SmallGraphVerts)
+      small = smallGraph(spark, dir))
 
   /** The h-index loop itself, separate for spec use on hand graphs.
     * r13 exchange diet: `cur` (one long per vertex) and the per-round
@@ -2845,12 +2681,9 @@ object GraphOps {
     * h-index recurrence needs — each round reads its predecessor
     * twice). */
   def corenessOn(und: DataFrame, rounds: Int,
-      small: Boolean = false): DataFrame = {
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    var cur = und.groupBy(col("src")).agg(count(lit(1)).as("c"))
-      .select(col("src").as("id"), col("c"))
-      .localCheckpoint(true)
-    var retired = Vector(cur)
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
+    var cur = rs.chk(und.groupBy(col("src")).agg(count(lit(1)).as("c"))
+      .select(col("src").as("id"), col("c")))
     // r15 dry-fixpoint short-circuit (the kcore/louvain device): the
     // h-index iteration is monotone nonincreasing, so one round with
     // zero changed values proves every later round is the identity —
@@ -2872,7 +2705,7 @@ object GraphOps {
     while (r < rounds && !converged) {
       r += 1
       val nb = und
-        .join(g(cur.select(col("id").as("dst"), col("c").as("cn"))),
+        .join(rs.g(cur.select(col("id").as("dst"), col("c").as("cn"))),
           "dst")
         .select(col("src"), col("cn"))
       val w = Window.partitionBy(col("src")).orderBy(col("cn").desc)
@@ -2880,20 +2713,17 @@ object GraphOps {
         .select(col("src"),
           least(col("rn").cast("long"), col("cn")).as("m"))
         .groupBy(col("src")).agg(max(col("m")).as("h"))
-      // convergence count fused into the checkpoint job (chkCounting)
-      val (nxtChk, nChanged) = chkCounting(
-        cur.join(g(h), cur("id") === h("src"), "left")
+      // convergence count fused into the checkpoint job
+      val (nxt, nChanged) = rs.counting(
+        cur.join(rs.g(h), cur("id") === h("src"), "left")
           .select(cur("id"), col("c").as("pc"),
             least(col("c"), coalesce(col("h"), lit(0L))).as("c")),
         col("c") =!= col("pc"))
       converged = nChanged == 0
-      retired = retired :+ nxtChk
-      cur = nxtChk.select(col("id"), col("c"))
+      cur = nxt.select(col("id"), col("c"))
     }
-    val out = cur.select(col("id"), col("c").as("coreness"))
+    cur.select(col("id"), col("c").as("coreness"))
       .orderBy(col("id")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    out
   }
 
   /** Deterministic "random" walks — the corpus generator for
@@ -3047,42 +2877,107 @@ object GraphOps {
   private def dropStats(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
-  /** Eager localCheckpoint that ALSO counts, inside the same
-    * materialization job, the rows satisfying `cond` — via a
-    * nondeterministic side-effect UDF column (`__n`, dropped by every
-    * consumer's projection) evaluated as the rows stream into the
-    * cache. Replaces the per-round checkpoint + `filter(...).isEmpty`
-    * pair every iterative loop paid (2 driver jobs → 1; at ~40 ms
-    * scheduler latency per local job, the job count is what a loop
-    * over small frames costs). Task retries/speculation can only
-    * OVER-count, and callers compare the count to zero, so
-    * convergence is declared only when no row satisfied `cond` — an
-    * overcount costs one extra (value-identical) round, never a wrong
-    * result. */
-  private[ops] def chkCounting(df: DataFrame,
-      cond: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    // the returned frame is WIDENED by the __n side-effect column; a
-    // caller whose input already carries one would silently collide
-    // (r15 advice #3 — fail loudly instead)
-    require(!df.columns.contains("__n"),
-      "chkCounting input already has a __n column")
-    val acc = df.sparkSession.sparkContext.longAccumulator
-    val tick = udf { (b: Boolean) =>
-      if (b) acc.add(1L); true
-    }.asNondeterministic()
-    val chk = df.withColumn("__n", tick(cond)).localCheckpoint()
-    (chk, acc.value)
-  }
-
-  /** Drop the blocks of an eager localCheckpoint that nothing reads
-    * again. `Dataset.unpersist` only uncaches `cache()`/`persist()`
-    * plans: on a checkpointed frame it is a no-op, and the blocks stay
-    * in the block manager until the frame is garbage-collected. */
-  private def releaseChk(chk: DataFrame): Unit =
+  /** Drop the blocks of a localCheckpoint (or of a projection over
+    * one) that nothing reads again. `Dataset.unpersist` only uncaches
+    * `cache()`/`persist()` plans: on a checkpointed frame it is a
+    * no-op, and the blocks stay in the block manager until the frame
+    * is garbage-collected. */
+  private[graft] def releaseChk(chk: DataFrame): Unit =
     chk.queryExecution.logical match {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case Project(_, r: LogicalRDD) => r.rdd.unpersist(blocking = false)
       case _ => chk.unpersist(false)
     }
+
+  /** Broadcasts `f` when `small`: the measured [[SmallGraphVerts]]
+    * gate for vertex-bounded side frames. */
+  private def gate(small: Boolean)(f: DataFrame): DataFrame =
+    if (small) broadcast(f) else f
+
+  /** The [[SmallGraphVerts]] gate on the deduplicated vertex count. */
+  private def smallGraph(spark: SparkSession, dir: String): Boolean =
+    GraphModel.dedupVertCountCached(spark, dir) <= SmallGraphVerts
+
+  /** Runs one iterative loop in a [[RoundScope]] and releases every
+    * frame left in its ledger when `body` returns or throws. */
+  private[graft] def roundScope[T](small: Boolean)(
+      body: RoundScope => T): T = {
+    val rs = new RoundScope(small)
+    try body(rs) finally rs.close()
+  }
+
+  /** The bookkeeping of one iterative loop: the broadcast gate and a
+    * ledger of the frames the loop caches. A ledgered frame is
+    * released early ([[release]], once nothing reads it again — its
+    * successor is materialized), or on exit. Frames the caller passed
+    * in are never ledgered; a frame the result still reads leaves the
+    * ledger through [[keep]]. A checkpoint has no lineage to recompute
+    * from, so releasing one that a lazy survivor still reads fails
+    * that survivor's next job. */
+  private[graft] final class RoundScope(small: Boolean) {
+    private val ledger =
+      scala.collection.mutable.ArrayBuffer.empty[(DataFrame, () => Unit)]
+
+    val g: DataFrame => DataFrame = gate(small)
+
+    /** `f.localCheckpoint(eager)`, ledgered. */
+    def chk(f: DataFrame, eager: Boolean = true): DataFrame = {
+      val c = f.localCheckpoint(eager)
+      ledger += ((c, () => releaseChk(c)))
+      c
+    }
+
+    /** `f.persist()`, ledgered. */
+    def persist(f: DataFrame): DataFrame = {
+      val p = f.persist()
+      ledger += ((p, () => p.unpersist(false)))
+      p
+    }
+
+    /** Eager checkpoint that ALSO counts, inside the same
+      * materialization job, the rows satisfying `cond` — via a
+      * nondeterministic side-effect UDF column (`__n`) evaluated as
+      * the rows stream into the cache. Replaces the per-round
+      * checkpoint + `filter(...).isEmpty` pair (2 driver jobs → 1; at
+      * ~40 ms scheduler latency per local job, the job count is what
+      * a loop over small frames costs). Returns the `__n`-free
+      * projection; the widened checkpoint stays in the ledger. Task
+      * retries/speculation can only OVER-count, and callers compare
+      * the count to zero, so convergence is declared only when no row
+      * satisfied `cond` — an overcount costs one extra
+      * (value-identical) round, never a wrong result. */
+    def counting(df: DataFrame,
+        cond: org.apache.spark.sql.Column): (DataFrame, Long) = {
+      require(!df.columns.contains("__n"),
+        "counting input already has a __n column")
+      val acc = df.sparkSession.sparkContext.longAccumulator
+      val tick = udf { (b: Boolean) =>
+        if (b) acc.add(1L); true
+      }.asNondeterministic()
+      val c = df.withColumn("__n", tick(cond)).localCheckpoint()
+      val view = c.select(df.columns.toIndexedSeq.map(col): _*)
+      ledger += ((view, () => releaseChk(c)))
+      (view, acc.value)
+    }
+
+    /** Releases ledgered frames now. */
+    def release(fs: DataFrame*): Unit = fs.foreach { f =>
+      val i = ledger.indexWhere(_._1 eq f)
+      require(i >= 0, "release of a frame this scope does not hold")
+      ledger.remove(i)._2()
+    }
+
+    /** Takes `f` out of the ledger: the result still reads it. */
+    def keep(f: DataFrame): DataFrame = {
+      ledger.filterInPlace(e => !(e._1 eq f))
+      f
+    }
+
+    private[GraphOps] def close(): Unit = {
+      ledger.foreach(_._2())
+      ledger.clear()
+    }
+  }
 
   /** Rows of `df` if it has at most [[SmallGraphVerts]] of them, else
     * None: the measured size gate of the graph kernels. A bounded
@@ -3158,7 +3053,7 @@ object GraphOps {
     * its component. A pair connects two vertices only when both ends
     * are in `verts`; null ids keep a null cluster and null pair ends
     * connect nothing. Also returns the handle that owns the labels'
-    * cached blocks — `_2.unpersist(false)` once `_1` has been
+    * cached blocks — `GraphOps.releaseChk(_2)` once `_1` has been
     * materialized into a downstream checkpoint.
     *
     * Measured size gate ([[SmallGraphVerts]], bounded collects, pairs
@@ -3233,22 +3128,19 @@ object GraphOps {
     * of the loop's actions stops paying 3-4 AQE stage round-trips. */
   private[graft] def minLabelComponentsKeyed(verts: DataFrame,
       pairs: DataFrame, small: Boolean, maxRounds: Int = 50)
-      : (DataFrame, DataFrame) = {
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    val und = pairs.select(col("a_id"), col("b_id"))
+      : (DataFrame, DataFrame) = roundScope(small) { rs =>
+    val undM = rs.chk(pairs.select(col("a_id"), col("b_id"))
       .unionByName(pairs.select(col("b_id").as("a_id"),
         col("a_id").as("b_id")))
       // checkpointed pre-partitioned on b_id, the key every round's
       // neighbor join probes — same one-partitioning-many-stages rule
       // as dedupEdgesCached
-      .repartition(col("b_id"))
-    val undM = und.localCheckpoint()
-    // chk = the eagerly checkpointed frame (owns the cached blocks,
-    // the handle unpersist needs); labels = its stats-rebased view
-    // (see dropStats) that the next round builds on
-    var chk = verts.select(col("id")).filter(col("id").isNotNull)
-      .distinct().select(col("id"), col("id").as("cluster"))
-      .localCheckpoint()
+      .repartition(col("b_id")))
+    // chk = the eagerly checkpointed frame (owns the cached blocks);
+    // labels = its stats-rebased view (see dropStats) that the next
+    // round builds on
+    var chk = rs.chk(verts.select(col("id")).filter(col("id").isNotNull)
+      .distinct().select(col("id"), col("id").as("cluster")))
     var labels = dropStats(chk)
     // r15 FRONTIER DELTA (guide §2.3 — shuffle/aggregate fewer rows):
     // the neighbor hop only needs to deliver labels that CHANGED last
@@ -3268,7 +3160,7 @@ object GraphOps {
     while (nChanged != 0 && round < maxRounds) {
       round += 1
       val prop = undM
-        .join(g(changed.select(col("id").as("b_id"),
+        .join(rs.g(changed.select(col("id").as("b_id"),
           col("cluster").as("nb_cluster"))), "b_id")
         .groupBy(col("a_id"))
         .agg(min(col("nb_cluster")).as("min_nb"))
@@ -3278,7 +3170,8 @@ object GraphOps {
       // used to be (a measurable job tax for iterative callers like
       // Borůvka that invoke this once per outer round)
       // convergence count rides the checkpoint job itself (see
-      // chkCounting) — the per-round filter().isEmpty probe job is gone
+      // RoundScope.counting) — the per-round filter().isEmpty probe job
+      // is gone
       //
       // r16 POINTER QUADRUPLING (small path only): three chained jump
       // joins read L², L³ and L⁴ of the stale round-start label table
@@ -3297,10 +3190,10 @@ object GraphOps {
       // under the hop + single jump — the same component-min fixpoint;
       // only the ROUND COUNT changes, and every consumer reads the
       // converged labels.
-      val j = g(labels.select(col("id").as("jid"),
+      val j = rs.g(labels.select(col("id").as("jid"),
         col("cluster").as("jump")))
       val hopped = labels
-        .join(g(prop.select(col("a_id").as("id"), col("min_nb"))),
+        .join(rs.g(prop.select(col("a_id").as("id"), col("min_nb"))),
           Seq("id"), "left")
         .join(j, col("cluster") === col("jid"), "left")
         .select(col("id"), col("cluster"), col("min_nb"),
@@ -3318,7 +3211,7 @@ object GraphOps {
             col("j3") === col("jid4"), "left")
           .select(col("id"), col("cluster"), col("min_nb"),
             coalesce(col("jump4"), col("j3")).as("jlast"))
-      val (nextChk, n) = chkCounting(jumped
+      val (nextChk, n) = rs.counting(jumped
         .select(col("id"), col("cluster").as("prev"),
           least(col("cluster"),
             least(coalesce(col("min_nb"), col("cluster")),
@@ -3326,10 +3219,10 @@ object GraphOps {
         col("cluster") =!= col("prev"))
       nChanged = n
       // nextChk is materialized (eager checkpoint) and the convergence
-      // check above is done with it, so the predecessor's blocks can be
-      // released now — without this every invocation permanently parked
-      // one block set per round in the block manager
-      chk.unpersist(false)
+      // check above is done with it, so nothing reads the predecessor
+      // again: release its blocks now, not one block set per round at
+      // the end
+      rs.release(chk)
       chk = nextChk
       labels = dropStats(nextChk).select(col("id"), col("cluster"))
       // next round's frontier: a lazy filter view over the cached
@@ -3338,13 +3231,11 @@ object GraphOps {
         .filter(col("cluster") =!= col("prev"))
         .select(col("id"), col("cluster"))
     }
-    undM.unpersist(false)
-    if (nChanged > 0) {
-      chk.unpersist(false)
+    if (nChanged > 0)
       throw new IllegalStateException(s"min-label components did not " +
         s"converge in $round rounds: $nChanged labels still changing")
-    }
-    (verts.select(col("id")).join(g(labels), Seq("id"), "left"), chk)
+    (verts.select(col("id")).join(rs.g(labels), Seq("id"), "left"),
+      rs.keep(chk))
   }
 
   /** Batch graph mutation: merge an edge delta into an edge table,
@@ -3765,43 +3656,34 @@ object GraphOps {
     * [[sccLifted]] contraction — no new heavy lifting; per round one
     * keyed join + max agg over SCC-sized frames. */
   def graphCondensationLayers(spark: SparkSession,
-      dir: String): DataFrame = {
+      dir: String): DataFrame = roundScope(small = false) { rs =>
     val (lifted, edges) = sccLifted(spark, dir)
-    val nodes = lifted.groupBy(col("sl"))
-      .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members"))
-      .localCheckpoint(true)
+    val nodes = rs.chk(lifted.groupBy(col("sl"))
+      .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members")))
     val idlab = lifted
       .join(nodes.select(col("sl"), col("scc_id")), "sl")
       .select(col("id"), col("scc_id"))
-    val dadj = edges
+    val dadj = rs.chk(edges
       .join(idlab.select(col("id").as("src"), col("scc_id").as("ssrc")),
         Seq("src"))
       .join(idlab.select(col("id").as("dst"), col("scc_id").as("sdst")),
         Seq("dst"))
       .filter(col("ssrc") =!= col("sdst"))
-      .select(col("ssrc"), col("sdst")).distinct()
-      .localCheckpoint(true)
-    var lay = nodes.select(col("scc_id"), lit(0).as("l"))
-      .localCheckpoint(true)
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
+      .select(col("ssrc"), col("sdst")).distinct())
+    var lay = rs.chk(nodes.select(col("scc_id"), lit(0).as("l")))
     for (_ <- 1 to CondLayerRounds) {
       val cand = dadj
         .join(lay.select(col("scc_id").as("ssrc"), col("l")), "ssrc")
         .groupBy(col("sdst")).agg((max(col("l")) + 1).as("l"))
         .select(col("sdst").as("scc_id"), col("l"))
-      val merged = lay.unionByName(cand)
-        .groupBy(col("scc_id")).agg(max(col("l")).as("l"))
-        .localCheckpoint(true)
-      retired += lay
-      lay = merged
+      lay = rs.chk(lay.unionByName(cand)
+        .groupBy(col("scc_id")).agg(max(col("l")).as("l")))
     }
-    val out = nodes.join(lay, "scc_id")
+    nodes.join(lay, "scc_id")
       .select(col("scc_id"), col("n_members"),
         col("l").cast("int").as("layer"))
       .orderBy(col("scc_id"))
       .localCheckpoint(true)
-    (retired ++ Seq(nodes, dadj, lay)).foreach(releaseChk)
-    out
   }
 
   private val sccLiftCache = scala.collection.concurrent.TrieMap[
@@ -4069,7 +3951,7 @@ object GraphOps {
     * rounds the closure holds every pair joined by a path of 1 to
     * `2^rounds` edges. */
   private[graft] def sccLabelsKeyed(edges: DataFrame,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = roundScope(small = false) { rs =>
     // eager localCheckpoint per round, NOT lazy persist: the doubling
     // plan references the previous round 2× (and the mutual join 2×
     // more), so without lineage truncation the logical plan — and
@@ -4077,31 +3959,22 @@ object GraphOps {
     // 82 s of pure planning on a 282-edge input; 1.5 s checkpointed).
     // dropStats additionally pins the carried stats estimate, which
     // otherwise squares per round (see dropStats).
-    var rChk = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
-    var r = dropStats(rChk)
+    var r = dropStats(rs.chk(edges.select(col("src"), col("dst"))
+      .distinct()))
     val verts = r.select(col("src").as("p"))
       .unionByName(r.select(col("dst").as("p"))).distinct()
-    val retired =
-      scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
-    for (_ <- 1 to rounds) {
-      val nextChk = r.unionByName(
+    for (_ <- 1 to rounds)
+      r = dropStats(rs.chk(r.unionByName(
           r.as("a").join(r.as("b"), col("a.dst") === col("b.src"))
             .select(col("a.src").as("src"), col("b.dst").as("dst")))
-        .distinct().localCheckpoint()
-      retired += rChk
-      rChk = nextChk
-      r = dropStats(nextChk)
-    }
+        .distinct()))
     val mutual = r.as("f").join(r.as("g"),
         col("f.src") === col("g.dst") && col("f.dst") === col("g.src"))
       .select(col("f.src").as("u"), col("f.dst").as("v"))
-    val out = mutual
+    mutual
       .unionByName(verts.select(col("p").as("u"), col("p").as("v")))
       .groupBy(col("u")).agg(min(col("v")).as("scc_id"))
       .localCheckpoint(true)
-    (retired :+ rChk).foreach(releaseChk)
-    out
   }
 
   /** AVERAGE NEIGHBOR DEGREE per vertex — the local ingredient of
@@ -4123,9 +3996,7 @@ object GraphOps {
     // Exchanges → 1 (the final groupBy(src)).
     val deg = GraphModel.undEdgesCached(spark, dir)
       .groupBy(col("src")).agg(count(lit(1)).as("d"))
-    def g(f: DataFrame): DataFrame =
-      if (GraphModel.dedupVertCountCached(spark, dir)
-          <= SmallGraphVerts) broadcast(f) else f
+    val g = gate(smallGraph(spark, dir)) _
     GraphModel.undEdgesByDstCached(spark, dir)
       .join(g(deg.select(col("src").as("dst"), col("d").as("nd"))),
         "dst")
@@ -4195,16 +4066,14 @@ object GraphOps {
     val ew = ewIn.localCheckpoint(true)
     val e = ew.select(col("u"), col("v"), col("w"))
     val rows = if (allLong(e)) collectSmall(e) else None
-    rows.filterNot(_.exists(_.anyNull)) match {
-      case Some(r) =>
-        val out = msfLocal(ew, r, rounds)
-        releaseChk(ew)
-        out
+    // both paths return frames that no longer read ew
+    try rows.filterNot(_.exists(_.anyNull)) match {
+      case Some(r) => msfLocal(ew, r, rounds)
       case None =>
         val small = collectSmall(e.select(col("u").as("id"))
           .unionByName(e.select(col("v").as("id"))).distinct()).isDefined
         msfKeyed(ew, rounds, small)
-    }
+    } finally releaseChk(ew)
   }
 
   /** The driver solve of [[msfOn]] over collected `(u, v, w)` rows
@@ -4259,7 +4128,7 @@ object GraphOps {
   }
 
   /** The keyed Borůvka loop behind [[msfOn]] over the checkpointed
-    * edge frame `ew` (released on return). Each round is one join of
+    * edge frame `ew`. Each round is one join of
     * the edge frame against the label table + one keyed min, and the
     * contraction runs [[minLabelComponentsKeyed]] on the picked
     * component pairs. `small` (the measured [[SmallGraphVerts]] gate
@@ -4267,23 +4136,17 @@ object GraphOps {
     * contraction ride static broadcasts — no shuffle query stage, no
     * AQE round-trip; above it every join is a keyed shuffle. */
   private[graft] def msfKeyed(ew: DataFrame, rounds: Int,
-      small: Boolean): DataFrame = {
-    val und = ew.select(col("u").as("a"), col("v").as("b"), col("w"))
+      small: Boolean): DataFrame = roundScope(small) { rs =>
+    val und = rs.chk(ew.select(col("u").as("a"), col("v").as("b"), col("w"))
       .unionByName(
-        ew.select(col("v").as("a"), col("u").as("b"), col("w")))
-      .localCheckpoint(true)
-    var labels = ew.select(col("u").as("id"))
+        ew.select(col("v").as("a"), col("u").as("b"), col("w"))))
+    var labels = rs.chk(ew.select(col("u").as("id"))
       .unionByName(ew.select(col("v").as("id"))).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    def g(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    // chosen-edge frames accumulate here and union+distinct ONCE at
-    // the end — the forest is never read inside the loop, so
-    // materializing it per round would only add a job per round
-    val chosenFrames =
-      scala.collection.mutable.Buffer.empty[DataFrame]
-    val retired =
-      scala.collection.mutable.Buffer.empty[DataFrame]
+      .select(col("id"), col("id").as("comp")))
+    // chosen edges accumulate here and union+distinct ONCE at the end —
+    // the forest is never read inside the loop, so materializing it
+    // per round would only add a job per round
+    var chosen = Vector.empty[DataFrame]
     var round = 0
     var done = false
     while (round < rounds && !done) {
@@ -4295,9 +4158,9 @@ object GraphOps {
       // equal-weight edges between the same two components can both
       // win (each from its own side) and close a cycle.
       val pickPlan = und
-        .join(g(labels.select(col("id").as("a"), col("comp").as("ca"))),
+        .join(rs.g(labels.select(col("id").as("a"), col("comp").as("ca"))),
           "a")
-        .join(g(labels.select(col("id").as("b"), col("comp").as("cb"))),
+        .join(rs.g(labels.select(col("id").as("b"), col("comp").as("cb"))),
           "b")
         .filter(col("ca") =!= col("cb"))
         .groupBy(col("ca"))
@@ -4305,10 +4168,10 @@ object GraphOps {
           greatest(col("a"), col("b")).as("v"), col("cb"))).as("m"))
         .select(col("ca"), col("m.w").as("w"), col("m.u").as("u"),
           col("m.v").as("v"), col("m.cb").as("cb"))
-      // pick's row count rides its checkpoint job (chkCounting) — the
-      // per-round isEmpty probe job is gone
-      val (pick, nPick) = chkCounting(pickPlan, lit(true))
-      chosenFrames += pick.select(col("u"), col("v"), col("w"))
+      // pick's row count rides its checkpoint job (RoundScope.counting)
+      // — the per-round isEmpty probe job is gone
+      val (pick, nPick) = rs.counting(pickPlan, lit(true))
+      chosen :+= pick.select(col("u"), col("v"), col("w"))
       if (nPick == 0) done = true
       else {
         // contract: CC over the picked COMPONENT pairs only
@@ -4317,25 +4180,21 @@ object GraphOps {
           least(col("ca"), col("cb")).as("a_id"),
           greatest(col("ca"), col("cb")).as("b_id")).distinct()
         val (cc, ccChk) = minLabelComponentsKeyed(cverts, cpairs, small)
-        val nextLabels = labels
-          .join(g(cc.select(col("id").as("comp"),
+        val nextLabels = rs.chk(labels
+          .join(rs.g(cc.select(col("id").as("comp"),
             col("cluster").as("newc"))), "comp")
-          .select(col("id"), col("newc").as("comp"))
-          .localCheckpoint(true)
-        // nextLabels is eager, so the contraction's block set can go
-        // NOW instead of accumulating one per Borůvka round
-        ccChk.unpersist(false)
-        retired += labels
+          .select(col("id"), col("newc").as("comp")))
+        // nextLabels is eager, so the contraction's and the previous
+        // labels' block sets can go NOW instead of accumulating one per
+        // Borůvka round
+        releaseChk(ccChk)
+        rs.release(labels)
         labels = nextLabels
       }
-      retired += pick
     }
-    val out = chosenFrames.reduce(_ unionByName _).distinct()
+    chosen.reduce(_ unionByName _).distinct()
       .select(col("u"), col("v"), col("w").as("w_cents"))
       .orderBy(col("u"), col("v")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    Seq(ew, und, labels).foreach(_.unpersist(false))
-    out
   }
 
   /** RECIPROCITY — the share of directed edges whose reverse edge

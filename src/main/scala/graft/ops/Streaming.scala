@@ -403,12 +403,7 @@ object Streaming {
       upsertDirs.getOrElseUpdate((spark, dir, "cc"), {
         val b = graft.TempDirs.create(
           s"graft-ccsink-${runIds.incrementAndGet()}")
-        val edges = eventsStream(spark, dir)
-          .select(col("user_id").as("u"),
-            (lit(HourOff) +
-              expr("unix_timestamp(date_trunc('HOUR', ts)) div 3600"))
-              .as("h"))
-        runLabelState(spark, b, edges)
+        runLabelState(spark, b, coActivityEdges(spark, dir))
         b
       })
     }
@@ -418,11 +413,21 @@ object Streaming {
       .orderBy(col("user_id"))
   }
 
+  /** The streamed user↔clock-hour edges `(u, h)` of
+    * [[streamComponentsIncremental]]. */
+  private[graft] def coActivityEdges(spark: SparkSession,
+      dir: String): DataFrame =
+    eventsStream(spark, dir)
+      .select(col("user_id").as("u"),
+        (lit(HourOff) +
+          expr("unix_timestamp(date_trunc('HOUR', ts)) div 3600"))
+          .as("h"))
+
   /** The foreachBatch loop of [[streamComponentsIncremental]]: label
     * table in `base/labels`, overwritten once per micro-batch AFTER
     * eager materialization (the read of the previous state and the
     * overwrite target the same path, so lineage must be cut first). */
-  private def runLabelState(spark: SparkSession, base: String,
+  private[graft] def runLabelState(spark: SparkSession, base: String,
       edges: DataFrame): Unit =
     withStatePartitions(spark, 8) {
       val labelsPath = s"$base/labels"
@@ -452,9 +457,9 @@ object Streaming {
             val lv = mergePairs.select(col("a_id").as("id"))
               .unionByName(mergePairs.select(col("b_id").as("id")))
               .distinct()
-            // the Chk variant, so the label handle is unpersisted per
+            // the Chk variant, so the label handle is released per
             // micro-batch in a loop built for long-running feeds
-            Some(graft.ops.GraphOps.minLabelComponentsChk(lv, mergePairs))
+            Some(GraphOps.minLabelComponentsChk(lv, mergePairs))
           }
           val next = contraction match {
             case None => all
@@ -466,11 +471,8 @@ object Streaming {
           }
           val out = next.localCheckpoint(true)
           out.write.mode("overwrite").parquet(labelsPath)
-          out.unpersist(false)
-          contraction.foreach { case (_, chk) => chk.unpersist(false) }
-          mergePairs.unpersist(false)
-          e.unpersist(false)
-          (): Unit
+          (Seq(out, mergePairs, e) ++ contraction.map(_._2))
+            .foreach(GraphOps.releaseChk)
         }
         .start()
       q.processAllAvailable()

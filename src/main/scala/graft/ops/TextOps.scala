@@ -422,7 +422,7 @@ object TextOps {
         .select(col("doc_id").as("id"))
       val (labels, chk) = GraphOps.minLabelComponentsChk(verts, pairs)
       val out = labels.localCheckpoint(true)
-      chk.unpersist(false)
+      GraphOps.releaseChk(chk)
       out
     })
   }

@@ -1269,6 +1269,71 @@ class GraphSpec extends SparkSpec {
       s"graphCondensationLayers left RDDs $layLeft cached")
   }
 
+  test("iterative loops release every frame they cache but their " +
+      "output's, on a hand graph") {
+    val sess = spark
+    import sess.implicits._
+    // two triangles joined by a path, plus a pendant: directed edges
+    val de = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 4L), (6L, 7L))
+    val e = de.toDF("src", "dst")
+    val und = de.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("src", "dst")
+    val wed = de.map { case (a, b) => (a, b, 1000000L) }
+      .toDF("src", "dst", "len")
+    val multi = (de :+ ((1L, 2L))).toDF("src", "dst")
+    val lab0 = (1L to 7L).map(i => (i, i)).toDF("id", "label")
+    val verts = (1L to 7L).toDF("id")
+    val pairs = de.toDF("a_id", "b_id")
+    val ew = de.map { case (a, b) => (a, b, a * 10 + b) }
+      .toDF("u", "v", "w").localCheckpoint(true)
+    def ownRdd(df: org.apache.spark.sql.DataFrame): Option[Int] =
+      df.queryExecution.logical match {
+        case r: LogicalRDD => Some(r.rdd.id)
+        case _ => None
+      }
+    type Frames = Seq[org.apache.spark.sql.DataFrame]
+    val loops: Seq[(String, () => Frames)] = Seq(
+      "pagerankExactOn" -> (() => Seq(GraphOps.pagerankExactOn(e, 3))),
+      "pagerankPersonalizedOn" -> (() => Seq(GraphOps
+        .pagerankPersonalizedOn(e, Seq(1L).toDF("sid"), 3, small = true))),
+      "pagerankWeightedExactOn" -> (() =>
+        Seq(GraphOps.pagerankWeightedExactOn(multi, 3))),
+      "lpaExactOn" -> (() => Seq(GraphOps.lpaExactOn(e, 3, small = true))),
+      "hitsExactOn" -> (() => Seq(GraphOps.hitsExactOn(e, 2))),
+      "eigenvectorOn" -> (() => Seq(GraphOps.eigenvectorOn(und, 3))),
+      "corenessOn" -> (() => Seq(GraphOps.corenessOn(und, 4))),
+      "kcoreOn" -> (() => Seq(GraphOps.kcoreOn(und, 2, 3))),
+      "louvainLabels" -> (() => Seq(GraphOps.louvainLabels(e, lab0, 3))),
+      "louvainMoveLabels" -> (() =>
+        Seq(GraphOps.louvainMoveLabels(e, lab0, 2))),
+      "betweennessMulti" -> (() =>
+        Seq(GraphOps.betweennessMulti(und, Seq(1L, 5L), 3, small = true))),
+      "shortestPathsWeightedMultiOn" -> (() =>
+        Seq(GraphOps.shortestPathsWeightedMultiOn(wed, Seq(1L), 4))),
+      "betweennessWeightedMulti" -> (() =>
+        Seq(GraphOps.betweennessWeightedMulti(wed, Seq(1L), 4))),
+      "minLabelComponentsKeyed" -> (() => {
+        val (labels, handle) =
+          GraphOps.minLabelComponentsKeyed(verts, pairs, small = true)
+        assert(labels.collect().length == 7)
+        // the handle is a projection over the last checkpoint
+        GraphOps.releaseChk(handle)
+        Seq.empty
+      }),
+      "msfKeyed" -> (() => Seq(GraphOps.msfKeyed(ew, 3, small = false))),
+      "sccLabelsKeyed" -> (() => Seq(GraphOps.sccLabelsKeyed(e, 3))))
+    for ((name, run) <- loops) {
+      var kept = Set.empty[Int]
+      val (_, left) = jobsAndLeaks(s"leaks-$name") {
+        val out = run()
+        kept = out.flatMap(ownRdd).toSet
+        out.foreach(f => assert(f.collect().nonEmpty, name))
+      }
+      assert(left.forall(i => kept(i.id)), s"$name left RDDs $left cached")
+    }
+  }
+
   test("scc census: every sampled basket's parts land in ONE scc, " +
       "and sizes cover at least the largest basket") {
     val t = Tables(spark, sfDir)
@@ -1394,11 +1459,15 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     val pairs = (1L to 19L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val verts = (1L to 20L).toDF("id")
-    val e = intercept[IllegalStateException](
-      GraphOps.minLabelComponentsKeyed(verts, pairs, small = false,
-        maxRounds = 1))
-    assert(e.getMessage.contains("1 rounds"), e.getMessage)
-    assert(e.getMessage.contains("labels still changing"), e.getMessage)
+    val (_, left) = jobsAndLeaks("leaks-cap") {
+      val e = intercept[IllegalStateException](
+        GraphOps.minLabelComponentsKeyed(verts, pairs, small = false,
+          maxRounds = 1))
+      assert(e.getMessage.contains("1 rounds"), e.getMessage)
+      assert(e.getMessage.contains("labels still changing"), e.getMessage)
+    }
+    // the throw releases the loop's checkpoints too
+    assert(left.isEmpty, s"the capped loop left RDDs $left cached")
   }
 
   test("condensation: no 2-cycles (DAG necessary condition), every " +

@@ -491,5 +491,17 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster"))
       .filter(_._1 < Streaming.HourOff).toMap
     assert(got == batch, "incremental state diverged from batch labels")
+    // a fresh feed into its own state dir: every micro-batch releases
+    // its checkpoints, so the feed leaves no cached RDD behind
+    val base = TempDirs.create("graft-ccsink-spec")
+    val (_, left) = jobsAndLeaks("leaks-stream-cc") {
+      Streaming.runLabelState(spark, base,
+        Streaming.coActivityEdges(spark, sfDir))
+    }
+    assert(left.isEmpty, s"the label feed left RDDs $left cached")
+    val fresh = spark.read.parquet(s"$base/labels")
+      .filter(col("id") < Streaming.HourOff).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("lbl")).toMap
+    assert(fresh == got, "a fresh feed diverged from the memoized one")
   }
 }
