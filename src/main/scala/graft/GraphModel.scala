@@ -33,33 +33,24 @@ object GraphModel {
     * queries share one scan+union instead of rebuilding it. ~50 MB at
     * sf0.1; a handful of dirs per process, never unpersisted (process-
     * lifetime cache, same pattern a long-lived service would use). */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  /** Cached + persisted view of [[edges]]. */
-  def edgesCached(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((spark, dir), edges(spark, dir).persist())
-
-  private val dedupCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  val edgesCached = SessionMemo { (spark, dir) =>
+    edges(spark, dir).persist()
+  }
 
   /** Memoized DEDUPLICATED (src, dst) pairs — the shared input of every
     * multiplicity-insensitive DataFrame algorithm (exact PageRank/LPA,
     * mutation counts). One distinct-shuffle per (session, dir) instead
     * of one per query. */
-  def dedupEdgesCached(spark: SparkSession, dir: String): DataFrame =
-    dedupCache.getOrElseUpdate((spark, dir),
-      // persisted PRE-PARTITIONED on src: the exact-iteration family
-      // joins this frame on src once per iteration, and the in-memory
-      // relation's hash partitioning satisfies the join's distribution
-      // requirement — the big side's exchange disappears from every
-      // iteration (the "reuse one partitioning across stages" rule; at
-      // 100 TB this is bucketing the edge table by src at write time)
-      edgesCached(spark, dir).select(col("src"), col("dst"))
-        .distinct().repartition(col("src")).persist())
-
-  private val dedupByDstCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  val dedupEdgesCached = SessionMemo { (spark, dir) =>
+    // persisted PRE-PARTITIONED on src: the exact-iteration family
+    // joins this frame on src once per iteration, and the in-memory
+    // relation's hash partitioning satisfies the join's distribution
+    // requirement — the big side's exchange disappears from every
+    // iteration (the "reuse one partitioning across stages" rule; at
+    // 100 TB this is bucketing the edge table by src at write time)
+    edgesCached(spark, dir).select(col("src"), col("dst"))
+      .distinct().repartition(col("src")).persist()
+  }
 
   /** The dst-partitioned sibling of [[dedupEdgesCached]], for
     * algorithms whose per-round join probes the REVERSE direction
@@ -67,47 +58,28 @@ object GraphModel {
     * one-partitioning-many-stages rule; at 100 TB this is the
     * dst-bucketed copy of the edge table every graph store keeps for
     * reverse traversal. */
-  def dedupEdgesByDstCached(spark: SparkSession, dir: String): DataFrame =
-    dedupByDstCache.getOrElseUpdate((spark, dir),
-      dedupEdgesCached(spark, dir)
-        .repartition(col("dst")).persist())
-
-  private val undCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  val dedupEdgesByDstCached = SessionMemo { (spark, dir) =>
+    dedupEdgesCached(spark, dir).repartition(col("dst")).persist()
+  }
 
   /** Undirected pair frame (both directions of [[dedupEdgesCached]]),
     * persisted pre-partitioned on src — the shared traversal input of
     * the centrality family (betweenness forward hops, the closeness/
     * reach multi-source sweep). One union+exchange per (session, dir)
     * instead of one per centrality key. */
-  def undEdgesCached(spark: SparkSession, dir: String): DataFrame =
-    // synchronized: bare getOrElseUpdate can double-evaluate under a
-    // concurrent first call and leak one persisted frame (the
-    // Sources.materialize rule, like every other builder that persists)
-    undCache.synchronized {
-      undCache.getOrElseUpdate((spark, dir), {
-        val d = dedupEdgesCached(spark, dir)
-        d.select(col("src"), col("dst"))
-          .unionByName(
-            d.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(col("src")).persist()
-      })
-    }
-
-  private val undByDstCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  val undEdgesCached = SessionMemo { (spark, dir) =>
+    val d = dedupEdgesCached(spark, dir)
+    d.select(col("src"), col("dst"))
+      .unionByName(d.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(col("src")).persist()
+  }
 
   /** The dst-partitioned sibling of [[undEdgesCached]] (betweenness'
     * backward sweep probes on dst) — same twin-cache rule as the
     * directed pair. */
-  def undEdgesByDstCached(spark: SparkSession, dir: String): DataFrame =
-    undByDstCache.synchronized {
-      undByDstCache.getOrElseUpdate((spark, dir),
-        undEdgesCached(spark, dir).repartition(col("dst")).persist())
-    }
-
-  private val dedupVertsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+  val undEdgesByDstCached = SessionMemo { (spark, dir) =>
+    undEdgesCached(spark, dir).repartition(col("dst")).persist()
+  }
 
   /** Edge-incident vertex set of a (src, dst) edge frame with
     * out-degree (od = 0 marks sinks) — THE single definition of the
@@ -127,20 +99,17 @@ object GraphModel {
     * exact-iteration query needs exactly this frame every iteration;
     * building it once per (session, dir) removes a distinct + groupBy +
     * join over the edge table from every query. */
-  def dedupVertsCached(spark: SparkSession, dir: String): DataFrame =
-    dedupVertsCache.getOrElseUpdate((spark, dir),
-      vertsWithOutDegree(dedupEdgesCached(spark, dir)
-        .select(col("src"), col("dst"))).persist())
-
-  private val dedupVertCountCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
+  val dedupVertsCached = SessionMemo { (spark, dir) =>
+    vertsWithOutDegree(dedupEdgesCached(spark, dir)
+      .select(col("src"), col("dst"))).persist()
+  }
 
   /** Memoized row count of [[dedupVertsCached]] — the broadcast-gate
     * input the exact-iteration family reads (one cheap job over the
     * persisted frame, once per (session, dir)). */
-  def dedupVertCountCached(spark: SparkSession, dir: String): Long =
-    dedupVertCountCache.getOrElseUpdate((spark, dir),
-      dedupVertsCached(spark, dir).count())
+  val dedupVertCountCached = SessionMemo { (spark, dir) =>
+    dedupVertsCached(spark, dir).count()
+  }
 
   /** All vertices: (id, kind, name). */
   def vertices(spark: SparkSession, dir: String): DataFrame = {
@@ -218,15 +187,11 @@ object GraphModel {
         col("l_returnflag").as("status")))
   }
 
-  private val edgePropsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
   /** Memoized [[edgesProps]] (NOT persisted: each motif term re-filters
     * it by rel, and Catalyst prunes the union to the one contributing
     * scan per term — persisting would pin all six projections and
     * defeat that pruning). */
-  def edgesPropsCached(spark: SparkSession, dir: String): DataFrame =
-    edgePropsCache.getOrElseUpdate((spark, dir), edgesProps(spark, dir))
+  val edgesPropsCached = SessionMemo(edgesProps)
 
   /** All edges: (src, dst, rel). Multi-edges preserved. */
   def edges(spark: SparkSession, dir: String): DataFrame = {
@@ -285,10 +250,7 @@ object GraphModel {
     * shortest paths now share one build. `Graph.cache()` persists both
     * the vertex and edge RDDs, so the first algorithm materializes them
     * and the rest reuse. */
-  private val graphxCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), org.apache.spark.graphx.Graph[String, String]]()
-
-  def graphxCached(spark: SparkSession, dir: String)
-      : org.apache.spark.graphx.Graph[String, String] =
-    graphxCache.getOrElseUpdate((spark, dir), graphx(spark, dir).cache())
+  val graphxCached = SessionMemo { (spark, dir) =>
+    graphx(spark, dir).cache()
+  }
 }

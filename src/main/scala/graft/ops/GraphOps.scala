@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraphModel, Tables}
+import graft.{GraphModel, SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
@@ -182,30 +182,24 @@ object GraphOps {
   /** Memoized 3-hop reverse-BFS layering from the region-0 root —
     * `graph_bfs_khop` and `graph_shortest_path_trace` consume the
     * identical (id, hop) frame, so the join loop runs once per
-    * (session, dir); materialized as an eager localCheckpoint.
-    * synchronized: the Sources.materialize rule. */
-  private val khopLayersCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def khopLayersCached(spark: SparkSession,
-      dir: String): DataFrame = khopLayersCache.synchronized {
-    khopLayersCache.getOrElseUpdate((spark, dir), {
-      val e = GraphModel.edgesCached(spark, dir)
-        .select(col("src"), col("dst"))
-      val seed = spark.range(1).select(
-        lit(GraphModel.RegionOff).as("id"), lit(0).as("hop"))
-      var visited = seed
-      var frontier = seed.select(col("id"))
-      for (h <- 1 to 3) {
-        val next = e.join(frontier, e("dst") === frontier("id"))
-          .select(col("src").as("id")).distinct()
-          .join(visited.select(col("id").as("vid")),
-            col("id") === col("vid"), "left_anti")
-          .select(col("id"), lit(h).as("hop"))
-        visited = visited.unionByName(next)
-        frontier = next.select(col("id"))
-      }
-      visited.localCheckpoint(true)
-    })
+    * (session, dir); materialized as an eager localCheckpoint. */
+  private val khopLayersCached = SessionMemo { (spark, dir) =>
+    val e = GraphModel.edgesCached(spark, dir)
+      .select(col("src"), col("dst"))
+    val seed = spark.range(1).select(
+      lit(GraphModel.RegionOff).as("id"), lit(0).as("hop"))
+    var visited = seed
+    var frontier = seed.select(col("id"))
+    for (h <- 1 to 3) {
+      val next = e.join(frontier, e("dst") === frontier("id"))
+        .select(col("src").as("id")).distinct()
+        .join(visited.select(col("id").as("vid")),
+          col("id") === col("vid"), "left_anti")
+        .select(col("id"), lit(h).as("hop"))
+      visited = visited.unionByName(next)
+      frontier = next.select(col("id"))
+    }
+    visited.localCheckpoint(true)
   }
 
   /** Shortest-path TRACE — not just the distance but THE path, the
@@ -490,15 +484,11 @@ object GraphOps {
     * `graph_modularity` consume the IDENTICAL labels, so the iteration
     * runs once per (session, dir); the frame is an eager
     * localCheckpoint (materialized, lineage-free) that consumers must
-    * NOT unpersist. synchronized: the Sources.materialize rule. */
-  private val lpaLabelsCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def lpaLabelsCached(spark: SparkSession,
-      dir: String): DataFrame = lpaLabelsCache.synchronized {
-    lpaLabelsCache.getOrElseUpdate((spark, dir),
-      lpaExactOn(GraphModel.dedupEdgesCached(spark, dir), 3,
-        Some(GraphModel.dedupVertsCached(spark, dir)),
-        small = smallGraph(spark, dir)))
+    * NOT unpersist. */
+  private val lpaLabelsCached = SessionMemo { (spark, dir) =>
+    lpaExactOn(GraphModel.dedupEdgesCached(spark, dir), 3,
+      Some(GraphModel.dedupVertsCached(spark, dir)),
+      small = smallGraph(spark, dir))
   }
 
   def lpaExact(spark: SparkSession, dir: String): DataFrame =
@@ -519,10 +509,10 @@ object GraphOps {
     * censuses), DuckDB-replayed like any other key. */
   def graphWarmCaches(spark: SparkSession, dir: String): DataFrame = {
     // r12: force the INDEPENDENT cache chains concurrently — Spark
-    // accepts job submissions from multiple threads, and the four
-    // chains below share no builder locks except through their
-    // dependency order (both label chains start by taking the
-    // dedup-edge lock; the loser blocks until the winner's build
+    // accepts job submissions from multiple threads, and the chains
+    // below share memo locks only through their dependency order
+    // (every chain that reads the dedup edges or the vertex count
+    // takes that memo's lock; a loser blocks until the winner's build
     // lands, then reuses it — no cycles, no double builds). Probe
     // breakdown at sf0.1: label chain ded 7.0 → lpa 6.7 → louvain 6.9
     // → within 6.1 ≈ 27 s is the critical path; triangles 11.6,
@@ -603,31 +593,22 @@ object GraphOps {
     * `graph_leiden` and `graph_louvain_move` previously each rebuilt
     * (and eagerly checkpointed, and counted) the identical frame; one
     * build per (session, dir), warmed by [[graphWarmCaches]] (r12). */
-  private val undDegCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, Long)]()
-  private[graft] def undDegCached(spark: SparkSession,
-      dir: String): (DataFrame, Long) = undDegCache.synchronized {
-    undDegCache.getOrElseUpdate((spark, dir), {
-      val d = GraphModel.undEdgesCached(spark, dir)
-        .groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .withColumnRenamed("src", "id")
-        .localCheckpoint(true)
-      (d, d.count())
-    })
+  private[graft] val undDegCached = SessionMemo { (spark, dir) =>
+    val d = GraphModel.undEdgesCached(spark, dir)
+      .groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .withColumnRenamed("src", "id")
+      .localCheckpoint(true)
+    (d, d.count())
   }
 
   /** Memoized 1-row deduped-edge-count frame (m, DECIMAL(38,0)) — the
     * modularity denominator every merge/move phase crosses in; one
     * count over the cached edge frame per (session, dir). */
-  private val mRowCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private[graft] def edgeCountRowCached(spark: SparkSession,
-      dir: String): DataFrame = mRowCache.synchronized {
-    mRowCache.getOrElseUpdate((spark, dir),
-      GraphModel.dedupEdgesCached(spark, dir)
-        .agg(count(lit(1))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("m"))
-        .localCheckpoint(true))
+  private[graft] val edgeCountRowCached = SessionMemo { (spark, dir) =>
+    GraphModel.dedupEdgesCached(spark, dir)
+      .agg(count(lit(1))
+        .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("m"))
+      .localCheckpoint(true)
   }
 
   /** Memoized Louvain labeling ([[louvainLabels]] over the shared LPA
@@ -635,19 +616,14 @@ object GraphOps {
     * `graph_community_refine` and `graph_partition_agreement` all read
     * the IDENTICAL labeling, so the merge-contract iteration runs once
     * per (session, dir); same retention contract as the LPA cache. */
-  private val louvainLabelsCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def louvainLabelsCached(spark: SparkSession,
-      dir: String): DataFrame = louvainLabelsCache.synchronized {
-    louvainLabelsCache.getOrElseUpdate((spark, dir), {
-      // r12: ride the session degree/edge-count caches instead of
-      // louvainLabels' own per-call builds (one eager checkpoint + one
-      // count job saved on the warm path)
-      val (deg, nVerts) = undDegCached(spark, dir)
-      louvainLabelsOn(GraphModel.dedupEdgesCached(spark, dir),
-        lpaLabelsCached(spark, dir), LouvainRounds, deg,
-        edgeCountRowCached(spark, dir), nVerts <= SmallGraphVerts)
-    })
+  private val louvainLabelsCached = SessionMemo { (spark, dir) =>
+    // r12: ride the session degree/edge-count caches instead of
+    // louvainLabels' own per-call builds (one eager checkpoint + one
+    // count job saved on the warm path)
+    val (deg, nVerts) = undDegCached(spark, dir)
+    louvainLabelsOn(GraphModel.dedupEdgesCached(spark, dir),
+      lpaLabelsCached(spark, dir), LouvainRounds, deg,
+      edgeCountRowCached(spark, dir), nVerts <= SmallGraphVerts)
   }
 
   /** Community quality over the final [[lpaExactOn]] labels: per
@@ -1083,23 +1059,18 @@ object GraphOps {
     * frame, so the labeled-edge pass + pointer-jumping component
     * rounds run once per (session, dir); same retention contract as
     * the LPA/Louvain caches, warmed by [[graphWarmCaches]]. */
-  private val withinPartsCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def withinPartsCached(spark: SparkSession,
-      dir: String): DataFrame = withinPartsCache.synchronized {
-    withinPartsCache.getOrElseUpdate((spark, dir), {
-      val ded = GraphModel.dedupEdgesCached(spark, dir)
-      val lab = louvainLabelsCached(spark, dir)
-      val within = ded
-        .join(lab.select(col("id").as("src"), col("label").as("ls")),
-          "src")
-        .join(lab.select(col("id").as("dst"), col("label").as("ld")),
-          "dst")
-        .filter(col("ls") === col("ld"))
-        .select(col("src").as("a_id"), col("dst").as("b_id"))
-      minLabelComponents(lab.select(col("id")), within)
-        .localCheckpoint(true)
-    })
+  private val withinPartsCached = SessionMemo { (spark, dir) =>
+    val ded = GraphModel.dedupEdgesCached(spark, dir)
+    val lab = louvainLabelsCached(spark, dir)
+    val within = ded
+      .join(lab.select(col("id").as("src"), col("label").as("ls")),
+        "src")
+      .join(lab.select(col("id").as("dst"), col("label").as("ld")),
+        "dst")
+      .filter(col("ls") === col("ld"))
+      .select(col("src").as("a_id"), col("dst").as("b_id"))
+    minLabelComponents(lab.select(col("id")), within)
+      .localCheckpoint(true)
   }
 
   /** LEIDEN COMMUNITIES — the repair [[graphCommunityRefine]] only
@@ -1902,7 +1873,7 @@ object GraphOps {
       depth: Int, undByDst: Option[DataFrame] = None,
       small: Boolean = false): DataFrame = roundScope(small) { rs =>
     val layers = bfsSigmaLayersMulti(und, sources, depth, rs)
-    // r15 (the edgeBetweennessBuild restructure): materialize the
+    // r15 (the edge-betweenness restructure): materialize the
     // BFS-DAG edge set ONCE — (v at layer k) → (w at k+1) with both
     // endpoints' path counts — instead of re-joining the full edge
     // table (undByDst, kept in the signature for call-site stability
@@ -1988,22 +1959,12 @@ object GraphOps {
     * (min, max) before the cross-landmark sum, since a pair can be
     * traversed in either direction depending on the source. This is
     * the "which relationship carries the traffic" read and the cut
-    * ranking Girvan–Newman community detection peels. */
-  def graphEdgeBetweenness(spark: SparkSession, dir: String)
-      : DataFrame = edgeBetweennessCache.synchronized {
-    edgeBetweennessCache.getOrElseUpdate((spark, dir),
-      edgeBetweennessBuild(spark, dir))
-  }
-
-  /** Memoized [[graphEdgeBetweenness]] result (a checkpointed 50-row
-    * frame) — `graph_girvan_newman_cut` consumes the identical ranking
-    * for its cut set, so the Brandes sweeps run once per
-    * (session, dir). */
-  private val edgeBetweennessCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), DataFrame]()
-
-  private def edgeBetweennessBuild(spark: SparkSession, dir: String)
-      : DataFrame = {
+    * ranking Girvan–Newman community detection peels.
+    *
+    * Memoized (a checkpointed 50-row frame): `graph_girvan_newman_cut`
+    * consumes the identical ranking for its cut set, so the Brandes
+    * sweeps run once per (session, dir). */
+  val graphEdgeBetweenness = SessionMemo { (spark, dir) =>
     val (_, ekAll) = brandesSweepCached(spark, dir)
     ekAll
       .groupBy(least(col("v"), col("w")).as("a"),
@@ -2027,13 +1988,7 @@ object GraphOps {
     * identical sweep (~230 + ~150 task-s on the dense draw).
     * [[graphWarmCaches]] forces it on a concurrent chain so the build
     * lands on the attribution anchor's slot. */
-  private val brandesSweepCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private[ops] def brandesSweepCached(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = brandesSweepCache.synchronized {
-    brandesSweepCache.getOrElseUpdate((spark, dir),
-      brandesSweepBuild(spark, dir))
-  }
+  private[ops] val brandesSweepCached = SessionMemo(brandesSweepBuild)
 
   private def brandesSweepBuild(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = roundScope(smallGraph(spark, dir)) { rs =>
@@ -2150,14 +2105,10 @@ object GraphOps {
     * EVERY component's identity (~150 task-s on the dense draw) where
     * the census reads one component's size. Warmed on its own chain
     * by [[graphWarmCaches]]. */
-  private val seedCompCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), DataFrame]()
-  private[ops] def seedComponentCached(spark: SparkSession,
-      dir: String): DataFrame = seedCompCache.synchronized {
-    seedCompCache.getOrElseUpdate((spark, dir),
-      bfsReachable(spark, GraphModel.undEdgesCached(spark, dir),
-        GraphModel.RegionOff,
-        smallGraph(spark, dir)))
+  private[ops] val seedComponentCached = SessionMemo { (spark, dir) =>
+    bfsReachable(spark, GraphModel.undEdgesCached(spark, dir),
+      GraphModel.RegionOff,
+      smallGraph(spark, dir))
   }
 
   /** BFS reachable set from `src` over an undirected `(src, dst)`
@@ -2245,16 +2196,12 @@ object GraphOps {
     * round probes), so consumers stop re-aggregating the raw edge
     * table once per join (r13; the exchange-reuse rule only dedups
     * within one action, and the weighted family spans several). */
-  private val wedCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def wedOf(spark: SparkSession, dir: String): DataFrame =
-    wedCache.synchronized {
-      wedCache.getOrElseUpdate((spark, dir),
-        GraphModel.edgesCached(spark, dir)
-          .groupBy(col("src"), col("dst"))
-          .agg(expr("CAST(1000000 div count(1) AS BIGINT)").as("len"))
-          .repartition(col("dst")).persist())
-    }
+  private val wedOf = SessionMemo { (spark, dir) =>
+    GraphModel.edgesCached(spark, dir)
+      .groupBy(col("src"), col("dst"))
+      .agg(expr("CAST(1000000 div count(1) AS BIGINT)").as("len"))
+      .repartition(col("dst")).persist()
+  }
 
   /** Landmark set for the weighted family: all five region roots. */
   private val WeightedLandmarks: Seq[Long] =
@@ -2264,16 +2211,11 @@ object GraphOps {
     * is IDENTICAL between `graph_shortest_paths_weighted_multi` and
     * `graph_betweenness_weighted` (which builds its shortest-path DAG
     * from it), so it runs once per (session, dir). Eager checkpoint;
-    * consumers must NOT unpersist. synchronized: the
-    * Sources.materialize rule. */
-  private val spwMultiCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def spwMultiCached(spark: SparkSession,
-      dir: String): DataFrame = spwMultiCache.synchronized {
-    spwMultiCache.getOrElseUpdate((spark, dir),
-      shortestPathsWeightedMultiOn(wedOf(spark, dir),
-        WeightedLandmarks, 4,
-        small = smallGraph(spark, dir)))
+    * consumers must NOT unpersist. */
+  private val spwMultiCached = SessionMemo { (spark, dir) =>
+    shortestPathsWeightedMultiOn(wedOf(spark, dir),
+      WeightedLandmarks, 4,
+      small = smallGraph(spark, dir))
   }
 
   /** Registered surface: micro-unit weighted distances from all five
@@ -2482,19 +2424,12 @@ object GraphOps {
 
   /** Memoized [[bfsSigmaLayersMulti]] over the shared undirected cache
     * for the closeness landmark set — closeness and the reach profile
-    * consume the identical sweep, so it runs once per (session, dir).
-    * synchronized: getOrElseUpdate alone can double-evaluate under a
-    * concurrent first call and leak one set of persisted layers (the
-    * Sources.materialize rule). */
-  private val closenessSweepCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), Vector[DataFrame]]()
-  private def closenessSweepCached(spark: SparkSession,
-      dir: String): Vector[DataFrame] = closenessSweepCache.synchronized {
-    closenessSweepCache.getOrElseUpdate((spark, dir),
-      roundScope(smallGraph(spark, dir)) { rs =>
-        bfsSigmaLayersMulti(GraphModel.undEdgesCached(spark, dir),
-          ClosenessLandmarks, 3, rs).map(rs.keep)
-      })
+    * consume the identical sweep, so it runs once per (session, dir). */
+  private val closenessSweepCached = SessionMemo { (spark, dir) =>
+    roundScope(smallGraph(spark, dir)) { rs =>
+      bfsSigmaLayersMulti(GraphModel.undEdgesCached(spark, dir),
+        ClosenessLandmarks, 3, rs).map(rs.keep)
+    }
   }
 
   /** Characteristic path length estimate — mean BFS distance from
@@ -2797,14 +2732,9 @@ object GraphOps {
     * first consumer in bench order (`graph_node2vec_walk`) pays the
     * build, the same attribution convention as the dedup-edge / LPA /
     * triangle caches. */
-  private val n2vWalkCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-
-  def node2vecWalksCached(spark: SparkSession, dir: String): DataFrame =
-    n2vWalkCache.synchronized {
-      n2vWalkCache.getOrElseUpdate((spark, dir),
-        buildNode2vecWalks(spark, dir).localCheckpoint(true))
-    }
+  val node2vecWalksCached = SessionMemo { (spark, dir) =>
+    buildNode2vecWalks(spark, dir).localCheckpoint(true)
+  }
 
   def graphNode2vecWalk(spark: SparkSession, dir: String): DataFrame =
     node2vecWalksCached(spark, dir)
@@ -3686,9 +3616,6 @@ object GraphOps {
       .localCheckpoint(true)
   }
 
-  private val sccLiftCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-
   /** Shared SCC pipeline: basket cycles + brand-hub attachments,
     * cycle-frame contraction, bounded closure, labels lifted back.
     * Returns (`(id, sl)` per-part scc label frame, the directed
@@ -3707,69 +3634,66 @@ object GraphOps {
     * the frames are checkpointed and the contraction
     * ([[minLabelComponentsChk]]) and the closure ([[sccLabelsOn]])
     * run as plans, each behind its own gate. */
-  private def sccLifted(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = sccLiftCache.synchronized {
-    sccLiftCache.getOrElseUpdate((spark, dir), {
-      val t = Tables(spark, dir)
-      def pinned(df: DataFrame): (DataFrame, Option[Array[Row]]) =
-        collectSmall(df) match {
-          case Some(rows) => (rowsFrame(spark, rows.toSeq, df.schema),
-            Some(rows).filter(_ => allLong(df)))
-          case None => (df.localCheckpoint(), None)
-        }
-      val b = t.lineitem.filter(col("l_orderkey") % SccOrderMod === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val wo = Window.partitionBy(col("o")).orderBy(col("p"))
-      val (cyc, cycRows) = pinned(b
-        .select(col("o"), col("p"), lead(col("p"), 1).over(wo).as("np"),
-          min(col("p")).over(Window.partitionBy(col("o"))).as("fp"))
-        .select(col("p").as("src"),
-          coalesce(col("np"), col("fp")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct())
-      val partsIn = cyc.select(col("src").as("p"))
-        .unionByName(cyc.select(col("dst").as("p"))).distinct()
-      val withBrand = partsIn.join(
-        t.part.select(col("p_partkey").as("p"), col("p_brand")), Seq("p"))
-      val hub = withBrand.groupBy(col("p_brand"))
-        .agg(min(col("p")).as("hub"))
-      val (att, attRows) = pinned(withBrand.join(hub, Seq("p_brand"))
-        .filter(col("hub") =!= col("p"))
-        .select(col("hub").as("src"), col("p").as("dst")))
-      val local = for {
-        c <- cycRows
-        a <- attRows
-        if !(c ++ a).exists(_.anyNull)
-      } yield sccLiftLocal(spark, c, a)
-      val lifted = local.getOrElse {
-        // contract: weak components of the cycle frame are SCCs already
-        val (comp, compChk) = minLabelComponentsChk(
-          partsIn.select(col("p").as("id")),
-          cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
-        // attachments between supernodes; within-supernode ones vanish
-        val ce = att
-          .join(comp.select(col("id").as("src"),
-            col("cluster").as("csrc")), Seq("src"))
-          .join(comp.select(col("id").as("dst"),
-            col("cluster").as("cdst")), Seq("dst"))
-          .filter(col("csrc") =!= col("cdst"))
-          .select(col("csrc").as("src"), col("cdst").as("dst"))
-          .distinct()
-        // bounded closure over the contracted graph only
-        val superLab = sccLabelsOn(ce, SccDoubleRounds)
-        val out = comp
-          .join(superLab.select(col("u").as("cluster"), col("scc_id")),
-            Seq("cluster"), "left")
-          .select(col("id"),
-            coalesce(col("scc_id"), col("cluster")).as("sl"))
-          .localCheckpoint(true)
-        // out is eager and superLab no longer reads the labels
-        releaseChk(compChk)
-        out
+  private val sccLifted = SessionMemo { (spark, dir) =>
+    val t = Tables(spark, dir)
+    def pinned(df: DataFrame): (DataFrame, Option[Array[Row]]) =
+      collectSmall(df) match {
+        case Some(rows) => (rowsFrame(spark, rows.toSeq, df.schema),
+          Some(rows).filter(_ => allLong(df)))
+        case None => (df.localCheckpoint(), None)
       }
-      (lifted, cyc.unionByName(att))
-    })
+    val b = t.lineitem.filter(col("l_orderkey") % SccOrderMod === 0)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    val wo = Window.partitionBy(col("o")).orderBy(col("p"))
+    val (cyc, cycRows) = pinned(b
+      .select(col("o"), col("p"), lead(col("p"), 1).over(wo).as("np"),
+        min(col("p")).over(Window.partitionBy(col("o"))).as("fp"))
+      .select(col("p").as("src"),
+        coalesce(col("np"), col("fp")).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct())
+    val partsIn = cyc.select(col("src").as("p"))
+      .unionByName(cyc.select(col("dst").as("p"))).distinct()
+    val withBrand = partsIn.join(
+      t.part.select(col("p_partkey").as("p"), col("p_brand")), Seq("p"))
+    val hub = withBrand.groupBy(col("p_brand"))
+      .agg(min(col("p")).as("hub"))
+    val (att, attRows) = pinned(withBrand.join(hub, Seq("p_brand"))
+      .filter(col("hub") =!= col("p"))
+      .select(col("hub").as("src"), col("p").as("dst")))
+    val local = for {
+      c <- cycRows
+      a <- attRows
+      if !(c ++ a).exists(_.anyNull)
+    } yield sccLiftLocal(spark, c, a)
+    val lifted = local.getOrElse {
+      // contract: weak components of the cycle frame are SCCs already
+      val (comp, compChk) = minLabelComponentsChk(
+        partsIn.select(col("p").as("id")),
+        cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
+      // attachments between supernodes; within-supernode ones vanish
+      val ce = att
+        .join(comp.select(col("id").as("src"),
+          col("cluster").as("csrc")), Seq("src"))
+        .join(comp.select(col("id").as("dst"),
+          col("cluster").as("cdst")), Seq("dst"))
+        .filter(col("csrc") =!= col("cdst"))
+        .select(col("csrc").as("src"), col("cdst").as("dst"))
+        .distinct()
+      // bounded closure over the contracted graph only
+      val superLab = sccLabelsOn(ce, SccDoubleRounds)
+      val out = comp
+        .join(superLab.select(col("u").as("cluster"), col("scc_id")),
+          Seq("cluster"), "left")
+        .select(col("id"),
+          coalesce(col("scc_id"), col("cluster")).as("sl"))
+        .localCheckpoint(true)
+      // out is eager and superLab no longer reads the labels
+      releaseChk(compChk)
+      out
+    }
+    (lifted, cyc.unionByName(att))
   }
 
   /** The driver path of [[sccLifted]] over the collected cycle and

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{GraphModel, Tables}
+import graft.{GraphModel, SessionMemo, Tables}
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.graphx.lib.{LabelPropagation, ShortestPaths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -74,15 +74,11 @@ object GraphXAlgos {
     * (ok, pk) frame — link prediction, node similarity, triangle
     * count and the clustering coefficient all consume the identical
     * pair list, so the capped expansion + distinct runs once per
-    * (session, dir). synchronized: the Sources.materialize rule. */
-  private val copurchaseCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  def copurchasePairsCached(spark: SparkSession,
-      dir: String): DataFrame = copurchaseCache.synchronized {
-    copurchaseCache.getOrElseUpdate((spark, dir),
-      copurchasePairs(Tables(spark, dir).lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
-        .persist())
+    * (session, dir). */
+  val copurchasePairsCached = SessionMemo { (spark, dir) =>
+    copurchasePairs(Tables(spark, dir).lineitem
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
+      .persist()
   }
 
   /** The same capped per-order pair expansion WITH multiplicity (one
@@ -130,13 +126,9 @@ object GraphXAlgos {
     * ~20 s for the join) and a per-vertex O(max-degree) memory shape
     * that a hub vertex breaks at 100 TB, where the join enumeration
     * is three co-partitioned shuffles on bounded keys. */
-  private val triangleCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  def trianglesCached(spark: SparkSession, dir: String): DataFrame =
-    triangleCache.synchronized {
-      triangleCache.getOrElseUpdate((spark, dir),
-        trianglesPlan(spark, dir).localCheckpoint(true))
-    }
+  val trianglesCached = SessionMemo { (spark, dir) =>
+    trianglesPlan(spark, dir).localCheckpoint(true)
+  }
 
   /** The un-checkpointed triangle plan — separate from the memoized
     * entry point so PlanSpec can assert hint-freedom on the live plan
@@ -219,10 +211,10 @@ object GraphXAlgos {
     * rounds × (three semi-joins over the shrinking triangle list + a
     * keyed support agg); at 100 TB the truss peel runs on the capped
     * projection exactly like the triangle census. */
-  def graphKtruss(spark: SparkSession, dir: String): DataFrame = {
+  def graphKtruss(spark: SparkSession, dir: String)
+      : DataFrame = GraphOps.roundScope(small = false) { rs =>
     val K = 4
     val cur = copurchasePairsCached(spark, dir)
-    var ckpts = Vector.empty[DataFrame]
     var stats = Vector.empty[DataFrame]
     // Peeling only ever REMOVES edges, so the surviving triangle set
     // shrinks monotonically. r15: each round's survivors are computed
@@ -251,10 +243,9 @@ object GraphXAlgos {
               col("z").as("dst")))
             .groupBy(col("src"), col("dst"))
             .agg(count(lit(1)).as("sup"))
-          scored = cur.join(support, Seq("src", "dst"), "left")
+          scored = rs.chk(cur.join(support, Seq("src", "dst"), "left")
             .select(col("src"), col("dst"),
-              coalesce(col("sup"), lit(0L)).as("sup"))
-            .localCheckpoint(true)
+              coalesce(col("sup"), lit(0L)).as("sup")))
         case Some(rem) =>
           // later rounds are DELTA-sized (r15): support only ever
           // DECREASES, by exactly the dropped triangles' credits —
@@ -264,7 +255,7 @@ object GraphXAlgos {
           // subtract them from the surviving edges' scores
           val g: DataFrame => DataFrame =
             if (rem.count() <= 4000000L) broadcast _ else identity _
-          val dropped = tri
+          val dropped = rs.chk(tri
             .join(g(rem.select(col("src").as("x"), col("dst").as("y"))),
               Seq("x", "y"), "left_semi")
             .unionByName(tri
@@ -273,16 +264,14 @@ object GraphXAlgos {
             .unionByName(tri
               .join(g(rem.select(col("src").as("y"),
                 col("dst").as("z"))), Seq("y", "z"), "left_semi"))
-            .distinct()
-            .localCheckpoint(true)
-          tri = tri
+            .distinct())
+          tri = rs.chk(tri
             .join(g(rem.select(col("src").as("x"), col("dst").as("y"))),
               Seq("x", "y"), "left_anti")
             .join(g(rem.select(col("src").as("x"), col("dst").as("z"))),
               Seq("x", "z"), "left_anti")
             .join(g(rem.select(col("src").as("y"), col("dst").as("z"))),
-              Seq("y", "z"), "left_anti")
-            .localCheckpoint(true)
+              Seq("y", "z"), "left_anti"))
           val dec = dropped
             .select(col("x").as("src"), col("y").as("dst"))
             .unionByName(dropped.select(col("x").as("src"),
@@ -291,31 +280,25 @@ object GraphXAlgos {
               col("z").as("dst")))
             .groupBy(col("src"), col("dst"))
             .agg(count(lit(1)).as("dec"))
-          scored = scored.filter(col("sup") >= K - 2)
+          scored = rs.chk(scored.filter(col("sup") >= K - 2)
             .join(dec, Seq("src", "dst"), "left")
             .select(col("src"), col("dst"),
-              (col("sup") - coalesce(col("dec"), lit(0L))).as("sup"))
-            .localCheckpoint(true)
-          ckpts = ckpts ++ Vector(dropped, tri)
+              (col("sup") - coalesce(col("dec"), lit(0L))).as("sup")))
       }
       stats = stats :+ scored.agg(
         count_if(col("sup") < K - 2).as("n_removed"),
         count_if(col("sup") >= K - 2).as("n_remaining"))
         .select(lit(r).as("round"), col("n_removed"),
           col("n_remaining"))
-      val rem = scored.filter(col("sup") < K - 2)
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      ckpts = ckpts ++ Vector(scored, rem)
+      val rem = rs.chk(scored.filter(col("sup") < K - 2)
+        .select(col("src"), col("dst")))
       removed = Some(rem)
     }
-    val out = stats.reduce(_ unionByName _)
+    // materialized before the scope releases the per-round checkpoints
+    // (the seed frames are session-lifetime caches — never ledgered)
+    stats.reduce(_ unionByName _)
       .orderBy(col("round"))
       .localCheckpoint(true)
-    // out is materialized: release the per-round checkpoints (the
-    // seed frame is the session-lifetime co-purchase cache — left)
-    ckpts.foreach(_.unpersist(false))
-    out
   }
 
   /** Max degree a shared neighbor may have to contribute to
@@ -345,23 +328,18 @@ object GraphXAlgos {
     * applied — the identical candidate-generation input of
     * [[linkPredict]] and [[nodeSimilarity]], built once per
     * (session, dir) like the pair and triangle caches. */
-  private val cappedNbrCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def cappedNeighborsCached(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = cappedNbrCache.synchronized {
-    cappedNbrCache.getOrElseUpdate((spark, dir), {
-      val e = copurchasePairsCached(spark, dir)
-      val und = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .select(col("src").as("n"), col("deg"))
-        .persist()
-      val f = und.select(col("src").as("a"), col("dst").as("n"))
-        .join(deg.filter(col("deg") <= MaxLinkDegree), "n")
-        .select(col("a"), col("n"), col("deg").as("nd"))
-        .persist()
-      (deg, f)
-    })
+  private val cappedNeighborsCached = SessionMemo { (spark, dir) =>
+    val e = copurchasePairsCached(spark, dir)
+    val und = e.unionByName(
+      e.select(col("dst").as("src"), col("src").as("dst")))
+    val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("n"), col("deg"))
+      .persist()
+    val f = und.select(col("src").as("a"), col("dst").as("n"))
+      .join(deg.filter(col("deg") <= MaxLinkDegree), "n")
+      .select(col("a"), col("n"), col("deg").as("nd"))
+      .persist()
+    (deg, f)
   }
 
   def linkPredict(spark: SparkSession, dir: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,34 +51,28 @@ object Mining {
     opc.join(freqItems, Seq("p"), "left_semi")
   }
 
-  private val pairStatsCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]()
-
   /** Memoized pair mine — (pair supports ≥ [[MinSupport]], item
     * supports, basket count), computed ONCE per (session, dir) and
     * shared by [[mineFrequentPairs]] and [[mineAssocRules]]: the
     * per-order pair join is the family's only expensive surface, and
     * rebuilding it per query doubled the family's cost (the
     * lpaLabelsCached sharing discipline). */
-  private[ops] def pairStatsCached(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = pairStatsCache.synchronized {
-    pairStatsCache.getOrElseUpdate((spark, dir), {
-      val bi = frequentBasketItems(Tables(spark, dir)).persist()
-      val isup = bi.groupBy(col("p")).agg(count(lit(1)).as("isup"))
-        .localCheckpoint(true)
-      val nOrders = bi.select(col("o")).distinct()
-        .agg(count(lit(1)).as("n_orders")).localCheckpoint(true)
-      val a = bi.select(col("o"), col("p").as("part_a"))
-      val b = bi.select(col("o"), col("p").as("part_b"))
-      val pairs = a.join(b, Seq("o"))
-        .filter(col("part_a") < col("part_b"))
-        .groupBy(col("part_a"), col("part_b"))
-        .agg(count(lit(1)).as("sup"))
-        .filter(col("sup") >= MinSupport)
-        .localCheckpoint(true)
-      bi.unpersist(false)
-      (pairs, isup, nOrders)
-    })
+  private[ops] val pairStatsCached = SessionMemo { (spark, dir) =>
+    val bi = frequentBasketItems(Tables(spark, dir)).persist()
+    val isup = bi.groupBy(col("p")).agg(count(lit(1)).as("isup"))
+      .localCheckpoint(true)
+    val nOrders = bi.select(col("o")).distinct()
+      .agg(count(lit(1)).as("n_orders")).localCheckpoint(true)
+    val a = bi.select(col("o"), col("p").as("part_a"))
+    val b = bi.select(col("o"), col("p").as("part_b"))
+    val pairs = a.join(b, Seq("o"))
+      .filter(col("part_a") < col("part_b"))
+      .groupBy(col("part_a"), col("part_b"))
+      .agg(count(lit(1)).as("sup"))
+      .filter(col("sup") >= MinSupport)
+      .localCheckpoint(true)
+    bi.unpersist(false)
+    (pairs, isup, nOrders)
   }
 
   /** Frequent co-purchased part pairs (order-level support ≥
@@ -230,37 +224,32 @@ object Mining {
     * triple miner THREE times in one plan (Catalyst does not dedup
     * common subplans), so unpersisted it would re-run the
     * orders×lineitem×part build ~5× per bench pass. */
-  private val seqEvCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private[ops] def seqBrandEvents(spark: SparkSession,
-      dir: String): DataFrame = seqEvCache.synchronized {
-    seqEvCache.getOrElseUpdate((spark, dir), {
-      val t = Tables(spark, dir)
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val f = t.orders
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= MaxSeqOrders)
-        .join(t.lineitem.select(col("l_orderkey"), col("l_partkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(t.part.select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("o_custkey").as("cust"), col("o_orderkey").as("ok"),
-          col("o_orderdate").as("od"), col("p_brand").as("brand"))
-        .distinct()
-        .persist()
-      // MATERIALIZE before returning (r14, judge ask #3): persist()
-      // alone is lazy, so the graphWarmCaches chain that calls this
-      // returned with the cache EMPTY and the first consumer in bench
-      // order paid the orders×lineitem×part build on its own clock.
-      // The count() makes every warm path block until the frame is
-      // actually cached — the build lands on whoever calls first
-      // (mine_seq_pairs in full bench order, the warm chain in focused
-      // graph runs), never silently on a later reader.
-      f.count(): Unit
-      f
-    })
+  private[ops] val seqBrandEvents = SessionMemo { (spark, dir) =>
+    val t = Tables(spark, dir)
+    val w = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_orderdate"), col("o_orderkey"))
+    val f = t.orders
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= MaxSeqOrders)
+      .join(t.lineitem.select(col("l_orderkey"), col("l_partkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .join(t.part.select(col("p_partkey"), col("p_brand")),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("o_custkey").as("cust"), col("o_orderkey").as("ok"),
+        col("o_orderdate").as("od"), col("p_brand").as("brand"))
+      .distinct()
+      .persist()
+    // MATERIALIZE before returning (r14, judge ask #3): persist()
+    // alone is lazy, so the graphWarmCaches chain that calls this
+    // returned with the cache EMPTY and the first consumer in bench
+    // order paid the orders×lineitem×part build on its own clock.
+    // The count() makes every warm path block until the frame is
+    // actually cached — the build lands on whoever calls first
+    // (mine_seq_pairs in full bench order, the warm chain in focused
+    // graph runs), never silently on a later reader.
+    f.count(): Unit
+    f
   }
 
   /** Per-(cust, brand) earliest/latest event times in the scalar
@@ -285,16 +274,11 @@ object Mining {
     * the identical three frames (and unpersisted them per call); one
     * build per (session, dir), session-lifetime like
     * [[seqBrandEvents]]. All three are witness-sized or smaller. */
-  private val seqWitnessCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]()
-  private def seqWitnessCached(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = seqWitnessCache.synchronized {
-    seqWitnessCache.getOrElseUpdate((spark, dir), {
-      val w = seqBrandWitness(spark, dir).localCheckpoint(true)
-      val bmap = brandBitMap(w).localCheckpoint(true)
-      val wb = w.join(broadcast(bmap), "brand").localCheckpoint(true)
-      (w, bmap, wb)
-    })
+  private val seqWitnessCached = SessionMemo { (spark, dir) =>
+    val w = seqBrandWitness(spark, dir).localCheckpoint(true)
+    val bmap = brandBitMap(w).localCheckpoint(true)
+    val wb = w.join(broadcast(bmap), "brand").localCheckpoint(true)
+    (w, bmap, wb)
   }
 
   /** Brand → bit-position map over the witness frame's brand catalog

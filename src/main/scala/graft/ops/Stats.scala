@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1043,29 +1043,23 @@ object Stats {
     * so it is built once per (session, dir) like the graph/LPA caches
     * instead of twice per bench pass. Grid-sized payload; the one
     * corpus scan is the only non-trivial cost. */
-  private val contingencyCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-
-  private def contingencyCellsCached(spark: SparkSession,
-      dir: String): DataFrame = contingencyCache.synchronized {
-    contingencyCache.getOrElseUpdate((spark, dir), {
-      val o = Tables(spark, dir).documents
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("o"))
-      val r = o.groupBy(col("lang")).agg(sum(col("o")).as("r"))
-      val c = o.groupBy(col("source")).agg(sum(col("o")).as("c"))
-      val n = r.agg(sum(col("r")).as("n"), count(lit(1)).as("nr"))
-        .crossJoin(c.agg(count(lit(1)).as("nc")))
-      broadcast(r).crossJoin(broadcast(c))
-        .join(o, Seq("lang", "source"), "left")
-        .withColumn("obs", coalesce(col("o"), lit(0L)))
-        .crossJoin(broadcast(n))
-        .withColumn("e", col("r").cast(DoubleType) * col("c") / col("n"))
-        .withColumn("contrib_micro",
-          round((col("obs") - col("e")) * (col("obs") - col("e"))
-            / col("e") * lit(1000000.0)).cast(LongType))
-        .localCheckpoint(true)
-    })
+  private val contingencyCellsCached = SessionMemo { (spark, dir) =>
+    val o = Tables(spark, dir).documents
+      .groupBy(col("lang"), col("source"))
+      .agg(count(lit(1)).as("o"))
+    val r = o.groupBy(col("lang")).agg(sum(col("o")).as("r"))
+    val c = o.groupBy(col("source")).agg(sum(col("o")).as("c"))
+    val n = r.agg(sum(col("r")).as("n"), count(lit(1)).as("nr"))
+      .crossJoin(c.agg(count(lit(1)).as("nc")))
+    broadcast(r).crossJoin(broadcast(c))
+      .join(o, Seq("lang", "source"), "left")
+      .withColumn("obs", coalesce(col("o"), lit(0L)))
+      .crossJoin(broadcast(n))
+      .withColumn("e", col("r").cast(DoubleType) * col("c") / col("n"))
+      .withColumn("contrib_micro",
+        round((col("obs") - col("e")) * (col("obs") - col("e"))
+          / col("e") * lit(1000000.0)).cast(LongType))
+      .localCheckpoint(true)
   }
 
   def statsChi2(spark: SparkSession, dir: String): DataFrame = {

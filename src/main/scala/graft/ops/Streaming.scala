@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -179,17 +179,12 @@ object Streaming {
     * the exactly-once path — instead of leaving a fresh temp copy of
     * the output per call. Dirs are registered with [[graft.TempDirs]]
     * for JVM-exit removal. */
-  private val sinkDirs = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]()
+  private val sinkDirs = SessionMemo { (_, _) =>
+    graft.TempDirs.create(s"graft-sink-${runIds.incrementAndGet()}")
+  }
 
   def streamSinkParquet(spark: SparkSession, dir: String): DataFrame = {
-    // coarse lock, same reason as Sources.materialize: getOrElseUpdate
-    // may run the side-effecting default twice under a concurrent
-    // first call (here: two temp dirs, one leaked)
-    val base = sinkDirs.synchronized {
-      sinkDirs.getOrElseUpdate((spark, dir),
-        graft.TempDirs.create(s"graft-sink-${runIds.incrementAndGet()}"))
-    }
+    val base = sinkDirs(spark, dir)
     runSinkTo(spark, dir, base)
     spark.read.parquet(s"$base/out").orderBy(col("event_id"))
   }
@@ -222,8 +217,7 @@ object Streaming {
   /** Memoized memory-sink table name per (session, dir): repeated calls
     * reuse the completed run's final state instead of registering a new
     * global temp view per call (unbounded catalog growth in one JVM). */
-  private val degreeTables = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]()
+  private val degreeTables = SessionMemo(runStreamDegree)
 
   /** `SPARK_GRAFT_STREAM_SINK=parquet` routes the three memory-sink
     * DEMO keys (`stream_graph_degree`, `stream_stream_join`,
@@ -239,13 +233,7 @@ object Streaming {
 
   def streamGraphDegree(spark: SparkSession, dir: String): DataFrame = {
     if (parquetSinkPreferred) return streamDegreeParquet(spark, dir)
-    // synchronized: a concurrent first call would otherwise start two
-    // streaming runs and leak one memory-sink table (and re-entrantly
-    // mutate shuffle.partitions via withStatePartitions)
-    val name = degreeTables.synchronized {
-      degreeTables.getOrElseUpdate((spark, dir),
-        runStreamDegree(spark, dir))
-    }
+    val name = degreeTables(spark, dir)
     spark.table(name).orderBy(col("user_id"))
   }
 
@@ -270,10 +258,18 @@ object Streaming {
       name
     }
 
-  /** Memoized upsert-log sink dir per (session, dir, tag) — the
-    * production-sink siblings of the memory-sink demos above. */
-  private val upsertDirs = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, String), String]()
+  /** Memoized upsert-log sink dir per (session, dir), one memo per
+    * sink — the production-sink siblings of the memory-sink demos
+    * above: `run` fills a fresh dir once, registered with
+    * [[graft.TempDirs]] for JVM-exit removal. */
+  private def upsertDir(tag: String)(
+      run: (SparkSession, String, String) => Unit) =
+    SessionMemo { (spark, dir) =>
+      val b = graft.TempDirs.create(
+        s"graft-${tag}sink-${runIds.incrementAndGet()}")
+      run(spark, dir, b)
+      b
+    }
 
   /** PRODUCTION state sink: run an update-mode streaming aggregation
     * and land each micro-batch's UPDATED rows in a parquet upsert log
@@ -317,6 +313,13 @@ object Streaming {
       .select(keys.map(col) ++ cols.map(c => col(s"m.$c").as(c)): _*)
   }
 
+  private val degSink = upsertDir("deg") { (spark, dir, b) =>
+    runUpsertLog(spark, b, eventsStream(spark, dir)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("out_degree"),
+        Det.sum2(col("value")).as("sum_value")))
+  }
+
   /** The production-sink variant of [[streamGraphDegree]]: identical
     * incrementally-maintained per-user degree state, but committed to
     * a checkpointed parquet upsert log instead of a complete-mode
@@ -324,20 +327,16 @@ object Streaming {
     * updates flow out; nothing rewrites the full state per batch).
     * Final view equals the batch degree, which the oracle checks. */
   def streamDegreeParquet(spark: SparkSession, dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "deg"), {
-        val b = graft.TempDirs.create(
-          s"graft-degsink-${runIds.incrementAndGet()}")
-        runUpsertLog(spark, b, eventsStream(spark, dir)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("out_degree"),
-            Det.sum2(col("value")).as("sum_value")))
-        b
-      })
-    }
+    val base = degSink(spark, dir)
     latestByBatch(spark, s"$base/out", Seq("user_id"),
       Seq("out_degree", "sum_value"))
       .orderBy(col("user_id"))
+  }
+
+  private val rankSink = upsertDir("rank") { (spark, dir, b) =>
+    runUpsertLog(spark, b, eventsStream(spark, dir)
+      .groupBy(col("user_id"), col("event_type"))
+      .agg(count(lit(1)).as("n")))
   }
 
   /** Incremental graph ANALYTICS under the change feed: the event
@@ -354,16 +353,7 @@ object Streaming {
     * (the standard incremental-view-maintenance split). Final state
     * equals the batch computation, which the oracle replays. */
   def streamRankIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "rank"), {
-        val b = graft.TempDirs.create(
-          s"graft-ranksink-${runIds.incrementAndGet()}")
-        runUpsertLog(spark, b, eventsStream(spark, dir)
-          .groupBy(col("user_id"), col("event_type"))
-          .agg(count(lit(1)).as("n")))
-        b
-      })
-    }
+    val base = rankSink(spark, dir)
     val state = latestByBatch(spark, s"$base/out",
       Seq("user_id", "event_type"), Seq("n"))
     val totals = state.groupBy(col("event_type"))
@@ -378,6 +368,10 @@ object Streaming {
   /** Vertex-id namespace for clock-hour nodes in the co-activity
     * bipartite graph (disjoint from every user id). */
   val HourOff = 900000000000000L
+
+  private val ccSink = upsertDir("cc") { (spark, dir, b) =>
+    runLabelState(spark, b, coActivityEdges(spark, dir))
+  }
 
   /** INCREMENTALLY-maintained connected components under the event
     * stream — the "component labels stay fresh under writes" story
@@ -399,14 +393,7 @@ object Streaming {
     * set, which the oracle replays as a recursive closure. */
   def streamComponentsIncremental(spark: SparkSession,
       dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "cc"), {
-        val b = graft.TempDirs.create(
-          s"graft-ccsink-${runIds.incrementAndGet()}")
-        runLabelState(spark, b, coActivityEdges(spark, dir))
-        b
-      })
-    }
+    val base = ccSink(spark, dir)
     spark.read.parquet(s"$base/labels")
       .filter(col("id") < HourOff)
       .select(col("id").as("user_id"), col("lbl").as("component"))
@@ -479,6 +466,15 @@ object Streaming {
       q.stop()
     }
 
+  private val cdcSink = upsertDir("cdc") { (spark, dir, b) =>
+    import spark.implicits._
+    val events = eventsStream(spark, dir)
+      .select(col("user_id"), col("event_id"),
+        date_trunc("second", col("ts")).as("ts_sec"), col("value"))
+      .as[UserEvent]
+    runUpsertLog(spark, b, cdcLatestStream(events).toDF())
+  }
+
   /** The production-sink variant of [[streamCdcLatest]]: the same
     * incrementally-maintained last-write-wins state (the
     * flatMapGroupsWithState fold of [[cdcLatestStream]], one fixed-size
@@ -491,19 +487,7 @@ object Streaming {
     * key; final state equals the batch argmax, which the oracle
     * checks. */
   def streamCdcParquet(spark: SparkSession, dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "cdc"), {
-        val b = graft.TempDirs.create(
-          s"graft-cdcsink-${runIds.incrementAndGet()}")
-        import spark.implicits._
-        val events = eventsStream(spark, dir)
-          .select(col("user_id"), col("event_id"),
-            date_trunc("second", col("ts")).as("ts_sec"), col("value"))
-          .as[UserEvent]
-        runUpsertLog(spark, b, cdcLatestStream(events).toDF())
-        b
-      })
-    }
+    val base = cdcSink(spark, dir)
     latestByBatch(spark, s"$base/out", Seq("user_id"),
       Seq("last_event_id", "last_ts", "last_value", "n_updates"))
       .orderBy(col("user_id"))
@@ -537,8 +521,22 @@ object Streaming {
 
   /** Memoized memory-sink table per (session, dir), same discipline as
     * [[streamGraphDegree]]. */
-  private val ssJoinTables = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]()
+  private val ssJoinTables = SessionMemo { (spark, dir) =>
+    withStatePartitions(spark, 8) {
+      val tbl = s"graft_stream_ssjoin_${runIds.incrementAndGet()}"
+      val ev = eventsStream(spark, dir)
+        .withColumn("ts_sec", date_trunc("second", col("ts")))
+      val clicks = clickSide(ev).withWatermark("click_ts", "1 hour")
+      val purchases = purchaseSide(ev)
+        .withWatermark("purchase_ts", "2 hours")
+      val q = attributionJoin(clicks, purchases)
+        .writeStream.format("memory").queryName(tbl)
+        .outputMode("append").start()
+      q.processAllAvailable()
+      q.stop()
+      tbl
+    }
+  }
 
   /** Run `body` with the session's shuffle-partition count (= streaming
     * STATE partition count, fixed into the checkpoint at first start)
@@ -589,25 +587,27 @@ object Streaming {
     * single-batch delivery, not on this corpus being ordered. */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     if (parquetSinkPreferred) return streamJoinParquet(spark, dir)
-    val name = ssJoinTables.synchronized {
-      ssJoinTables.getOrElseUpdate((spark, dir),
-      withStatePartitions(spark, 8) {
-        val tbl = s"graft_stream_ssjoin_${runIds.incrementAndGet()}"
-        val ev = eventsStream(spark, dir)
-          .withColumn("ts_sec", date_trunc("second", col("ts")))
-        val clicks = clickSide(ev).withWatermark("click_ts", "1 hour")
-        val purchases = purchaseSide(ev)
-          .withWatermark("purchase_ts", "2 hours")
-        val q = attributionJoin(clicks, purchases)
-          .writeStream.format("memory").queryName(tbl)
-          .outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-        tbl
-      })
-    }
+    val name = ssJoinTables(spark, dir)
     spark.table(name)
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
+  }
+
+  private val joinSink = upsertDir("join") { (spark, dir, b) =>
+    withStatePartitions(spark, 8) {
+      val ev = eventsStream(spark, dir)
+        .withColumn("ts_sec", date_trunc("second", col("ts")))
+      val clicks = clickSide(ev).withWatermark("click_ts", "1 hour")
+      val purchases = purchaseSide(ev)
+        .withWatermark("purchase_ts", "2 hours")
+      val q = attributionJoin(clicks, purchases)
+        .writeStream.format("parquet")
+        .option("path", s"$b/out")
+        .option("checkpointLocation", s"$b/ckpt")
+        .outputMode("append")
+        .start()
+      q.processAllAvailable()
+      q.stop()
+    }
   }
 
   /** The production-sink variant of [[streamStreamJoin]]: the same
@@ -620,28 +620,7 @@ object Streaming {
     * memory-sink demo cannot claim. Emits the same rows as the batch
     * join, which the shared oracle checks. */
   def streamJoinParquet(spark: SparkSession, dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "ssjoin"), {
-        val b = graft.TempDirs.create(
-          s"graft-joinsink-${runIds.incrementAndGet()}")
-        withStatePartitions(spark, 8) {
-          val ev = eventsStream(spark, dir)
-            .withColumn("ts_sec", date_trunc("second", col("ts")))
-          val clicks = clickSide(ev).withWatermark("click_ts", "1 hour")
-          val purchases = purchaseSide(ev)
-            .withWatermark("purchase_ts", "2 hours")
-          val q = attributionJoin(clicks, purchases)
-            .writeStream.format("parquet")
-            .option("path", s"$b/out")
-            .option("checkpointLocation", s"$b/ckpt")
-            .outputMode("append")
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        }
-        b
-      })
-    }
+    val base = joinSink(spark, dir)
     spark.read.parquet(s"$base/out")
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
@@ -760,6 +739,20 @@ object Streaming {
     s
   }
 
+  private val twsSink = upsertDir("tws") { (spark, dir, b) =>
+    // the whole pipeline (source, stateful transform, sink run)
+    // lives on the conf-isolated session so the RocksDB provider
+    // applies to THIS query and leaks to none
+    val iso = rocksDbSession(spark)
+    import iso.implicits._
+    val purchases = eventsStream(iso, dir)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"),
+        date_trunc("second", col("ts")).as("ts_sec"), col("value"))
+      .as[PurchaseEvent]
+    runUpsertLog(iso, b, statefulCentsTws(purchases).toDF())
+  }
+
   /** REGISTERED transformWithState run — the Spark 4.x arbitrary-state
     * API (the documented successor to flatMapGroupsWithState) driven
     * end to end as a production shape, not just a test: file-source
@@ -771,24 +764,7 @@ object Streaming {
     * oracle replays — integers end to end, no float fold order on the
     * hashed surface. */
   def streamTwsRunning(spark: SparkSession, dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "tws"), {
-        val b = graft.TempDirs.create(
-          s"graft-twssink-${runIds.incrementAndGet()}")
-        // the whole pipeline (source, stateful transform, sink run)
-        // lives on the conf-isolated session so the RocksDB provider
-        // applies to THIS query and leaks to none
-        val iso = rocksDbSession(spark)
-        import iso.implicits._
-        val purchases = eventsStream(iso, dir)
-          .filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id"),
-            date_trunc("second", col("ts")).as("ts_sec"), col("value"))
-          .as[PurchaseEvent]
-        runUpsertLog(iso, b, statefulCentsTws(purchases).toDF())
-        b
-      })
-    }
+    val base = twsSink(spark, dir)
     latestByBatch(spark, s"$base/out", Seq("user_id"),
       Seq("n_purchases", "total_cents"))
       .orderBy(col("user_id"))
@@ -804,8 +780,7 @@ object Streaming {
 
   /** Memoized memory-sink table per (session, dir), same discipline as
     * [[streamGraphDegree]]. */
-  private val cdcTables = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]()
+  private val cdcTables = SessionMemo(runCdcLatest)
 
   /** CDC-style materialized view, maintained INCREMENTALLY: a true
     * streaming run folds the event stream into one last-write-wins
@@ -820,14 +795,7 @@ object Streaming {
     * max(n_updates) — monotone per key, so the final emission wins. */
   def streamCdcLatest(spark: SparkSession, dir: String): DataFrame = {
     if (parquetSinkPreferred) return streamCdcParquet(spark, dir)
-    // synchronized like Sources.materialize: getOrElseUpdate alone can
-    // double-run the stream on a concurrent first call — two queries,
-    // a leaked memory-sink table, and a re-entrant shuffle.partitions
-    // mutation inside withStatePartitions
-    val name = cdcTables.synchronized {
-      cdcTables.getOrElseUpdate((spark, dir),
-        runCdcLatest(spark, dir))
-    }
+    val name = cdcTables(spark, dir)
     spark.table(name)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_updates"), col("last_ts"),
@@ -966,6 +934,15 @@ object Streaming {
       }
   }
 
+  private val sessSink = upsertDir("sess") { (spark, dir, b) =>
+    import spark.implicits._
+    val ev = eventsStream(spark, dir)
+      .select(col("user_id"),
+        date_trunc("second", col("ts")).as("ts_sec"), col("value"))
+      .as[SessEvent]
+    runUpsertLog(spark, b, sessionFoldStream(ev).toDF())
+  }
+
   /** Registered surface of [[sessionFoldStream]]: the event file stream
     * folded through the stateful sessionizer, each batch's emissions
     * committed to the checkpointed parquet upsert log (same
@@ -975,19 +952,7 @@ object Streaming {
     * replays via lag/cumsum — the streamed-fold-equals-batch check. */
   def streamStatefulSessions(spark: SparkSession,
       dir: String): DataFrame = {
-    val base = upsertDirs.synchronized {
-      upsertDirs.getOrElseUpdate((spark, dir, "sess"), {
-        val b = graft.TempDirs.create(
-          s"graft-sesssink-${runIds.incrementAndGet()}")
-        import spark.implicits._
-        val ev = eventsStream(spark, dir)
-          .select(col("user_id"),
-            date_trunc("second", col("ts")).as("ts_sec"), col("value"))
-          .as[SessEvent]
-        runUpsertLog(spark, b, sessionFoldStream(ev).toDF())
-        b
-      })
-    }
+    val base = sessSink(spark, dir)
     val log = spark.read.parquet(s"$base/out")
     val mx = log.groupBy(col("user_id")).agg(max(col("upd_seq")).as("mx"))
     log.join(mx, "user_id")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,24 +45,22 @@ object TextOps {
     * dedupNearMinhash and textNgramJaccard both consume the same
     * shingles several times (signature + verify stages, repeated test
     * calls); without memoization each call would leave a fresh
-    * persisted copy in the block manager for the JVM lifetime. */
-  private val shingleCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Token-trigram shingles, distinct per doc: (doc_id, shingle).
+    * persisted copy in the block manager for the JVM lifetime.
+    *
+    * Token-trigram shingles, distinct per doc: (doc_id, shingle).
     * Guarded for docs with < 3 tokens (Spark's `sequence(1,0)` would
     * descend, not return empty). */
-  private def shingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((spark, dir),
-      Tables(spark, dir).documents
-        .select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), explode(array_distinct(expr(
-          """CASE WHEN size(t) >= 3 THEN
-               transform(sequence(1, size(t) - 2),
-                 i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1),
-                                element_at(t, i + 2)))
-             ELSE array() END"""))).as("shingle"))
-        .persist())
+  private val shingles = SessionMemo { (spark, dir) =>
+    Tables(spark, dir).documents
+      .select(col("doc_id"), split(col("text"), " ").as("t"))
+      .select(col("doc_id"), explode(array_distinct(expr(
+        """CASE WHEN size(t) >= 3 THEN
+             transform(sequence(1, size(t) - 2),
+               i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1),
+                              element_at(t, i + 2)))
+           ELSE array() END"""))).as("shingle"))
+      .persist()
+  }
 
   /** Document-frequency cap for the exact n-gram join: shingles
     * appearing in more docs than this are dropped before pairing. A
@@ -174,16 +172,10 @@ object TextOps {
     * persisted behind a session-lifetime memo: the eval consumes sig
     * twice and cand twice in ONE plan (Catalyst does not deduplicate
     * common subplans), so unpersisted frames would re-run the
-    * signature agg and banding join ~4× per action. synchronized:
-    * the Sources.materialize rule. */
-  private val minhashCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def minhashSigCand(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = minhashCache.synchronized {
-    minhashCache.getOrElseUpdate((spark, dir), {
-      val (sig, cand) = buildMinhashSigCand(spark, dir)
-      (sig.persist(), cand.persist())
-    })
+    * signature agg and banding join ~4× per action. */
+  private val minhashSigCand = SessionMemo { (spark, dir) =>
+    val (sig, cand) = buildMinhashSigCand(spark, dir)
+    (sig.persist(), cand.persist())
   }
 
   /** 8×2 band rows (doc_id, band_id, band_hash) off a signature frame
@@ -254,20 +246,15 @@ object TextOps {
   /** Memoized persisted LSH index of the EXISTING corpus: capped band
     * rows written partitioned by band_id, the artifact an incremental
     * dedup service keeps warm between batches. */
-  private val lshIndexCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]()
-  private def lshIndexDir(spark: SparkSession, dir: String): String =
-    lshIndexCache.synchronized {
-      lshIndexCache.getOrElseUpdate((spark, dir), {
-        val (sig, _) = minhashSigCand(spark, dir)
-        val existing = capLshBuckets(bandsOf(
-          sig.filter(col("doc_id") % IncBatchMod =!= IncBatchRem)))
-        val base = graft.TempDirs.create("graft-lsh-index")
-        existing.repartition(col("band_id"))
-          .write.partitionBy("band_id").parquet(s"$base/bands")
-        s"$base/bands"
-      })
-    }
+  private val lshIndexDir = SessionMemo { (spark, dir) =>
+    val (sig, _) = minhashSigCand(spark, dir)
+    val existing = capLshBuckets(bandsOf(
+      sig.filter(col("doc_id") % IncBatchMod =!= IncBatchRem)))
+    val base = graft.TempDirs.create("graft-lsh-index")
+    existing.repartition(col("band_id"))
+      .write.partitionBy("band_id").parquet(s"$base/bands")
+    s"$base/bands"
+  }
 
   /** INCREMENTAL near-dup detection — the between-retrains path of the
     * MinHash family ([[dedupNearMinhash]] is the full-corpus batch
@@ -410,21 +397,16 @@ object TextOps {
     * `corpus_dedup_impact` and `dedup_cluster_sizes` all consume the
     * identical labeling, which previously re-ran the min-label loop
     * per caller (r14). One build per (session, dir). */
-  private val clusterLabelsCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private[ops] def clusterLabelsCached(spark: SparkSession,
-      dir: String): DataFrame = clusterLabelsCache.synchronized {
-    clusterLabelsCache.getOrElseUpdate((spark, dir), {
-      val pairs = textNgramJaccard(spark, dir)
-        .filter(col("jaccard") >= 0.5)
-        .select(col("a_id"), col("b_id"))
-      val verts = Tables(spark, dir).documents
-        .select(col("doc_id").as("id"))
-      val (labels, chk) = GraphOps.minLabelComponentsChk(verts, pairs)
-      val out = labels.localCheckpoint(true)
-      GraphOps.releaseChk(chk)
-      out
-    })
+  private[ops] val clusterLabelsCached = SessionMemo { (spark, dir) =>
+    val pairs = textNgramJaccard(spark, dir)
+      .filter(col("jaccard") >= 0.5)
+      .select(col("a_id"), col("b_id"))
+    val verts = Tables(spark, dir).documents
+      .select(col("doc_id").as("id"))
+    val (labels, chk) = GraphOps.minLabelComponentsChk(verts, pairs)
+    val out = labels.localCheckpoint(true)
+    GraphOps.releaseChk(chk)
+    out
   }
 
   /** NEAR-DUP CLUSTER SIZE CENSUS — the shape of the duplication a
@@ -715,14 +697,10 @@ object TextOps {
     * scan outside the shingle family); one build per (session, dir),
     * the lpaLabelsCached sharing discipline. The frame is doc-sized
     * (one row per document). */
-  private val langIdCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
+  private val langIdCached = SessionMemo(textLangIdScored)
 
   def textLangId(spark: SparkSession, dir: String): DataFrame =
-    langIdCache.synchronized {
-      langIdCache.getOrElseUpdate((spark, dir),
-        textLangIdScored(spark, dir))
-    }.orderBy(col("doc_id"))
+    langIdCached(spark, dir).orderBy(col("doc_id"))
 
   private def textLangIdScored(spark: SparkSession,
       dir: String): DataFrame = {
@@ -778,7 +756,7 @@ object TextOps {
       .localCheckpoint(true)
     // out is materialized — the token-count intermediate's block set
     // can be released (callers order/aggregate the doc-sized memo)
-    tokCnt.unpersist(false)
+    GraphOps.releaseChk(tokCnt)
     out
   }
 
@@ -1534,27 +1512,19 @@ object TextOps {
     * — the trainer's final loop state, which IS the encoder lookup
     * table ("tokenize word w" = the symbol list the K merges leave
     * behind). `corpus_bpe_merges` reads the first, `corpus_bpe_encode`
-    * the second; training runs once per (session, dir). synchronized:
-    * the Sources.materialize rule. */
-  private val bpeCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def bpeTrainedCached(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = bpeCache.synchronized {
-    bpeCache.getOrElseUpdate((spark, dir), trainBpe(spark, dir))
-  }
+    * the second; training runs once per (session, dir). */
+  private val bpeTrainedCached = SessionMemo(trainBpe)
 
-  private def trainBpe(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    var words = Tables(spark, dir).documents
+  private def trainBpe(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = GraphOps.roundScope(small = false) { rs =>
+    var words = rs.chk(Tables(spark, dir).documents
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       .select(col("w"), col("wc"),
         expr("""array_join(transform(sequence(1, length(w)),
-                  i -> substring(w, i, 1)), '|')""").as("syms"))
-      .localCheckpoint(true)
+                  i -> substring(w, i, 1)), '|')""").as("syms")))
     val merges = scala.collection.mutable.Buffer.empty[DataFrame]
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     for (r <- 1 to BpeRounds) {
       val prs = words
         .filter(expr("size(split(syms, '\\\\|')) >= 2"))
@@ -1566,14 +1536,13 @@ object TextOps {
           """).as("p"))
         .groupBy(col("p.x").as("x"), col("p.y").as("y"))
         .agg(sum(col("wc")).as("cnt"))
-      val top = prs
+      val top = rs.chk(prs
         .agg(min(struct((-col("cnt")).as("nc"), col("x"), col("y")))
           .as("m"))
         .select(lit(r).as("round"), col("m.x").as("x"),
-          col("m.y").as("y"), (-col("m.nc")).as("cnt"))
-        .localCheckpoint(true)
+          col("m.y").as("y"), (-col("m.nc")).as("cnt")))
       merges += top
-      val next = words.crossJoin(broadcast(top.select("x", "y")))
+      val next = rs.chk(words.crossJoin(broadcast(top.select("x", "y")))
         .select(col("w"), col("wc"), expr(
           """aggregate(
                slice(split(syms, '\\|'), 2, size(split(syms, '\\|')) - 1),
@@ -1582,9 +1551,8 @@ object TextOps {
                  WHEN (acc = x OR endswith(acc, concat('|', x))) AND s = y
                  THEN concat(substring(acc, 1, length(acc) - length(x)),
                              x, y)
-                 ELSE concat(acc, '|', s) END)""").as("syms"))
-        .localCheckpoint(true)
-      retired += words
+                 ELSE concat(acc, '|', s) END)""").as("syms")))
+      rs.release(words)
       words = next
     }
     val out = merges.reduce(_ unionByName _)
@@ -1593,9 +1561,7 @@ object TextOps {
         concat(col("x"), col("y")).as("merged"),
         col("cnt").as("pair_count"))
       .orderBy(col("round")).localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    merges.foreach(_.unpersist(false))
-    (out, words) // words = final symbolization, kept as the encoder
+    (out, rs.keep(words)) // words = final symbolization, kept as the encoder
   }
 
   /** Vocab size cap for [[corpusBpeVocab]]. */
@@ -2465,7 +2431,7 @@ object TextOps {
         expr("nll_total_micro div n_bigrams").as("nll_avg_micro"))
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    bi.unpersist(false)
+    GraphOps.releaseChk(bi)
     out
   }
 }

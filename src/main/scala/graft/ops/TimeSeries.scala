@@ -685,7 +685,7 @@ object TimeSeries {
           expr("(1000 * cum) div t").as("value_permille"))
     }.reduce(_.unionByName(_))
     val res = out.orderBy(col("top_pct")).localCheckpoint(true)
-    ranked.unpersist(false)
+    GraphOps.releaseChk(ranked)
     res
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.functions.{VectorExpressions, VectorLsh}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -67,23 +67,18 @@ object VectorOps {
     * key plus every `embed_recall_*` eval re-reads this exact top-10
     * as its ground truth — one 10-row checkpoint per (session, dir)
     * instead of ~9 full corpus scans. */
-  private val cosineTopkCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  def embedCosineTopk(spark: SparkSession, dir: String): DataFrame =
-    cosineTopkCache.synchronized {
-      cosineTopkCache.getOrElseUpdate((spark, dir), {
-        VectorExpressions.register(spark)
-        val t = Tables(spark, dir)
-        withNorm(t)
-          .crossJoin(broadcast(probeOf(t)))
-          .select(col("vec_id"), col("label"),
-            round(dot(col("v"), col("probe_vec"))
-              / (col("nrm") * col("probe_nrm")), 4).as("cos_sim"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))
-          .limit(10)
-          .localCheckpoint(true)
-      })
-    }
+  val embedCosineTopk = SessionMemo { (spark, dir) =>
+    VectorExpressions.register(spark)
+    val t = Tables(spark, dir)
+    withNorm(t)
+      .crossJoin(broadcast(probeOf(t)))
+      .select(col("vec_id"), col("label"),
+        round(dot(col("v"), col("probe_vec"))
+          / (col("nrm") * col("probe_nrm")), 4).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(10)
+      .localCheckpoint(true)
+  }
 
   /** Batch k-NN: top-3 exact-cosine neighbors for EACH of 20 probe
     * vectors at once — the batch serving shape (embed a request batch,
@@ -386,7 +381,8 @@ object VectorOps {
     * viable at 100 TB (the codebook never grows with the data; in
     * production you train on a sample, which this corpus effectively
     * is). */
-  def kmeansQuantizer(e: DataFrame, k: Int, iters: Int): DataFrame = {
+  def kmeansQuantizer(e: DataFrame, k: Int, iters: Int)
+      : DataFrame = GraphOps.roundScope(small = false) { rs =>
     // r15: eager-checkpoint the k-row centroid state per iteration,
     // exactly like embedKmeansConvergence — without it iteration i's
     // plan references cents twice (broadcast-assign build + the
@@ -394,12 +390,10 @@ object VectorOps {
     // 2^iters-fold and embed_ann_kmeans ran 13 s at 1.3 effective
     // cores on a 2,000-row table (guide §5: localCheckpoint to cut
     // lineage; the state is 8 rows at ANY corpus size)
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
-    var cents = e.orderBy(col("vec_id")).limit(k)
+    var cents = rs.chk(e.orderBy(col("vec_id")).limit(k)
       .select(row_number().over(Window.orderBy(col("vec_id"))).as("cid"),
         col("v").as("centroid"))
-      .coalesce(1).localCheckpoint(true)
-    retired += cents
+      .coalesce(1))
     for (_ <- 1 to iters) {
       val updated = assignToCentroids(e, cents)
         .select(col("cid"), posexplode(col("v"))).toDF("cid", "pos", "x")
@@ -414,17 +408,15 @@ object VectorOps {
       // this iteration emits no mean rows — carry its previous centroid
       // forward so the codebook never silently shrinks below k (the
       // nprobe-of-k probing contract assumes all k exist)
-      cents = cents.join(updated, Seq("cid"), "left")
+      cents = rs.chk(cents.join(updated, Seq("cid"), "left")
         .select(col("cid"),
           coalesce(col("new_centroid"), col("centroid")).as("centroid"))
-        .coalesce(1).localCheckpoint(true)
-      retired += cents
+        .coalesce(1))
     }
     // the final state stays checkpointed for the caller (most memoize
     // or persist it); only the intermediate rounds' block sets are
     // released
-    retired.dropRight(1).foreach(_.unpersist(false))
-    cents
+    rs.keep(cents)
   }
 
   /** ANN with a LEARNED coarse quantizer: k-means codebook (k=8, 3
@@ -465,21 +457,16 @@ object VectorOps {
 
   /** Memoized trained codebook (k=8, 3 Lloyd iterations over the
     * standard embedding frame), persisted for the process lifetime —
-    * the SAME TrieMap discipline as [[pqCache]]/GraphModel's builders.
+    * a [[graft.SessionMemo]] like [[pqTrain]] and GraphModel's builders.
     * Four keys consume this exact training run (ann-kmeans, the
     * persisted-index writer, delta-assign's base, silhouette); one
     * Lloyd chain per (session, dir) instead of one per key. */
-  private val kmCodebookCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  def kmeansCodebookCached(spark: SparkSession, dir: String): DataFrame =
-    kmCodebookCache.synchronized {
-      kmCodebookCache.getOrElseUpdate((spark, dir), {
-        VectorExpressions.register(spark)
-        val e = Tables(spark, dir).embeddings.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        kmeansQuantizer(e, 8, 3).persist()
-      })
-    }
+  val kmeansCodebookCached = SessionMemo { (spark, dir) =>
+    VectorExpressions.register(spark)
+    val e = Tables(spark, dir).embeddings.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"))
+    kmeansQuantizer(e, 8, 3).persist()
+  }
 
   /** PERSISTED IVF index: the trained k-means codebook and the
     * per-vector bucket assignments written ONCE as parquet tables —
@@ -491,27 +478,22 @@ object VectorOps {
     * registered query key below serves from these files with NO Lloyd
     * iteration in its plan (PlanSpec-asserted). Dirs are registered
     * with [[graft.TempDirs]] for JVM-exit removal. */
-  private val ivfIndexCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]()
-  def ivfIndexDir(spark: SparkSession, dir: String): String =
-    ivfIndexCache.synchronized {
-      ivfIndexCache.getOrElseUpdate((spark, dir), {
-        VectorExpressions.register(spark)
-        val t = Tables(spark, dir)
-        val e = t.embeddings.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        val cents = kmeansCodebookCached(spark, dir)
-        val base = graft.TempDirs.create("graft-ivf-index")
-        cents.coalesce(1).write.parquet(s"$base/codebook")
-        assignToCentroids(e, cents)
-          .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-          .select(col("vec_id"), col("v"), col("nrm"), col("cid"))
-          // one shuffle to co-locate each inverted list in one file
-          .repartition(col("cid"))
-          .write.partitionBy("cid").parquet(s"$base/assignments")
-        base
-      })
-    }
+  val ivfIndexDir = SessionMemo { (spark, dir) =>
+    VectorExpressions.register(spark)
+    val t = Tables(spark, dir)
+    val e = t.embeddings.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"))
+    val cents = kmeansCodebookCached(spark, dir)
+    val base = graft.TempDirs.create("graft-ivf-index")
+    cents.coalesce(1).write.parquet(s"$base/codebook")
+    assignToCentroids(e, cents)
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      .select(col("vec_id"), col("v"), col("nrm"), col("cid"))
+      // one shuffle to co-locate each inverted list in one file
+      .repartition(col("cid"))
+      .write.partitionBy("cid").parquet(s"$base/assignments")
+    base
+  }
 
   /** ANN served from the PERSISTED index — the query path of
     * [[embedAnnKmeans]] with training replaced by two parquet reads:
@@ -606,25 +588,20 @@ object VectorOps {
       .select(col("vec_id"), col("sub"), col("subv"),
         col("m.dist").as("dist"), col("m.cid").as("cid"))
 
-  /** Memoized [[pqTrain]] outputs per (session, dir): the quantize and
-    * ADC-search keys consume the identical codebook, so training runs
-    * once per JVM — the frames stay persisted for the session lifetime
-    * like the edge/shingle caches (subspace rows are M per vector,
-    * codebook M×K rows; both tiny). */
-  private val pqCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-
   /** Shared PQ training: slice every vector into [[PqM]] subspaces and
     * learn the per-subspace [[PqK]]-entry codebook (deterministic seed
     * = the K smallest vec_ids, one synchronous Lloyd round,
     * decimal-exact means, empty-cluster carry-forward). Returns
-    * (subspace rows, codebook), both persisted for the session (see
-    * [[pqCache]]). */
-  private def pqTrain(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = pqCache.getOrElseUpdate((spark, dir),
+    * (subspace rows, codebook), memoized per (session, dir): the
+    * quantize and ADC-search keys consume the identical codebook, so
+    * training runs once per JVM — the frames stay persisted for the
+    * session lifetime like the edge/shingle caches (subspace rows are
+    * M per vector, codebook M×K rows; both tiny). */
+  private val pqTrain = SessionMemo { (spark, dir) =>
     pqTrainOn(Tables(spark, dir).embeddings
       .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))))
+        col("embedding").cast("array<double>").as("v")))
+  }
 
   /** The PQ training core on an arbitrary (vec_id, v) frame — shared
     * by the raw-vector path above and the IVF-residual path
@@ -676,7 +653,7 @@ object VectorOps {
           .as("code"),
         col("recon_err"))
       .orderBy(col("vec_id"))
-    // the cached training frames stay persisted (pqCache) — only the
+    // the cached training frames stay persisted (pqTrain) — only the
     // small result is materialized out
     result.localCheckpoint(true)
   }
@@ -711,10 +688,20 @@ object VectorOps {
     result.localCheckpoint(true)
   }
 
-  /** Memoized residual-PQ training per (session, dir): the residual
-    * subspace rows + codebook stay persisted like [[pqCache]]. */
-  private val ivfPqCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  /** The persisted IVF index's codebook and assignments, with the
+    * residual-PQ training over them, memoized per (session, dir): the
+    * residual subspace rows + codebook stay persisted like
+    * [[pqTrain]]'s. */
+  private val ivfPqIndex = SessionMemo { (spark, dir) =>
+    val base = ivfIndexDir(spark, dir)
+    val cents = spark.read.parquet(s"$base/codebook")
+    val asg = spark.read.parquet(s"$base/assignments")
+      .select(col("vec_id"), col("v"), col("cid"))
+    val (rsubs, rcode) = pqTrainOn(asg.join(cents, Seq("cid"))
+      .select(col("vec_id"),
+        expr("zip_with(v, centroid, (x, c) -> x - c)").as("v")))
+    (cents, asg, rsubs, rcode)
+  }
 
   /** IVF-PQ — the full FAISS-style index: coarse quantizer (the
     * PERSISTED k-means codebook of [[ivfIndexDir]]) routes each vector
@@ -733,10 +720,7 @@ object VectorOps {
     * chain + a residual-prefixed PQ chain. */
   def embedIvfPqSearch(spark: SparkSession, dir: String): DataFrame = {
     VectorExpressions.register(spark)
-    val base = ivfIndexDir(spark, dir)
-    val cents = spark.read.parquet(s"$base/codebook")
-    val asg = spark.read.parquet(s"$base/assignments")
-      .select(col("vec_id"), col("v"), col("cid"))
+    val (cents, asg, rsubs, rcode) = ivfPqIndex(spark, dir)
     val probe = broadcast(probeOf(Tables(spark, dir)))
     val buckets = cents.crossJoin(probe)
       .select(col("cid"),
@@ -744,10 +728,6 @@ object VectorOps {
       .orderBy(col("csim").desc, col("cid"))
       .limit(2)
       .select(col("cid").as("cell"))
-    val (rsubs, rcode) = ivfPqCache.getOrElseUpdate((spark, dir),
-      pqTrainOn(asg.join(cents, Seq("cid"))
-        .select(col("vec_id"),
-          expr("zip_with(v, centroid, (x, c) -> x - c)").as("v"))))
     // per probed cell: the query residual's M×K ADC table (2×8×4 rows)
     val subDim = 64 / PqM
     val qres = cents.join(broadcast(buckets), col("cid") === col("cell"))
@@ -931,36 +911,30 @@ object VectorOps {
   /** Memoized INT8 scalar quantization per (session, dir): the
     * per-dimension absmax array (one 64-double row) and the per-vector
     * code arrays, shared by the quantize census and the int8 retrieval
-    * eval. Persisted like [[pqCache]]; synchronized: the
-    * Sources.materialize rule. */
-  private val int8Cache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def int8Codes(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = int8Cache.synchronized {
-    int8Cache.getOrElseUpdate((spark, dir), {
-      val e = Tables(spark, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("v"))
-      val ex = e.select(col("vec_id"), posexplode(col("v")))
-        .toDF("vec_id", "pos", "x")
-      // per-dimension absmax — a D-row agg (constant size), then ONE
-      // broadcast row holding the scale array in position order
-      val amax = ex.groupBy(col("pos")).agg(max(abs(col("x"))).as("am"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("am"))))
-          .as("ps"))
-        .select(expr("transform(ps, p -> p.am)").as("amax"))
-      // q_d = round-half-up(127 · x / amax_d) via floor(y + 0.5) —
-      // floor is bit-deterministic cross-engine where round() on
-      // doubles is not (shortest-string vs binary rounding)
-      val codes = e.crossJoin(broadcast(amax))
-        .select(col("vec_id"), col("v"), col("amax"),
-          expr("""zip_with(v, amax, (x, a) ->
-                    CASE WHEN a = 0D THEN 0L
-                         ELSE CAST(floor(127D * x / a + 0.5D) AS BIGINT)
-                    END)""").as("q8"))
-        .persist()
-      (codes, amax.persist())
-    })
+    * eval. Persisted like [[pqTrain]]'s frames. */
+  private val int8Codes = SessionMemo { (spark, dir) =>
+    val e = Tables(spark, dir).embeddings
+      .select(col("vec_id"), col("embedding").cast("array<double>")
+        .as("v"))
+    val ex = e.select(col("vec_id"), posexplode(col("v")))
+      .toDF("vec_id", "pos", "x")
+    // per-dimension absmax — a D-row agg (constant size), then ONE
+    // broadcast row holding the scale array in position order
+    val amax = ex.groupBy(col("pos")).agg(max(abs(col("x"))).as("am"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("am"))))
+        .as("ps"))
+      .select(expr("transform(ps, p -> p.am)").as("amax"))
+    // q_d = round-half-up(127 · x / amax_d) via floor(y + 0.5) —
+    // floor is bit-deterministic cross-engine where round() on
+    // doubles is not (shortest-string vs binary rounding)
+    val codes = e.crossJoin(broadcast(amax))
+      .select(col("vec_id"), col("v"), col("amax"),
+        expr("""zip_with(v, amax, (x, a) ->
+                  CASE WHEN a = 0D THEN 0L
+                       ELSE CAST(floor(127D * x / a + 0.5D) AS BIGINT)
+                  END)""").as("q8"))
+      .persist()
+    (codes, amax.persist())
   }
 
   /** INT8 scalar quantization of the embedding store — the simplest
@@ -1081,8 +1055,8 @@ object VectorOps {
     * quantizer itself. Mean cosine uses the [[embedSilhouette]] float
     * discipline (per-vector 6dp round → DECIMAL(27,10) sum → one
     * double division, +1e-9, 6dp). */
-  def embedKmeansConvergence(spark: SparkSession,
-      dir: String): DataFrame = {
+  def embedKmeansConvergence(spark: SparkSession, dir: String)
+      : DataFrame = GraphOps.roundScope(small = false) { rs =>
     VectorExpressions.register(spark)
     val e = Tables(spark, dir).embeddings.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
@@ -1090,7 +1064,6 @@ object VectorOps {
       .select(row_number().over(Window.orderBy(col("vec_id")))
         .as("cid"), col("v").as("centroid"))
     var prev: Option[DataFrame] = None
-    val retired = scala.collection.mutable.Buffer.empty[DataFrame]
     val rounds = (1 to 3).map { i =>
       // NOT checkpointed (r15): every consumer — the stats row, the
       // moved-count join, the centroid update — lands in either the
@@ -1141,19 +1114,16 @@ object VectorOps {
       // each) inside its broadcast build, and the whole trace ran
       // near-single-core on recomputation: 21.3 s driver wall at 0.9
       // effective cores in the r15 bench.
-      cents = cents.join(updated, Seq("cid"), "left")
+      cents = rs.chk(cents.join(updated, Seq("cid"), "left")
         .select(col("cid"),
           coalesce(col("new_centroid"), col("centroid"))
             .as("centroid"))
-        .coalesce(1).localCheckpoint(true)
-      retired += cents
+        .coalesce(1))
       prev = Some(asg)
       row
     }
-    val out = rounds.reduce(_ unionByName _).orderBy(col("round"))
+    rounds.reduce(_ unionByName _).orderBy(col("round"))
       .localCheckpoint(true)
-    retired.foreach(_.unpersist(false))
-    out
   }
 
   /** Round budget for [[embedPcaPower]] — bounded so the oracle can
@@ -1182,22 +1152,20 @@ object VectorOps {
     * constant-size (D or N-row) outputs, state never exceeds one
     * vector — the classic scalable one-pass-per-round PCA. Output =
     * the 64 loadings in micro-units of the max-abs-1e6 scale. */
-  def embedPcaPower(spark: SparkSession, dir: String): DataFrame = {
+  def embedPcaPower(spark: SparkSession, dir: String)
+      : DataFrame = GraphOps.roundScope(small = false) { rs =>
     val dec = DecimalType(38, 0)
     val floorDiv =
       """CAST(CASE WHEN den = 0 THEN NULL
          ELSE (num - ((num % den + den) % den)) div den END AS BIGINT)"""
-    val cells = Tables(spark, dir).embeddings
+    val cells = rs.chk(Tables(spark, dir).embeddings
       .select(col("vec_id"),
         posexplode(col("embedding").cast("array<double>")))
       .toDF("vec_id", "pos", "x")
       .select(col("vec_id"), col("pos"),
-        floor(col("x") * lit(1000000.0)).as("em"))
-      .localCheckpoint(true) // probed twice per round
-    var v = spark.range(64)
-      .select(col("id").cast("int").as("pos"), lit(1000000L).as("vm"))
-      .localCheckpoint(true)
-    var owned = v
+        floor(col("x") * lit(1000000.0)).as("em"))) // probed twice per round
+    var v = rs.chk(spark.range(64)
+      .select(col("id").cast("int").as("pos"), lit(1000000L).as("vm")))
     for (_ <- 1 to PcaRounds) {
       val s = cells.join(broadcast(v), "pos")
         .groupBy(col("vec_id"))
@@ -1206,21 +1174,16 @@ object VectorOps {
         .groupBy(col("pos"))
         .agg(sum(col("em").cast(dec) * col("s").cast(dec)).as("u"))
       val mx = u.agg(max(abs(col("u"))).as("mx"))
-      val next = u.crossJoin(mx) // 1-row frame
+      val next = rs.chk(u.crossJoin(mx) // 1-row frame
         .select(col("pos"),
           (col("u") * lit(1000000L).cast(dec)).as("num"),
           col("mx").as("den"))
-        .select(col("pos"), expr(floorDiv).as("vm"))
-        .localCheckpoint(true)
-      owned.unpersist(false)
-      owned = next
+        .select(col("pos"), expr(floorDiv).as("vm")))
+      rs.release(v)
       v = next
     }
-    val out = v.select(col("pos"), col("vm").as("loading_micro"))
+    v.select(col("pos"), col("vm").as("loading_micro"))
       .orderBy(col("pos")).localCheckpoint(true)
-    owned.unpersist(false)
-    cells.unpersist(false)
-    out
   }
 
   /** Pick budget for [[embedMmrRerank]]. λ is fixed at 7/10. */
@@ -1244,22 +1207,21 @@ object VectorOps {
     * arithmetic and the division floors through the remainder
     * identity (scores go negative), so every pick replays exactly in
     * DuckDB. */
-  def embedMmrRerank(spark: SparkSession, dir: String): DataFrame = {
+  def embedMmrRerank(spark: SparkSession, dir: String)
+      : DataFrame = GraphOps.roundScope(small = false) { rs =>
     VectorExpressions.register(spark)
     val t = Tables(spark, dir)
     val e = withNorm(t)
-    val pool = e.crossJoin(broadcast(probeOf(t)))
+    val pool = rs.chk(e.crossJoin(broadcast(probeOf(t)))
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("v"), col("nrm"),
         round(dot(col("v"), col("probe_vec"))
           / (col("nrm") * col("probe_nrm")) * 1000000)
           .cast("long").as("sq"))
-      .orderBy(col("sq").desc, col("vec_id")).limit(20)
-      .localCheckpoint(true)
-    var sel = pool.limit(0)
+      .orderBy(col("sq").desc, col("vec_id")).limit(20))
+    var sel = rs.chk(pool.limit(0)
       .select(col("vec_id"), col("v"), col("nrm"), col("sq"),
-        lit(0).as("rank"), lit(0L).as("score_micro"))
-      .localCheckpoint(true)
+        lit(0).as("rank"), lit(0L).as("score_micro")))
     for (k <- 1 to MmrPicks) {
       val selV = sel.select(col("vec_id").as("sid"), col("v").as("sv"),
         col("nrm").as("snrm"))
@@ -1281,17 +1243,14 @@ object VectorOps {
         .select((-col("m.ni")).as("vec_id"), col("m.v").as("v"),
           col("m.nrm").as("nrm"), col("m.sq").as("sq"),
           lit(k).as("rank"), col("m.score_micro").as("score_micro"))
-      val next = sel.unionByName(pick).localCheckpoint(true)
-      sel.unpersist(false)
+      val next = rs.chk(sel.unionByName(pick))
+      rs.release(sel)
       sel = next
     }
-    val out = sel
+    sel
       .select(col("rank"), col("vec_id"), col("sq").as("sim_q_micro"),
         col("score_micro"))
       .orderBy(col("rank")).localCheckpoint(true)
-    sel.unpersist(false)
-    pool.unpersist(false)
-    out
   }
 
   /** Per-label distribution along the [[embedPcaPower]] direction —
@@ -1327,7 +1286,7 @@ object VectorOps {
           .as("proj_mean"))
       .orderBy(col("label"))
       .localCheckpoint(true) // materialize BEFORE releasing v
-    v.unpersist(false)
+    GraphOps.releaseChk(v)
     out
   }
 
@@ -1555,37 +1514,32 @@ object VectorOps {
     * chain). Build = one within-shard self-join, O(N·shard_size):
     * bounded because the shard count SCALES with the corpus (each
     * shard is one index server's partition at serving time), so
-    * shard_size is a constant, not N/const. Synchronized +
-    * localCheckpoint: the [[int8Codes]] retention contract. */
-  private val nswCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def nswIndexCached(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = nswCache.synchronized {
-    nswCache.getOrElseUpdate((spark, dir), {
-      VectorExpressions.register(spark)
-      val verts = withNorm(Tables(spark, dir))
-        .select(col("vec_id"),
-          pmod(TextOps.md5Hash60(concat_ws(":", lit("graft-nsw"),
-            col("vec_id").cast("string"))), lit(NswShards)).as("shard"),
-          col("v"), col("nrm"))
-        .localCheckpoint(true)
-      val a = verts.select(col("shard"), col("vec_id").as("src"),
-        col("v").as("av"), col("nrm").as("an"))
-      val b = verts.select(col("shard"), col("vec_id").as("dst"),
-        col("v").as("bv"), col("nrm").as("bn"))
-      val w = Window.partitionBy(col("shard"), col("src"))
-        .orderBy(col("sim").desc, col("dst"))
-      val edges = a.join(b, Seq("shard"))
-        .filter(col("src") =!= col("dst"))
-        .select(col("shard"), col("src"), col("dst"),
-          round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 4)
-            .as("sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= NswDegree)
-        .select(col("shard"), col("src"), col("dst"))
-        .localCheckpoint(true)
-      (verts, edges)
-    })
+    * shard_size is a constant, not N/const. Session-lifetime
+    * checkpoints, like the [[int8Codes]] frames. */
+  private val nswIndexCached = SessionMemo { (spark, dir) =>
+    VectorExpressions.register(spark)
+    val verts = withNorm(Tables(spark, dir))
+      .select(col("vec_id"),
+        pmod(TextOps.md5Hash60(concat_ws(":", lit("graft-nsw"),
+          col("vec_id").cast("string"))), lit(NswShards)).as("shard"),
+        col("v"), col("nrm"))
+      .localCheckpoint(true)
+    val a = verts.select(col("shard"), col("vec_id").as("src"),
+      col("v").as("av"), col("nrm").as("an"))
+    val b = verts.select(col("shard"), col("vec_id").as("dst"),
+      col("v").as("bv"), col("nrm").as("bn"))
+    val w = Window.partitionBy(col("shard"), col("src"))
+      .orderBy(col("sim").desc, col("dst"))
+    val edges = a.join(b, Seq("shard"))
+      .filter(col("src") =!= col("dst"))
+      .select(col("shard"), col("src"), col("dst"),
+        round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 4)
+          .as("sim"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= NswDegree)
+      .select(col("shard"), col("src"), col("dst"))
+      .localCheckpoint(true)
+    (verts, edges)
   }
 
   /** PARTITIONED NSW ANN — the Spark-native approximation of the
@@ -1689,31 +1643,26 @@ object VectorOps {
     * built among layer-1 members only, so the self-join is (S/4)² per
     * shard, bounded by the same shard-count-scales argument as
     * [[nswIndexCached]]). */
-  private val hnswL1Cache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def hnswL1EdgesCached(spark: SparkSession,
-      dir: String): DataFrame = hnswL1Cache.synchronized {
-    hnswL1Cache.getOrElseUpdate((spark, dir), {
-      val (verts, _) = nswIndexCached(spark, dir)
-      val l1 = verts.filter(
-        TextOps.md5Hash60(concat_ws(":", lit("graft-hnsw"),
-          col("vec_id").cast("string"))) % HnswL1Mod === 0)
-      val a = l1.select(col("shard"), col("vec_id").as("src"),
-        col("v").as("av"), col("nrm").as("an"))
-      val b = l1.select(col("shard"), col("vec_id").as("dst"),
-        col("v").as("bv"), col("nrm").as("bn"))
-      val w = Window.partitionBy(col("shard"), col("src"))
-        .orderBy(col("sim").desc, col("dst"))
-      a.join(b, Seq("shard"))
-        .filter(col("src") =!= col("dst"))
-        .select(col("shard"), col("src"), col("dst"),
-          round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 4)
-            .as("sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= NswDegree)
-        .select(col("shard"), col("src"), col("dst"))
-        .localCheckpoint(true)
-    })
+  private val hnswL1EdgesCached = SessionMemo { (spark, dir) =>
+    val (verts, _) = nswIndexCached(spark, dir)
+    val l1 = verts.filter(
+      TextOps.md5Hash60(concat_ws(":", lit("graft-hnsw"),
+        col("vec_id").cast("string"))) % HnswL1Mod === 0)
+    val a = l1.select(col("shard"), col("vec_id").as("src"),
+      col("v").as("av"), col("nrm").as("an"))
+    val b = l1.select(col("shard"), col("vec_id").as("dst"),
+      col("v").as("bv"), col("nrm").as("bn"))
+    val w = Window.partitionBy(col("shard"), col("src"))
+      .orderBy(col("sim").desc, col("dst"))
+    a.join(b, Seq("shard"))
+      .filter(col("src") =!= col("dst"))
+      .select(col("shard"), col("src"), col("dst"),
+        round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 4)
+          .as("sim"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= NswDegree)
+      .select(col("shard"), col("src"), col("dst"))
+      .localCheckpoint(true)
   }
 
   /** HIERARCHICAL NSW — the [[embedAnnNsw]] docstring's own "HNSW
@@ -1783,50 +1732,44 @@ object VectorOps {
     * degree-bound prune every NSW insert runs, deterministic and
     * engine-replayable. Post-insert graph = spliced (base srcs) ∪ fwd
     * (delta srcs), searched by the unchanged [[nswBeamSearch]]. */
-  private val nswDeltaCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
-  private def nswDeltaIndexCached(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    nswDeltaCache.synchronized {
-      nswDeltaCache.getOrElseUpdate((spark, dir), {
-        VectorExpressions.register(spark)
-        val verts = withNorm(Tables(spark, dir))
-          .select(col("vec_id"),
-            pmod(TextOps.md5Hash60(concat_ws(":", lit("graft-nsw"),
-              col("vec_id").cast("string"))), lit(NswShards)).as("shard"),
-            col("v"), col("nrm"))
-          .localCheckpoint(true)
-        val base = verts.filter(col("vec_id") % 5 =!= NswDeltaMod)
-        val delta = verts.filter(col("vec_id") % 5 === NswDeltaMod)
-        val b = base.select(col("shard"), col("vec_id").as("dst"),
-          col("v").as("bv"), col("nrm").as("bn"))
-        val w = Window.partitionBy(col("shard"), col("src"))
-          .orderBy(col("sim").desc, col("dst"))
-        def knnToBase(src: DataFrame): DataFrame =
-          src.select(col("shard"), col("vec_id").as("src"),
-              col("v").as("av"), col("nrm").as("an"))
-            .join(b, Seq("shard"))
-            .filter(col("src") =!= col("dst"))
-            .select(col("shard"), col("src"), col("dst"),
-              round(dot(col("av"), col("bv")) / (col("an") * col("bn")),
-                4).as("sim"))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= NswDegree)
-            .select(col("shard"), col("src"), col("dst"), col("sim"))
-        val g0 = knnToBase(base).localCheckpoint(true)
-        val fwd = knnToBase(delta).localCheckpoint(true)
-        // backlink: u's candidate list = old adjacency ∪ arrivals that
-        // picked u; re-trim to the degree bound
-        val backc = fwd.select(col("shard"), col("dst").as("src"),
-          col("src").as("dst"), col("sim"))
-        val spliced = g0.unionByName(backc)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= NswDegree)
-          .select(col("shard"), col("src"), col("dst"), col("sim"))
-          .localCheckpoint(true)
-        (verts, g0, fwd, spliced)
-      })
-    }
+  private val nswDeltaIndexCached = SessionMemo { (spark, dir) =>
+    VectorExpressions.register(spark)
+    val verts = withNorm(Tables(spark, dir))
+      .select(col("vec_id"),
+        pmod(TextOps.md5Hash60(concat_ws(":", lit("graft-nsw"),
+          col("vec_id").cast("string"))), lit(NswShards)).as("shard"),
+        col("v"), col("nrm"))
+      .localCheckpoint(true)
+    val base = verts.filter(col("vec_id") % 5 =!= NswDeltaMod)
+    val delta = verts.filter(col("vec_id") % 5 === NswDeltaMod)
+    val b = base.select(col("shard"), col("vec_id").as("dst"),
+      col("v").as("bv"), col("nrm").as("bn"))
+    val w = Window.partitionBy(col("shard"), col("src"))
+      .orderBy(col("sim").desc, col("dst"))
+    def knnToBase(src: DataFrame): DataFrame =
+      src.select(col("shard"), col("vec_id").as("src"),
+          col("v").as("av"), col("nrm").as("an"))
+        .join(b, Seq("shard"))
+        .filter(col("src") =!= col("dst"))
+        .select(col("shard"), col("src"), col("dst"),
+          round(dot(col("av"), col("bv")) / (col("an") * col("bn")),
+            4).as("sim"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= NswDegree)
+        .select(col("shard"), col("src"), col("dst"), col("sim"))
+    val g0 = knnToBase(base).localCheckpoint(true)
+    val fwd = knnToBase(delta).localCheckpoint(true)
+    // backlink: u's candidate list = old adjacency ∪ arrivals that
+    // picked u; re-trim to the degree bound
+    val backc = fwd.select(col("shard"), col("dst").as("src"),
+      col("src").as("dst"), col("sim"))
+    val spliced = g0.unionByName(backc)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= NswDegree)
+      .select(col("shard"), col("src"), col("dst"), col("sim"))
+      .localCheckpoint(true)
+    (verts, g0, fwd, spliced)
+  }
 
   /** Memoized HNSW DELTA layer-1 frames: (l1fwd, l1spliced) — the
     * upper-layer half of the hierarchical insert. Level draw for
@@ -1837,43 +1780,38 @@ object VectorOps {
     * [[nswDeltaIndexCached]] backlink re-trim verbatim. Layer-0
     * forward/splice frames are SHARED with the NSW delta — the
     * hierarchical insert only ADDS the sparse upper-layer work. */
-  private val hnswDeltaCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def hnswDeltaL1Cached(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = hnswDeltaCache.synchronized {
-    hnswDeltaCache.getOrElseUpdate((spark, dir), {
-      val (verts, _, _, _) = nswDeltaIndexCached(spark, dir)
-      val l1 = verts.filter(
-        TextOps.md5Hash60(concat_ws(":", lit("graft-hnsw"),
-          col("vec_id").cast("string"))) % HnswL1Mod === 0)
-      val base1 = l1.filter(col("vec_id") % 5 =!= NswDeltaMod)
-      val delta1 = l1.filter(col("vec_id") % 5 === NswDeltaMod)
-      val b = base1.select(col("shard"), col("vec_id").as("dst"),
-        col("v").as("bv"), col("nrm").as("bn"))
-      val w = Window.partitionBy(col("shard"), col("src"))
-        .orderBy(col("sim").desc, col("dst"))
-      def knn(src: DataFrame): DataFrame =
-        src.select(col("shard"), col("vec_id").as("src"),
-            col("v").as("av"), col("nrm").as("an"))
-          .join(b, Seq("shard"))
-          .filter(col("src") =!= col("dst"))
-          .select(col("shard"), col("src"), col("dst"),
-            round(dot(col("av"), col("bv")) / (col("an") * col("bn")),
-              4).as("sim"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= NswDegree)
-          .select(col("shard"), col("src"), col("dst"), col("sim"))
-      val g1 = knn(base1)
-      val fwd1 = knn(delta1).localCheckpoint(true)
-      val spliced1 = g1
-        .unionByName(fwd1.select(col("shard"), col("dst").as("src"),
-          col("src").as("dst"), col("sim")))
+  private val hnswDeltaL1Cached = SessionMemo { (spark, dir) =>
+    val (verts, _, _, _) = nswDeltaIndexCached(spark, dir)
+    val l1 = verts.filter(
+      TextOps.md5Hash60(concat_ws(":", lit("graft-hnsw"),
+        col("vec_id").cast("string"))) % HnswL1Mod === 0)
+    val base1 = l1.filter(col("vec_id") % 5 =!= NswDeltaMod)
+    val delta1 = l1.filter(col("vec_id") % 5 === NswDeltaMod)
+    val b = base1.select(col("shard"), col("vec_id").as("dst"),
+      col("v").as("bv"), col("nrm").as("bn"))
+    val w = Window.partitionBy(col("shard"), col("src"))
+      .orderBy(col("sim").desc, col("dst"))
+    def knn(src: DataFrame): DataFrame =
+      src.select(col("shard"), col("vec_id").as("src"),
+          col("v").as("av"), col("nrm").as("an"))
+        .join(b, Seq("shard"))
+        .filter(col("src") =!= col("dst"))
+        .select(col("shard"), col("src"), col("dst"),
+          round(dot(col("av"), col("bv")) / (col("an") * col("bn")),
+            4).as("sim"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= NswDegree)
         .select(col("shard"), col("src"), col("dst"), col("sim"))
-        .localCheckpoint(true)
-      (fwd1, spliced1)
-    })
+    val g1 = knn(base1)
+    val fwd1 = knn(delta1).localCheckpoint(true)
+    val spliced1 = g1
+      .unionByName(fwd1.select(col("shard"), col("dst").as("src"),
+        col("src").as("dst"), col("sim")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= NswDegree)
+      .select(col("shard"), col("src"), col("dst"), col("sim"))
+      .localCheckpoint(true)
+    (fwd1, spliced1)
   }
 
   /** HNSW INCREMENTAL INSERT census — [[embedIndexNswDelta]]'s

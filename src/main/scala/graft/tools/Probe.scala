@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
@@ -64,6 +65,7 @@ object Probe {
             println(s"[probe] $tag FAILED: ${e.getMessage}"); -1L }
           val w = (System.nanoTime() - t0) / 1e9
           spark.sparkContext.clearJobGroup()
+          ListenerDrain(spark.sparkContext)
           val a = probe.getOrDefault(tag, new Array[Long](4))
           println(f"[probe] $tag%-40s wall=$w%8.2f s  jobs=${a(0)}%5d" +
             f"  tasks=${a(1)}%6d  task_s=${a(2) / 1000.0}%8.1f" +

@@ -1334,6 +1334,34 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("concurrent first calls to the vertex-count memo build it once") {
+    // one first call on its own key: the build's job train (table
+    // reads, the count and its adaptive stages)
+    val (oneCall, _) = jobsAndLeaks("memo-single") {
+      GraphModel.dedupVertCountCached(spark, freshSfDir()): Unit
+    }
+    val dir = freshSfDir()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val (jobs, _) = jobsAndLeaks("memo-once") {
+      // threads started here inherit the job group
+      val threads = (1 to 8).map { _ =>
+        val t = new Thread(() => {
+          start.await()
+          counts.add(GraphModel.dedupVertCountCached(spark, dir)): Unit
+        })
+        t.start()
+        t
+      }
+      start.countDown()
+      threads.foreach(_.join())
+    }
+    assert(counts.size == 8, "a caller failed")
+    assert(counts.stream().distinct().count() == 1L)
+    assert(jobs == oneCall,
+      s"8 concurrent first calls ran $jobs jobs, one call $oneCall")
+  }
+
   test("scc census: every sampled basket's parts land in ONE scc, " +
       "and sizes cover at least the largest basket") {
     val t = Tables(spark, sfDir)

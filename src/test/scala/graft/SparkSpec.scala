@@ -34,6 +34,19 @@ trait SparkSpec extends AnyFunSuite {
     }
     (jobs.get, sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id)).toSeq)
   }
+
+  /** A dir key no other test uses, for the same corpus: a symlink to
+    * [[sfDir]] in a fresh temp dir, so session memos build on first use
+    * in the calling test. Both are deleted at JVM exit (the link, not
+    * its target). */
+  def freshSfDir(): String = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sf")
+    tmp.toFile.deleteOnExit()
+    val link = java.nio.file.Files.createSymbolicLink(tmp.resolve("sf"),
+      java.nio.file.Paths.get(sfDir))
+    link.toFile.deleteOnExit()
+    link.toString
+  }
 }
 
 object SparkSpec {
