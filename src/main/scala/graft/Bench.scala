@@ -1,7 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -9,73 +6,27 @@ object Bench {
     // default matches the grading environment (local[32], shuffle=32);
     // round-2 measurement: 4 threads is ~20% slower on the GraphX block
     // under host load, 16 vs 32 indistinguishable within run noise
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // dev-only focus filter: comma-separated query keys (unset → all)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS), unreadable by Spark 4
-      // without this (Tables.events also sets it defensively)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Per-key attribution probe (r14): every bench run records, per
-    // key, the scheduler-level truth the wall clock hides — job count,
-    // task count, summed executor task time, GC time, shuffle bytes —
-    // keyed by job group (set per key in the loop below) and dumped to
-    // bench_probe.json. A wall-time outlier is then adjudicable from
-    // the SAME run it appeared in: compute regressions move task
-    // seconds with the wall reading; window/scheduling artifacts leave
-    // task seconds flat while wall climbs. Jobs submitted off-thread
-    // (the graph_warm_caches concurrent chains) inherit the group via
-    // SparkContext's InheritableThreadLocal properties where the pool
-    // thread was spawned under it; anything else lands under "_".
-    val probe =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    val stageGroup =
-      new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-    def acc(g: String): Array[Long] =
-      probe.computeIfAbsent(g, _ => new Array[Long](6))
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("_")
-        js.stageIds.foreach(sid => stageGroup.put(sid, g))
-        val a = acc(g); a.synchronized { a(0) += 1 }
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val g = stageGroup.get(Int.box(te.stageId))
-        val m = te.taskMetrics
-        if (g != null && m != null) {
-          val a = acc(g)
-          a.synchronized {
-            a(1) += 1
-            a(2) += m.executorRunTime
-            a(3) += m.jvmGCTime
-            a(4) += m.shuffleReadMetrics.totalBytesRead
-            a(5) += m.shuffleWriteMetrics.bytesWritten
-          }
-        }
-      }
-    })
+    val spark = LocalSession(cpus)
+    // Per-key attribution (r14): every bench run records, per key, the
+    // scheduler-level truth the wall clock hides (see KeyMeter) and
+    // dumps it to bench_probe.json. A wall-time outlier is then
+    // adjudicable from the SAME run it appeared in.
+    val meter = new KeyMeter(spark)
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // a THROWING key still contributes its elapsed wall time to `total`
+    // and is named on stderr; check CORRECTNESS before reading bench
+    // deltas
     val results = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      spark.sparkContext.setJobGroup(name, name)
-      // NOTE: a THROWING key still contributes its elapsed wall time
-      // to `total` (the -1L is only the count() replacement value, not
-      // a time marker) — if a key ever starts failing, its row stays
-      // honest but `total` includes the time spent failing; check
-      // CORRECTNESS before reading bench deltas
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      spark.sparkContext.clearJobGroup()
-      name -> (System.nanoTime() - t0) / 1e9
+      val (wall, r) = meter.run(name)(fn(spark, sfDir).count())
+      r.swap.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
+      name -> wall
     }
+    val probe = meter.all
     // Locale.ROOT: a comma-decimal default locale (de_DE …) would make
     // "%.3f" emit "1,234" — invalid JSON
     def fmt(v: Double): String =
@@ -104,13 +55,13 @@ object Bench {
     // shuffle_read_b, shuffle_write_b]; focused runs get their own file
     // so adjudication probes never clobber the full-run record
     locally {
-      import scala.jdk.CollectionConverters._
-      val rows = probe.asScala.toSeq.sortBy(_._1).map { case (g, a) =>
-        s"\"" + g + "\":[" + a.mkString(",") + "]"
+      val rows = probe.map { case (g, c) =>
+        s"\"" + g + "\":[" + c.values.mkString(",") + "]"
       }.mkString("{", ",", "}")
+      val units = KeyMeter.Counts.Units.map("\"" + _ + "\"").mkString(",")
       writeFile(if (only.isEmpty) "bench_probe.json"
         else "bench_probe_focused.json",
-        s"""{"unit":["jobs","tasks","task_ms","gc_ms","shuffle_read_b","shuffle_write_b"],"keys":$rows}""")
+        s"""{"unit":[$units],"keys":$rows}""")
     }
     // The driver captures only the LAST ~2000 chars of output, so the
     // full ~9 KB per-key line above can never sit wholly inside its
@@ -144,7 +95,7 @@ object Bench {
       // head, never the headline lines below. Full task-ms detail is
       // in bench_probe.json.
       val ecs = sorted.map { case (k, w) =>
-        val ts = probe.getOrDefault(k, new Array[Long](6))(2) / 1000.0
+        val ts = probe.getOrElse(k, KeyMeter.Counts.Zero).taskMs / 1000.0
         val r = if (w > 0.05) math.min(35L, math.round(ts / w)) else 0L
         java.lang.Character.forDigit(math.max(0L, r).toInt, 36)
       }.mkString

@@ -35,12 +35,12 @@ final case class Tables(spark: SparkSession, dir: String) {
     *    TIMESTAMP_NTZ; cast to the session-zone type (sessions here
     *    run UTC, so wall-clock values are unchanged).
     *
-    * The nanosAsLong conf belongs in every SparkSession BUILDER
-    * (Bench / Verify / Smoke / Plans / SparkSpec all set it); the
-    * runtime set below is a last-resort fallback for sessions built
-    * elsewhere, and is call-order-sensitive — any scan of a NANOS
-    * `events` planned before the first `Tables.events` call in such a
-    * session would still fail. */
+    * [[LocalSession]], which builds every session in this repo, sets
+    * the nanosAsLong conf; the runtime set below is the fallback for
+    * sessions built elsewhere (a caller's own harness), and is
+    * call-order-sensitive — any scan of a NANOS `events` planned before
+    * the first `Tables.events` call in such a session would still
+    * fail. */
   def events: DataFrame = {
     if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
         .forall(_ != "true"))
@@ -63,9 +63,9 @@ object Tables {
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
         // the plain cast preserves wall-clock ONLY under a UTC session
-        // zone; every builder in this repo sets it, but a session built
-        // elsewhere would silently shift every event — force it here,
-        // at the cast, like the nanosAsLong fallback in Tables.events
+        // zone; LocalSession sets it, but a session built elsewhere
+        // would silently shift every event — force it here, at the
+        // cast, like the nanosAsLong fallback in Tables.events
         if (raw.sparkSession.conf.get("spark.sql.session.timeZone") != "UTC")
           raw.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
         raw.withColumn("ts",

@@ -117,7 +117,7 @@ object VectorExpressions {
     * registry so operators can use it via `expr("graft_dot(a, b)")`.
     * Registration is per-session state — the same injection a
     * SparkSessionExtensions would do, without requiring control of the
-    * session builder (Verify/Bench construct their own sessions). */
+    * session builder (a caller may pass a session built elsewhere). */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     val ident = FunctionIdentifier("graft_dot")

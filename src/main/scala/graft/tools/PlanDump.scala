@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for the named queries to
   * `<outDir>/<key>_<suffix>.txt` — the per-round optimization evidence
@@ -15,14 +14,7 @@ object PlanDump {
       "usage: PlanDump <sfDir> <outDir> <suffix> <key>[,key...]")
     val Array(sfDir, outDir, suffix, keyCsv) = args
     val keys = keyCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(4)
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { name =>
       graft.SparkEntry.queries.get(name) match {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for representative queries → PLANS.md.
   * Dev tool: regenerate after plan-affecting changes so the recorded
@@ -56,14 +55,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(4)
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by `graft.tools.Plans`, sf0.001)\n\n")
     sb.append("Representative `explain(\"formatted\")` output — regenerate " +

@@ -1,22 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev replica of the driver's t1 smoke: calls `SparkEntry.entry` and
   * prints the row count (driver checks rows > 0 on sf0.001). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS), unreadable by Spark 4
-      // without this (every entry point sets it; Tables.events only
-      // falls back to a runtime set)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(4)
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

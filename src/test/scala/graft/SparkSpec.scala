@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.RDDInfo
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,28 +9,16 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Jobs run inside `f` (counted by job group, the listener bus
-    * drained before the count is read), and the RDDs `f` left cached
-    * after its own unpersist calls. */
+  /** Jobs run inside `f` (counted by job group in the shared
+    * [[SparkSpec.meter]]), and the RDDs `f` left cached after its own
+    * unpersist calls. A throw from `f` propagates. */
   def jobsAndLeaks(tag: String)(f: => Unit): (Int, Seq[RDDInfo]) = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == tag))
-          jobs.incrementAndGet()
-    }
     val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
-    sc.addSparkListener(listener)
-    sc.setJobGroup(tag, tag)
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    (jobs.get, sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id)).toSeq)
+    val jobsBefore = SparkSpec.meter(tag).jobs
+    SparkSpec.meter.run(tag)(f)._2.fold(e => throw e, identity)
+    ((SparkSpec.meter(tag).jobs - jobsBefore).toInt,
+      sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id)).toSeq)
   }
 
   /** A dir key no other test uses, for the same corpus: a symlink to
@@ -50,11 +36,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val session: SparkSession = LocalSession(4)
+  /** The per-job-group counters of [[session]]. */
+  lazy val meter: KeyMeter = new KeyMeter(session)
 }
