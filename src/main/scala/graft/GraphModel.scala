@@ -244,13 +244,28 @@ object GraphModel {
   }
 
   /** Memoized + RDD-cached [[graphx]] view, same keying discipline as
-    * [[edgesCached]]. Graph construction (DF→RDD conversion, vertex
-    * join, partition build) costs seconds at sf0.1 and every iterative
-    * algorithm was paying it again; PageRank / connected components /
-    * shortest paths now share one build. `Graph.cache()` persists both
-    * the vertex and edge RDDs, so the first algorithm materializes them
-    * and the rest reuse. */
+    * [[edgesCached]]. It serves PageRank, whose double sums depend on
+    * GraphX's summation order, and connected components and hop
+    * distances when [[localGraphCached]] is `None` (above the size
+    * gate). Graph construction (DF→RDD conversion, vertex join,
+    * partition build) costs seconds at sf0.1, so those share one build.
+    * `Graph.cache()` persists both the vertex and edge RDDs, so the
+    * first algorithm materializes them and the rest reuse. */
   val graphxCached = SessionMemo { (spark, dir) =>
     graphx(spark, dir).cache()
+  }
+
+  /** The driver-side [[LocalGraph]] of [[dedupEdgesCached]], the same
+    * edge-incident vertex set and (deduplicated) adjacency as
+    * [[graphx]], from one bounded collect of at most `SmallGraphVerts`
+    * edge rows (the gate of the driver solves in GraphOps). `None`
+    * above the gate, or when an id is not a non-null BIGINT; callers
+    * then take [[graphxCached]]. */
+  val localGraphCached = SessionMemo { (spark, dir) =>
+    import graft.ops.GraphOps.{allLong, collectSmall}
+    val e = dedupEdgesCached(spark, dir).select(col("src"), col("dst"))
+    val rows = if (allLong(e)) collectSmall(e) else None
+    rows.filterNot(_.exists(_.anyNull)).map(r =>
+      LocalGraph(r.map(_.getLong(0)), r.map(_.getLong(1))))
   }
 }

@@ -8,16 +8,19 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
-/** Per-key scheduler counters, keyed by job group: the jobs, tasks,
+/** Per-key scheduler counters, keyed by tag: the jobs, tasks,
   * executor task time, GC time and shuffle bytes of everything run
   * under a tag, the figures a wall clock hides (compute regressions
   * move task time with the wall; scheduling stalls leave it flat).
   *
-  * A job counts for the job group it was submitted under, and its tasks
-  * for its job's group. Jobs submitted from another thread inherit the
-  * group through SparkContext's inheritable local properties when that
-  * thread was spawned under the tag (the `graph_warm_caches` chains);
-  * jobs with no group count under "_".
+  * A job counts for the [[KeyMeter.KeyProperty]] local property it was
+  * submitted under, else for its job group, and its tasks for its
+  * job's tag. [[run]] sets both. Jobs submitted from another thread
+  * inherit them through SparkContext's inheritable local properties
+  * when that thread was spawned under the tag (the `graph_warm_caches`
+  * chains). A streaming query's micro-batch thread, started under the
+  * tag, keeps the property although Spark runs it under its own job
+  * group (the query's run id). Jobs with neither count under "_".
   *
   * Listener events arrive asynchronously, so every read drains the
   * listener bus first: a read right after [[run]] sees all of the run's
@@ -35,7 +38,8 @@ final class KeyMeter(spark: SparkSession) {
   sc.addSparkListener(new SparkListener {
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       val g = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .flatMap(p => Option(p.getProperty(KeyMeter.KeyProperty))
+          .orElse(Option(p.getProperty("spark.jobGroup.id"))))
         .getOrElse("_")
       js.stageIds.foreach(sid => stageGroup.put(sid, g))
       val a = of(g); a.synchronized { a(0) += 1 }
@@ -56,15 +60,19 @@ final class KeyMeter(spark: SparkSession) {
     }
   })
 
-  /** Runs `body` under job group `tag` and returns its wall seconds and
-    * its result, or what it threw. The job group is cleared either way.
-    * Any throwable is caught, as one failing key must not end a run over
-    * hundreds of keys. */
+  /** Runs `body` under job group and key property `tag` and returns its
+    * wall seconds and its result, or what it threw. Both are cleared
+    * either way. Any throwable is caught, as one failing key must not
+    * end a run over hundreds of keys. */
   def run[T](tag: String)(body: => T): (Double, Either[Throwable, T]) = {
     sc.setJobGroup(tag, tag)
+    sc.setLocalProperty(KeyMeter.KeyProperty, tag)
     val t0 = System.nanoTime()
     val r = try Right(body) catch { case e: Throwable => Left(e) }
-    finally sc.clearJobGroup()
+    finally {
+      sc.setLocalProperty(KeyMeter.KeyProperty, null)
+      sc.clearJobGroup()
+    }
     ((System.nanoTime() - t0) / 1e9, r)
   }
 
@@ -81,6 +89,9 @@ final class KeyMeter(spark: SparkSession) {
 }
 
 object KeyMeter {
+  /** The local property [[KeyMeter.run]] tags its jobs with. */
+  val KeyProperty = "graft.key"
+
   final case class Counts(jobs: Long, tasks: Long, taskMs: Long,
       gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long) {
     def values: Seq[Long] =

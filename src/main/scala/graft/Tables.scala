@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * directory scans with the identical plan shape.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schemaOf(spark, path)).parquet(path)
+  }
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -52,6 +54,16 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+  /** The schema parquet infers for the file at a path, once per
+    * (session, path): a read given its schema runs no inference job,
+    * so each table pays one per session instead of one per accessor
+    * call. Inferred under the session's conf at the first read, so
+    * `events` must have `nanosAsLong` set before it (see
+    * [[Tables.events]]). */
+  private[graft] val schemaOf = SessionMemo { (spark, path) =>
+    spark.read.parquet(path).schema
+  }
+
   /** Normalize an `events` frame's `ts` to session-zone TimestampType
     * regardless of the physical parquet type it was read as — see the
     * [[Tables.events]] Scaladoc for the per-type rationale. Shared by

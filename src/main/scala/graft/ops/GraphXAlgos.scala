@@ -1,10 +1,14 @@
 package graft.ops
 
-import graft.{GraphModel, SessionMemo, Tables}
+import graft.{GraphModel, LocalGraph, SessionMemo, Tables}
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.graphx.lib.{LabelPropagation, ShortestPaths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** §2.9 iterative graph analytics via GraphX (SURVEY.md §4.3: the one
   * genuinely non-Catalyst execution path — Pregel supersteps).
@@ -41,10 +45,39 @@ object GraphXAlgos {
 
   /** Connected components (undirected semantics — GraphX CC ignores
     * direction): component label = min vertex id, deterministic.
-    * Output: component sizes. */
-  def connectedComponents(spark: SparkSession, dir: String): DataFrame = {
+    * Output: component sizes, by size descending, then component.
+    * Under the size gate a union-find over [[GraphModel.localGraphCached]]
+    * ([[componentSizesLocal]]); above it GraphX's Pregel loop
+    * ([[componentSizesGraphX]]). */
+  def connectedComponents(spark: SparkSession, dir: String): DataFrame =
+    GraphModel.localGraphCached(spark, dir) match {
+      case Some(lg) => componentSizesLocal(spark, lg)
+      case None =>
+        componentSizesGraphX(spark, GraphModel.graphxCached(spark, dir))
+    }
+
+  private val componentSizesSchema = StructType(Seq(
+    StructField("component", LongType, nullable = false),
+    StructField("size", LongType, nullable = false)))
+
+  /** [[connectedComponents]] on the driver: each vertex counts for its
+    * component's least id. A local relation, so collecting it runs no
+    * Spark job; it holds one row per component. */
+  private[graft] def componentSizesLocal(spark: SparkSession,
+      lg: LocalGraph): DataFrame = {
+    val root = lg.components
+    val size = new Array[Long](lg.size)
+    root.foreach(r => size(r) += 1)
+    val rows = lg.ids.indices.filter(size(_) > 0)
+      .sortBy(r => (-size(r), r))
+      .map(r => Row(lg.ids(r), size(r)))
+    spark.createDataFrame(rows.asJava, componentSizesSchema)
+  }
+
+  /** [[connectedComponents]] by GraphX's `connectedComponents()`. */
+  private[graft] def componentSizesGraphX[VD: ClassTag, ED: ClassTag](
+      spark: SparkSession, g: Graph[VD, ED]): DataFrame = {
     import spark.implicits._
-    val g = GraphModel.graphxCached(spark, dir)
     g.connectedComponents().vertices
       .map { case (_, comp) => comp }
       .toDF("component")
@@ -600,19 +633,41 @@ object GraphXAlgos {
 
   /** Hop distance from the region-0 landmark (ShortestPaths follows
     * edge direction; our edges point child→parent, so this is the
-    * distance from every vertex up to its region root). Single
-    * landmark on purpose: ShortestPaths propagates a Map[landmark →
-    * dist] per vertex, so message size — and Pregel wall-clock —
-    * scales linearly with landmark count, and only region-0 distance
-    * is consumed. */
-  def shortestPaths(spark: SparkSession, dir: String): DataFrame = {
+    * distance from every vertex up to its region root). Vertices that
+    * cannot reach the landmark get no row. Under the size gate a
+    * breadth-first search over [[GraphModel.localGraphCached]]
+    * ([[hopsToLocal]]); above it GraphX's `ShortestPaths`
+    * ([[hopsToGraphX]]). */
+  def shortestPaths(spark: SparkSession, dir: String): DataFrame =
+    GraphModel.localGraphCached(spark, dir) match {
+      case Some(lg) => hopsToLocal(spark, lg, GraphModel.RegionOff)
+      case None => hopsToGraphX(spark, GraphModel.graphxCached(spark, dir),
+        GraphModel.RegionOff)
+    }
+
+  private val hopsSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("dist_to_region0", IntegerType, nullable = false)))
+
+  /** [[shortestPaths]] on the driver: the hop count from each vertex to
+    * `landmark` ([[LocalGraph.hopsTo]]), ordered by (distance, id). */
+  private[graft] def hopsToLocal(spark: SparkSession, lg: LocalGraph,
+      landmark: Long): DataFrame = {
+    val dist = lg.hopsTo(lg.index(landmark))
+    val rows = lg.ids.indices.filter(dist(_) >= 0)
+      .sortBy(v => (dist(v), v))
+      .map(v => Row(lg.ids(v), dist(v)))
+    GraphOps.rowsFrame(spark, rows, hopsSchema)
+  }
+
+  /** [[shortestPaths]] by GraphX's `ShortestPaths` with one landmark:
+    * it propagates a Map[landmark → dist] per vertex, so message size —
+    * and Pregel wall-clock — scales linearly with landmark count. */
+  private[graft] def hopsToGraphX[VD, ED: ClassTag](spark: SparkSession,
+      g: Graph[VD, ED], landmark: Long): DataFrame = {
     import spark.implicits._
-    val g = GraphModel.graphxCached(spark, dir)
-    val landmarks = Seq(GraphModel.RegionOff)
-    ShortestPaths.run(g, landmarks).vertices
-      .flatMap { case (id, spmap) =>
-        spmap.get(GraphModel.RegionOff).map(d => (id, d))
-      }
+    ShortestPaths.run(g, Seq(landmark)).vertices
+      .flatMap { case (id, spmap) => spmap.get(landmark).map(d => (id, d)) }
       .toDF("id", "dist_to_region0")
       .orderBy(col("dist_to_region0"), col("id"))
   }

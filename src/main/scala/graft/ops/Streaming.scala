@@ -149,7 +149,8 @@ object Streaming {
     * The stream must declare its schema up front, and the physical
     * type of `ts` depends on which generator wrote the file (int64
     * nanos under the legacy conf vs TIMESTAMP_NTZ micros) — so the
-    * declared schema is taken from a one-off batch footer read and the
+    * declared schema is the batch loader's footer schema
+    * ([[graft.Tables.schemaOf]]) and the
     * column converged via [[graft.Tables.normalizeTs]], exactly like
     * the batch loader. Glob rather than exact filename:
     * FileStreamSource requires its inferred basePath to be a
@@ -161,7 +162,7 @@ object Streaming {
     if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
         .forall(_ != "true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val footer = spark.read.parquet(s"$dir/events.parquet").schema
+    val footer = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     Tables.normalizeTs(
       spark.readStream.schema(footer).parquet(s"$dir/events*.parquet"))
   }

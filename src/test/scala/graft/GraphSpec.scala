@@ -1362,6 +1362,24 @@ class GraphSpec extends SparkSpec {
       s"8 concurrent first calls ran $jobs jobs, one call $oneCall")
   }
 
+  test("connected components and hop distances: a second call runs no " +
+      "job beyond its output frame's and leaves no cached RDD") {
+    val dir = freshSfDir()
+    GraphXAlgos.connectedComponents(spark, dir).collect()
+    val sp = GraphXAlgos.shortestPaths(spark, dir)
+    sp.collect()
+    val (ccJobs, ccLeft) = jobsAndLeaks("cc-second") {
+      GraphXAlgos.connectedComponents(spark, dir).collect(): Unit
+    }
+    assert(ccJobs == 0 && ccLeft.isEmpty, s"$ccJobs jobs, left $ccLeft")
+    val (outJobs, _) = jobsAndLeaks("sp-output")(sp.collect(): Unit)
+    val (spJobs, spLeft) = jobsAndLeaks("sp-second") {
+      GraphXAlgos.shortestPaths(spark, dir).collect(): Unit
+    }
+    assert(spJobs <= outJobs && spLeft.isEmpty,
+      s"$spJobs jobs (output frame $outJobs), left $spLeft")
+  }
+
   test("scc census: every sampled basket's parts land in ONE scc, " +
       "and sizes cover at least the largest basket") {
     val t = Tables(spark, sfDir)

@@ -24,6 +24,7 @@ class KeyMeterSpec extends SparkSpec {
     val (_, r) = meter.run("meter-throw") { jobs(1); throw boom }
     assert(r == Left(boom))
     assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null)
+    assert(spark.sparkContext.getLocalProperty(KeyMeter.KeyProperty) == null)
     assert(meter("meter-throw").jobs == 1)
   }
 
@@ -36,5 +37,19 @@ class KeyMeterSpec extends SparkSpec {
     }
     assert(r.isRight)
     assert(meter("meter-pool").jobs == 4)
+  }
+
+  test("a streaming key's micro-batch jobs count for its tag, not for " +
+      "the query's own job group") {
+    def uuid(g: String) = scala.util.Try(java.util.UUID.fromString(g))
+      .isSuccess
+    val before = meter.all.keySet
+    val (_, r) = meter.run("meter-stream") {
+      graft.ops.Streaming.streamCdcParquet(spark, freshSfDir()).collect()
+    }
+    assert(r.isRight)
+    val added = meter.all.keySet -- before
+    assert(!added.exists(uuid), s"new groups: $added")
+    assert(added.contains("meter-stream"))
   }
 }

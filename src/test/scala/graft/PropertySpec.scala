@@ -343,4 +343,60 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  // ---- connected components and hop distances: driver vs GraphX ----
+
+  /** Digraphs over ids 0..15 with self-loops and repeated edges, plus a
+    * chain 100 → 101 → … of 2 to 12 edges that enters the random part
+    * at one of its ids, and up to 3 isolated edges (200+2k → 201+2k).
+    * The landmark is the head of some edge, or 999, which no edge
+    * touches. */
+  private val hopGraphGen: Gen[(List[(Long, Long)], Long)] = {
+    val id = Gen.choose(0L, 15L)
+    for {
+      m <- Gen.choose(0, 20)
+      extra <- Gen.listOfN(m, Gen.frequency(
+        5 -> Gen.zip(id, id), 1 -> id.map(a => (a, a))))
+      len <- Gen.choose(2, 12)
+      end <- id
+      chain = (100L until 99L + len).toList.map(a => (a, a + 1)) :+
+        ((99L + len, end))
+      iso <- Gen.choose(0, 3)
+      isolated = List.tabulate(iso)(k => (200L + 2 * k, 201L + 2 * k))
+      es = extra ++ chain ++ isolated
+      again <- Gen.someOf(es)
+      landmark <- Gen.frequency(3 -> Gen.oneOf(es.map(_._2)),
+        1 -> Gen.const(999L))
+    } yield (es ++ again, landmark)
+  }
+
+  test("connected components and hop distances: the driver solve " +
+      "matches GraphX on generated digraphs (isolated edges, " +
+      "self-loops, duplicate edges, long chains, an absent landmark) " +
+      "and on the corpus") {
+    import graft.ops.GraphXAlgos
+    import org.apache.spark.graphx.{Edge, Graph}
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r =>
+        (r.getLong(0), r.getAs[Number](1).longValue)).toSeq
+    val graphs = samples(hopGraphGen, 6)
+    assert(graphs.size >= 4)
+    graphs.foreach { case (es, landmark) =>
+      val lg = LocalGraph(es.map(_._1).toArray, es.map(_._2).toArray)
+      val g = Graph.fromEdges(spark.sparkContext.parallelize(
+        es.map { case (a, b) => Edge(a, b, 1) }, 2), 0)
+      assert(rows(GraphXAlgos.componentSizesLocal(spark, lg)) ==
+        rows(GraphXAlgos.componentSizesGraphX(spark, g)), s"edges=$es")
+      assert(rows(GraphXAlgos.hopsToLocal(spark, lg, landmark)) ==
+        rows(GraphXAlgos.hopsToGraphX(spark, g, landmark)),
+        s"landmark=$landmark edges=$es")
+      g.unpersist(blocking = false)
+    }
+    assert(GraphModel.localGraphCached(spark, sfDir).isDefined)
+    val gx = GraphModel.graphxCached(spark, sfDir)
+    assert(rows(GraphXAlgos.connectedComponents(spark, sfDir)) ==
+      rows(GraphXAlgos.componentSizesGraphX(spark, gx)))
+    assert(rows(GraphXAlgos.shortestPaths(spark, sfDir)) ==
+      rows(GraphXAlgos.hopsToGraphX(spark, gx, GraphModel.RegionOff)))
+  }
 }
