@@ -257,15 +257,11 @@ object GraphModel {
 
   /** The driver-side [[LocalGraph]] of [[dedupEdgesCached]], the same
     * edge-incident vertex set and (deduplicated) adjacency as
-    * [[graphx]], from one bounded collect of at most `SmallGraphVerts`
-    * edge rows (the gate of the driver solves in GraphOps). `None`
-    * above the gate, or when an id is not a non-null BIGINT; callers
-    * then take [[graphxCached]]. */
+    * [[graphx]], from the gated collect [[LocalGraph.collectLongs]]:
+    * `None` above the gate, or when an id is not a non-null BIGINT;
+    * callers then take [[graphxCached]]. */
   val localGraphCached = SessionMemo { (spark, dir) =>
-    import graft.ops.GraphOps.{allLong, collectSmall}
-    val e = dedupEdgesCached(spark, dir).select(col("src"), col("dst"))
-    val rows = if (allLong(e)) collectSmall(e) else None
-    rows.filterNot(_.exists(_.anyNull)).map(r =>
-      LocalGraph(r.map(_.getLong(0)), r.map(_.getLong(1))))
+    LocalGraph.collectLongs(dedupEdgesCached(spark, dir)
+      .select(col("src"), col("dst"))).map(LocalGraph.of)
   }
 }

@@ -1,31 +1,39 @@
 package graft
 
-/** A small directed graph held on the driver: dense `Int` indices
-  * 0..V−1 for the vertex ids in ascending id order, plus out- and
-  * in-adjacency in CSR form (offsets of length V+1 into one target
-  * array per direction). Index order is id order, so a least-id
-  * tie-break is a least-index tie-break.
-  *
-  * Built from collected `(src, dst)` pairs
-  * ([[GraphModel.localGraphCached]] under the `SmallGraphVerts` gate);
-  * the vertex set is the edge-incident ids. Duplicate edges stay as
-  * repeated targets, which neither traversal below is sensitive to. */
+import graft.ops.GraphOps.SmallGraphVerts
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.LongType
+import scala.collection.mutable
+
+/** A small directed graph on the driver, the kernel of every driver
+  * graph solve: dense `Int` indices 0..V−1 for the vertex ids in
+  * ascending id order (a least-id tie-break is a least-index one), the
+  * edges as edge-order index arrays [[src]] and [[dst]], and out- and
+  * in-CSR built on first use. `LocalGraph(src, dst)` takes the
+  * edge-incident ids as its vertex set; `LocalGraph(verts, src, dst)`
+  * takes `verts`, isolated ids included, and drops every edge with an
+  * end outside it. Rows come from the gated collect
+  * [[LocalGraph.collectLongs]]. Methods: weak [[components]], directed
+  * [[hopsTo]], bounded-horizon SCC labels ([[sccLabels]]: Tarjan plus
+  * depth-capped searches); duplicate edges and self-loops change none
+  * of them. */
 final class LocalGraph private (val ids: Array[Long],
-    outOff: Array[Int], outDst: Array[Int],
-    inOff: Array[Int], inSrc: Array[Int]) {
-  import LocalGraph.MinUnionFind
+    val src: Array[Int], val dst: Array[Int]) {
+  import LocalGraph.{MinUnionFind, csr}
+
+  private lazy val (outOff, outDst) = csr(size, src, dst)
+  private lazy val (inOff, inSrc) = csr(size, dst, src)
 
   def size: Int = ids.length
 
-  /** The index of `id`, or a negative number if no edge touches it. */
+  /** The index of `id`, or a negative number if `id` is not a vertex. */
   def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
 
   /** Weakly connected components: per index, the least index of its
     * component (edge direction ignored). */
   def components: Array[Int] = {
     val uf = new MinUnionFind(size)
-    for (v <- 0 until size; e <- outOff(v) until outOff(v + 1))
-      uf.union(v, outDst(e))
+    for (e <- src.indices) uf.union(src(e), dst(e))
     Array.tabulate(size)(uf.find)
   }
 
@@ -35,34 +43,159 @@ final class LocalGraph private (val ids: Array[Long],
   def hopsTo(target: Int): Array[Int] = {
     val dist = Array.fill(size)(-1)
     if (target >= 0) {
-      val queue = new Array[Int](size)
-      queue(0) = target
       dist(target) = 0
-      var head = 0
-      var tail = 1
-      while (head < tail) {
-        val w = queue(head)
-        head += 1
-        for (e <- inOff(w) until inOff(w + 1)) {
-          val u = inSrc(e)
-          if (dist(u) < 0) { dist(u) = dist(w) + 1; queue(tail) = u; tail += 1 }
+      bfs(inOff, inSrc, target, Long.MaxValue)((u, hops) =>
+        dist(u) < 0 && { dist(u) = hops; true })
+    }
+    dist
+  }
+
+  /** Bounded-horizon strongly connected labels: each index's label is
+    * the least index that it reaches, and that reaches it, within
+    * `2^rounds` hops (itself if none is less). A shortest path between
+    * two members of one SCC stays inside it (every vertex on it
+    * reaches both ends), so within an SCC of s members every member
+    * reaches every other in at most s − 1 hops. [[tarjan]] finds the
+    * SCCs; one of at most `2^rounds + 1` members is labeled by its
+    * least member outright, a larger one by a forward (out-CSR) and a
+    * backward (in-CSR) breadth-first search per member, capped at
+    * `2^rounds` hops and kept inside the SCC. */
+  def sccLabels(rounds: Int): Array[Int] = {
+    val comp = tarjan
+    val horizon = 1L << (rounds max 0 min 62)
+    val label = new Array[Int](size)
+    // members ascend, so the head of a member list is its least index
+    (0 until size).groupBy(comp(_)).values.foreach { ms =>
+      if (ms.length - 1 <= horizon) ms.foreach(label(_) = ms.head)
+      else {
+        // u and what it reaches within the horizon inside its SCC
+        def within(off: Array[Int], to: Array[Int], u: Int) = {
+          val seen = mutable.BitSet(u)
+          bfs(off, to, u, horizon)((w, _) =>
+            comp(w) == comp(u) && seen.add(w))
+          seen
+        }
+        ms.foreach(u => label(u) =
+          (within(outOff, outDst, u) & within(inOff, inSrc, u)).head)
+      }
+    }
+    label
+  }
+
+  /** Strongly connected components by Tarjan's algorithm over the
+    * out-CSR, with an explicit call stack so a long path cannot
+    * overflow the thread's: the component number of every index. */
+  private def tarjan: Array[Int] = {
+    val index = Array.fill(size)(-1)
+    val low = new Array[Int](size)
+    val comp = new Array[Int](size)
+    val onStack = new Array[Boolean](size)
+    val stack = new Array[Int](size)
+    val call = new Array[Int](size)
+    // the next out-edge of each vertex to visit
+    val next = java.util.Arrays.copyOf(outOff, size)
+    var sp = 0
+    var counter = 0
+    var nComp = 0
+    def open(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+    }
+    for (root <- 0 until size if index(root) < 0) {
+      open(root)
+      call(0) = root
+      var cp = 1
+      while (cp > 0) {
+        val v = call(cp - 1)
+        if (next(v) < outOff(v + 1)) {
+          val w = outDst(next(v))
+          next(v) += 1
+          if (index(w) < 0) { open(w); call(cp) = w; cp += 1 }
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          cp -= 1
+          if (cp > 0) {
+            val p = call(cp - 1)
+            low(p) = math.min(low(p), low(v))
+          }
+          if (low(v) == index(v)) {
+            var w = -1
+            while (w != v) {
+              sp -= 1; w = stack(sp); onStack(w) = false; comp(w) = nComp
+            }
+            nComp += 1
+          }
         }
       }
     }
-    dist
+    comp
+  }
+
+  /** Breadth-first search from `u` along the CSR `(off, to)`, at most
+    * `horizon` hops: each target `w` of the frontier joins the next one
+    * when `reach(w, hops)` is true, so `reach` marks what it keeps. */
+  private def bfs(off: Array[Int], to: Array[Int], u: Int,
+      horizon: Long)(reach: (Int, Int) => Boolean): Unit = {
+    var frontier = Array(u)
+    var hops = 0
+    while (frontier.nonEmpty && hops < horizon) {
+      hops += 1
+      frontier = frontier.flatMap(v => to.slice(off(v), off(v + 1)))
+        .filter(reach(_, hops))
+    }
   }
 }
 
 object LocalGraph {
-  /** The graph of the edges `src(e) → dst(e)`. */
-  def apply(src: Array[Long], dst: Array[Long]): LocalGraph = {
-    val ids = sortedDistinct(src ++ dst)
+  /** The graph of the edges `src(e) → dst(e)` over their end ids. */
+  def apply(src: Array[Long], dst: Array[Long]): LocalGraph =
+    apply(src ++ dst, src, dst)
+
+  /** The graph over the vertex ids `verts` (duplicates allowed) and
+    * the edges `src(e) → dst(e)` with both ends in `verts`, in order. */
+  def apply(verts: Array[Long], src: Array[Long],
+      dst: Array[Long]): LocalGraph = {
+    // ascending distinct ids: binarySearch is the id → index map
+    val u = verts.sorted
+    var n = 0
+    for (x <- u) if (n == 0 || u(n - 1) != x) { u(n) = x; n += 1 }
+    val ids = java.util.Arrays.copyOf(u, n)
     val s = src.map(java.util.Arrays.binarySearch(ids, _))
     val d = dst.map(java.util.Arrays.binarySearch(ids, _))
-    val (outOff, outDst) = csr(ids.length, s, d)
-    val (inOff, inSrc) = csr(ids.length, d, s)
-    new LocalGraph(ids, outOff, outDst, inOff, inSrc)
+    if (s.forall(_ >= 0) && d.forall(_ >= 0)) new LocalGraph(ids, s, d)
+    else {
+      val kept = s.indices.filter(e => s(e) >= 0 && d(e) >= 0).toArray
+      new LocalGraph(ids, kept.map(s), kept.map(d))
+    }
   }
+
+  /** The graph of the (src, dst) ids in the first two columns. */
+  def of(rows: Array[Row]): LocalGraph =
+    apply(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+
+  /** Rows of `df` if it has at most [[SmallGraphVerts]] of them, else
+    * None: the graph kernels' measured size gate, a bounded collect. */
+  private[graft] def collectSmall(df: DataFrame): Option[Array[Row]] = {
+    val rows = df.limit((SmallGraphVerts + 1).toInt).collect()
+    if (rows.length <= SmallGraphVerts) Some(rows) else None
+  }
+
+  /** The gate of [[collectSmall]] by a bounded count: no row ships. */
+  private[graft] def fits(df: DataFrame): Boolean =
+    df.limit((SmallGraphVerts + 1).toInt).count() <= SmallGraphVerts
+
+  /** Whether every column is BIGINT, as the driver solves read them. */
+  private[graft] def allLong(df: DataFrame): Boolean =
+    df.schema.forall(_.dataType == LongType)
+
+  /** Whether rows of `df` can feed a driver solve: BIGINT, no null. */
+  private[graft] def readable(df: DataFrame)(rows: Array[Row]): Boolean =
+    allLong(df) && !rows.exists(_.anyNull)
+
+  /** The gated collect of the driver solves: [[collectSmall]] rows that
+    * are [[readable]], else None (the caller takes its keyed loop). */
+  private[graft] def collectLongs(df: DataFrame): Option[Array[Row]] =
+    if (allLong(df)) collectSmall(df).filter(readable(df)) else None
 
   /** CSR of the edges `from(e) → to(e)` over indices 0..n−1: the
     * targets of index i are `targets(offsets(i) until offsets(i + 1))`,
@@ -82,8 +215,8 @@ object LocalGraph {
   }
 
   /** Union-find over dense indices whose root is always the LEAST
-    * index of its set. With ids indexed in ascending order (see
-    * [[sortedDistinct]]) the root is the component-min id, the label
+    * index of its set. With ids indexed in ascending order (as in a
+    * [[LocalGraph]]) the root is the component-min id, the label
     * every connectivity kernel carries. Path halving, no ranks. */
   private[graft] final class MinUnionFind(n: Int) {
     private val parent = Array.tabulate(n)(identity)
@@ -100,15 +233,5 @@ object LocalGraph {
       val rb = find(b)
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-  }
-
-  /** Ascending distinct ids: index i stands for `ids(i)`, so index
-    * order is id order and `binarySearch` is the id → index map. */
-  private[graft] def sortedDistinct(xs: Array[Long]): Array[Long] = {
-    val s = xs.clone()
-    java.util.Arrays.sort(s)
-    var n = 0
-    for (x <- s) if (n == 0 || s(n - 1) != x) { s(n) = x; n += 1 }
-    java.util.Arrays.copyOf(s, n)
   }
 }

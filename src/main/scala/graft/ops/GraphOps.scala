@@ -1,13 +1,13 @@
 package graft.ops
 
-import graft.{GraphModel, SessionMemo, Tables}
-import graft.LocalGraph.{MinUnionFind, sortedDistinct}
+import graft.{GraphModel, LocalGraph, SessionMemo, Tables}
+import graft.LocalGraph.{MinUnionFind, allLong, collectLongs, collectSmall}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** §2.9 graph traversal operators expressed as Catalyst joins.
   *
@@ -2913,20 +2913,6 @@ object GraphOps {
     }
   }
 
-  /** Rows of `df` if it has at most [[SmallGraphVerts]] of them, else
-    * None: the measured size gate of the graph kernels. A bounded
-    * collect, so the driver never holds more than the gate's rows
-    * before a kernel falls back to its keyed loop. */
-  private[graft] def collectSmall(df: DataFrame): Option[Array[Row]] = {
-    val rows = df.limit((SmallGraphVerts + 1).toInt).collect()
-    if (rows.length <= SmallGraphVerts) Some(rows) else None
-  }
-
-  /** The driver solves read BIGINT columns (every graph id and weight
-    * here); frames of other types take the keyed loops. */
-  private[graft] def allLong(df: DataFrame): Boolean =
-    df.schema.forall(_.dataType == LongType)
-
   /** A driver-computed result as an RDD-backed frame (the
     * [[dropStats]] shape): the rows ship with the tasks that scan
     * them, not inside every consuming plan as a LocalRelation would.
@@ -2983,25 +2969,18 @@ object GraphOps {
 
   /** The driver solve of [[minLabelComponentsChk]] over already
     * collected `verts.id` rows and `(a_id, b_id)` pair rows (BIGINT
-    * ids): one union-find pass, each component rooted at its least id.
+    * ids): [[LocalGraph.components]] over the non-null vertex ids.
     * Duplicate vertex rows each get their own output row. */
   private[graft] def minLabelComponentsLocal(verts: DataFrame,
       vertRows: Array[Row], pairRows: Array[Row]): DataFrame = {
     val schema = verts.select(col("id"), col("id").as("cluster")).schema
-    val ids = sortedDistinct(
-      vertRows.filterNot(_.isNullAt(0)).map(_.getLong(0)))
-    def ix(r: Row, i: Int): Int =
-      if (r.isNullAt(i)) -1
-      else java.util.Arrays.binarySearch(ids, r.getLong(i))
-    val uf = new MinUnionFind(ids.length)
-    pairRows.foreach { r =>
-      val a = ix(r, 0)
-      val b = ix(r, 1)
-      if (a >= 0 && b >= 0) uf.union(a, b)
-    }
+    val pairs = pairRows.filterNot(_.anyNull)
+    val lg = LocalGraph(vertRows.filterNot(_.isNullAt(0)).map(_.getLong(0)),
+      pairs.map(_.getLong(0)), pairs.map(_.getLong(1)))
+    val root = lg.components
     val out = vertRows.toSeq.map { r =>
       if (r.isNullAt(0)) Row(null, null)
-      else Row(r.getLong(0), ids(uf.find(ix(r, 0))))
+      else Row(r.getLong(0), lg.ids(root(lg.index(r.getLong(0)))))
     }
     rowsFrame(verts.sparkSession, out, schema)
   }
@@ -3491,12 +3470,9 @@ object GraphOps {
     * TINY contracted graph (supernodes × cross-component
     * attachments), not the raw one — the keyed closure's Σ|SCC|²
     * quadratic surface collapses to the supernode count. Lifting back
-    * is one join; scc_id = min member part id. Both the contraction
-    * and the closure measure their input and, under the
-    * [[SmallGraphVerts]] gate, solve on the driver; above it they run
-    * their keyed loops (pointer-jumping min labels, doubling closure
-    * with per-round checkpoints). The shared work lives in
-    * [[sccLifted]]. Output: non-singleton components by size. Fully
+    * is one join; scc_id = min member part id. The shared work, and
+    * its size gate, live in [[sccLifted]]. Output: non-singleton
+    * components by size. Fully
     * integer/deterministic → DuckDB-oracled with recursive-CTE
     * contraction + the identical doubling unrolled. */
   def graphScc(spark: SparkSession, dir: String): DataFrame = {
@@ -3601,18 +3577,17 @@ object GraphOps {
     * reads them, never the lineitem window or the part join again.
     * Measured size gate ([[SmallGraphVerts]], one bounded collect per
     * frame): rows that fit come to the driver and go back as
-    * [[rowsFrame]]s; when both fit as non-null BIGINT, the
-    * contraction, the closure and the lift run on the driver
-    * ([[sccLiftLocal]]) and the memo costs the two collects. Otherwise
-    * the frames are checkpointed and the contraction
-    * ([[minLabelComponentsChk]]) and the closure ([[sccLabelsOn]])
-    * run as plans, each behind its own gate. */
+    * [[rowsFrame]]s; when both fit as non-null BIGINT
+    * ([[LocalGraph.readable]]), the contraction, the closure and the
+    * lift run on the driver ([[sccLiftLocal]]) and the memo costs the
+    * two collects. Otherwise the frames are checkpointed and
+    * [[sccLiftKeyed]] runs them as plans. */
   private val sccLifted = SessionMemo { (spark, dir) =>
     val t = Tables(spark, dir)
     def pinned(df: DataFrame): (DataFrame, Option[Array[Row]]) =
       collectSmall(df) match {
         case Some(rows) => (rowsFrame(spark, rows.toSeq, df.schema),
-          Some(rows).filter(_ => allLong(df)))
+          Some(rows).filter(LocalGraph.readable(df)))
         case None => (df.localCheckpoint(), None)
       }
     val b = t.lineitem.filter(col("l_orderkey") % SccOrderMod === 0)
@@ -3635,64 +3610,60 @@ object GraphOps {
     val (att, attRows) = pinned(withBrand.join(hub, Seq("p_brand"))
       .filter(col("hub") =!= col("p"))
       .select(col("hub").as("src"), col("p").as("dst")))
-    val local = for {
-      c <- cycRows
-      a <- attRows
-      if !(c ++ a).exists(_.anyNull)
-    } yield sccLiftLocal(spark, c, a)
-    val lifted = local.getOrElse {
-      // contract: weak components of the cycle frame are SCCs already
-      val (comp, compChk) = minLabelComponentsChk(
-        partsIn.select(col("p").as("id")),
-        cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
-      // attachments between supernodes; within-supernode ones vanish
-      val ce = att
-        .join(comp.select(col("id").as("src"),
-          col("cluster").as("csrc")), Seq("src"))
-        .join(comp.select(col("id").as("dst"),
-          col("cluster").as("cdst")), Seq("dst"))
-        .filter(col("csrc") =!= col("cdst"))
-        .select(col("csrc").as("src"), col("cdst").as("dst"))
-        .distinct()
-      // bounded closure over the contracted graph only
-      val superLab = sccLabelsOn(ce, SccDoubleRounds)
-      val out = comp
-        .join(superLab.select(col("u").as("cluster"), col("scc_id")),
-          Seq("cluster"), "left")
-        .select(col("id"),
-          coalesce(col("scc_id"), col("cluster")).as("sl"))
-        .localCheckpoint(true)
-      // out is eager and superLab no longer reads the labels
-      releaseChk(compChk)
-      out
-    }
+    val lifted = (for (c <- cycRows; a <- attRows)
+      yield sccLiftLocal(spark, c, a))
+      .getOrElse(sccLiftKeyed(partsIn, cyc, att))
     (lifted, cyc.unionByName(att))
+  }
+
+  /** The keyed path of [[sccLifted]] over `partsIn(p)` (the ids of the
+    * `cyc(src, dst)` edges) and `att(src, dst)`: the contraction and
+    * the closure as plans, each behind its own gate. */
+  private[graft] def sccLiftKeyed(partsIn: DataFrame, cyc: DataFrame,
+      att: DataFrame): DataFrame = {
+    // contract: weak components of the cycle frame are SCCs already
+    val (comp, compChk) = minLabelComponentsChk(
+      partsIn.select(col("p").as("id")),
+      cyc.select(col("src").as("a_id"), col("dst").as("b_id")))
+    // attachments between supernodes; within-supernode ones vanish
+    val ce = att
+      .join(comp.select(col("id").as("src"),
+        col("cluster").as("csrc")), Seq("src"))
+      .join(comp.select(col("id").as("dst"),
+        col("cluster").as("cdst")), Seq("dst"))
+      .filter(col("csrc") =!= col("cdst"))
+      .select(col("csrc").as("src"), col("cdst").as("dst"))
+      .distinct()
+    // bounded closure over the contracted graph only
+    val superLab = sccLabelsOn(ce, SccDoubleRounds)
+    val out = comp
+      .join(superLab.select(col("u").as("cluster"), col("scc_id")),
+        Seq("cluster"), "left")
+      .select(col("id"),
+        coalesce(col("scc_id"), col("cluster")).as("sl"))
+      .localCheckpoint(true)
+    // out is eager and superLab no longer reads the labels
+    releaseChk(compChk)
+    out
   }
 
   /** The driver path of [[sccLifted]] over the collected cycle and
     * attachment rows (BIGINT, non-null): the same contraction (cycle
-    * edges union-found, each part labeled by its component's least
-    * id), the attachments between distinct supernodes, their
-    * [[SccDoubleRounds]] bounded labels ([[boundedSccLabels]]) and the
-    * lift back to one `(id, sl)` row per part. */
-  private def sccLiftLocal(spark: SparkSession, cycRows: Array[Row],
-      attRows: Array[Row]): DataFrame = {
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("sl", LongType)))
-    val ids = sortedDistinct(
-      cycRows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
-    def ix(r: Row, i: Int): Int =
-      java.util.Arrays.binarySearch(ids, r.getLong(i))
-    val uf = new MinUnionFind(ids.length)
-    cycRows.foreach(r => uf.union(ix(r, 0), ix(r, 1)))
-    val ce = attRows.map(r => (ix(r, 0), ix(r, 1)))
-      .collect { case (a, b) if a >= 0 && b >= 0 =>
-        (uf.find(a), uf.find(b)) }
-      .filter { case (a, b) => a != b }.distinct
-    val label = boundedSccLabels(ids.length, ce.map(_._1), ce.map(_._2),
-      SccDoubleRounds)
-    rowsFrame(spark,
-      ids.indices.map(i => Row(ids(i), ids(label(uf.find(i))))), schema)
+    * graph components), closure ([[SccDoubleRounds]] bounded labels of
+    * the contracted attachments) and lift to one `(id, sl)` per part. */
+  private[graft] def sccLiftLocal(spark: SparkSession,
+      cycRows: Array[Row], attRows: Array[Row]): DataFrame = {
+    val schema = StructType.fromDDL("id BIGINT, sl BIGINT")
+    val cyc = LocalGraph.of(cycRows)
+    val root = cyc.components
+    // an attachment end as its supernode's least id; an end off the
+    // cycles stays off the vertex set, and the constructor drops it
+    def sup(id: Long): Long =
+      cyc.index(id) match { case i if i >= 0 => cyc.ids(root(i)); case _ => id }
+    val label = LocalGraph(cyc.ids, attRows.map(r => sup(r.getLong(0))),
+      attRows.map(r => sup(r.getLong(1)))).sccLabels(SccDoubleRounds)
+    rowsFrame(spark, cyc.ids.indices.map(i =>
+      Row(cyc.ids(i), cyc.ids(label(root(i))))), schema)
   }
 
   /** The SCC core on an arbitrary (src, dst) edge frame: bounded-
@@ -3702,145 +3673,26 @@ object GraphOps {
     * an edge. Exposed for the registered census above and for
     * hand-graph invariant tests.
     *
-    * Measured size gate ([[SmallGraphVerts]] edge rows, one bounded
-    * collect): when the edges fit and are non-null BIGINT, the labels
-    * are solved on the driver ([[sccLabelsLocal]]) — the collect is
-    * the only job. Otherwise the doubling closure
-    * ([[sccLabelsKeyed]]) runs. */
-  def sccLabelsOn(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val rows = if (allLong(e)) collectSmall(e) else None
-    rows.filterNot(_.exists(_.anyNull)) match {
+    * Measured size gate (the gated collect
+    * [[LocalGraph.collectLongs]]): under it the labels are solved on
+    * the driver ([[sccLabelsLocal]]) — the collect is the only job.
+    * Otherwise the doubling closure ([[sccLabelsKeyed]]) runs. */
+  def sccLabelsOn(edges: DataFrame, rounds: Int): DataFrame =
+    collectLongs(edges.select(col("src"), col("dst"))) match {
       case Some(r) => sccLabelsLocal(edges.sparkSession, r, rounds)
       case None => sccLabelsKeyed(edges, rounds)
     }
-  }
 
   /** The driver solve of [[sccLabelsOn]] over collected `(src, dst)`
     * rows (BIGINT, non-null), equal to [[sccLabelsKeyed]]'s labels:
-    * [[boundedSccLabels]] over the dense ids. */
+    * [[LocalGraph.sccLabels]] mapped back to ids. */
   private[graft] def sccLabelsLocal(spark: SparkSession,
       rows: Array[Row], rounds: Int): DataFrame = {
-    val schema = StructType(Seq(StructField("u", LongType),
-      StructField("scc_id", LongType)))
-    val ids =
-      sortedDistinct(rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
-    def ix(r: Row, i: Int): Int =
-      java.util.Arrays.binarySearch(ids, r.getLong(i))
-    val label = boundedSccLabels(ids.length, rows.map(ix(_, 0)),
-      rows.map(ix(_, 1)), rounds)
-    rowsFrame(spark, ids.indices.map(i => Row(ids(i), ids(label(i)))),
-      schema)
-  }
-
-  /** Bounded-horizon SCC labels over indices 0..n−1 and the edges
-    * `src(e) → dst(e)`: each index's label is the least index that it
-    * reaches, and that reaches it, within `2^rounds` hops (itself if
-    * none is less). A shortest path between two members of one SCC
-    * stays inside it (every vertex on it reaches both ends), so within
-    * an SCC of s members every member reaches every other in at most
-    * s − 1 hops. Tarjan finds the SCCs; one of at most `2^rounds + 1`
-    * members is labeled by its least member outright, a larger one by
-    * a forward and a backward breadth-first search per member, capped
-    * at `2^rounds` hops and kept inside the SCC. */
-  private def boundedSccLabels(n: Int, src: Array[Int], dst: Array[Int],
-      rounds: Int): Array[Int] = {
-    val fwd = adjacency(n, src, dst)
-    val bwd = adjacency(n, dst, src)
-    val comp = tarjanScc(fwd)
-    val horizon = 1L << (rounds max 0 min 62)
-    val label = new Array[Int](n)
-    // members ascend, so the head of a member list is its least index
-    (0 until n).groupBy(comp(_)).values.foreach { ms =>
-      if (ms.length - 1 <= horizon) ms.foreach(label(_) = ms.head)
-      else {
-        def inside(w: Int): Boolean = comp(w) == comp(ms.head)
-        ms.foreach { u =>
-          label(u) = (hopsWithin(fwd, u, horizon, inside) &
-            hopsWithin(bwd, u, horizon, inside)).head
-        }
-      }
-    }
-    label
-  }
-
-  /** Adjacency lists over indices 0..n−1 of the `from(e) → to(e)`
-    * edges. */
-  private def adjacency(n: Int, from: Array[Int],
-      to: Array[Int]): Array[Array[Int]] = {
-    val deg = new Array[Int](n)
-    from.foreach(i => deg(i) += 1)
-    val adj = Array.tabulate(n)(i => new Array[Int](deg(i)))
-    java.util.Arrays.fill(deg, 0)
-    for (e <- from.indices) {
-      adj(from(e))(deg(from(e))) = to(e)
-      deg(from(e)) += 1
-    }
-    adj
-  }
-
-  /** Strongly connected components by Tarjan's algorithm, with an
-    * explicit call stack so a long path cannot overflow the thread's:
-    * the component number of every index. */
-  private def tarjanScc(adj: Array[Array[Int]]): Array[Int] = {
-    val n = adj.length
-    val index = Array.fill(n)(-1)
-    val low = new Array[Int](n)
-    val comp = new Array[Int](n)
-    val onStack = new Array[Boolean](n)
-    val stack = new Array[Int](n)
-    val call = new Array[Int](n)
-    val next = new Array[Int](n) // next edge of each vertex to visit
-    var sp = 0
-    var counter = 0
-    var nComp = 0
-    def open(v: Int): Unit = {
-      index(v) = counter; low(v) = counter; counter += 1
-      stack(sp) = v; sp += 1; onStack(v) = true
-    }
-    for (root <- 0 until n if index(root) < 0) {
-      open(root)
-      call(0) = root
-      var cp = 1
-      while (cp > 0) {
-        val v = call(cp - 1)
-        if (next(v) < adj(v).length) {
-          val w = adj(v)(next(v))
-          next(v) += 1
-          if (index(w) < 0) { open(w); call(cp) = w; cp += 1 }
-          else if (onStack(w)) low(v) = math.min(low(v), index(w))
-        } else {
-          cp -= 1
-          if (cp > 0) {
-            val p = call(cp - 1)
-            low(p) = math.min(low(p), low(v))
-          }
-          if (low(v) == index(v)) {
-            var w = -1
-            while (w != v) {
-              sp -= 1; w = stack(sp); onStack(w) = false; comp(w) = nComp
-            }
-            nComp += 1
-          }
-        }
-      }
-    }
-    comp
-  }
-
-  /** `u` and the indices reachable from it along `adj` in at most
-    * `horizon` hops through `inside` vertices only. */
-  private def hopsWithin(adj: Array[Array[Int]], u: Int, horizon: Long,
-      inside: Int => Boolean): scala.collection.mutable.BitSet = {
-    val seen = scala.collection.mutable.BitSet(u)
-    var frontier = Array(u)
-    var hops = 0L
-    while (frontier.nonEmpty && hops < horizon) {
-      hops += 1
-      frontier =
-        frontier.flatMap(adj(_)).filter(w => inside(w) && seen.add(w))
-    }
-    seen
+    val schema = StructType.fromDDL("u BIGINT, scc_id BIGINT")
+    val lg = LocalGraph.of(rows)
+    val label = lg.sccLabels(rounds)
+    rowsFrame(spark, lg.ids.indices.map(i => Row(lg.ids(i),
+      lg.ids(label(i)))), schema)
   }
 
   /** The keyed path of [[sccLabelsOn]]: bounded-horizon closure by
@@ -3952,23 +3804,21 @@ object GraphOps {
     * rounds. Output: the (partial, if the budget truncates) forest
     * `(u, v, w_cents)` ordered by (u, v).
     *
-    * The input is checkpointed once, then measured with a bounded
-    * collect ([[SmallGraphVerts]] edge rows): under the gate, with
-    * non-null BIGINT columns, the SAME rounds run on the driver over
-    * primitive arrays ([[msfLocal]]) — the whole forest costs the
-    * checkpoint and the collect instead of the keyed loop's jobs per
-    * round. Above it [[msfKeyed]] runs, with static broadcasts when
-    * the vertex set fits the gate. */
+    * The input is checkpointed once, then measured with the gated
+    * collect ([[LocalGraph.collectLongs]]): under the gate the SAME
+    * rounds run on the driver over primitive arrays ([[msfLocal]]) —
+    * the whole forest costs the checkpoint and the collect instead of
+    * the keyed loop's jobs per round. Above it [[msfKeyed]] runs, with
+    * static broadcasts when the vertex set fits ([[LocalGraph.fits]]). */
   def msfOn(ewIn: DataFrame, rounds: Int): DataFrame = {
     val ew = ewIn.localCheckpoint(true)
     val e = ew.select(col("u"), col("v"), col("w"))
-    val rows = if (allLong(e)) collectSmall(e) else None
     // both paths return frames that no longer read ew
-    try rows.filterNot(_.exists(_.anyNull)) match {
+    try collectLongs(e) match {
       case Some(r) => msfLocal(ew, r, rounds)
       case None =>
-        val small = collectSmall(e.select(col("u").as("id"))
-          .unionByName(e.select(col("v").as("id"))).distinct()).isDefined
+        val small = LocalGraph.fits(e.select(col("u").as("id"))
+          .unionByName(e.select(col("v").as("id"))).distinct())
         msfKeyed(ew, rounds, small)
     } finally releaseChk(ew)
   }
@@ -3985,14 +3835,12 @@ object GraphOps {
       rounds: Int): DataFrame = {
     val schema = ew.select(least(col("u"), col("v")).as("u"),
       greatest(col("u"), col("v")).as("v"), col("w").as("w_cents")).schema
-    val ids =
-      sortedDistinct(rows.flatMap(r => Array(r.getLong(0), r.getLong(1))))
-    def ix(r: Row, i: Int): Int =
-      java.util.Arrays.binarySearch(ids, r.getLong(i))
+    val lg = LocalGraph.of(rows)
+    val ids = lg.ids
     // canonical ends as indices — index order is id order, so the
     // order key compares indices where the keyed loop compares ids
-    val lo = rows.map(r => math.min(ix(r, 0), ix(r, 1)))
-    val hi = rows.map(r => math.max(ix(r, 0), ix(r, 1)))
+    val lo = Array.tabulate(rows.length)(e => math.min(lg.src(e), lg.dst(e)))
+    val hi = Array.tabulate(rows.length)(e => math.max(lg.src(e), lg.dst(e)))
     val w = rows.map(_.getLong(2))
     def before(a: Int, b: Int): Boolean =
       w(a) < w(b) || w(a) == w(b) &&

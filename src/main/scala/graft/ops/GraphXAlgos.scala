@@ -3,6 +3,7 @@ package graft.ops
 import graft.{GraphModel, LocalGraph, SessionMemo, Tables}
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.graphx.lib.{LabelPropagation, ShortestPaths}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
@@ -36,11 +37,34 @@ object GraphXAlgos {
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val g = GraphModel.graphxCached(spark, dir)
-    val ranks = g.staticPageRank(10, 0.15).vertices
+    val pr = g.staticPageRank(10, 0.15)
+    collected(pr.vertices
       .map { case (id, rank) => (id, math.rint(rank * 1e6) / 1e6) }
-    ranks.toDF("id", "rank")
+      .toDF("id", "rank")
       .orderBy(col("rank").desc, col("id"))
-      .limit(50)
+      .limit(50), pr, g.vertices, g.edges)
+  }
+
+  /** `out` collected into a local relation, then [[releaseGraphs]]:
+    * for outputs of bounded size (a top-k, a histogram). */
+  private def collected(out: DataFrame, result: Graph[_, _],
+      input: RDD[_]*): DataFrame = {
+    val rows = out.collect()
+    releaseGraphs(result, input: _*)
+    out.sparkSession.createDataFrame(rows.toSeq.asJava, out.schema)
+  }
+
+  /** Unpersists the cached RDDs in the lineage of `result` but not of
+    * `input` (the caller's graph or edges, maybe a session memo): what
+    * the GraphX algorithm cached. Call it once `result`'s output is
+    * collected or checkpointed. */
+  private def releaseGraphs(result: Graph[_, _], input: RDD[_]*): Unit = {
+    def lineage(rs: Seq[RDD[_]], seen: Set[RDD[_]] = Set.empty): Set[RDD[_]] =
+      rs.foldLeft(seen)((s, r) =>
+        if (s(r)) s else lineage(r.dependencies.map(_.rdd), s + r))
+    (lineage(Seq(result.vertices, result.edges)) -- lineage(input))
+      .filter(_.getStorageLevel.isValid)
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Connected components (undirected semantics — GraphX CC ignores
@@ -74,15 +98,17 @@ object GraphXAlgos {
     spark.createDataFrame(rows.asJava, componentSizesSchema)
   }
 
-  /** [[connectedComponents]] by GraphX's `connectedComponents()`. */
+  /** [[connectedComponents]] by GraphX's `connectedComponents()`, one
+    * row per component collected. */
   private[graft] def componentSizesGraphX[VD: ClassTag, ED: ClassTag](
       spark: SparkSession, g: Graph[VD, ED]): DataFrame = {
     import spark.implicits._
-    g.connectedComponents().vertices
+    val cc = g.connectedComponents()
+    collected(cc.vertices
       .map { case (_, comp) => comp }
       .toDF("component")
       .groupBy(col("component")).agg(count(lit(1)).as("size"))
-      .orderBy(col("size").desc, col("component"))
+      .orderBy(col("size").desc, col("component")), cc, g.vertices, g.edges)
   }
 
   /** Per-order co-occurrence fanout cap: at most this many distinct
@@ -623,12 +649,14 @@ object GraphXAlgos {
       t => if (t.dstAttr + t.attr < t.srcAttr)
         Iterator((t.srcId, t.dstAttr + t.attr)) else Iterator.empty,
       math.min)
-    res.vertices
+    val out = res.vertices
       .filter { case (_, d) => d < Double.PositiveInfinity }
       .toDF("id", "wdist_raw")
       .select(col("id"),
         round(col("wdist_raw") + lit(1e-9), 6).as("wdist"))
-      .orderBy(col("wdist"), col("id"))
+      .localCheckpoint(true)
+    releaseGraphs(res, erdd)
+    out.orderBy(col("wdist"), col("id"))
   }
 
   /** Hop distance from the region-0 landmark (ShortestPaths follows
@@ -666,10 +694,13 @@ object GraphXAlgos {
   private[graft] def hopsToGraphX[VD, ED: ClassTag](spark: SparkSession,
       g: Graph[VD, ED], landmark: Long): DataFrame = {
     import spark.implicits._
-    ShortestPaths.run(g, Seq(landmark)).vertices
+    val sp = ShortestPaths.run(g, Seq(landmark))
+    val out = sp.vertices
       .flatMap { case (id, spmap) => spmap.get(landmark).map(d => (id, d)) }
       .toDF("id", "dist_to_region0")
-      .orderBy(col("dist_to_region0"), col("id"))
+      .localCheckpoint(true)
+    releaseGraphs(sp, g.vertices, g.edges)
+    out.orderBy(col("dist_to_region0"), col("id"))
   }
 
   /** Label propagation (5 fixed supersteps) on the membership
@@ -697,13 +728,14 @@ object GraphXAlgos {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       vertexStorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    LabelPropagation.run(g, 5).vertices
+    val lpa = LabelPropagation.run(g, 5)
+    collected(lpa.vertices
       .map { case (_, label) => label }
       .toDF("label")
       .groupBy(col("label")).agg(count(lit(1)).as("size"))
       .select(col("size"))
       .groupBy(col("size")).agg(count(lit(1)).as("n_communities"))
-      .orderBy(col("size"))
+      .orderBy(col("size")), lpa, edges)
   }
 
   /** LOCAL BRIDGES / WEAKEST TIES — the 50 lowest-triangle-support

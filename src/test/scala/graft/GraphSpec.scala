@@ -1378,6 +1378,37 @@ class GraphSpec extends SparkSpec {
     }
     assert(spJobs <= outJobs && spLeft.isEmpty,
       s"$spJobs jobs (output frame $outJobs), left $spLeft")
+    // the GraphX consumers above the gate, on the materialized
+    // graphxCached and edgesCached builds
+    val gx = GraphModel.graphxCached(spark, dir)
+    gx.vertices.count()
+    gx.edges.count()
+    GraphModel.edgesCached(spark, dir).count()
+    val gxRuns: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "componentSizesGraphX" -> (() =>
+        GraphXAlgos.componentSizesGraphX(spark, gx)),
+      "hopsToGraphX" -> (() =>
+        GraphXAlgos.hopsToGraphX(spark, gx, GraphModel.RegionOff)),
+      "pagerank" -> (() => GraphXAlgos.pagerank(spark, dir)),
+      "shortestPathsWeighted" -> (() =>
+        GraphXAlgos.shortestPathsWeighted(spark, dir)),
+      "labelPropagation" -> (() => GraphXAlgos.labelPropagation(spark, dir)))
+    // the checkpoints an output reads are its own
+    val leaks = gxRuns.flatMap { case (name, run) =>
+      var reads = Set.empty[Int]
+      val (_, left) = jobsAndLeaks(s"gx-$name") {
+        val out = run()
+        reads = out.queryExecution.logical.collectLeaves()
+          .collect { case r: LogicalRDD => r.rdd.id }.toSet
+        assert(out.collect().nonEmpty, name)
+      }
+      left.filterNot(i => reads(i.id))
+        .map(i => s"$name: ${i.name} ${i.memSize + i.diskSize} B")
+    }
+    assert(leaks.isEmpty, s"cached RDDs left: $leaks")
+    // and the shared graph is still cached
+    assert(gx.vertices.getStorageLevel.useMemory &&
+      gx.edges.getStorageLevel.useMemory)
   }
 
   test("scc census: every sampled basket's parts land in ONE scc, " +

@@ -300,6 +300,70 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Cycle and attachment edges shaped like the SCC memo's: 1 to 6
+    * directed rings of 2 to 5 parts over ids 0..19 (rings that share a
+    * part form one multi-cycle weak component), random attachments
+    * among those ids (some inside one supernode, some with an end no
+    * ring touches, and 500, off every ring), and a ring of k two-part
+    * supernodes (1000 + 2j ↔ 1001 + 2j) joined by attachments, k from
+    * 30 to 36 on both sides of the 2^SccDoubleRounds = 32 hop
+    * horizon. */
+  private val liftGen: Gen[(List[(Long, Long)], List[(Long, Long)])] = {
+    val id = Gen.choose(0L, 19L)
+    val ring = for {
+      len <- Gen.choose(2, 5)
+      ps <- Gen.pick(len, 0L to 19L)
+    } yield ps.toList.zip(ps.tail.toList :+ ps.head)
+    for {
+      nr <- Gen.choose(1, 6)
+      rings <- Gen.listOfN(nr, ring)
+      m <- Gen.choose(0, 15)
+      att <- Gen.listOfN(m,
+        Gen.zip(Gen.frequency(8 -> id, 1 -> Gen.const(500L)), id))
+      k <- Gen.choose(30, 36)
+    } yield {
+      def s(j: Int): Long = 1000L + 2 * (j % k)
+      val sup = (0 until k).toList.flatMap(j => List((s(j), s(j) + 1),
+        (s(j) + 1, s(j))))
+      val chain = (0 until k).toList.map(j => (s(j) + 1, s(j + 1)))
+      ((rings.flatten ++ sup).distinct, att ++ chain)
+    }
+  }
+
+  test("scc lift: the driver lift matches the keyed contraction and " +
+      "closure on generated cycle and attachment frames (multi-cycle " +
+      "weak components, attachments inside one supernode or off the " +
+      "cycles, a supernode ring past the 2^SccDoubleRounds horizon)") {
+    val sess = spark
+    import sess.implicits._
+    import graft.ops.GraphOps
+    import org.apache.spark.sql.functions.col
+    def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val horizon = 1 << GraphOps.SccDoubleRounds
+    val cases = samples(liftGen, 6)
+    assert(cases.size >= 4)
+    val ringSizes = cases.map { case (cs, as) =>
+      val cyc = cs.toDF("src", "dst")
+      val att = as.toDF("src", "dst")
+      val parts = cyc.select(col("src").as("p"))
+        .unionByName(cyc.select(col("dst").as("p"))).distinct()
+      val local = labels(GraphOps.sccLiftLocal(spark, cyc.collect(),
+        att.collect()))
+      val keyed = GraphOps.sccLiftKeyed(parts, cyc, att)
+      assert(labels(keyed) == local, s"cycles=$cs attachments=$as")
+      GraphOps.releaseChk(keyed)
+      // the supernode ring is one SCC only while it fits the horizon
+      val k = local.count(_._1 >= 1000) / 2
+      val ringLabels = local.collect { case (p, l) if p >= 1000 => l }
+      assert((ringLabels.distinct.size == 1) == (k - 1 <= horizon),
+        s"k=$k labels=$ringLabels")
+      k
+    }
+    assert(ringSizes.exists(_ - 1 <= horizon) &&
+      ringSizes.exists(_ - 1 > horizon), s"ring sizes $ringSizes")
+  }
+
   /** Canonical edges (u < v) over ids 0..19 with weights 1..4, so
     * equal-weight ties are common, plus parallel copies of some edges:
     * exact duplicates and reweighted ones. */
