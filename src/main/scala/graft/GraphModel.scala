@@ -81,27 +81,33 @@ object GraphModel {
     undEdgesCached(spark, dir).repartition(col("dst")).persist()
   }
 
-  /** Edge-incident vertex set of a (src, dst) edge frame with
-    * out-degree (od = 0 marks sinks) — THE single definition of the
-    * iterated-state skeleton the exact PageRank/personalized-PageRank/
-    * LPA family shares; both the per-(session, dir) cache below and
-    * GraphOps' ad-hoc fallback build from here, so the two paths can
-    * never drift. */
-  def vertsWithOutDegree(e: DataFrame): DataFrame = {
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
+  /** `(src, dst)` edges as `(src, dst, w)` with every weight 1 — how an
+    * unweighted caller feeds the weighted graph kernels (unweighted is
+    * weight 1: Σw is then the edge count). */
+  def unitWeighted(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), lit(1L).as("w"))
+
+  /** Edge-incident vertex set of a weighted `(src, dst, w)` edge frame
+    * with out-weight `od` = Σw over the vertex's out-edges (the
+    * out-degree at w = 1; od = 0 marks sinks) — THE single definition
+    * of the iterated-state skeleton the exact PageRank family and LPA
+    * share; the per-(session, dir) cache below and GraphOps' ad-hoc
+    * builds all come from here, so the paths can never drift. */
+  def vertsWithOutDegree(we: DataFrame): DataFrame = {
+    val outdeg = we.groupBy(col("src")).agg(sum(col("w")).as("od"))
+    we.select(col("src").as("id"))
+      .unionByName(we.select(col("dst").as("id"))).distinct()
       .join(outdeg, col("id") === col("src"), "left")
       .select(col("id"), coalesce(col("od"), lit(0L)).as("od"))
   }
 
-  /** Memoized [[vertsWithOutDegree]] of [[dedupEdgesCached]]. Each
-    * exact-iteration query needs exactly this frame every iteration;
-    * building it once per (session, dir) removes a distinct + groupBy +
-    * join over the edge table from every query. */
+  /** Memoized [[vertsWithOutDegree]] of [[dedupEdgesCached]] at w = 1.
+    * Each exact-iteration query needs exactly this frame every
+    * iteration; building it once per (session, dir) removes a distinct
+    * + groupBy + join over the edge table from every query. */
   val dedupVertsCached = SessionMemo { (spark, dir) =>
-    vertsWithOutDegree(dedupEdgesCached(spark, dir)
-      .select(col("src"), col("dst"))).persist()
+    vertsWithOutDegree(unitWeighted(dedupEdgesCached(spark, dir)))
+      .persist()
   }
 
   /** Memoized row count of [[dedupVertsCached]] — the broadcast-gate

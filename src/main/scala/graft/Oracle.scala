@@ -120,7 +120,9 @@ object Oracle {
   }
 
   /** Unrolled fixed-point PageRank: one CTE per iteration replaying
-    * [[graft.ops.GraphOps.pagerankExactOn]]'s integer arithmetic.
+    * [[graft.ops.GraphOps.pagerankRounds]]' integer arithmetic at
+    * w = 1 with the teleport on every vertex
+    * ([[graft.ops.GraphOps.pagerankExactOn]]).
     * DuckDB `//` floors and Spark `div` truncates — identical on the
     * strictly positive ranks/degrees here; SUM(BIGINT) is HUGEINT in
     * DuckDB, hence the explicit casts back to BIGINT. */
@@ -150,9 +152,10 @@ object Oracle {
   }
 
   /** Unrolled weighted fixed-point PageRank, replaying
-    * [[graft.ops.GraphOps.pagerankWeightedExactOn]]: per-(src,dst)
-    * multiplicity weights, per-edge contribution
-    * `(r * w) // wt` (one truncation per edge, exactly Spark's
+    * [[graft.ops.GraphOps.pagerankWeightedExactOn]], the
+    * [[graft.ops.GraphOps.pagerankRounds]] core over per-(src,dst)
+    * multiplicity weights: per-edge contribution `(r * w) // wt` (wt =
+    * the source's out-weight, one truncation per edge, exactly Spark's
     * `div`), then the damped integer update. */
   private def pagerankWeightedExactSql(iters: Int): String = {
     val base = s"""WITH $EdgesCte,
@@ -1268,7 +1271,8 @@ object Oracle {
   /** Unrolled personalized PageRank: same integer iteration as
     * [[pagerankExactSql]] with the teleport term restricted to the
     * BUILDING-customer source set (replaying
-    * [[graft.ops.GraphOps.pagerankPersonalizedOn]]). */
+    * [[graft.ops.GraphOps.pagerankPersonalizedOn]], the
+    * [[graft.ops.GraphOps.pagerankRounds]] core at w = 1). */
   private def pagerankPersonalizedSql(iters: Int): String = {
     val base = s"""WITH $EdgesCte,
          ded AS (SELECT DISTINCT src, dst FROM edges),
@@ -1445,8 +1449,10 @@ object Oracle {
                   AS BIGINT) AS q_micro
          FROM nd"""
 
-  /** Replays [[graft.ops.GraphOps.communityMergeOn]] over the shared
-    * LPA labels: pair deltas ΔQ = (4·m·e_ab − 2·d_a·d_b)/(4m²) in exact
+  /** Replays [[graft.ops.GraphOps.communityMergeOn]] (the weighted
+    * scorer [[graft.ops.GraphOps.communityMergeChk]] at w = 1, so e_ab,
+    * d and m are counts) over the shared LPA labels: pair deltas
+    * ΔQ = (4·m·e_ab − 2·d_a·d_b)/(4m²) in exact
     * micro-units (same remainder-subtraction floor division as
     * modularity), per-community best partner by (delta DESC, partner
     * ASC), mutual-best + positive-delta acceptance. */
@@ -5433,8 +5439,8 @@ object Oracle {
           FROM b LEFT JOIN a ON a.rel = b.rel
           ORDER BY b.rel""",
 
-    // unrolled 5-iteration chain of GraphOps.pagerankExactOn's integer
-    // arithmetic: BIGINT micro-unit ranks, `//` == Spark's `div` on
+    // unrolled 5-iteration chain of GraphOps.pagerankRounds' integer
+    // arithmetic at w = 1: BIGINT micro-unit ranks, `//` == Spark's `div` on
     // positive operands, exact order-independent sums
     "graph_pagerank_exact" -> pagerankExactSql(5),
 

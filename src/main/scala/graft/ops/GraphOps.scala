@@ -246,45 +246,40 @@ object GraphOps {
       .orderBy(col("hop"), col("id")).localCheckpoint(true)
   }
 
-  /** Fixed-point PageRank core over a (src, dst) edge frame: ranks are
-    * BIGINT micro-units (1.0 = 1,000,000), contributions are integer
-    * division by out-degree, and the damping step is `(s * 85) div 100`
-    * — every operation is exact integer arithmetic, so the result is
-    * ORDER-INDEPENDENT and bit-identical on any engine (the property
-    * float PageRank fundamentally lacks: parallel double sums are
-    * order-dependent, which is why the GraphX rank queries are
-    * invariant-tested rather than oracle-checked). Each iteration is
-    * one agg + two joins; rank state is one bigint per vertex, and at
-    * 100 TB the verts/msgs join keys on the same `id` partitioning
-    * every iteration, so with the edge table bucketed by src only the
-    * per-iteration message shuffle moves data. */
-  def pagerankExactOn(edges: DataFrame, iters: Int,
-      sharedVerts: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = roundScope(small) { rs =>
-    // contract: `edges` holds DEDUPLICATED (src, dst) pairs — the
-    // registered callers pass GraphModel.dedupEdgesCached, so repeating
-    // the distinct here would re-shuffle the edge table per call; they
-    // also pass GraphModel.dedupVertsCached as `sharedVerts` so the
-    // vertex/out-degree skeleton is built once per (session, dir)
-    // rather than once per query. verts stays persisted across the
-    // loop (every iteration touches it; left lazy it is re-shuffled
-    // per iteration — measured 13.7 s vs ~3 s at sf0.1).
-    //
-    // out-degree is FOLDED INTO the iterated vertex state (id, od, r):
-    // the contribution step then reads `r div od` straight off the rank
-    // frame instead of re-joining a degree table every iteration — one
-    // join less per iteration. od = 0 marks sink vertices (no outgoing
-    // edges; their rank is damped away, matching the oracle CTE).
-    val e = edges.select(col("src"), col("dst"))
-    // without the shared frame, the same definition by construction
-    val verts = sharedVerts.getOrElse(
-      rs.persist(GraphModel.vertsWithOutDegree(e)))
-    // the r13 exchange diet: with `small` (the SmallGraphVerts gate,
-    // vertex-count frames fit a broadcast), the contrib and msgs
+  /** Fixed-point PageRank core, shared by the unweighted, personalized
+    * and weighted keys: ranks are BIGINT micro-units (1.0 = 1,000,000),
+    * an edge passes `(r * w) div od` (od = the source's total
+    * out-weight, one integer truncation per edge) and the damping step
+    * is `tp + (s * 85) div 100` — every operation is exact integer
+    * arithmetic, so the result is ORDER-INDEPENDENT and bit-identical
+    * on any engine (the property float PageRank fundamentally lacks:
+    * parallel double sums are order-dependent, which is why the GraphX
+    * rank queries are invariant-tested rather than oracle-checked).
+    *
+    * `we(src, dst, w)` is the weighted edge frame (an unweighted caller
+    * passes w = 1, where `(r * 1) div od` is the plain `r div od`);
+    * `verts(id, od, tp)` carries each vertex's out-weight (od = 0 marks
+    * sinks: their rank is damped away, matching the oracle CTE) and
+    * teleport term (150000 everywhere for the plain keys, 0 off the
+    * source set for the personalized one). A vertex starts at 1e6 when
+    * tp > 0, else 0, and only vertices with rank pass messages — on
+    * the plain keys r never drops below 150000, so that filter drops
+    * nothing. Each iteration is one agg + two joins; rank state is one
+    * bigint per vertex, and at 100 TB the verts/msgs join keys on the
+    * same `id` partitioning every iteration, so with the edge table
+    * bucketed by src only the per-iteration message shuffle moves
+    * data. `verts` is read every iteration, so callers pass a
+    * persisted frame (left lazy it is re-shuffled per iteration —
+    * measured 13.7 s vs ~3 s at sf0.1). */
+  private def pagerankRounds(rs: RoundScope, we: DataFrame,
+      verts: DataFrame, iters: Int): DataFrame = {
+    // the r13 exchange diet: with the SmallGraphVerts gate set,
+    // vertex-count frames fit a broadcast, so the contrib and msgs
     // frames broadcast into their joins — per iteration the ONLY
     // exchange left is the message agg; at scale the gate flips back
     // to keyed joins against the src-partitioned edge cache
-    var rank = verts.select(col("id"), col("od"), lit(1000000L).as("r"))
+    var rank = verts.select(col("id"), col("od"),
+      when(col("tp") > 0, lit(1000000L)).otherwise(lit(0L)).as("r"))
     // r16: LAZY per-iteration checkpoint on the V-sized rank state.
     // Un-checkpointed, the whole run is ONE query over 2·iters nested
     // broadcast subtrees, and every iteration's join/agg stage compiles
@@ -297,13 +292,13 @@ object GraphOps {
     // count of driver jobs is unchanged (the r15 session's EAGER
     // variant added a blocking job per iteration and measured no win).
     for (i <- 1 to iters) {
-      val contrib = rank.filter(col("od") > 0)
-        .select(col("id").as("src"), expr("r div od").as("c"))
-      val msgs = e.join(rs.g(contrib), "src")
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+      val contrib = rank.filter(col("od") > 0 && col("r") > 0)
+        .select(col("id").as("src"), col("r"), col("od"))
+      val msgs = we.join(rs.g(contrib), "src")
+        .groupBy(col("dst")).agg(sum(expr("(r * w) div od")).as("s"))
       rank = verts.join(rs.g(msgs), verts("id") === msgs("dst"), "left")
         .select(col("id"), col("od"),
-          (lit(150000L) + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
+          (col("tp") + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
       if (i < iters) rank = rs.chk(rank, eager = false)
     }
     // eager localCheckpoint: materializes the (small) final rank state
@@ -312,6 +307,24 @@ object GraphOps {
     // per-iteration state you would checkpoint to the cluster store
     // instead.
     rank.select(col("id"), col("r")).localCheckpoint(true)
+  }
+
+  /** Unweighted exact PageRank: [[pagerankRounds]] at w = 1 with the
+    * 0.15 teleport on every vertex. Contract: `edges` holds
+    * DEDUPLICATED (src, dst) pairs — the registered caller passes
+    * GraphModel.dedupEdgesCached, so repeating the distinct here would
+    * re-shuffle the edge table per call; it also passes
+    * GraphModel.dedupVertsCached as `sharedVerts` so the vertex /
+    * out-degree skeleton is built once per (session, dir) rather than
+    * once per query (without it, the same definition by construction). */
+  def pagerankExactOn(edges: DataFrame, iters: Int,
+      sharedVerts: Option[DataFrame] = None,
+      small: Boolean = false): DataFrame = roundScope(small) { rs =>
+    val e = GraphModel.unitWeighted(edges)
+    val verts = sharedVerts.getOrElse(
+      rs.persist(GraphModel.vertsWithOutDegree(e)))
+    pagerankRounds(rs, e,
+      verts.select(col("id"), col("od"), lit(150000L).as("tp")), iters)
   }
 
   /** Registered surface: 5 exact iterations on the deduplicated derived
@@ -326,19 +339,18 @@ object GraphOps {
       .orderBy(col("rank_micro").desc, col("id"))
       .limit(50)
 
-  /** Personalized fixed-point PageRank core: the identical integer
-    * iteration to [[pagerankExactOn]] except the teleport term lands
-    * only on the SOURCE set (everyone else restarts at 0), so rank
-    * measures proximity to the sources — "important relative to these
-    * customers", the recommendation/relevance query every graph DB
-    * ships. Source membership is folded into the persisted vertex
-    * state next to out-degree; vertices unreachable from the sources
-    * keep rank 0. Same order-independent arithmetic → DuckDB-oracled
-    * via the same unrolled CTE shape. */
+  /** Personalized exact PageRank: [[pagerankExactOn]]'s iteration with
+    * the teleport term only on the SOURCE set (everyone else restarts
+    * at 0), so rank measures proximity to the sources — "important
+    * relative to these customers", the recommendation/relevance query
+    * every graph DB ships. Vertices unreachable from the sources keep
+    * rank 0; with every vertex a source it is [[pagerankExactOn]].
+    * Same order-independent arithmetic → DuckDB-oracled via the same
+    * unrolled CTE shape. */
   def pagerankPersonalizedOn(edges: DataFrame, sources: DataFrame,
       iters: Int, sharedVerts: Option[DataFrame] = None,
       small: Boolean = false): DataFrame = roundScope(small) { rs =>
-    val e = edges.select(col("src"), col("dst"))
+    val e = GraphModel.unitWeighted(edges)
     val baseVerts = sharedVerts.getOrElse(
       rs.persist(GraphModel.vertsWithOutDegree(e)))
     // the teleport flag is per-query (it depends on `sources`), so the
@@ -350,20 +362,7 @@ object GraphOps {
       .select(col("id"), col("od"),
         when(col("sid").isNotNull, lit(150000L)).otherwise(lit(0L))
           .as("tp")))
-    var rank = verts.select(col("id"), col("od"), col("tp"),
-      when(col("tp") > 0, lit(1000000L)).otherwise(lit(0L)).as("r"))
-    // lazy per-iteration checkpoint — see pagerankExactOn (r16)
-    for (i <- 1 to iters) {
-      val contrib = rank.filter(col("od") > 0 && col("r") > 0)
-        .select(col("id").as("src"), expr("r div od").as("c"))
-      val msgs = e.join(rs.g(contrib), "src")
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      rank = verts.join(rs.g(msgs), verts("id") === msgs("dst"), "left")
-        .select(col("id"), col("od"), col("tp"),
-          (col("tp") + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
-      if (i < iters) rank = rs.chk(rank, eager = false)
-    }
-    rank.select(col("id"), col("r")).localCheckpoint(true)
+    pagerankRounds(rs, e, verts, iters)
   }
 
   /** Registered surface: personalized PageRank from the BUILDING-market
@@ -382,45 +381,24 @@ object GraphOps {
       .limit(50)
   }
 
-  /** Weighted fixed-point PageRank in the same exact-integer
-    * micro-unit arithmetic as [[pagerankExactOn]]: edge weight = the
-    * MULTIPLICITY of (src, dst) in the raw multi-edge table (an order
-    * with 3 lines on one part pushes 3× the rank share down that
-    * edge), contribution per edge = `(r * w) div W` with W = the
-    * source's total out-weight — one integer truncation per edge, so
-    * sums stay order-independent and the whole iteration is
-    * DuckDB-replayable (the oracle-able counterpart of the
-    * invariant-tested float [[GraphXAlgos.pagerankWeighted]]).
-    * Per iteration: one agg + two joins keyed on src/dst/id; the
-    * weighted edge frame is built once (one groupBy over the edge
-    * table) and persisted pre-partitioned on src, the key the
-    * iterated join probes — bucketing at 100 TB. Overflow bound:
-    * r ≤ V·10^6 and w ≤ max multiplicity (single digits here), so
-    * r·w stays orders of magnitude under 2^63 even at 1000×. */
+  /** Weighted exact PageRank: [[pagerankRounds]] with edge weight =
+    * the MULTIPLICITY of (src, dst) in the raw multi-edge table (an
+    * order with 3 lines on one part pushes 3× the rank share down that
+    * edge) — the oracle-able counterpart of the invariant-tested float
+    * [[GraphXAlgos.pagerankWeighted]]. The weighted edge frame is built
+    * once (one groupBy over the edge table) and persisted
+    * pre-partitioned on src, the key the iterated join probes —
+    * bucketing at 100 TB. Overflow bound: r ≤ V·10^6 and w ≤ max
+    * multiplicity (single digits here), so r·w stays orders of
+    * magnitude under 2^63 even at 1000×. */
   def pagerankWeightedExactOn(edgesMulti: DataFrame, iters: Int,
       small: Boolean = false): DataFrame = roundScope(small) { rs =>
     val we = rs.persist(edgesMulti.groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("w"))
       .repartition(col("src")))
-    val wout = we.groupBy(col("src")).agg(sum(col("w")).as("wt"))
-    val verts = rs.persist(we.select(col("src").as("id"))
-      .unionByName(we.select(col("dst").as("id"))).distinct()
-      .join(wout, col("id") === col("src"), "left")
-      .select(col("id"), coalesce(col("wt"), lit(0L)).as("wt")))
-    var rank = verts.select(col("id"), col("wt"),
-      lit(1000000L).as("r"))
-    // lazy per-iteration checkpoint — see pagerankExactOn (r16)
-    for (i <- 1 to iters) {
-      val contrib = rank.filter(col("wt") > 0)
-        .select(col("id").as("src"), col("r"), col("wt"))
-      val msgs = we.join(rs.g(contrib), "src")
-        .groupBy(col("dst")).agg(sum(expr("(r * w) div wt")).as("s"))
-      rank = verts.join(rs.g(msgs), verts("id") === msgs("dst"), "left")
-        .select(col("id"), col("wt"),
-          (lit(150000L) + expr("(coalesce(s, 0) * 85) div 100")).as("r"))
-      if (i < iters) rank = rs.chk(rank, eager = false)
-    }
-    rank.select(col("id"), col("r")).localCheckpoint(true)
+    val verts = rs.persist(GraphModel.vertsWithOutDegree(we))
+    pagerankRounds(rs, we,
+      verts.select(col("id"), col("od"), lit(150000L).as("tp")), iters)
   }
 
   /** Registered surface: 5 exact weighted iterations on the raw
@@ -463,7 +441,7 @@ object GraphOps {
       rs.persist(ded.select(col("src").as("id"))
         .unionByName(ded.select(col("dst").as("id"))).distinct()))
     var lab = verts.select(col("id"), col("id").as("label"))
-    // lazy per-iteration checkpoint — see pagerankExactOn (r16)
+    // lazy per-iteration checkpoint — see pagerankRounds (r16)
     for (i <- 1 to iters) {
       val pick = und.join(rs.g(lab), und("n") === lab("id"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
@@ -605,14 +583,11 @@ object GraphOps {
     (d, d.count())
   }
 
-  /** Memoized 1-row deduped-edge-count frame (m, DECIMAL(38,0)) — the
-    * modularity denominator every merge/move phase crosses in; one
-    * count over the cached edge frame per (session, dir). */
+  /** Memoized [[weightRow]] of the deduped edges at w = 1 (the edge
+    * count) — one agg over the cached edge frame per (session, dir). */
   private[graft] val edgeCountRowCached = SessionMemo { (spark, dir) =>
-    GraphModel.dedupEdgesCached(spark, dir)
-      .agg(count(lit(1))
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("m"))
-      .localCheckpoint(true)
+    weightRow(GraphModel.unitWeighted(
+      GraphModel.dedupEdgesCached(spark, dir))).localCheckpoint(true)
   }
 
   /** Memoized Louvain labeling ([[louvainLabels]] over the shared LPA
@@ -705,13 +680,22 @@ object GraphOps {
     * 2^63 at m ≈ 1.5e6 edges — within 10× of the sf0.1 corpus. Cost on
     * top of the shared LPA labels: one degree agg + two keyed sums +
     * three single-row joins. */
-  /** Undirected degree (in+out over the dedup edge rows) — shared by
-    * the modularity and assortativity scalars so the two diagnostics
-    * can never disagree on what "degree" means. */
-  private def undDegreesOf(ded: DataFrame): DataFrame =
-    ded.select(col("src").as("id"))
-      .unionByName(ded.select(col("dst").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+  /** Undirected weighted degree `(id, d)`: Σw over a vertex's in- and
+    * out-edges of `wded(src, dst, w)` (the plain degree at w = 1) —
+    * shared by the modularity, merge, assortativity and weighted
+    * Louvain reads so they can never disagree on what "degree"
+    * means. */
+  private def undDegreesOf(wded: DataFrame): DataFrame =
+    wded.select(col("src").as("id"), col("w"))
+      .unionByName(wded.select(col("dst").as("id"), col("w")))
+      .groupBy(col("id")).agg(sum(col("w")).as("d"))
+
+  /** The 1-row total weight `m` = Σw of `wded(src, dst, w)` as
+    * DECIMAL(38,0) (the edge count at w = 1, 0 on no edges) — the
+    * modularity denominator every merge/move phase crosses in. */
+  private def weightRow(wded: DataFrame): DataFrame =
+    wded.agg(coalesce(sum(col("w")), lit(0L))
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("m"))
 
   /** Engine-neutral floor quotient of `num/den` scaled values, NULL on
     * a zero denominator (Spark `div` yields NULL there but DuckDB `//`
@@ -733,7 +717,8 @@ object GraphOps {
     * monotonicity invariant in GraphSpec. */
   def modularityStatsOn(ded: DataFrame, lab: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val deg = undDegreesOf(ded)
+    val wded = GraphModel.unitWeighted(ded)
+    val deg = undDegreesOf(wded)
     val parts = deg.join(lab, "id")
       .groupBy(col("label")).agg(sum(col("d")).cast(dec).as("dc"))
       .agg(sum(col("dc") * col("dc")).cast(dec).as("sum_dc2"),
@@ -743,7 +728,7 @@ object GraphOps {
       .join(lab.select(col("id").as("dst"), col("label").as("dl")), "dst")
       .filter(col("sl") === col("dl"))
       .agg(count(lit(1)).cast(dec).as("sum_intra"))
-    val out = ded.agg(count(lit(1)).cast(dec).as("m"))
+    val out = weightRow(wded)
       .crossJoin(parts).crossJoin(intra) // three 1-row frames
       .select(col("m"), col("n_communities"), col("sum_intra"),
         col("sum_dc2"),
@@ -782,48 +767,55 @@ object GraphOps {
     * window top-1, and a self-join of the O(#communities) best list —
     * every frame after the first agg is community-sized, so the round
     * scales with the SUMMARY graph, not the input graph. */
-  def communityMergeOn(ded: DataFrame, lab: DataFrame): DataFrame =
-    communityMergeOn(ded, lab, undDegreesOf(ded))
-
-  /** [[communityMergeOn]] with the per-vertex degree frame supplied by
-    * the caller: degrees are a property of `ded` alone and never change
-    * across label contractions, so iterative callers ([[louvainLabels]])
-    * compute them ONCE and pass the checkpointed frame in instead of
-    * re-aggregating the edge list every round. */
-  def communityMergeOn(ded: DataFrame, lab: DataFrame,
-      deg: DataFrame): DataFrame = {
-    val (out, hs) = communityMergeChk(ded, lab, deg)
+  def communityMergeOn(ded: DataFrame, lab: DataFrame): DataFrame = {
+    val wded = GraphModel.unitWeighted(ded)
+    val (out, hs) = communityMergeChk(wded, lab, undDegreesOf(wded))
     val res = out.localCheckpoint(true)
     hs.foreach(releaseChk)
     res
   }
 
-  /** [[communityMergeOn]] returning the round's eager checkpoint
-    * handles so iterative callers ([[louvainLabels]]) can release them
-    * as soon as the next label checkpoint has absorbed the result —
-    * the [[minLabelComponentsChk]] discipline. The checkpoint inside
-    * exists because this plan reads `scored` twice (both directed
-    * copies of each pair) and `best` twice (the mutual-best back
-    * join), and Catalyst does not deduplicate common subplans — the
-    * labeled-edge join would otherwise replay 4× per action. The
-    * per-community winner is a combinable max(struct) agg, not a
-    * window: no sort, map-side partials, the [[corpusBpeMerges]]
+  /** The merge scorer over weighted edges `wded(src, dst, w)` with the
+    * matching weighted degree frame `deg(id, d)`: weighted modularity
+    * Q = Σ_c [w_c/W − (D_c/(2W))²] (W = Σw, D = weighted degree) keeps
+    * the pair delta's exact-integer shape,
+    *
+    *   ΔQ(a,b) = (4·W·e_ab − 2·D_a·D_b) / (4·W²),
+    *
+    * with e_ab = Σw between a and b — at w = 1 every sum is the count
+    * [[communityMergeOn]] scores. Returns the round's eager checkpoint
+    * handles so the caller releases them once the result is
+    * materialized — the [[minLabelComponentsChk]] discipline. The
+    * checkpoint inside exists because this plan reads `scored` twice
+    * (both directed copies of each pair) and `best` twice (the
+    * mutual-best back join), and Catalyst does not deduplicate common
+    * subplans — the labeled-edge join would otherwise replay 4× per
+    * action. The per-community winner is a combinable max(struct) agg,
+    * not a window: no sort, map-side partials, the [[corpusBpeMerges]]
     * winner-selection shape. */
-  private[graft] def communityMergeChk(ded: DataFrame, lab: DataFrame,
+  private[graft] def communityMergeChk(wded: DataFrame, lab: DataFrame,
       deg: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val (dc, pairs) = communitySummary(wded, lab, deg)
+    mergeDecisionsOn(pairs, dc, weightRow(wded))
+  }
+
+  /** The community summary of labeling `lab` over `wded(src, dst, w)`:
+    * `dc(label, dcv)` = the members' summed degrees from `deg(id, d)`,
+    * and `pairs(la < lb, e_ab)` = Σw over the edges between two
+    * communities (the edge count at w = 1). */
+  private def communitySummary(wded: DataFrame, lab: DataFrame,
+      deg: DataFrame): (DataFrame, DataFrame) = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val dc = deg.join(lab, "id")
       .groupBy(col("label")).agg(sum(col("d")).cast(dec).as("dcv"))
-    val le = ded
+    val pairs = wded
       .join(lab.select(col("id").as("src"), col("label").as("sl")), "src")
       .join(lab.select(col("id").as("dst"), col("label").as("dl")), "dst")
       .filter(col("sl") =!= col("dl"))
       .select(least(col("sl"), col("dl")).as("la"),
-        greatest(col("sl"), col("dl")).as("lb"))
-    val pairs = le.groupBy(col("la"), col("lb"))
-      .agg(count(lit(1)).as("e_ab"))
-    val mrow = ded.agg(count(lit(1)).cast(dec).as("m"))
-    mergeDecisionsOn(pairs, dc, mrow)
+        greatest(col("sl"), col("dl")).as("lb"), col("w"))
+      .groupBy(col("la"), col("lb")).agg(sum(col("w")).as("e_ab"))
+    (dc, pairs)
   }
 
   /** The merge-round decision core over an already-SUMMARIZED graph:
@@ -909,10 +901,9 @@ object GraphOps {
     * where a single merge round under-fits. */
   def louvainLabels(ded: DataFrame, lab0: DataFrame,
       rounds: Int): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val deg = undDegreesOf(ded).localCheckpoint(true)
-    val mrow = ded.agg(count(lit(1)).cast(dec).as("m"))
-      .localCheckpoint(true)
+    val wded = GraphModel.unitWeighted(ded)
+    val deg = undDegreesOf(wded).localCheckpoint(true)
+    val mrow = weightRow(wded).localCheckpoint(true)
     try louvainLabelsOn(ded, lab0, rounds, deg, mrow,
       deg.count() <= SmallGraphVerts)
     finally Seq(deg, mrow).foreach(releaseChk)
@@ -938,16 +929,16 @@ object GraphOps {
   private def louvainLabelsOn(ded: DataFrame, lab0: DataFrame,
       rounds: Int, deg: DataFrame, mrow: DataFrame,
       small: Boolean): DataFrame =
-    louvainContractedOn(
-      ded.select(col("src"), col("dst"), lit(1L).as("w")),
-      lab0, rounds, deg, mrow, small)
+    louvainContractedOn(GraphModel.unitWeighted(ded), lab0, rounds, deg,
+      mrow, small)
 
   /** The weighted generalization [[louvainLabelsOn]] delegates to
     * (unweighted = weight 1, where Σw degenerates to the edge count):
     * `wded(src, dst, w)` with `deg` = the matching (weighted) degree
-    * frame and `mrow` = the 1-row Σw. ΔQ = (4·W·w_ab − 2·D_a·D_b) /
+    * frame and `mrow` = the 1-row Σw. ΔQ = (4·W·e_ab − 2·D_a·D_b) /
     * (4·W²) has the identical exact-integer shape for both, so the
-    * decision core, the contraction (w_ab and D_c are additive under
+    * summary ([[communitySummary]], shared with [[communityMergeChk]]),
+    * the decision core, the contraction (e_ab and D_c are additive under
     * min-label merges) and the final one-pass remap are shared —
     * [[graphLouvainWeighted]] gets the r11 contraction for free. */
   private def louvainContractedOn(wded: DataFrame, lab0: DataFrame,
@@ -956,17 +947,9 @@ object GraphOps {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // community-sized output but an O(V) join to compute — checkpoint,
     // or the un-checkpointed scored frame below replays it ~4× a round
-    var dc = rs.chk(deg.join(lab0, "id")
-      .groupBy(col("label")).agg(sum(col("d")).cast(dec).as("dcv")))
-    var pairs = rs.chk(wded
-      .join(lab0.select(col("id").as("src"), col("label").as("sl")),
-        "src")
-      .join(lab0.select(col("id").as("dst"), col("label").as("dl")),
-        "dst")
-      .filter(col("sl") =!= col("dl"))
-      .select(least(col("sl"), col("dl")).as("la"),
-        greatest(col("sl"), col("dl")).as("lb"), col("w"))
-      .groupBy(col("la"), col("lb")).agg(sum(col("w")).as("e_ab")))
+    val (dc0, pairs0) = communitySummary(wded, lab0, deg)
+    var dc = rs.chk(dc0)
+    var pairs = rs.chk(pairs0)
     // the accepted-merge map of every round that merged, in order
     var maps = Vector.empty[DataFrame]
     var r = 1
@@ -1143,10 +1126,9 @@ object GraphOps {
     * (which can only fuse whole communities) cannot repair. */
   def louvainMoveLabels(ded: DataFrame, lab0: DataFrame,
       rounds: Int): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val deg = undDegreesOf(ded).localCheckpoint(true)
-    val mrow = ded.agg(count(lit(1)).cast(dec).as("m"))
-      .localCheckpoint(true)
+    val wded = GraphModel.unitWeighted(ded)
+    val deg = undDegreesOf(wded).localCheckpoint(true)
+    val mrow = weightRow(wded).localCheckpoint(true)
     val und = ded.select(col("src").as("v"), col("dst").as("n"))
       .unionByName(ded.select(col("dst").as("v"), col("src").as("n")))
     try louvainMoveLabelsOn(und, lab0, rounds, deg, mrow,
@@ -1359,70 +1341,12 @@ object GraphOps {
     out
   }
 
-  /** WEIGHTED merge scorer — [[communityMergeChk]] over a weighted
-    * edge frame `wded(src, dst, w)`: weighted modularity
-    * Q = Σ_c [w_c/W − (D_c/(2W))²] with W = Σw and D = weighted
-    * degree, so the pair delta keeps the same exact-integer shape,
-    *
-    *   ΔQ(a,b) = (4·W·w_ab − 2·D_a·D_b) / (4·W²),
-    *
-    * with every count replaced by a weight sum (DECIMAL(38,0) —
-    * multiplicities push the micro products past 2^63 sooner than
-    * counts do). Same checkpoint + max(struct) winner discipline. */
-  private[graft] def communityMergeWeightedChk(wded: DataFrame,
-      lab: DataFrame, wdeg: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val dc = wdeg.join(lab, "id")
-      .groupBy(col("label")).agg(sum(col("d")).cast(dec).as("dcv"))
-    val le = wded
-      .join(lab.select(col("id").as("src"), col("label").as("sl")), "src")
-      .join(lab.select(col("id").as("dst"), col("label").as("dl")), "dst")
-      .filter(col("sl") =!= col("dl"))
-      .select(least(col("sl"), col("dl")).as("la"),
-        greatest(col("sl"), col("dl")).as("lb"), col("w"))
-    val pairs = le.groupBy(col("la"), col("lb"))
-      .agg(sum(col("w")).as("w_ab"))
-    val mrow = wded.agg(sum(col("w")).cast(dec).as("m"))
-    val scored = pairs
-      .join(dc.select(col("label").as("la"), col("dcv").as("da")), "la")
-      .join(dc.select(col("label").as("lb"), col("dcv").as("db")), "lb")
-      .crossJoin(mrow) // 1-row frame
-      .select(col("la"), col("lb"), col("w_ab"),
-        (lit(1000000L).cast(dec) * (lit(4L).cast(dec) * col("m")
-          * col("w_ab").cast(dec)
-          - lit(2L).cast(dec) * col("da") * col("db"))).as("num"),
-        (lit(4L).cast(dec) * col("m") * col("m")).as("den"))
-      .select(col("la"), col("lb"), col("w_ab"),
-        expr(FloorDivMicro).as("delta_micro"))
-      .localCheckpoint(true)
-    val cand = scored
-      .select(col("la").as("label"), col("lb").as("partner"),
-        col("w_ab"), col("delta_micro"))
-      .unionByName(scored.select(col("lb").as("label"),
-        col("la").as("partner"), col("w_ab"), col("delta_micro")))
-    val best = cand.groupBy(col("label"))
-      .agg(max(struct(col("delta_micro"), (-col("partner")).as("np"),
-        col("w_ab"))).as("m"))
-      .select(col("label"), (-col("m.np")).as("partner"),
-        col("m.w_ab").as("w_ab"), col("m.delta_micro").as("delta_micro"))
-    val back = best.select(col("label").as("__bl"),
-      col("partner").as("__bp"))
-    val out = best
-      .join(back, col("partner") === col("__bl"), "left")
-      .select(col("label"), col("partner"), col("w_ab"),
-        col("delta_micro"),
-        coalesce(col("__bp") === col("label")
-          && col("delta_micro") > 0L, lit(false)).as("accepted"))
-      .orderBy(col("label"))
-    (out, Seq(scored))
-  }
-
   /** Registered surface: WEIGHTED Louvain — [[LouvainRounds]]
     * mutual-best merge rounds where edge MULTIPLICITY is the weight
     * (a customer with 30 orders binds 30× harder than one with 1 —
     * the semantics a multigraph wants), seeded by the shared LPA
     * labels; output = final community sizes. Same contraction loop
-    * as [[graphLouvain]] with the weighted scorer. */
+    * as [[graphLouvain]], fed the multiplicities instead of w = 1. */
   def graphLouvainWeighted(spark: SparkSession,
       dir: String): DataFrame = {
     val wded = GraphModel.edgesCached(spark, dir)
@@ -1433,20 +1357,15 @@ object GraphOps {
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("w"))
       .localCheckpoint(true)
-    // wdeg and mrow stay LAZY (r15 job-count trim): each is one cheap
-    // agg over the checkpointed wded, read once (dc0 seed) / once per
-    // round (the broadcast 1-row cross) — replaying those beats three
-    // blocking checkpoint jobs; the broadcast gate rides the session
-    // vertex count (wded's vertex set IS the edge-incident set) so the
-    // wdeg.count() job disappears too.
-    val wdeg = wded
-      .select(col("src").as("id"), col("w"))
-      .unionByName(wded.select(col("dst").as("id"), col("w")))
-      .groupBy(col("id")).agg(sum(col("w")).as("d"))
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val mrow = wded.agg(sum(col("w")).cast(dec).as("m"))
+    // the degree and Σw frames stay LAZY (r15 job-count trim): each is
+    // one cheap agg over the checkpointed wded, read once (dc0 seed) /
+    // once per round (the broadcast 1-row cross) — replaying those
+    // beats three blocking checkpoint jobs; the broadcast gate rides the
+    // session vertex count (wded's vertex set IS the edge-incident set)
+    // so a degree count job disappears too.
     val labs = louvainContractedOn(wded, lpaLabelsCached(spark, dir),
-      LouvainRounds, wdeg, mrow, smallGraph(spark, dir))
+      LouvainRounds, undDegreesOf(wded), weightRow(wded),
+      smallGraph(spark, dir))
     val out = labs
       .groupBy(col("label")).agg(count(lit(1)).as("size"))
       .orderBy(col("label")).localCheckpoint(true)
@@ -1468,7 +1387,7 @@ object GraphOps {
   def graphAssortativity(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val ded = GraphModel.dedupEdgesCached(spark, dir)
-    val deg = undDegreesOf(ded)
+    val deg = undDegreesOf(GraphModel.unitWeighted(ded))
     val ends = ded
       .join(deg.select(col("id").as("src"), col("d").as("dx")), "src")
       .join(deg.select(col("id").as("dst"), col("d").as("dy")), "dst")
@@ -1504,7 +1423,7 @@ object GraphOps {
     * join. φ in exact permille by integer div, NULL when N_k < 2. */
   def graphRichClub(spark: SparkSession, dir: String): DataFrame = {
     val ded = GraphModel.dedupEdgesCached(spark, dir)
-    val deg = undDegreesOf(ded)
+    val deg = undDegreesOf(GraphModel.unitWeighted(ded))
     val em = ded
       .join(deg.select(col("id").as("src"), col("d").as("dx")), "src")
       .join(deg.select(col("id").as("dst"), col("d").as("dy")), "dst")
@@ -1584,7 +1503,7 @@ object GraphOps {
     * the float L2 normalization of textbook HITS is what makes it
     * iteration-order-sensitive; dropping it keeps the same top-k
     * ordering per round and makes every value an exact BIGINT any
-    * engine reproduces (the pagerankExactOn trick). Magnitudes grow as
+    * engine reproduces (the pagerankRounds trick). Magnitudes grow as
     * (max-indeg × max-outdeg)^iters, so 2 rounds stay far below 2^63
     * even at 1000× this corpus (documented bound, not a runtime
     * check). Per round: two keyed equi-join + sum-agg pairs — all
@@ -1616,7 +1535,7 @@ object GraphOps {
     // broadcasts into the edge joins; auth₁ is just the in-degree (no
     // join — hub₀ ≡ 1). The full-vertex zero rows are restored ONCE at
     // the end by two broadcast left joins.
-    // lazy per-step checkpoints — see pagerankExactOn (r16): each
+    // lazy per-step checkpoints — see pagerankRounds (r16): each
     // auth/hub step reads a flat materialized state instead of the
     // one-deeper nested broadcast subtree
     def chk(f: DataFrame): DataFrame = rs.chk(f, eager = false)
@@ -1691,7 +1610,7 @@ object GraphOps {
     val (_, nVerts) = undDegCached(spark, dir)
     val g = gate(nVerts <= SmallGraphVerts) _
     // lazy per-round checkpoint on the sparse path-count state — see
-    // pagerankExactOn (r16). The result is a lazy plan over them, so
+    // pagerankRounds (r16). The result is a lazy plan over them, so
     // they stay: releasing them first would cost a materializing job.
     var p = e.groupBy(col("dst")).agg(count(lit(1)).as("p"))
       .select(col("dst").as("id"), col("p")).localCheckpoint(false)
@@ -1858,7 +1777,7 @@ object GraphOps {
     * the float `sigma_v/sigma_w * (1 + delta_w)` with the division
     * deferred to one integer truncation per term, so the sum is
     * order-independent and bit-identical on any engine (the
-    * [[pagerankExactOn]] discipline; textbook float betweenness is
+    * [[pagerankRounds]] discipline; textbook float betweenness is
     * merge-order-sensitive, which is why graph DBs ship it
     * unoracle-able). Bounded depth + landmark sampling is the standard
     * 100 TB betweenness estimator (exact Brandes is O(V·E)); each
@@ -3496,19 +3415,8 @@ object GraphOps {
     * recomputed. The edge set is acyclic by construction (an
     * SCC-cross cycle would have merged its SCCs). */
   def graphCondensation(spark: SparkSession, dir: String): DataFrame = {
-    val (lifted, edges) = sccLifted(spark, dir)
-    val nodes = lifted.groupBy(col("sl"))
-      .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members"))
-    val idlab = lifted
-      .join(nodes.select(col("sl"), col("scc_id")), "sl")
-      .select(col("id"), col("scc_id"))
-    val adj = edges
-      .join(idlab.select(col("id").as("src"), col("scc_id").as("ssrc")),
-        Seq("src"))
-      .join(idlab.select(col("id").as("dst"), col("scc_id").as("sdst")),
-        Seq("dst"))
-      .filter(col("ssrc") =!= col("sdst"))
-      .groupBy(col("ssrc"), col("sdst"))
+    val (nodes, cross) = condensationOf(sccLifted(spark, dir))
+    val adj = cross.groupBy(col("ssrc"), col("sdst"))
       .agg(count(lit(1)).as("ne"))
     // LEFT: an SCC with no successors (a condensation sink, or the
     // single SCC a small sample collapses to) survives with a NULL
@@ -3518,6 +3426,28 @@ object GraphOps {
         col("sdst").as("succ_scc"),
         coalesce(col("ne"), lit(0L)).as("n_edges"))
       .orderBy(col("scc_id"), col("succ_scc"))
+  }
+
+  /** The condensation of [[sccLifted]]'s `(lifted, edges)`: `nodes`
+    * (sl, scc_id = min member id, n_members), passed through `pin`, and
+    * `cross(ssrc, sdst)` — one row per original edge between two
+    * different SCCs, ends labeled by scc_id off the pinned nodes. */
+  private def condensationOf(lifted: (DataFrame, DataFrame),
+      pin: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+    val (ids, edges) = lifted
+    val nodes = pin(ids.groupBy(col("sl"))
+      .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members")))
+    val idlab = ids
+      .join(nodes.select(col("sl"), col("scc_id")), "sl")
+      .select(col("id"), col("scc_id"))
+    val cross = edges
+      .join(idlab.select(col("id").as("src"), col("scc_id").as("ssrc")),
+        Seq("src"))
+      .join(idlab.select(col("id").as("dst"), col("scc_id").as("sdst")),
+        Seq("dst"))
+      .filter(col("ssrc") =!= col("sdst"))
+      .select(col("ssrc"), col("sdst"))
+    (nodes, cross)
   }
 
   /** Round budget for [[graphCondensationLayers]] — bounded so the
@@ -3536,19 +3466,8 @@ object GraphOps {
     * keyed join + max agg over SCC-sized frames. */
   def graphCondensationLayers(spark: SparkSession,
       dir: String): DataFrame = roundScope(small = false) { rs =>
-    val (lifted, edges) = sccLifted(spark, dir)
-    val nodes = rs.chk(lifted.groupBy(col("sl"))
-      .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members")))
-    val idlab = lifted
-      .join(nodes.select(col("sl"), col("scc_id")), "sl")
-      .select(col("id"), col("scc_id"))
-    val dadj = rs.chk(edges
-      .join(idlab.select(col("id").as("src"), col("scc_id").as("ssrc")),
-        Seq("src"))
-      .join(idlab.select(col("id").as("dst"), col("scc_id").as("sdst")),
-        Seq("dst"))
-      .filter(col("ssrc") =!= col("sdst"))
-      .select(col("ssrc"), col("sdst")).distinct())
+    val (nodes, cross) = condensationOf(sccLifted(spark, dir), rs.chk(_))
+    val dadj = rs.chk(cross.distinct())
     var lay = rs.chk(nodes.select(col("scc_id"), lit(0).as("l")))
     for (_ <- 1 to CondLayerRounds) {
       val cand = dadj
@@ -3976,7 +3895,8 @@ object GraphOps {
     * passes BIGINT at 10⁹ vertices. */
   def graphDegreeCentralization(spark: SparkSession, dir: String)
       : DataFrame =
-    undDegreesOf(GraphModel.dedupEdgesCached(spark, dir))
+    undDegreesOf(GraphModel.unitWeighted(
+        GraphModel.dedupEdgesCached(spark, dir)))
       .agg(count(lit(1)).as("n_vertices"),
         max(col("d")).as("max_degree"),
         sum(col("d")).as("sum_deg"))

@@ -116,7 +116,7 @@ class GraphSpec extends SparkSpec {
       .unionByName(w1.select(col("dst").as("id"), col("w")))
       .groupBy(col("id"))
       .agg(org.apache.spark.sql.functions.sum(col("w")).as("d"))
-    val (o1, h1) = GraphOps.communityMergeWeightedChk(w1, labs2, wdeg1)
+    val (o1, h1) = GraphOps.communityMergeChk(w1, labs2, wdeg1)
     val got = o1.collect().map(x => (x.getAs[Long]("label"),
       x.getAs[Long]("delta_micro"), x.getAs[Boolean]("accepted"))).toSet
     h1.foreach(_.unpersist(false))
@@ -131,7 +131,7 @@ class GraphSpec extends SparkSpec {
       .unionByName(wb.select(col("dst").as("id"), col("w")))
       .groupBy(col("id"))
       .agg(org.apache.spark.sql.functions.sum(col("w")).as("d"))
-    val (o2, h2) = GraphOps.communityMergeWeightedChk(wb, labs2, wdegB)
+    val (o2, h2) = GraphOps.communityMergeChk(wb, labs2, wdegB)
     val got2 = o2.collect().map(x => (x.getAs[Long]("label"),
       x.getAs[Long]("delta_micro"), x.getAs[Boolean]("accepted"))).toSet
     h2.foreach(_.unpersist(false))
@@ -562,6 +562,28 @@ class GraphSpec extends SparkSpec {
     // contrib to 2: (1e6*2) div 3 = 666666 → 150000 + 566666
     // contrib to 3: (1e6*1) div 3 = 333333 → 150000 + 283333
     assert(got(2L) == 716666L && got(3L) == 433333L && got(1L) == 150000L)
+  }
+
+  test("personalized pagerank with every vertex a source is the " +
+      "unweighted iteration") {
+    import spark.implicits._
+    def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def allSources(e: org.apache.spark.sql.DataFrame) =
+      e.select(col("src").as("sid"))
+        .unionByName(e.select(col("dst").as("sid")))
+    // every vertex teleports 0.15 and starts at 1.0 — the plain setup
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val p = ranks(GraphOps.pagerankPersonalizedOn(path, allSources(path), 2))
+    assert(p == ranks(GraphOps.pagerankExactOn(path, 2)), p)
+    assert(p == Map(1L -> 150000L, 2L -> 277500L, 3L -> 1000000L), p)
+    val ded = GraphModel.dedupEdgesCached(spark, sfDir)
+    val verts = Some(GraphModel.dedupVertsCached(spark, sfDir))
+    val got = ranks(GraphOps.pagerankPersonalizedOn(ded,
+      allSources(ded), 5, verts, small = true))
+    val want = ranks(GraphOps.pagerankExactOn(ded, 5, verts, small = true))
+    assert(got.size == GraphModel.dedupVertCountCached(spark, sfDir))
+    assert(got == want)
   }
 
   test("betweenness deltas match hand-computed Brandes on a diamond") {

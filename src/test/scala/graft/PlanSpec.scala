@@ -271,8 +271,8 @@ class PlanSpec extends SparkSpec {
     val deg = ded.select(col("src").as("id"))
       .unionByName(ded.select(col("dst").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
-    val (out, hs) =
-      graft.ops.GraphOps.communityMergeChk(ded, lab, deg)
+    val (out, hs) = graft.ops.GraphOps.communityMergeChk(
+      graft.GraphModel.unitWeighted(ded), lab, deg)
     val ws = out.queryExecution.optimizedPlan.collect {
       case w: LWindow => w
     }
