@@ -12,19 +12,29 @@ import scala.collection.mutable
   * in-CSR built on first use. `LocalGraph(src, dst)` takes the
   * edge-incident ids as its vertex set; `LocalGraph(verts, src, dst)`
   * takes `verts`, isolated ids included, and drops every edge with an
-  * end outside it. Rows come from the gated collect
-  * [[LocalGraph.collectLongs]]. Methods: weak [[components]], directed
-  * [[hopsTo]], bounded-horizon SCC labels ([[sccLabels]]: Tarjan plus
-  * depth-capped searches); duplicate edges and self-loops change none
-  * of them. */
+  * end outside it. Each edge may carry one `Long` [[weight]], kept
+  * with its edge through that drop; an unweighted graph holds no
+  * weight array and weighs every edge 1. Rows come from the gated
+  * collect [[LocalGraph.collectLongs]]. Methods: weak [[components]],
+  * directed [[hopsTo]], bounded-horizon SCC labels ([[sccLabels]]:
+  * Tarjan plus depth-capped searches), which duplicate edges,
+  * self-loops and weights change none of; and the weighted Borůvka
+  * forest [[msf]]. */
 final class LocalGraph private (val ids: Array[Long],
-    val src: Array[Int], val dst: Array[Int]) {
+    val src: Array[Int], val dst: Array[Int],
+    weights: Option[Array[Long]]) {
   import LocalGraph.{MinUnionFind, csr}
 
   private lazy val (outOff, outDst) = csr(size, src, dst)
   private lazy val (inOff, inSrc) = csr(size, dst, src)
 
   def size: Int = ids.length
+
+  /** The weight of edge `e`: 1 on an unweighted graph. */
+  def weight(e: Int): Long = weights match {
+    case Some(w) => w(e)
+    case None => 1L
+  }
 
   /** The index of `id`, or a negative number if `id` is not a vertex. */
   def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
@@ -80,6 +90,50 @@ final class LocalGraph private (val ids: Array[Long],
       }
     }
     label
+  }
+
+  /** The minimum spanning forest by synchronous Borůvka over at most
+    * `rounds` rounds, edge direction ignored: per round every component
+    * picks its least incident cross edge under the total order
+    * (weight, least end, greatest end), all picks are unioned at once,
+    * and the picked edges join the forest. Not Kruskal, so a
+    * budget-truncated run returns the same partial forest as the keyed
+    * loop (`GraphOps.msfKeyed`) and the oracle. The forest edges as
+    * distinct (least id, greatest id, weight), ascending. */
+  def msf(rounds: Int): Seq[(Long, Long, Long)] = {
+    val m = src.length
+    // canonical ends as indices — index order is id order, so the
+    // order key compares indices where the keyed loop compares ids
+    val lo = Array.tabulate(m)(e => math.min(src(e), dst(e)))
+    val hi = Array.tabulate(m)(e => math.max(src(e), dst(e)))
+    def before(a: Int, b: Int): Boolean = {
+      val (wa, wb) = (weight(a), weight(b))
+      wa < wb || wa == wb &&
+        (lo(a) < lo(b) || lo(a) == lo(b) && hi(a) < hi(b))
+    }
+    val uf = new MinUnionFind(size)
+    val comp = new Array[Int](size)
+    val best = new Array[Int](size)
+    val chosen = new Array[Boolean](m)
+    var round = 0
+    var done = false
+    while (round < rounds && !done) {
+      round += 1
+      for (i <- 0 until size) { comp(i) = uf.find(i); best(i) = -1 }
+      for (e <- 0 until m) {
+        val ca = comp(lo(e))
+        val cb = comp(hi(e))
+        if (ca != cb) {
+          if (best(ca) < 0 || before(e, best(ca))) best(ca) = e
+          if (best(cb) < 0 || before(e, best(cb))) best(cb) = e
+        }
+      }
+      val picks = best.filter(_ >= 0)
+      done = picks.isEmpty
+      picks.foreach { e => chosen(e) = true; uf.union(lo(e), hi(e)) }
+    }
+    (0 until m).filter(chosen)
+      .map(e => (ids(lo(e)), ids(hi(e)), weight(e))).distinct.sorted
   }
 
   /** Strongly connected components by Tarjan's algorithm over the
@@ -152,9 +206,10 @@ object LocalGraph {
     apply(src ++ dst, src, dst)
 
   /** The graph over the vertex ids `verts` (duplicates allowed) and
-    * the edges `src(e) → dst(e)` with both ends in `verts`, in order. */
-  def apply(verts: Array[Long], src: Array[Long],
-      dst: Array[Long]): LocalGraph = {
+    * the edges `src(e) → dst(e)` with both ends in `verts`, in order,
+    * each weighing `w(e)` if given. */
+  def apply(verts: Array[Long], src: Array[Long], dst: Array[Long],
+      w: Option[Array[Long]] = None): LocalGraph = {
     // ascending distinct ids: binarySearch is the id → index map
     val u = verts.sorted
     var n = 0
@@ -162,16 +217,24 @@ object LocalGraph {
     val ids = java.util.Arrays.copyOf(u, n)
     val s = src.map(java.util.Arrays.binarySearch(ids, _))
     val d = dst.map(java.util.Arrays.binarySearch(ids, _))
-    if (s.forall(_ >= 0) && d.forall(_ >= 0)) new LocalGraph(ids, s, d)
+    if (s.forall(_ >= 0) && d.forall(_ >= 0)) new LocalGraph(ids, s, d, w)
     else {
       val kept = s.indices.filter(e => s(e) >= 0 && d(e) >= 0).toArray
-      new LocalGraph(ids, kept.map(s), kept.map(d))
+      new LocalGraph(ids, kept.map(s), kept.map(d), w.map(kept.map(_)))
     }
   }
 
-  /** The graph of the (src, dst) ids in the first two columns. */
-  def of(rows: Array[Row]): LocalGraph =
-    apply(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+  /** The graph of the (src, dst) ids in the first two columns, over
+    * their end ids, weighted by the third column when the rows have
+    * one. */
+  def of(rows: Array[Row]): LocalGraph = {
+    val src = rows.map(_.getLong(0))
+    val dst = rows.map(_.getLong(1))
+    val w =
+      if (rows.headOption.exists(_.length > 2)) Some(rows.map(_.getLong(2)))
+      else None
+    apply(src ++ dst, src, dst, w)
+  }
 
   /** Rows of `df` if it has at most [[SmallGraphVerts]] of them, else
     * None: the graph kernels' measured size gate, a bounded collect. */
@@ -218,7 +281,7 @@ object LocalGraph {
     * index of its set. With ids indexed in ascending order (as in a
     * [[LocalGraph]]) the root is the component-min id, the label
     * every connectivity kernel carries. Path halving, no ranks. */
-  private[graft] final class MinUnionFind(n: Int) {
+  private final class MinUnionFind(n: Int) {
     private val parent = Array.tabulate(n)(identity)
     def find(i: Int): Int = {
       var x = i

@@ -1,13 +1,14 @@
 package graft.ops
 
 import graft.{GraphModel, LocalGraph, SessionMemo, Tables}
-import graft.LocalGraph.{MinUnionFind, allLong, collectLongs, collectSmall}
+import graft.LocalGraph.{allLong, collectLongs, collectSmall}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** §2.9 graph traversal operators expressed as Catalyst joins.
   *
@@ -2844,6 +2845,13 @@ object GraphOps {
     spark.createDataFrame(sc.parallelize(rows, slices), schema)
   }
 
+  /** A driver-built final output as a local relation: collecting it
+    * runs no Spark job. For results of bounded size that no later plan
+    * joins; a frame a plan reads again is a [[rowsFrame]]. */
+  private[graft] def localFrame(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** One-shot entry: under the gate the labels are a driver-built
     * frame with no cached blocks; above it the returned labels view
     * pins one checkpointed block set for the session (callers that
@@ -3390,17 +3398,41 @@ object GraphOps {
     * attachments), not the raw one — the keyed closure's Σ|SCC|²
     * quadratic surface collapses to the supernode count. Lifting back
     * is one join; scc_id = min member part id. The shared work, and
-    * its size gate, live in [[sccLifted]]. Output: non-singleton
-    * components by size. Fully
+    * its size gate, live in [[sccLifted]]; under the gate the census
+    * is counted on the driver from the memo's label arrays
+    * ([[sccCensusLocal]]), so a second call runs no Spark job. Output:
+    * non-singleton components by size. Fully
     * integer/deterministic → DuckDB-oracled with recursive-CTE
     * contraction + the identical doubling unrolled. */
   def graphScc(spark: SparkSession, dir: String): DataFrame = {
-    val (lifted, _) = sccLifted(spark, dir)
-    lifted.groupBy(col("sl"))
+    val lift = sccLifted(spark, dir)
+    lift.local match {
+      case Some((ids, sl)) => sccCensusLocal(spark, ids, sl)
+      case None => sccCensusOf(lift.labels)
+    }
+  }
+
+  /** The SCC census as a plan over an `(id, sl)` label frame: per
+    * label with at least two members, scc_id = its least id and
+    * n_members, by n_members descending, then scc_id. */
+  private[graft] def sccCensusOf(labels: DataFrame): DataFrame =
+    labels.groupBy(col("sl"))
       .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members"))
       .filter(col("n_members") >= 2)
       .select(col("scc_id"), col("n_members"))
       .orderBy(col("n_members").desc, col("scc_id"))
+
+  /** [[sccCensusOf]] on the driver over the labels `ids(i)` → `sl(i)`,
+    * as a [[localFrame]]. */
+  private[graft] def sccCensusLocal(spark: SparkSession, ids: Array[Long],
+      sl: Array[Long]): DataFrame = {
+    val rows = ids.indices.groupBy(sl(_)).values
+      .collect { case ms if ms.length >= 2 =>
+        (-ms.length.toLong, ms.map(ids).min) }
+      .toSeq.sorted
+      .map { case (n, id) => Row(id, -n) }
+    localFrame(spark, rows,
+      StructType.fromDDL("scc_id BIGINT, n_members BIGINT NOT NULL"))
   }
 
   /** CONDENSATION — the DAG the SCC decomposition induces: one node
@@ -3428,13 +3460,13 @@ object GraphOps {
       .orderBy(col("scc_id"), col("succ_scc"))
   }
 
-  /** The condensation of [[sccLifted]]'s `(lifted, edges)`: `nodes`
-    * (sl, scc_id = min member id, n_members), passed through `pin`, and
-    * `cross(ssrc, sdst)` — one row per original edge between two
-    * different SCCs, ends labeled by scc_id off the pinned nodes. */
-  private def condensationOf(lifted: (DataFrame, DataFrame),
+  /** The condensation of [[sccLifted]]'s label and edge frames:
+    * `nodes` (sl, scc_id = min member id, n_members), passed through
+    * `pin`, and `cross(ssrc, sdst)` — one row per original edge between
+    * two different SCCs, ends labeled by scc_id off the pinned nodes. */
+  private def condensationOf(lift: SccLift,
       pin: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
-    val (ids, edges) = lifted
+    val SccLift(ids, edges, _) = lift
     val nodes = pin(ids.groupBy(col("sl"))
       .agg(min(col("id")).as("scc_id"), count(lit(1)).as("n_members")))
     val idlab = ids
@@ -3484,10 +3516,16 @@ object GraphOps {
       .localCheckpoint(true)
   }
 
+  /** [[sccLifted]]'s value: the `(id, sl)` per-part scc label frame,
+    * the directed `(src, dst)` edge frame cyc ∪ att, and, when the
+    * lift ran on the driver, the same labels as arrays (`ids(i)` is
+    * labeled `sl(i)`). */
+  private[graft] final case class SccLift(labels: DataFrame,
+      edges: DataFrame, local: Option[(Array[Long], Array[Long])])
+
   /** Shared SCC pipeline: basket cycles + brand-hub attachments,
-    * cycle-frame contraction, bounded closure, labels lifted back.
-    * Returns (`(id, sl)` per-part scc label frame, the directed
-    * `(src, dst)` edge frame cyc ∪ att) — memoized per (session, dir)
+    * cycle-frame contraction, bounded closure, labels lifted back
+    * ([[SccLift]]) — memoized per (session, dir)
     * so the census and the condensation pay for ONE
     * contraction+closure, the same sharing discipline as
     * [[GraphModel.edgesCached]].
@@ -3498,10 +3536,11 @@ object GraphOps {
     * frame): rows that fit come to the driver and go back as
     * [[rowsFrame]]s; when both fit as non-null BIGINT
     * ([[LocalGraph.readable]]), the contraction, the closure and the
-    * lift run on the driver ([[sccLiftLocal]]) and the memo costs the
-    * two collects. Otherwise the frames are checkpointed and
-    * [[sccLiftKeyed]] runs them as plans. */
-  private val sccLifted = SessionMemo { (spark, dir) =>
+    * lift run on the driver ([[sccLiftLocal]]), the memo keeps the
+    * label arrays next to their frame, and it costs the two collects.
+    * Otherwise the frames are checkpointed and [[sccLiftKeyed]] runs
+    * them as plans. */
+  private[graft] val sccLifted = SessionMemo { (spark, dir) =>
     val t = Tables(spark, dir)
     def pinned(df: DataFrame): (DataFrame, Option[Array[Row]]) =
       collectSmall(df) match {
@@ -3529,10 +3568,14 @@ object GraphOps {
     val (att, attRows) = pinned(withBrand.join(hub, Seq("p_brand"))
       .filter(col("hub") =!= col("p"))
       .select(col("hub").as("src"), col("p").as("dst")))
-    val lifted = (for (c <- cycRows; a <- attRows)
-      yield sccLiftLocal(spark, c, a))
-      .getOrElse(sccLiftKeyed(partsIn, cyc, att))
-    (lifted, cyc.unionByName(att))
+    val local = for (c <- cycRows; a <- attRows) yield sccLiftLocal(c, a)
+    val labels = local match {
+      case Some((ids, sl)) => rowsFrame(spark,
+        ids.indices.map(i => Row(ids(i), sl(i))),
+        StructType.fromDDL("id BIGINT, sl BIGINT"))
+      case None => sccLiftKeyed(partsIn, cyc, att)
+    }
+    SccLift(labels, cyc.unionByName(att), local)
   }
 
   /** The keyed path of [[sccLifted]] over `partsIn(p)` (the ids of the
@@ -3569,10 +3612,10 @@ object GraphOps {
   /** The driver path of [[sccLifted]] over the collected cycle and
     * attachment rows (BIGINT, non-null): the same contraction (cycle
     * graph components), closure ([[SccDoubleRounds]] bounded labels of
-    * the contracted attachments) and lift to one `(id, sl)` per part. */
-  private[graft] def sccLiftLocal(spark: SparkSession,
-      cycRows: Array[Row], attRows: Array[Row]): DataFrame = {
-    val schema = StructType.fromDDL("id BIGINT, sl BIGINT")
+    * the contracted attachments) and lift to one label per part: the
+    * ascending part ids and their `sl` labels. */
+  private[graft] def sccLiftLocal(cycRows: Array[Row],
+      attRows: Array[Row]): (Array[Long], Array[Long]) = {
     val cyc = LocalGraph.of(cycRows)
     val root = cyc.components
     // an attachment end as its supernode's least id; an end off the
@@ -3581,8 +3624,7 @@ object GraphOps {
       cyc.index(id) match { case i if i >= 0 => cyc.ids(root(i)); case _ => id }
     val label = LocalGraph(cyc.ids, attRows.map(r => sup(r.getLong(0))),
       attRows.map(r => sup(r.getLong(1)))).sccLabels(SccDoubleRounds)
-    rowsFrame(spark, cyc.ids.indices.map(i =>
-      Row(cyc.ids(i), cyc.ids(label(root(i))))), schema)
+    (cyc.ids, root.map(r => cyc.ids(label(r))))
   }
 
   /** The SCC core on an arbitrary (src, dst) edge frame: bounded-
@@ -3702,19 +3744,36 @@ object GraphOps {
     * coordination, which is what survives 1000 executors. Component
     * contraction runs on the CONTRACTED pair graph (picked component
     * pairs, ≤ #components rows), never on the full edge frame; under
-    * the [[SmallGraphVerts]] gate all rounds run on the driver (see
-    * [[msfOn]]). State: one (id, comp) long pair per vertex;
+    * the [[SmallGraphVerts]] gate all rounds run on the driver over
+    * the session's weighted snapshot ([[msfGraphCached]]), and the
+    * forest is a local relation. State: one (id, comp) long pair per vertex;
     * the weighted frame stays partitioned on its join key across
     * rounds. Output: the forest edge list (u, v, w_cents). */
-  def graphMsfBoruvka(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val ew = t.lineitem.filter(col("l_partkey") % MsfPartMod === 0)
+  def graphMsfBoruvka(spark: SparkSession, dir: String): DataFrame =
+    msfGraphCached(spark, dir) match {
+      case Some(lg) => msfLocal(spark, lg, MsfRounds)
+      case None => checkpointed(msfEdges(spark, dir))(msfKeyedOn(_, MsfRounds))
+    }
+
+  /** The weighted co-supply edges of [[graphMsfBoruvka]]: canonical
+    * `(u = supplier, v = part, w = min line price in cents)`. */
+  private def msfEdges(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).lineitem.filter(col("l_partkey") % MsfPartMod === 0)
       .select(
         (lit(GraphModel.SupplierOff) + col("l_suppkey")).as("u"),
         (lit(GraphModel.PartOff) + col("l_partkey")).as("v"),
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("c"))
       .groupBy(col("u"), col("v")).agg(min(col("c")).as("w"))
-    msfOn(ew, MsfRounds)
+
+  /** The weighted [[LocalGraph]] of [[msfEdges]], built as [[msfOn]]
+    * builds its input (checkpoint, gated collect, release) once per
+    * (session, dir): `None` above the gate, where every call runs
+    * [[msfKeyed]]. It holds the input, not the forest, so a call under
+    * the gate reruns the driver rounds and no Spark job. */
+  private val msfGraphCached = SessionMemo { (spark, dir) =>
+    checkpointed(msfEdges(spark, dir))(ew =>
+      collectLongs(ew.select(col("u"), col("v"), col("w")))
+        .map(LocalGraph.of))
   }
 
   /** The Borůvka loop itself, separate for spec use on hand graphs.
@@ -3729,67 +3788,34 @@ object GraphOps {
     * the whole forest costs the checkpoint and the collect instead of
     * the keyed loop's jobs per round. Above it [[msfKeyed]] runs, with
     * static broadcasts when the vertex set fits ([[LocalGraph.fits]]). */
-  def msfOn(ewIn: DataFrame, rounds: Int): DataFrame = {
-    val ew = ewIn.localCheckpoint(true)
-    val e = ew.select(col("u"), col("v"), col("w"))
-    // both paths return frames that no longer read ew
-    try collectLongs(e) match {
-      case Some(r) => msfLocal(ew, r, rounds)
-      case None =>
-        val small = LocalGraph.fits(e.select(col("u").as("id"))
-          .unionByName(e.select(col("v").as("id"))).distinct())
-        msfKeyed(ew, rounds, small)
-    } finally releaseChk(ew)
+  def msfOn(ewIn: DataFrame, rounds: Int): DataFrame =
+    // both paths return frames that no longer read the checkpoint
+    checkpointed(ewIn) { ew =>
+      collectLongs(ew.select(col("u"), col("v"), col("w"))) match {
+        case Some(r) => msfLocal(ew.sparkSession, LocalGraph.of(r), rounds)
+        case None => msfKeyedOn(ew, rounds)
+      }
+    }
+
+  /** `f` over an eager checkpoint of `df`, released when `f` returns
+    * or throws: `f`'s result must not read the checkpoint. */
+  private def checkpointed[T](df: DataFrame)(f: DataFrame => T): T = {
+    val chk = df.localCheckpoint(true)
+    try f(chk) finally releaseChk(chk)
   }
 
-  /** The driver solve of [[msfOn]] over collected `(u, v, w)` rows
-    * (BIGINT, non-null): the keyed loop's rounds over primitive
-    * arrays and a union-find. Per round every component picks its
-    * minimum incident cross edge under the same total order
-    * (w, least end, greatest end), all picks are unioned at once, and
-    * the picked edges join the forest — synchronous Borůvka, not
-    * Kruskal, so a budget-truncated run returns the same partial
-    * forest as [[msfKeyed]] and the oracle. */
-  private[graft] def msfLocal(ew: DataFrame, rows: Array[Row],
-      rounds: Int): DataFrame = {
-    val schema = ew.select(least(col("u"), col("v")).as("u"),
-      greatest(col("u"), col("v")).as("v"), col("w").as("w_cents")).schema
-    val lg = LocalGraph.of(rows)
-    val ids = lg.ids
-    // canonical ends as indices — index order is id order, so the
-    // order key compares indices where the keyed loop compares ids
-    val lo = Array.tabulate(rows.length)(e => math.min(lg.src(e), lg.dst(e)))
-    val hi = Array.tabulate(rows.length)(e => math.max(lg.src(e), lg.dst(e)))
-    val w = rows.map(_.getLong(2))
-    def before(a: Int, b: Int): Boolean =
-      w(a) < w(b) || w(a) == w(b) &&
-        (lo(a) < lo(b) || lo(a) == lo(b) && hi(a) < hi(b))
-    val uf = new MinUnionFind(ids.length)
-    val comp = new Array[Int](ids.length)
-    val best = new Array[Int](ids.length)
-    val chosen = new Array[Boolean](rows.length)
-    var round = 0
-    var done = false
-    while (round < rounds && !done) {
-      round += 1
-      for (i <- ids.indices) { comp(i) = uf.find(i); best(i) = -1 }
-      for (e <- rows.indices) {
-        val ca = comp(lo(e))
-        val cb = comp(hi(e))
-        if (ca != cb) {
-          if (best(ca) < 0 || before(e, best(ca))) best(ca) = e
-          if (best(cb) < 0 || before(e, best(cb))) best(cb) = e
-        }
-      }
-      val picks = best.filter(_ >= 0)
-      done = picks.isEmpty
-      picks.foreach { e => chosen(e) = true; uf.union(lo(e), hi(e)) }
-    }
-    val forest = rows.indices.filter(chosen)
-      .map(e => (ids(lo(e)), ids(hi(e)), w(e))).distinct.sorted
-      .map { case (u, v, c) => Row(u, v, c) }
-    rowsFrame(ew.sparkSession, forest, schema)
-  }
+  /** [[msfKeyed]] over the checkpointed `(u, v, w)` frame `ew`, with
+    * static broadcasts when its vertex set fits ([[LocalGraph.fits]]). */
+  private def msfKeyedOn(ew: DataFrame, rounds: Int): DataFrame =
+    msfKeyed(ew, rounds, LocalGraph.fits(ew.select(col("u").as("id"))
+      .unionByName(ew.select(col("v").as("id"))).distinct()))
+
+  /** The driver solve of [[msfOn]] over the weighted graph `lg`:
+    * [[LocalGraph.msf]] as a [[localFrame]]. */
+  private[graft] def msfLocal(spark: SparkSession, lg: LocalGraph,
+      rounds: Int): DataFrame =
+    localFrame(spark, lg.msf(rounds).map { case (u, v, w) => Row(u, v, w) },
+      StructType.fromDDL("u BIGINT, v BIGINT, w_cents BIGINT"))
 
   /** The keyed Borůvka loop behind [[msfOn]] over the checkpointed
     * edge frame `ew`. Each round is one join of

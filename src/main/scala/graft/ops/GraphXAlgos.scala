@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
-import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 /** §2.9 iterative graph analytics via GraphX (SURVEY.md §4.3: the one
@@ -45,26 +44,28 @@ object GraphXAlgos {
       .limit(50), pr, g.vertices, g.edges)
   }
 
-  /** `out` collected into a local relation, then [[releaseGraphs]]:
-    * for outputs of bounded size (a top-k, a histogram). */
+  /** `out` collected into a local relation ([[GraphOps.localFrame]]),
+    * then [[releaseGraphs]]: for outputs of bounded size (a top-k, a
+    * histogram). */
   private def collected(out: DataFrame, result: Graph[_, _],
       input: RDD[_]*): DataFrame = {
     val rows = out.collect()
     releaseGraphs(result, input: _*)
-    out.sparkSession.createDataFrame(rows.toSeq.asJava, out.schema)
+    GraphOps.localFrame(out.sparkSession, rows.toSeq, out.schema)
   }
 
   /** Unpersists the cached RDDs in the lineage of `result` but not of
     * `input` (the caller's graph or edges, maybe a session memo): what
     * the GraphX algorithm cached. Call it once `result`'s output is
-    * collected or checkpointed. */
+    * collected or checkpointed. Blocking, so no block removal is still
+    * in flight when the `ContextCleaner` reaches the same RDDs. */
   private def releaseGraphs(result: Graph[_, _], input: RDD[_]*): Unit = {
     def lineage(rs: Seq[RDD[_]], seen: Set[RDD[_]] = Set.empty): Set[RDD[_]] =
       rs.foldLeft(seen)((s, r) =>
         if (s(r)) s else lineage(r.dependencies.map(_.rdd), s + r))
     (lineage(Seq(result.vertices, result.edges)) -- lineage(input))
       .filter(_.getStorageLevel.isValid)
-      .foreach(_.unpersist(blocking = false))
+      .foreach(_.unpersist(blocking = true))
   }
 
   /** Connected components (undirected semantics — GraphX CC ignores
@@ -85,8 +86,8 @@ object GraphXAlgos {
     StructField("size", LongType, nullable = false)))
 
   /** [[connectedComponents]] on the driver: each vertex counts for its
-    * component's least id. A local relation, so collecting it runs no
-    * Spark job; it holds one row per component. */
+    * component's least id. A [[GraphOps.localFrame]], so collecting it
+    * runs no Spark job; it holds one row per component. */
   private[graft] def componentSizesLocal(spark: SparkSession,
       lg: LocalGraph): DataFrame = {
     val root = lg.components
@@ -95,7 +96,7 @@ object GraphXAlgos {
     val rows = lg.ids.indices.filter(size(_) > 0)
       .sortBy(r => (-size(r), r))
       .map(r => Row(lg.ids(r), size(r)))
-    spark.createDataFrame(rows.asJava, componentSizesSchema)
+    GraphOps.localFrame(spark, rows, componentSizesSchema)
   }
 
   /** [[connectedComponents]] by GraphX's `connectedComponents()`, one

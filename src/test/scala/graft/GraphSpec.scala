@@ -1433,6 +1433,32 @@ class GraphSpec extends SparkSpec {
       gx.edges.getStorageLevel.useMemory)
   }
 
+  test("boruvka msf and the scc census: a second call runs no job and " +
+      "leaves no cached RDD, and the condensation keys read the same " +
+      "lift after it") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    val dir = freshSfDir()
+    val firsts = Seq(
+      "msf" -> (() => GraphOps.graphMsfBoruvka(spark, dir)),
+      "scc" -> (() => GraphOps.graphScc(spark, dir)))
+      .map { case (name, run) => (name, run, rows(run())) }
+    for ((name, run, first) <- firsts) {
+      var second = Seq.empty[Seq[Any]]
+      val (jobs, left) = jobsAndLeaks(s"$name-second") {
+        second = rows(run())
+      }
+      assert(jobs == 0 && left.isEmpty, s"$name: $jobs jobs, left $left")
+      assert(second == first, name)
+    }
+    // a dir on which graphScc never ran
+    val other = freshSfDir()
+    for (cond <- Seq[(org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame](GraphOps.graphCondensation,
+        GraphOps.graphCondensationLayers))
+      assert(rows(cond(spark, dir)) == rows(cond(spark, other)))
+  }
+
   test("scc census: every sampled basket's parts land in ONE scc, " +
       "and sizes cover at least the largest basket") {
     val t = Tables(spark, sfDir)

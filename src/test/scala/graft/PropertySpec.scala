@@ -348,8 +348,8 @@ class PropertySpec extends SparkSpec {
       val att = as.toDF("src", "dst")
       val parts = cyc.select(col("src").as("p"))
         .unionByName(cyc.select(col("dst").as("p"))).distinct()
-      val local = labels(GraphOps.sccLiftLocal(spark, cyc.collect(),
-        att.collect()))
+      val (ids, sl) = GraphOps.sccLiftLocal(cyc.collect(), att.collect())
+      val local = ids.toSeq.zip(sl).sorted
       val keyed = GraphOps.sccLiftKeyed(parts, cyc, att)
       assert(labels(keyed) == local, s"cycles=$cs attachments=$as")
       GraphOps.releaseChk(keyed)
@@ -362,6 +362,38 @@ class PropertySpec extends SparkSpec {
     }
     assert(ringSizes.exists(_ - 1 <= horizon) &&
       ringSizes.exists(_ - 1 > horizon), s"ring sizes $ringSizes")
+  }
+
+  test("scc census: the driver census matches the plan census on " +
+      "generated cycle and attachment frames and on the corpus") {
+    val sess = spark
+    import sess.implicits._
+    import graft.ops.GraphOps
+    import org.apache.spark.sql.functions.col
+    def census(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val cases = samples(liftGen, 6)
+    assert(cases.size >= 4)
+    cases.foreach { case (cs, as) =>
+      val cyc = cs.toDF("src", "dst")
+      val att = as.toDF("src", "dst")
+      val parts = cyc.select(col("src").as("p"))
+        .unionByName(cyc.select(col("dst").as("p"))).distinct()
+      val (ids, sl) = GraphOps.sccLiftLocal(cyc.collect(), att.collect())
+      val keyed = GraphOps.sccLiftKeyed(parts, cyc, att)
+      val driver = GraphOps.sccCensusLocal(spark, ids, sl)
+      val plan = GraphOps.sccCensusOf(keyed)
+      assert(driver.schema == plan.schema)
+      val local = census(driver)
+      assert(local.nonEmpty)
+      assert(census(plan) == local, s"cycles=$cs attachments=$as")
+      GraphOps.releaseChk(keyed)
+    }
+    val lift = GraphOps.sccLifted(spark, sfDir)
+    assert(lift.local.isDefined)
+    val corpus = census(GraphOps.graphScc(spark, sfDir))
+    assert(corpus.nonEmpty)
+    assert(census(GraphOps.sccCensusOf(lift.labels)) == corpus)
   }
 
   /** Canonical edges (u < v) over ids 0..19 with weights 1..4, so
@@ -395,7 +427,8 @@ class PropertySpec extends SparkSpec {
     graphs.foreach { es =>
       val ew = es.toDF("u", "v", "w")
       for (rounds <- Seq(1, 2, 14)) {
-        val local = edges(GraphOps.msfLocal(ew, ew.collect(), rounds))
+        val local = edges(GraphOps.msfLocal(spark,
+          LocalGraph.of(ew.collect()), rounds))
         assert(edges(GraphOps.msfOn(ew, rounds)) == local)
         for (small <- Seq(false, true)) {
           val keyed = GraphOps.msfKeyed(ew.localCheckpoint(true), rounds,
