@@ -1,6 +1,5 @@
 package graft
 
-import graft.ops.GraphOps.SmallGraphVerts
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.LongType
 import scala.collection.mutable
@@ -236,16 +235,29 @@ object LocalGraph {
     apply(src ++ dst, src, dst, w)
   }
 
-  /** Rows of `df` if it has at most [[SmallGraphVerts]] of them, else
-    * None: the graph kernels' measured size gate, a bounded collect. */
+  /** The size gate of the graph kernels: the most rows a graph frame
+    * may have for the driver to hold it. It caps the gated collects
+    * ([[collectSmall]], [[collectLongs]]: edge or vertex rows, solved
+    * on a [[LocalGraph]] instead of a keyed loop), and it decides
+    * which vertex-sized side frames (labels, ranks, degree sums, merge
+    * and move maps) the keyed loops broadcast: localCheckpoint hides
+    * size stats from AQE, so those callers count the vertices. Above
+    * it every such solve runs its keyed loop and every such join a
+    * keyed shuffle. Read only here; callers ask [[fits]]. */
+  private val SmallGraphVerts = 2000000L
+
+  /** The size gate on a known row or vertex count `n`. */
+  private[graft] def fits(n: Long): Boolean = n <= SmallGraphVerts
+
+  /** Rows of `df` if they [[fits]], else None: a bounded collect. */
   private[graft] def collectSmall(df: DataFrame): Option[Array[Row]] = {
     val rows = df.limit((SmallGraphVerts + 1).toInt).collect()
-    if (rows.length <= SmallGraphVerts) Some(rows) else None
+    if (fits(rows.length)) Some(rows) else None
   }
 
   /** The gate of [[collectSmall]] by a bounded count: no row ships. */
   private[graft] def fits(df: DataFrame): Boolean =
-    df.limit((SmallGraphVerts + 1).toInt).count() <= SmallGraphVerts
+    fits(df.limit((SmallGraphVerts + 1).toInt).count())
 
   /** Whether every column is BIGINT, as the driver solves read them. */
   private[graft] def allLong(df: DataFrame): Boolean =

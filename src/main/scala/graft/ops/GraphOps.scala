@@ -274,7 +274,7 @@ object GraphOps {
     * measured 13.7 s vs ~3 s at sf0.1). */
   private def pagerankRounds(rs: RoundScope, we: DataFrame,
       verts: DataFrame, iters: Int): DataFrame = {
-    // the r13 exchange diet: with the SmallGraphVerts gate set,
+    // the r13 exchange diet: with the size gate (LocalGraph.fits) set,
     // vertex-count frames fit a broadcast, so the contrib and msgs
     // frames broadcast into their joins — per iteration the ONLY
     // exchange left is the message agg; at scale the gate flips back
@@ -556,7 +556,7 @@ object GraphOps {
         GraphModel.undEdgesCached(spark, dir)))
       .unionByName(row("und_edges_by_dst",
         GraphModel.undEdgesByDstCached(spark, dir)))
-      .unionByName(row("und_degrees", undDegCached(spark, dir)._1))
+      .unionByName(row("und_degrees", undDegCached(spark, dir)))
       .unionByName(row("dedup_verts",
         GraphModel.dedupVertsCached(spark, dir)))
       .unionByName(row("lpa_labels", lpaLabelsCached(spark, dir)))
@@ -571,17 +571,16 @@ object GraphOps {
       .orderBy(col("cache"))
   }
 
-  /** Memoized unweighted degree frame (id, d) with its vertex count —
-    * built exchange-free off the src-partitioned undirected cache.
-    * `graph_leiden` and `graph_louvain_move` previously each rebuilt
-    * (and eagerly checkpointed, and counted) the identical frame; one
-    * build per (session, dir), warmed by [[graphWarmCaches]] (r12). */
+  /** Memoized unweighted degree frame (id, d), built exchange-free off
+    * the src-partitioned undirected cache and warmed by
+    * [[graphWarmCaches]]: one row per end of a dedup edge, so its row
+    * count is [[GraphModel.dedupVertCountCached]], the count
+    * [[smallGraph]] gates on. */
   private[graft] val undDegCached = SessionMemo { (spark, dir) =>
-    val d = GraphModel.undEdgesCached(spark, dir)
+    GraphModel.undEdgesCached(spark, dir)
       .groupBy(col("src")).agg(count(lit(1)).as("d"))
       .withColumnRenamed("src", "id")
       .localCheckpoint(true)
-    (d, d.count())
   }
 
   /** Memoized [[weightRow]] of the deduped edges at w = 1 (the edge
@@ -600,10 +599,9 @@ object GraphOps {
     // r12: ride the session degree/edge-count caches instead of
     // louvainLabels' own per-call builds (one eager checkpoint + one
     // count job saved on the warm path)
-    val (deg, nVerts) = undDegCached(spark, dir)
     louvainLabelsOn(GraphModel.dedupEdgesCached(spark, dir),
-      lpaLabelsCached(spark, dir), LouvainRounds, deg,
-      edgeCountRowCached(spark, dir), nVerts <= SmallGraphVerts)
+      lpaLabelsCached(spark, dir), LouvainRounds, undDegCached(spark, dir),
+      edgeCountRowCached(spark, dir), smallGraph(spark, dir))
   }
 
   /** Community quality over the final [[lpaExactOn]] labels: per
@@ -905,8 +903,7 @@ object GraphOps {
     val wded = GraphModel.unitWeighted(ded)
     val deg = undDegreesOf(wded).localCheckpoint(true)
     val mrow = weightRow(wded).localCheckpoint(true)
-    try louvainLabelsOn(ded, lab0, rounds, deg, mrow,
-      deg.count() <= SmallGraphVerts)
+    try louvainLabelsOn(ded, lab0, rounds, deg, mrow, LocalGraph.fits(deg))
     finally Seq(deg, mrow).foreach(releaseChk)
   }
 
@@ -1083,10 +1080,9 @@ object GraphOps {
       .select(col("id"), col("cluster").as("label"))
     // shared session frames (r12): degree + edge count ride the same
     // caches graph_louvain_move consumes — zero builds on a warm run
-    val (deg, nVerts) = undDegCached(spark, dir)
-    val mrow = edgeCountRowCached(spark, dir)
-    val labs = louvainLabelsOn(ded, seed, LouvainRounds, deg, mrow,
-      nVerts <= SmallGraphVerts)
+    val labs = louvainLabelsOn(ded, seed, LouvainRounds,
+      undDegCached(spark, dir), edgeCountRowCached(spark, dir),
+      smallGraph(spark, dir))
     val out = labs
       .groupBy(col("label")).agg(count(lit(1)).as("size"))
       .orderBy(col("label")).localCheckpoint(true)
@@ -1132,24 +1128,9 @@ object GraphOps {
     val mrow = weightRow(wded).localCheckpoint(true)
     val und = ded.select(col("src").as("v"), col("dst").as("n"))
       .unionByName(ded.select(col("dst").as("v"), col("src").as("n")))
-    try louvainMoveLabelsOn(und, lab0, rounds, deg, mrow,
-      deg.count() <= SmallGraphVerts)
+    try louvainMoveLabelsOn(und, lab0, rounds, deg, mrow, LocalGraph.fits(deg))
     finally Seq(deg, mrow).foreach(releaseChk)
   }
-
-  /** Row bound under which a graph frame is small enough for the
-    * driver. Two uses, both measured, never assumed:
-    *  - the connectivity kernels ([[minLabelComponentsChk]],
-    *    [[msfOn]]) collect at most this many pair/edge rows, then
-    *    vertex rows, and under it solve the whole problem on the
-    *    driver in one union-find pass instead of a keyed loop;
-    *  - vertex-sized side frames (labels, d_c, accepted-move maps,
-    *    merge maps — all ≤ the vertex count) are explicitly broadcast
-    *    into the keyed loops. localCheckpoint hides size stats from
-    *    AQE, so those callers count the vertices.
-    * Above it (billion-vertex cluster scale) every such join falls
-    * back to a keyed shuffle rather than risk the driver. */
-  private[graft] val SmallGraphVerts = 2000000L
 
   /** [[louvainMoveLabels]] with the undirected (v, n) pair frame, the
     * degree / edge-count frames and the broadcast gate supplied by the
@@ -1274,11 +1255,11 @@ object GraphOps {
     // side needs no exchange either — r12: degree + edge count are now
     // session caches shared with graph_leiden, so warm runs pay zero
     // builds AND zero per-key checkpoint/count jobs here
-    val (deg, nVerts) = undDegCached(spark, dir)
+    val deg = undDegCached(spark, dir)
     val und = GraphModel.undEdgesByDstCached(spark, dir)
       .select(col("src").as("v"), col("dst").as("n"))
     val mrow = edgeCountRowCached(spark, dir)
-    val small = nVerts <= SmallGraphVerts
+    val small = smallGraph(spark, dir)
     val moved = louvainMoveLabelsOn(und, lpaLabelsCached(spark, dir),
       LouvainMoveRounds, deg, mrow, small)
     val labs = louvainLabelsOn(ded, moved, LouvainRounds, deg, mrow, small)
@@ -1594,7 +1575,7 @@ object GraphOps {
     * union+sum instead of the r12 version's three verts-sized joins
     * per round plus a 3-way term join whose branches re-derived
     * p₁/p₂. Values are identical (absent rows are exact zeros); the
-    * sparse p frame rides the [[SmallGraphVerts]]-gated BROADCAST into
+    * sparse p frame rides the [[LocalGraph.fits]]-gated BROADCAST into
     * each round's edge join (the louvain device), so the cached edge
     * table never shuffles — at 2M+ vertices the gate flips the joins
     * back to keyed exchanges against the src-partitioned cache.
@@ -1608,8 +1589,7 @@ object GraphOps {
   def graphKatzCentrality(spark: SparkSession, dir: String): DataFrame = {
     val e = GraphModel.dedupEdgesCached(spark, dir)
       .select(col("src"), col("dst"))
-    val (_, nVerts) = undDegCached(spark, dir)
-    val g = gate(nVerts <= SmallGraphVerts) _
+    val g = gate(smallGraph(spark, dir)) _
     // lazy per-round checkpoint on the sparse path-count state — see
     // pagerankRounds (r16). The result is a lazy plan over them, so
     // they stay: releasing them first would cost a materializing job.
@@ -1656,7 +1636,7 @@ object GraphOps {
     * Sums and the rescale product run in DECIMAL(38,0) (HUGEINT):
     * 1e6·s ≤ 1e12·d_max only stays under 2^63 while d_max < 9.2e6,
     * a bound a 100 TB hub vertex can break. Per round: one edge⋈score
-    * join (score frame rides the measured [[SmallGraphVerts]]
+    * join (score frame rides the measured [[LocalGraph.fits]]
     * broadcast gate, so the src-partitioned edge cache never
     * reshuffles) + one keyed sum + one 1-row max crossed in. Every
     * und vertex has degree ≥ 1, so no zero-drop asymmetry exists on
@@ -1664,7 +1644,7 @@ object GraphOps {
   def graphEigenvectorCentrality(spark: SparkSession,
       dir: String): DataFrame =
     eigenvectorOn(GraphModel.undEdgesCached(spark, dir), EigenRounds,
-      small = undDegCached(spark, dir)._2 <= SmallGraphVerts)
+      small = smallGraph(spark, dir))
 
   /** The power-iteration core on any undirected (src, dst) pair frame
     * (both directions present) — separated so specs can drive a
@@ -2038,7 +2018,7 @@ object GraphOps {
   /** BFS reachable set from `src` over an undirected `(src, dst)`
     * pair frame: per round one frontier⋈edges hop + one anti-join
     * against the visited set, rounds = component diameter. With
-    * `small` (the measured [[SmallGraphVerts]] gate) the frontier and
+    * `small` (the measured [[LocalGraph.fits]] gate) the frontier and
     * visited frames — both vertex-bounded — ride static broadcasts,
     * so the cached edge frame is never reshuffled per hop. Returns
     * the eagerly-checkpointed visited set (`id`); the caller releases
@@ -2743,14 +2723,16 @@ object GraphOps {
       case _ => chk.unpersist(false)
     }
 
-  /** Broadcasts `f` when `small`: the measured [[SmallGraphVerts]]
-    * gate for vertex-bounded side frames. */
+  /** Broadcasts `f` when `small`: the measured size gate
+    * ([[LocalGraph.fits]]) for vertex-bounded side frames. */
   private def gate(small: Boolean)(f: DataFrame): DataFrame =
     if (small) broadcast(f) else f
 
-  /** The [[SmallGraphVerts]] gate on the deduplicated vertex count. */
+  /** The size gate ([[LocalGraph.fits]]) on the deduplicated vertex
+    * count: the one vertex count every broadcast gate of a registered
+    * graph key reads. */
   private def smallGraph(spark: SparkSession, dir: String): Boolean =
-    GraphModel.dedupVertCountCached(spark, dir) <= SmallGraphVerts
+    LocalGraph.fits(GraphModel.dedupVertCountCached(spark, dir))
 
   /** Runs one iterative loop in a [[RoundScope]] and releases every
     * frame left in its ledger when `body` returns or throws. */
@@ -2872,7 +2854,7 @@ object GraphOps {
     * cached blocks — `GraphOps.releaseChk(_2)` once `_1` has been
     * materialized into a downstream checkpoint.
     *
-    * Measured size gate ([[SmallGraphVerts]], bounded collects, pairs
+    * Measured size gate ([[LocalGraph.fits]], bounded collects, pairs
     * first, then vertices): when both fit and the ids are BIGINT, the
     * pairs are union-found on the driver in one pass
     * ([[minLabelComponentsLocal]]) — one job per collected frame
@@ -2929,7 +2911,7 @@ object GraphOps {
     * join back to `verts`: one output row per `verts` row, a null id
     * with a null cluster.
     *
-    * `small` (the measured [[SmallGraphVerts]] gate on the vertex
+    * `small` (the measured [[LocalGraph.fits]] gate on the vertex
     * rows): the label frame rides explicit broadcasts into the
     * neighbor and pointer-jump joins. The win is not the join
     * strategy (AQE converts those at runtime anyway) but the job
@@ -2991,7 +2973,7 @@ object GraphOps {
       // sides are canonically IDENTICAL broadcast subtrees (the same
       // projection of the same frame), so ReuseExchange builds ONE
       // relation per round — the extra joins are probe-only. On the
-      // big path (> SmallGraphVerts) the extra jumps would each cost a
+      // big path (above LocalGraph.fits) the extra jumps would each cost a
       // V-sized keyed exchange per round, so the classic single jump
       // stays. Soundness: every term is ≥ the component min and ≤ the
       // current label (L[u] ≤ u gives L⁴ ≤ L³ ≤ L² ≤ L), and a
@@ -3532,7 +3514,7 @@ object GraphOps {
     *
     * The two edge frames are computed once each, and every later step
     * reads them, never the lineitem window or the part join again.
-    * Measured size gate ([[SmallGraphVerts]], one bounded collect per
+    * Measured size gate ([[LocalGraph.fits]], one bounded collect per
     * frame): rows that fit come to the driver and go back as
     * [[rowsFrame]]s; when both fit as non-null BIGINT
     * ([[LocalGraph.readable]]), the contraction, the closure and the
@@ -3744,7 +3726,7 @@ object GraphOps {
     * coordination, which is what survives 1000 executors. Component
     * contraction runs on the CONTRACTED pair graph (picked component
     * pairs, ≤ #components rows), never on the full edge frame; under
-    * the [[SmallGraphVerts]] gate all rounds run on the driver over
+    * the [[LocalGraph.fits]] gate all rounds run on the driver over
     * the session's weighted snapshot ([[msfGraphCached]]), and the
     * forest is a local relation. State: one (id, comp) long pair per vertex;
     * the weighted frame stays partitioned on its join key across
@@ -3757,7 +3739,7 @@ object GraphOps {
 
   /** The weighted co-supply edges of [[graphMsfBoruvka]]: canonical
     * `(u = supplier, v = part, w = min line price in cents)`. */
-  private def msfEdges(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def msfEdges(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).lineitem.filter(col("l_partkey") % MsfPartMod === 0)
       .select(
         (lit(GraphModel.SupplierOff) + col("l_suppkey")).as("u"),
@@ -3821,7 +3803,7 @@ object GraphOps {
     * edge frame `ew`. Each round is one join of
     * the edge frame against the label table + one keyed min, and the
     * contraction runs [[minLabelComponentsKeyed]] on the picked
-    * component pairs. `small` (the measured [[SmallGraphVerts]] gate
+    * component pairs. `small` (the measured [[LocalGraph.fits]] gate
     * on the vertex set): the per-round label joins and the
     * contraction ride static broadcasts — no shuffle query stage, no
     * AQE round-trip; above it every join is a keyed shuffle. */

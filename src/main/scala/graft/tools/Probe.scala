@@ -4,7 +4,8 @@ package graft.tools
   * session and prints wall / jobs / tasks / task-seconds per repetition,
   * so per-key cost splits into first-run (planning + codegen + JIT
   * warmup) vs steady-state — the discrimination the one-shot bench
-  * cannot make. Usage:
+  * cannot make. Each frame is read with `collect()`, as a caller reads
+  * it (a `count()` plans jobs of its own over a local relation). Usage:
   *
   *   SPARK_GRAFT_SF_DIR=... runMain graft.tools.Probe <key>[,key...] [reps]
   */
@@ -23,7 +24,7 @@ object Probe {
         case None => println(s"[probe] UNKNOWN key $k")
         case Some(fn) =>
           val tag = s"$k#$rep"
-          val (w, r) = meter.run(tag)(fn(spark, sfDir).count())
+          val (w, r) = meter.run(tag)(fn(spark, sfDir).collect())
           r.swap.foreach(e => println(s"[probe] $tag FAILED: $e"))
           val c = meter(tag)
           println(f"[probe] $tag%-40s wall=$w%8.2f s  jobs=${c.jobs}%5d" +

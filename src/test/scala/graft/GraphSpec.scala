@@ -1356,6 +1356,62 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("the degree frame has one row per dedup vertex: the vertex " +
+      "count the graph keys' size gate reads") {
+    assert(GraphOps.undDegCached(spark, sfDir).count() ==
+      GraphModel.dedupVertCountCached(spark, sfDir))
+    // the two formulas (the degree memo's groupBy over both directions
+    // of the dedup edges, the vertex memo's vertsWithOutDegree) on a
+    // hand edge frame with a self-loop, a duplicate edge and a vertex
+    // that is only ever a dst
+    val sess = spark
+    import sess.implicits._
+    val ded = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (2L, 6L))
+      .toDF("src", "dst").distinct()
+    val degRows = ded.unionByName(ded.select(col("dst").as("src"),
+        col("src").as("dst")))
+      .groupBy(col("src")).agg(count(lit(1)).as("d")).count()
+    val nVerts =
+      GraphModel.vertsWithOutDegree(GraphModel.unitWeighted(ded)).count()
+    assert(degRows == 4L && nVerts == 4L, s"$degRows degree rows, " +
+      s"$nVerts vertices")
+  }
+
+  test("both sides of the broadcast gate give the same rows on the " +
+      "corpus, and release every frame they cache") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+    val und = GraphModel.undEdgesCached(spark, sfDir)
+    val ded = GraphModel.dedupEdgesCached(spark, sfDir)
+    val verts = GraphModel.dedupVertsCached(spark, sfDir)
+    Seq(und, ded, verts).foreach(_.count())
+    val forest = rows(GraphOps.graphMsfBoruvka(spark, sfDir))
+    val (_, left) = jobsAndLeaks("gate-both-sides") {
+      val ew = GraphOps.msfEdges(spark, sfDir).localCheckpoint(true)
+      val loops: Seq[(String, Boolean => org.apache.spark.sql.DataFrame)] =
+        Seq(
+          "eigenvectorOn" -> (small =>
+            GraphOps.eigenvectorOn(und, GraphOps.EigenRounds, small)),
+          "corenessOn" -> (small =>
+            GraphOps.corenessOn(und, GraphOps.CorenessRounds, small)),
+          "pagerankExactOn" -> (small =>
+            GraphOps.pagerankExactOn(ded, 5, Some(verts), small)),
+          "msfKeyed" -> (small =>
+            GraphOps.msfKeyed(ew, GraphOps.MsfRounds, small)))
+      try for ((name, run) <- loops) {
+        // each output is its own eager checkpoint, released once read
+        val Seq(off, on) = Seq(false, true).map { small =>
+          val out = run(small)
+          try rows(out) finally GraphOps.releaseChk(out)
+        }
+        assert(off.nonEmpty, name)
+        assert(off == on, s"$name: broadcast off vs on")
+        if (name == "msfKeyed") assert(off == forest)
+      } finally GraphOps.releaseChk(ew)
+    }
+    assert(left.isEmpty, s"left RDDs $left cached")
+  }
+
   test("concurrent first calls to the vertex-count memo build it once") {
     // one first call on its own key: the build's job train (table
     // reads, the count and its adaptive stages)
