@@ -172,36 +172,32 @@ object GraphOps {
   }
 
   /** k-hop BFS frontier expansion (k=3) from the region-0 vertex over
-    * REVERSED edges, as an iterative DataFrame join loop with a
-    * visited-set anti-join — the OLTP-traversal shape that beats Pregel
-    * for short walks. Each hop is one equi-join on `dst`; the frontier
-    * stays small relative to the edge table, so Catalyst/AQE broadcasts
-    * it. For deeper walks, localCheckpoint() every ~3 hops bounds
-    * lineage (not needed at k=3). */
+    * REVERSED edges: the layers of [[bfsSigmaLayersMulti]] (one
+    * frontier join plus a visited-set anti-join per hop) run on the
+    * edge table with its columns swapped. Each hop is one equi-join on
+    * `dst`; the frontier stays small relative to the edge table, so
+    * Catalyst/AQE broadcasts it. */
   def bfsKhop(spark: SparkSession, dir: String): DataFrame =
     khopLayersCached(spark, dir).orderBy(col("hop"), col("id"))
 
   /** Memoized 3-hop reverse-BFS layering from the region-0 root —
     * `graph_bfs_khop` and `graph_shortest_path_trace` consume the
     * identical (id, hop) frame, so the join loop runs once per
-    * (session, dir); materialized as an eager localCheckpoint. */
+    * (session, dir); materialized as an eager localCheckpoint. The
+    * gate stays closed (`small = false`): reading [[smallGraph]] would
+    * build the dedup edge and vertex memos on a path that reads
+    * neither. */
   private val khopLayersCached = SessionMemo { (spark, dir) =>
-    val e = GraphModel.edgesCached(spark, dir)
-      .select(col("src"), col("dst"))
-    val seed = spark.range(1).select(
-      lit(GraphModel.RegionOff).as("id"), lit(0).as("hop"))
-    var visited = seed
-    var frontier = seed.select(col("id"))
-    for (h <- 1 to 3) {
-      val next = e.join(frontier, e("dst") === frontier("id"))
-        .select(col("src").as("id")).distinct()
-        .join(visited.select(col("id").as("vid")),
-          col("id") === col("vid"), "left_anti")
-        .select(col("id"), lit(h).as("hop"))
-      visited = visited.unionByName(next)
-      frontier = next.select(col("id"))
+    roundScope(small = false) { rs =>
+      val rev = GraphModel.edgesCached(spark, dir)
+        .select(col("dst").as("src"), col("src").as("dst"))
+      val layers =
+        bfsSigmaLayersMulti(rev, Seq(GraphModel.RegionOff), 3, rs)
+      layers.indices.map(h =>
+          layers(h).select(col("id"), lit(h).as("hop")))
+        .reduce(_ unionByName _)
+        .localCheckpoint(true)
     }
-    visited.localCheckpoint(true)
   }
 
   /** Shortest-path TRACE — not just the distance but THE path, the
@@ -516,8 +512,8 @@ object GraphOps {
         Future { seedComponentCached(spark, dir); () },
         // landmark-Brandes sweep (vertex + edge betweenness + girvan
         // all regroup it) — unreported-but-forced for the same
-        // attribution reason; depends only on the und twins, so it
-        // rides parallel to the label chain
+        // attribution reason; depends only on the und edges and the
+        // landmark sweep below, so it rides parallel to the label chain
         Future { brandesSweepCached(spark, dir); () },
         // region-root weighted forward sweep (the weighted distance /
         // closeness / eccentricity / betweenness family's shared
@@ -1684,51 +1680,42 @@ object GraphOps {
     * graph, where each newly-reached vertex's count is the SUM of its
     * predecessors' counts — exact integers, so unlike
     * betweenness-with-division this primitive is DuckDB-oracle-able
-    * (unrolled per-layer CTEs). 3 layers from customer #1. Per layer:
-    * one frontier⋈edges join + a sum agg + an anti-join against the
-    * visited set — the identical shape as [[bfsKhop]] with a count
-    * payload; at 100 TB the frontier co-partitions with the bucketed
-    * edge table like every other hop join. */
-  def graphPathCount(spark: SparkSession, dir: String): DataFrame = {
-    // r15: ride the shared src-partitioned undirected cache instead
-    // of re-deriving the doubled frame per layer branch, and push the
-    // vertex-bounded frontier/visited frames through the measured
-    // broadcast gate — the cached edge table is scanned, never
-    // reshuffled, per hop (the bfsReachable discipline)
-    val und = GraphModel.undEdgesCached(spark, dir)
-    val g = gate(smallGraph(spark, dir)) _
-    val source = GraphModel.CustomerOff + 1L
-    var layer = spark.range(1)
-      .select(lit(source).as("id"), lit(1L).as("paths"))
-    var seen = layer.select(col("id"))
-    var out = layer.select(col("id"), lit(0).as("dist"), col("paths"))
-    for (k <- 1 to 3) {
-      val next = und.join(
-          g(layer.select(col("id").as("src"), col("paths"))), "src")
-        .groupBy(col("dst")).agg(sum(col("paths")).as("paths"))
-        .join(g(seen), col("dst") === seen("id"), "left_anti")
-        .select(col("dst").as("id"), col("paths"))
-      out = out.unionByName(
-        next.select(col("id"), lit(k).as("dist"), col("paths")))
-      seen = seen.unionByName(next.select(col("id")))
-      layer = next
-    }
-    out.orderBy(col("dist"), col("id"))
-  }
+    * (unrolled per-layer CTEs). 3 layers from customer #1, which is a
+    * [[ClosenessLandmarks]] source: its layers are read off the
+    * memoized landmark sweep ([[closenessSweepCached]]), so this key
+    * runs no traversal of its own. */
+  def graphPathCount(spark: SparkSession, dir: String): DataFrame =
+    landmarkLayers(spark, dir, GraphModel.CustomerOff + 1L)
+      .map { case (layer, k) =>
+        layer.select(col("id"), lit(k).as("dist"), col("paths")) }
+      .reduce(_ unionByName _)
+      .orderBy(col("dist"), col("id"))
 
-  /** Forward phase of Brandes' betweenness, MULTI-SOURCE: BFS layers
-    * over an undirected pair frame for ALL landmarks at once, the
-    * frontier keyed by (lm, id) and each layer carrying sigma
-    * (shortest-path counts = sum of predecessor sigmas) — the
-    * [[graphPathCount]] computation batched across sources, so a
+  /** One [[ClosenessLandmarks]] source's `(id, paths)` layers of the
+    * memoized landmark sweep, each paired with its depth. */
+  private def landmarkLayers(spark: SparkSession, dir: String,
+      lm: Long): Seq[(DataFrame, Int)] =
+    closenessSweepCached(spark, dir).zipWithIndex.map { case (l, k) =>
+      (l.filter(col("lm") === lm).select(col("id"), col("paths")), k) }
+
+  /** The one hop-layer BFS kernel, MULTI-SOURCE: BFS layers over a
+    * `(src, dst)` pair frame for ALL landmarks at once, the frontier
+    * keyed by (lm, id) and each layer carrying sigma (shortest-path
+    * counts = sum of predecessor sigmas). Layer k holds `(lm, id,
+    * paths)` for the vertices first reached at hop k from `lm`; the
+    * visited anti-join is keyed on (lm, id), so each landmark's layers
+    * are exactly those of a sweep from that landmark alone, and a
     * k-landmark sweep costs the SAME number of jobs/stages as one
     * (the standard multi-source BFS batching; per-row state grows by
-    * one lm long, shuffles stay keyed on the edge endpoint). Layers
-    * are persisted in the caller's scope `rs`: each is touched again
-    * by the next forward hop, the visited anti-join, and two backward
-    * joins. */
-  private def bfsSigmaLayersMulti(und: DataFrame, sources: Seq[Long],
-      depth: Int, rs: RoundScope): Vector[DataFrame] = {
+    * one lm long, shuffles stay keyed on the edge endpoint). Readers:
+    * the k-hop layering (on the reversed edge table), the memoized
+    * landmark sweep [[closenessSweepCached]] (path counts, ego set,
+    * closeness family, landmark Brandes) and [[betweennessMulti]].
+    * Layers are persisted in the caller's scope `rs`: each is touched
+    * again by the next forward hop, the visited anti-join, and the
+    * Brandes DAG joins. */
+  private[graft] def bfsSigmaLayersMulti(und: DataFrame,
+      sources: Seq[Long], depth: Int, rs: RoundScope): Vector[DataFrame] = {
     val spark = und.sparkSession
     import spark.implicits._
     // r13 exchange diet: the frontier (≤ lm·V rows, vertex-bounded)
@@ -1761,154 +1748,44 @@ object GraphOps {
     * [[pagerankRounds]] discipline; textbook float betweenness is
     * merge-order-sensitive, which is why graph DBs ship it
     * unoracle-able). Bounded depth + landmark sampling is the standard
-    * 100 TB betweenness estimator (exact Brandes is O(V·E)); each
-    * backward round is one layer⋈edges join + a sum agg, the same
-    * co-partitioned hop shape as the forward BFS. Returns (id, d) for
-    * every reached non-source vertex. */
+    * 100 TB betweenness estimator (exact Brandes is O(V·E)). Returns
+    * (id, d) for every reached non-source vertex. */
   def betweennessFrom(und: DataFrame, source: Long,
-      depth: Int, undByDst: Option[DataFrame] = None): DataFrame =
-    betweennessMulti(und, Seq(source), depth, undByDst)
-      .select(col("id"), col("d"))
+      depth: Int): DataFrame =
+    betweennessMulti(und, Seq(source), depth).select(col("id"), col("d"))
 
   /** Multi-source variant: the whole landmark set sweeps in ONE
-    * batched forward BFS + ONE batched backward accumulation — job
-    * count independent of landmark count. Returns (lm, id, d). */
+    * batched forward BFS + ONE batched backward accumulation
+    * ([[brandesTerms]]) — job count independent of landmark count.
+    * Returns (lm, id, d). */
   def betweennessMulti(und: DataFrame, sources: Seq[Long],
-      depth: Int, undByDst: Option[DataFrame] = None,
-      small: Boolean = false): DataFrame = roundScope(small) { rs =>
-    val layers = bfsSigmaLayersMulti(und, sources, depth, rs)
-    // r15 (the edge-betweenness restructure): materialize the
-    // BFS-DAG edge set ONCE — (v at layer k) → (w at k+1) with both
-    // endpoints' path counts — instead of re-joining the full edge
-    // table (undByDst, kept in the signature for call-site stability
-    // but no longer probed) and the layer frame every backward round;
-    // each round is now a layer filter over the checkpointed DAG plus
-    // one gated-broadcast delta join.
-    val lvl = (0 to depth).map(k => layers(k)
-        .select(col("lm"), col("id"), lit(k).as("l"), col("paths")))
-      .reduce(_ unionByName _)
-    val dag = rs.chk(und.as("e")
-      .join(rs.g(lvl.select(col("lm"), col("id").as("src"),
-        col("l").as("lv"), col("paths").as("sv"))), Seq("src"))
-      .join(rs.g(lvl.select(col("lm").as("lm2"), col("id").as("w0"),
-        col("l").as("lw"), col("paths").as("sw"))),
-        col("lm") === col("lm2") && col("e.dst") === col("w0"))
-      .filter(col("lw") === col("lv") + 1)
-      .select(col("lm"), col("src").as("v"), col("w0").as("w"),
-        col("lv"), col("sv"), col("sw")))
-    val _ = undByDst // see scaladoc note above
-    var delta = layers(depth).select(col("lm"), col("id"),
-      lit(0L).as("d"))
-    var acc = delta
-    for (k <- (depth - 1) to 1 by -1) {
-      val dsum = dag.filter(col("lv") === k)
-        .join(rs.g(delta.select(col("lm"), col("id").as("w"),
-          col("d").as("dw"))), Seq("lm", "w"))
-        .groupBy(col("lm"), col("v"))
-        .agg(sum(expr("(sv * (1000000 + dw)) div sw")).as("ds"))
-        .withColumnRenamed("v", "id")
-      val dk = layers(k)
-        .join(dsum, Seq("lm", "id"), "left")
-        .select(col("lm"), col("id"),
-          coalesce(col("ds"), lit(0L)).as("d"))
-      delta = dk
-      acc = acc.unionByName(dk)
+      depth: Int, small: Boolean = false): DataFrame =
+    roundScope(small) { rs =>
+      val (lvl, terms) =
+        brandesTerms(und, bfsSigmaLayersMulti(und, sources, depth, rs), rs)
+      vertexDeltas(lvl, terms).localCheckpoint(true)
     }
-    acc.localCheckpoint(true)
-  }
 
-  /** Landmark sources for [[graphBetweenness]]: one customer-side and
-    * one supplier-side seed, so both bipartite wings contribute. */
-  private val BetweennessLandmarks =
-    Seq(GraphModel.CustomerOff + 1L, GraphModel.SupplierOff + 1L)
-
-  /** Registered surface: landmark-sampled bounded-depth (3) Brandes
-    * betweenness over the undirected derived graph — per-vertex
-    * dependency deltas summed across the landmark set, top-50
-    * (micro-units, id tie-break). DuckDB-oracled via unrolled
-    * per-landmark forward/backward CTE chains of the identical integer
-    * arithmetic. */
-  def graphBetweenness(spark: SparkSession, dir: String): DataFrame = {
-    // r15: δ(v) = Σ of v's outgoing DAG edge terms (the identity in
-    // [[graphEdgeBetweenness]]'s scaladoc), so the vertex surface is a
-    // REGROUPING of the memoized term frame the edge surface
-    // aggregates — the sweep itself runs once per (session, dir) via
-    // [[brandesSweepCached]] instead of this key repeating the whole
-    // forward+backward machinery ([[betweennessMulti]] stays for
-    // hand-graph specs). Layer-0 terms are excluded (sources carry no
-    // dependency); reached vertices with no outgoing tree edge (the
-    // depth horizon) keep zero rows via the left join, so the top-50
-    // zero-tie tail matches the unrolled oracle chain exactly.
-    val (lvl, ekAll) = brandesSweepCached(spark, dir)
-    val deltas = ekAll.filter(col("lv") >= 1)
-      .groupBy(col("lm"), col("v")).agg(sum(col("term")).as("ds"))
-      .withColumnRenamed("v", "id")
-    lvl.filter(col("l") >= 1).select(col("lm"), col("id"))
-      .join(deltas, Seq("lm", "id"), "left")
-      .select(col("id"), coalesce(col("ds"), lit(0L)).as("d"))
-      .groupBy(col("id")).agg(sum(col("d")).as("bc_micro"))
-      .orderBy(col("bc_micro").desc, col("id"))
-      .limit(50)
-  }
-
-  /** EDGE BETWEENNESS (the Girvan–Newman driver) — the same
-    * landmark-bounded Brandes machinery as [[graphBetweenness]],
-    * accumulated on EDGES instead of vertices: the per-edge dependency
-    * σ_v/σ_w·(1+δ_w) for tree edge (v at layer k → w at k+1) is
-    * EXACTLY the pre-aggregation row of the vertex backward sweep, so
-    * the edge variant costs the same joins with the final agg keyed on
-    * the canonical edge — and the vertex delta recursion falls out as
-    * δ_v = Σ of v's outgoing edge terms (left-join keeps zero-delta
-    * vertices alive for the next round). Edges are canonicalized
-    * (min, max) before the cross-landmark sum, since a pair can be
-    * traversed in either direction depending on the source. This is
-    * the "which relationship carries the traffic" read and the cut
-    * ranking Girvan–Newman community detection peels.
-    *
-    * Memoized (a checkpointed 50-row frame): `graph_girvan_newman_cut`
-    * consumes the identical ranking for its cut set, so the Brandes
-    * sweeps run once per (session, dir). */
-  val graphEdgeBetweenness = SessionMemo { (spark, dir) =>
-    val (_, ekAll) = brandesSweepCached(spark, dir)
-    ekAll
-      .groupBy(least(col("v"), col("w")).as("a"),
-        greatest(col("v"), col("w")).as("b"))
-      .agg(sum(col("term")).as("ebc_micro"))
-      .orderBy(col("ebc_micro").desc, col("a"), col("b"))
-      .limit(50)
-      .localCheckpoint(true)
-  }
-
-  /** Memoized landmark-Brandes sweep state over the undirected dedup
-    * graph at the [[BetweennessLandmarks]] × depth-3 budget: `_1` =
-    * the stacked BFS layer frame `(lm, id, l, paths)`, `_2` = the
-    * per-DAG-edge dependency terms `(lm, v, w, lv, term)` with δ
-    * fully propagated. Both eagerly checkpointed, session-lifetime
-    * (vertex/edge-bounded per landmark). [[graphBetweenness]] regroups
-    * the terms by vertex, [[graphEdgeBetweenness]] by canonical edge,
-    * so the two registered keys plus the Girvan–Newman cut pay ONE
-    * forward+backward sweep per (session, dir) — the r15 fix for the
-    * r14 bench where the vertex and edge surfaces each ran the
-    * identical sweep (~230 + ~150 task-s on the dense draw).
-    * [[graphWarmCaches]] forces it on a concurrent chain so the build
-    * lands on the attribution anchor's slot. */
-  private[ops] val brandesSweepCached = SessionMemo(brandesSweepBuild)
-
-  private def brandesSweepBuild(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = roundScope(smallGraph(spark, dir)) { rs =>
-    val und = GraphModel.undEdgesCached(spark, dir)
-    val depth = 3
-    val layers = bfsSigmaLayersMulti(und, BetweennessLandmarks, depth, rs)
+  /** Brandes' backward phase over BFS layers `(lm, id, paths)`, layer k
+    * at index k: `_1` = the stacked layer frame `(lm, id, l, paths)`,
+    * `_2` = the per-DAG-edge dependency terms `(lm, v, w, lv, term)`
+    * with δ fully propagated. Both are lazy over frames checkpointed in
+    * `rs`, so the caller materializes what it keeps before the scope
+    * exits. Each backward round is one layer filter over the
+    * checkpointed DAG plus one gated-broadcast delta join. */
+  private def brandesTerms(und: DataFrame, layers: Seq[DataFrame],
+      rs: RoundScope): (DataFrame, DataFrame) = {
+    val depth = layers.length - 1
     // r15: materialize the BFS-DAG edge set ONCE — (v at layer k) →
     // (w at layer k+1) with both endpoints' path counts attached — via
-    // two gated-broadcast joins of the cached edge table against the
-    // layer frames. The r14 loop instead re-joined the full edge table
+    // two gated-broadcast joins of the edge table against the layer
+    // frames. The r14 loop instead re-joined the full edge table
     // every backward round (contrib) and then re-joined the layer
     // frame to filter it (ek): two sort-merge passes over an O(E·lm)
     // stream per round. Each backward round now only filters the
     // checkpointed DAG by layer and broadcast-joins the delta frame —
     // the edge table is touched exactly once after the forward sweep.
-    val lvl = (0 to depth).map(k => layers(k)
+    val lvl = layers.indices.map(k => layers(k)
         .select(col("lm"), col("id"), lit(k).as("l"), col("paths")))
       .reduce(_ unionByName _)
     val dag = rs.chk(und.as("e")
@@ -1942,7 +1819,108 @@ object GraphOps {
             coalesce(col("ds"), lit(0L)).as("d"))
       }
     }
-    (lvl.localCheckpoint(true), eAcc.get.localCheckpoint(true))
+    (lvl, eAcc.get)
+  }
+
+  /** δ(v) per (lm, v) off [[brandesTerms]]' frames: Σ of v's outgoing
+    * DAG edge terms (the identity in [[graphEdgeBetweenness]]'s
+    * scaladoc). Layer-0 terms are excluded (sources carry no
+    * dependency); reached vertices with no outgoing tree edge (the
+    * depth horizon) keep zero rows via the left join. */
+  private def vertexDeltas(lvl: DataFrame, terms: DataFrame): DataFrame = {
+    val deltas = terms.filter(col("lv") >= 1)
+      .groupBy(col("lm"), col("v")).agg(sum(col("term")).as("ds"))
+      .withColumnRenamed("v", "id")
+    lvl.filter(col("l") >= 1).select(col("lm"), col("id"))
+      .join(deltas, Seq("lm", "id"), "left")
+      .select(col("lm"), col("id"), coalesce(col("ds"), lit(0L)).as("d"))
+  }
+
+  /** Landmark set of the unweighted landmark sweep
+    * ([[closenessSweepCached]]): one seed per major vertex namespace,
+    * so distances are measured from structurally distinct corners of
+    * the graph. */
+  private val ClosenessLandmarks = Seq(
+    GraphModel.CustomerOff + 1L, GraphModel.SupplierOff + 1L,
+    GraphModel.NationOff + 1L, GraphModel.OrderOff + 1L)
+
+  /** Landmark sources for [[graphBetweenness]]: the customer-side and
+    * supplier-side seeds of [[ClosenessLandmarks]], so both bipartite
+    * wings contribute. */
+  private val BetweennessLandmarks = ClosenessLandmarks.take(2)
+
+  /** Registered surface: landmark-sampled bounded-depth (3) Brandes
+    * betweenness over the undirected derived graph — per-vertex
+    * dependency deltas summed across the landmark set, top-50
+    * (micro-units, id tie-break). DuckDB-oracled via unrolled
+    * per-landmark forward/backward CTE chains of the identical integer
+    * arithmetic. */
+  def graphBetweenness(spark: SparkSession, dir: String): DataFrame = {
+    // r15: the vertex surface is a REGROUPING of the memoized term
+    // frame the edge surface aggregates — the sweep itself runs once
+    // per (session, dir) via [[brandesSweepCached]]. The zero rows of
+    // the depth horizon keep the top-50 zero-tie tail matching the
+    // unrolled oracle chain exactly.
+    val (lvl, ekAll) = brandesSweepCached(spark, dir)
+    vertexDeltas(lvl, ekAll)
+      .groupBy(col("id")).agg(sum(col("d")).as("bc_micro"))
+      .orderBy(col("bc_micro").desc, col("id"))
+      .limit(50)
+  }
+
+  /** EDGE BETWEENNESS (the Girvan–Newman driver) — the same
+    * landmark-bounded Brandes machinery as [[graphBetweenness]],
+    * accumulated on EDGES instead of vertices: the per-edge dependency
+    * σ_v/σ_w·(1+δ_w) for tree edge (v at layer k → w at k+1) is
+    * EXACTLY the pre-aggregation row of the vertex backward sweep, so
+    * the edge variant costs the same joins with the final agg keyed on
+    * the canonical edge — and the vertex delta recursion falls out as
+    * δ_v = Σ of v's outgoing edge terms (left-join keeps zero-delta
+    * vertices alive for the next round). Edges are canonicalized
+    * (min, max) before the cross-landmark sum, since a pair can be
+    * traversed in either direction depending on the source. This is
+    * the "which relationship carries the traffic" read and the cut
+    * ranking Girvan–Newman community detection peels.
+    *
+    * Memoized (a checkpointed 50-row frame): `graph_girvan_newman_cut`
+    * consumes the identical ranking for its cut set, so the Brandes
+    * sweeps run once per (session, dir). */
+  val graphEdgeBetweenness = SessionMemo { (spark, dir) =>
+    val (_, ekAll) = brandesSweepCached(spark, dir)
+    ekAll
+      .groupBy(least(col("v"), col("w")).as("a"),
+        greatest(col("v"), col("w")).as("b"))
+      .agg(sum(col("term")).as("ebc_micro"))
+      .orderBy(col("ebc_micro").desc, col("a"), col("b"))
+      .limit(50)
+      .localCheckpoint(true)
+  }
+
+  /** Memoized landmark-Brandes state over the undirected dedup graph:
+    * the [[brandesTerms]] frames over the [[BetweennessLandmarks]]
+    * layers (depth 3) of the memoized landmark sweep
+    * ([[closenessSweepCached]]), so this memo runs no forward sweep of
+    * its own. The filter is required:
+    * the other landmarks' terms would add to the sums. Both frames are
+    * eagerly checkpointed, session-lifetime (vertex/edge-bounded per
+    * landmark). [[graphBetweenness]] regroups the terms by vertex,
+    * [[graphEdgeBetweenness]] by canonical edge, so the two registered
+    * keys plus the Girvan–Newman cut pay ONE backward sweep per
+    * (session, dir) — the r15 fix for the r14 bench where the vertex
+    * and edge surfaces each ran the identical sweep (~230 + ~150
+    * task-s on the dense draw). [[graphWarmCaches]] forces it on a
+    * concurrent chain so the build lands on the attribution anchor's
+    * slot. Memo order: this memo takes [[closenessSweepCached]]'s lock
+    * inside its own build, never the reverse. */
+  private[ops] val brandesSweepCached = SessionMemo(brandesSweepBuild)
+
+  private def brandesSweepBuild(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = roundScope(smallGraph(spark, dir)) { rs =>
+    val layers = closenessSweepCached(spark, dir)
+      .map(_.filter(col("lm").isin(BetweennessLandmarks: _*)))
+    val (lvl, terms) =
+      brandesTerms(GraphModel.undEdgesCached(spark, dir), layers, rs)
+    (lvl.localCheckpoint(true), terms.localCheckpoint(true))
   }
 
   /** GIRVAN–NEWMAN CUT — one round of the algorithm edge betweenness
@@ -1982,8 +1960,8 @@ object GraphOps {
         greatest(ded("src"), ded("dst")) === col("b"), "left_anti")
       // a surviving edge has both endpoints in one before-component,
       // so one src-side semi-join restricts to the seed subgraph
-      .join((if (small) broadcast(seedVerts) else seedVerts)
-        .withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+      .join(gate(small)(seedVerts).withColumnRenamed("id", "src"),
+        Seq("src"), "left_semi")
     val keptUnd = kept.select(col("src"), col("dst"))
       .unionByName(kept.select(col("dst").as("src"),
         col("src").as("dst")))
@@ -2287,13 +2265,6 @@ object GraphOps {
     out
   }
 
-  /** Landmark set for [[graphClosenessHarmonic]]: one seed per major
-    * vertex namespace, so distances are measured from structurally
-    * distinct corners of the graph. */
-  private val ClosenessLandmarks = Seq(
-    GraphModel.CustomerOff + 1L, GraphModel.SupplierOff + 1L,
-    GraphModel.NationOff + 1L, GraphModel.OrderOff + 1L)
-
   /** Harmonic closeness centrality, landmark-sampled and bounded-depth
     * (3): HC(v) = Σ over landmarks s of `1_000_000 div dist(s, v)` —
     * harmonic (sum of reciprocal distances) rather than classic
@@ -2326,9 +2297,13 @@ object GraphOps {
     out
   }
 
-  /** Memoized [[bfsSigmaLayersMulti]] over the shared undirected cache
-    * for the closeness landmark set — closeness and the reach profile
-    * consume the identical sweep, so it runs once per (session, dir). */
+  /** The one unweighted landmark sweep: memoized
+    * [[bfsSigmaLayersMulti]] layers over the shared undirected cache
+    * from [[ClosenessLandmarks]], depth 3, persisted for the session.
+    * Closeness, reach profile, average path length, eccentricity,
+    * effective diameter, path counts, the ego set and the landmark
+    * Brandes sweep ([[brandesSweepCached]], filtered to its subset)
+    * all read it, so it runs once per (session, dir). */
   private val closenessSweepCached = SessionMemo { (spark, dir) =>
     roundScope(smallGraph(spark, dir)) { rs =>
       bfsSigmaLayersMulti(GraphModel.undEdgesCached(spark, dir),
@@ -3276,9 +3251,10 @@ object GraphOps {
   /** 2-hop ego network: the subgraph INDUCED by the undirected 2-hop
     * neighborhood of one vertex (customer #1) — the "show me this
     * node's world" read every property-graph front-end renders.
-    * Two-stage plan: (1) frontier expansion over the symmetrized edge
-    * view exactly like [[bfsKhop]] (each hop one equi-join, the small
-    * frontier broadcast by AQE); (2) induction = the edge table
+    * Two-stage plan: (1) the ego set is layers 0–2 of customer #1's
+    * BFS in the memoized landmark sweep ([[closenessSweepCached]] over
+    * the undirected dedup edges, which reach the same vertices as the
+    * symmetrized edge table); (2) induction = the edge table
     * restricted by TWO semi-joins (src ∈ ego set, dst ∈ ego set) — no
     * pair materialization, no distinct on the big side. At 100 TB the
     * ego set of one vertex is tiny relative to the graph, so both
@@ -3288,21 +3264,8 @@ object GraphOps {
     * neighbors are its nation + its orders). */
   def egoNetwork(spark: SparkSession, dir: String): DataFrame = {
     val e = GraphModel.edgesCached(spark, dir)
-    val und = e.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
-    val seed = spark.range(1)
-      .select(lit(GraphModel.CustomerOff + 1L).as("id"))
-    var visited = seed
-    var frontier = seed
-    for (_ <- 1 to 2) {
-      val next = und.join(frontier, und("a") === frontier("id"))
-        .select(col("b").as("id")).distinct()
-        .join(visited.select(col("id").as("vid")),
-          col("id") === col("vid"), "left_anti")
-      visited = visited.unionByName(next)
-      frontier = next
-    }
-    val ego = visited.select(col("id"))
+    val ego = landmarkLayers(spark, dir, GraphModel.CustomerOff + 1L)
+      .take(3).map(_._1.select(col("id"))).reduce(_ unionByName _)
     e.join(ego.select(col("id").as("sid")),
         col("src") === col("sid"), "left_semi")
       .join(ego.select(col("id").as("did")),

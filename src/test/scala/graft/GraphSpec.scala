@@ -1412,6 +1412,23 @@ class GraphSpec extends SparkSpec {
     assert(left.isEmpty, s"left RDDs $left cached")
   }
 
+  test("path count and ego network read the landmark sweep memo: no " +
+      "traversal of their own, nothing left cached") {
+    // the reach profile builds and materializes the landmark sweep;
+    // the ego induction reads the edge cache
+    GraphOps.graphReachProfile(spark, sfDir).collect()
+    GraphModel.edgesCached(spark, sfDir).count()
+    for ((name, budget, run) <- Seq(
+        ("graphPathCount", 6, () => GraphOps.graphPathCount(spark, sfDir)),
+        ("egoNetwork", 8, () => GraphOps.egoNetwork(spark, sfDir)))) {
+      val (jobs, left) = jobsAndLeaks(s"memo-reader-$name") {
+        assert(run().collect().nonEmpty, name)
+      }
+      assert(jobs <= budget, s"$name ran $jobs jobs")
+      assert(left.isEmpty, s"$name left RDDs $left cached")
+    }
+  }
+
   test("concurrent first calls to the vertex-count memo build it once") {
     // one first call on its own key: the build's job train (table
     // reads, the count and its adaptive stages)

@@ -496,4 +496,70 @@ class PropertySpec extends SparkSpec {
     assert(rows(GraphXAlgos.shortestPaths(spark, sfDir)) ==
       rows(GraphXAlgos.hopsToGraphX(spark, gx, GraphModel.RegionOff)))
   }
+
+  // ---- the BFS-layer kernel ----
+
+  /** Digraphs over ids 0..11 with self-loops and repeated edges, a
+    * landmark set T of 2 to 4 ids that always holds 50 (no edge
+    * touches it), a nonempty subset S of T, and a depth of 1 to 4. */
+  private val layerGraphGen
+      : Gen[(List[(Long, Long)], Seq[Long], Seq[Long], Int)] = {
+    val id = Gen.choose(0L, 11L)
+    for {
+      m <- Gen.choose(4, 24)
+      es <- Gen.listOfN(m, Gen.frequency(
+        5 -> Gen.zip(id, id), 1 -> id.map(a => (a, a))))
+      again <- Gen.someOf(es)
+      nt <- Gen.choose(1, 3)
+      ts <- Gen.pick(nt, 0L to 11L)
+      t = (ts.toSeq :+ 50L).sorted
+      s <- Gen.someOf(t).map(_.toSeq)
+      if s.nonEmpty
+      depth <- Gen.choose(1, 4)
+    } yield (es ++ again, t, s.sorted, depth)
+  }
+
+  test("bfs layer kernel: layers and path counts match a plain BFS " +
+      "per landmark, and a landmark subset's layers equal a sweep from " +
+      "that subset alone") {
+    val sess = spark
+    import sess.implicits._
+    import graft.ops.GraphOps
+    type Layers = Seq[Set[(Long, Long, Long)]]
+    def sweep(und: org.apache.spark.sql.DataFrame, sources: Seq[Long],
+        depth: Int, small: Boolean): Layers =
+      GraphOps.roundScope(small) { rs =>
+        GraphOps.bfsSigmaLayersMulti(und, sources, depth, rs).map(_
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .toSet)
+      }
+    // σ(w) at layer k = Σ over edges (v, w), v at layer k − 1, of σ(v)
+    def reference(es: Seq[(Long, Long)], sources: Seq[Long],
+        depth: Int): Layers = {
+      val out = sources.map { lm =>
+        var layer = Map(lm -> 1L)
+        var seen = Set(lm)
+        layer +: (1 to depth).map { _ =>
+          val next = es.collect { case (v, w) if layer.contains(v) =>
+              (w, layer(v)) }
+            .groupMapReduce(_._1)(_._2)(_ + _) -- seen
+          seen ++= next.keySet
+          layer = next
+          next
+        }
+      }
+      (0 to depth).map(k => out.zip(sources).flatMap { case (ls, lm) =>
+        ls(k).map { case (id, p) => (lm, id, p) } }.toSet)
+    }
+    val graphs = samples(layerGraphGen, 6)
+    assert(graphs.size >= 4)
+    graphs.zipWithIndex.foreach { case ((es, t, s, depth), i) =>
+      val und = es.toDF("src", "dst")
+      val small = i % 2 == 0
+      val fromT = sweep(und, t, depth, small)
+      assert(fromT == reference(es, t, depth), s"T=$t edges=$es")
+      assert(fromT.map(_.filter(r => s.contains(r._1))) ==
+        sweep(und, s, depth, small), s"S=$s T=$t edges=$es")
+    }
+  }
 }
